@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR, materializing each result through the `noop` sink
   * (full execution incl. projections — a bare `.count()` would let Catalyst
@@ -56,11 +54,9 @@ object Bench {
     // AQE coalesces on compressed shuffle-write bytes, which for the
     // exploded shingle working set under-estimates in-memory sort size.
     val shuffle = autoShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts nanos
       // AQE coalescing floor (r16, guide §2.2/§2.5): shuffle BYTES are a
       // poor proxy for task COST on expression-dense stages — d28's
       // array-jaccard verify carries ~30 bytes/pair but ~400 string hash
@@ -73,8 +69,6 @@ object Bench {
       // inert there — it is NOT a local-only tuning, it removes a
       // small-input pathology while leaving the scale behavior unchanged.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -12,7 +12,18 @@ import org.apache.spark.sql.SparkSession
   *  - [[GraftExtensions]] as a session extension, so the native
   *    `graft_*` SQL functions exist from the first query (sessions built
   *    elsewhere can still call [[GraftNative.ensure]] lazily — every
-  *    query builder does).
+  *    query builder does);
+  *  - [[NioLocalFileSystem]] as `fs.file.impl`: Hadoop's local
+  *    filesystem forks a `chmod` process for every file and directory it
+  *    creates when libhadoop is absent, so stage writes, snapshot-table
+  *    commits and checkpoints on `file:` would each pay a few process
+  *    launches; this one sets the same bits in-process. Other schemes
+  *    are untouched.
+  *
+  * Build the session BEFORE anything in the JVM asks Hadoop for a `file:`
+  * filesystem: Hadoop caches filesystems per scheme, not per
+  * configuration, so one created earlier under a plain `Configuration`
+  * keeps Hadoop's class for the life of the JVM.
   *
   * Cluster-facing knobs (master, shuffle partitions, `spark.graft.*`)
   * stay with the caller: they are deployment decisions, not engine
@@ -29,6 +40,7 @@ object GraftSession {
     // SELECT / time travel by identifier. Base location comes from the
     // session conf spark.graft.catalog.location (re-pointable per run).
     .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** A pre-configured builder: `GraftSession.builder().master(...).getOrCreate()`. */
   def builder(): SparkSession.Builder = configure(SparkSession.builder())

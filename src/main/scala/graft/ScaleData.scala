@@ -170,11 +170,9 @@ object ScaleData {
       if (args.length >= 4) args(3).split(",").map(_.trim).toSet
       else Set("documents", "embeddings", "events")
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts nanos case
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,8 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.Comparator
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.types.StructType
 
 /** Written-table stage barrier.
   *
@@ -25,6 +27,17 @@ import org.apache.spark.sql.DataFrame
   * local tmp root that a shutdown hook removes (the test/bench sandbox;
   * configured dirs are the caller's to manage — a production pipeline
   * keeps its stage tables).
+  *
+  * Read-back contract: [[table]], [[tableWithPath]], [[Rolling.table]] and
+  * the [[sharedTable]] memo scan the written directory with the schema
+  * the engine wrote (`df.schema`), not an inferred one. It is the schema
+  * `spark.read.parquet(path)` would return (the parquet footer keeps
+  * field metadata, char/varchar markers included, and every file-source
+  * scan is nullable), without the footer-reading Spark job that
+  * inference costs: a stage barrier is exactly one write job, and a memo
+  * hit is none. Directories the engine did not write itself
+  * ([[sharedDir]] builders, external inputs) keep inference, as do
+  * frames holding CHAR/VARCHAR types, which a given schema cannot carry.
   */
 object Stage {
 
@@ -57,9 +70,21 @@ object Stage {
   /** [[table]] that also exposes the written directory. */
   def tableWithPath(df: DataFrame, name: String): (DataFrame, String) = {
     val path = s"${rootFor(df.sparkSession)}/$name-${seq.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(path)
-    (df.sparkSession.read.parquet(path), path)
+    (scan(df.sparkSession, path, write(df, path)), path)
   }
+
+  /** Write `df` as parquet at `path`; returns the schema to scan it with,
+    * or null where only inference yields it: CHAR/VARCHAR kept as types
+    * (`spark.sql.preserveCharVarcharTypeInfo`) are refused in a given
+    * read schema, in any form.
+    */
+  private def write(df: DataFrame, path: String): StructType = {
+    df.write.mode("overwrite").parquet(path)
+    if (CharVarcharUtils.hasCharVarchar(df.schema)) null else df.schema
+  }
+
+  private def scan(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (schema == null) spark.read.parquet(path) else spark.read.schema(schema).parquet(path)
 
   /** A rolling stage slot for ITERATIVE loops (connected components,
     * Lloyd rounds, beam hops): each [[Rolling.table]] call writes the new
@@ -82,7 +107,7 @@ object Stage {
     private val live = scala.collection.mutable.Queue.empty[String]
 
     def table(df: DataFrame, name: String): DataFrame = {
-      val (scan, path) = tableWithPath(df, name)
+      val (staged, path) = tableWithPath(df, name)
       live.enqueue(path)
       while (live.size > keep) {
         val old = live.dequeue()
@@ -92,14 +117,20 @@ object Stage {
             .delete(hp, true)
         } catch { case _: Throwable => () } // best-effort cleanup
       }
-      scan
+      staged
     }
 
     /** Directories this slot still holds live (testing/diagnostics). */
     def liveDirs: Seq[String] = live.toSeq
   }
 
-  private val shared = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** A memoized stage: its directory, and the schema to scan it with
+    * (null: infer it, as for a [[sharedDir]] build, whose writer is not
+    * ours).
+    */
+  private final case class Built(path: String, schema: StructType)
+
+  private val shared = new java.util.concurrent.ConcurrentHashMap[String, Built]()
 
   /** Memoized written stage, keyed by (stage name, input dir): the first
     * caller writes, later callers scan the same parquet. This is the
@@ -107,7 +138,8 @@ object Stage {
     * change-set and apply sinks (main.go:241-322) — so sink queries over
     * the same inputs share the upstream materialization instead of each
     * rebuilding it. Unlike caching DataFrames, the map holds only a path
-    * string: no executor memory is pinned and no session is retained.
+    * and the written schema: no executor memory is pinned and no session
+    * is retained, and a hit neither evaluates `df` nor runs a job.
     * Whichever query runs first pays the build (the per-suite TOTAL is the
     * meaningful figure); [[resetShared]] clears the memo so benchmark
     * passes stay independent.
@@ -122,10 +154,8 @@ object Stage {
     */
   def sharedTableWithPath(spark: org.apache.spark.sql.SparkSession, name: String,
                           dir: String)(df: => DataFrame): (DataFrame, String) = {
-    val p = sharedDir(spark, name, dir) { path =>
-      df.write.mode("overwrite").parquet(path)
-    }
-    (spark.read.parquet(p), p)
+    val b = memo(spark, name, dir)(path => write(df, path))
+    (scan(spark, b.path, b.schema), b.path)
   }
 
   /** Memoized shared OUTPUT DIRECTORY: like [[sharedTable]] but the
@@ -134,7 +164,14 @@ object Stage {
     * callers get the same path.
     */
   def sharedDir(spark: org.apache.spark.sql.SparkSession, name: String,
-                dir: String)(write: String => Unit): String = {
+                dir: String)(write: String => Unit): String =
+    memo(spark, name, dir) { path => write(path); null }.path
+
+  /** The memo behind [[sharedTableWithPath]] and [[sharedDir]]: `write`
+    * builds the stage at a fresh path and returns its schema, or null.
+    */
+  private def memo(spark: SparkSession, name: String, dir: String)
+                  (write: String => StructType): Built = {
     val root = rootFor(spark) // memo key includes it: a re-pointed stageDir
     val key = s"$root|$name|$dir"
     // get-then-putIfAbsent rather than computeIfAbsent: stages COMPOSE
@@ -145,8 +182,8 @@ object Stage {
     // key in its own thunk) fails fast below instead of overflowing the
     // stack, and a concurrent duplicate build deletes the losing write
     // instead of orphaning it under a user-managed stageDir.
-    val path = shared.get(key) match {
-      case p: String => p
+    shared.get(key) match {
+      case b: Built => b
       case null =>
         require(building.get.add(key),
           s"shared stage '$name' builds itself (cycle through its own thunk)")
@@ -157,20 +194,17 @@ object Stage {
             hp.getFileSystem(spark.sessionState.newHadoopConf())
               .delete(hp, true)
           } catch { case _: Throwable => () } // best-effort cleanup
-        try {
-          write(p)
-        } catch { case e: Throwable =>
+        val built = try Built(p, write(p)) catch { case e: Throwable =>
           dropDir() // a failed write must not orphan a partial dir either
           throw e
         } finally building.get.remove(key)
-        shared.putIfAbsent(key, p) match {
-          case null => p
+        shared.putIfAbsent(key, built) match {
+          case null => built
           case winner => // lost a race: adopt the winner, drop our copy
             dropDir()
             winner
         }
     }
-    path
   }
 
   // keys this thread is currently building (self-recursion detector)
@@ -217,9 +251,9 @@ object Stage {
                     dir: String): Map[String, String] = {
     val root = rootFor(spark)
     val out = Map.newBuilder[String, String]
-    shared.forEach { (k, p) =>
+    shared.forEach { (k, b) =>
       if (k.startsWith(s"$root|") && k.endsWith(s"|$dir"))
-        out += k.stripPrefix(s"$root|").stripSuffix(s"|$dir") -> p
+        out += k.stripPrefix(s"$root|").stripSuffix(s"|$dir") -> b.path
     }
     out.result()
   }

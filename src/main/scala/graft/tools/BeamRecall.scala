@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.SimilarityQueries
 
 /** Round-controls measurement main for the v16 beam index: per-probe
@@ -29,11 +28,9 @@ object BeamRecall {
       args.drop(1).headOption.filter(_ != "auto").map(_.toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffle = graft.Bench.autoShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

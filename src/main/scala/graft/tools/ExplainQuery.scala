@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture main for the per-round `plans/r{N}/<query>_{before,after}.txt`
   * artifacts: prints `.explain("formatted")` for each named query exactly as
   * the bench session would plan it (same master/shuffle/extensions/catalog
@@ -22,13 +20,9 @@ object ExplainQuery {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shuffle = graft.Bench.autoShufflePartitions(sfDir, cpus)
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** TEMPORARY measurement scratch — not committed. */
@@ -12,13 +11,9 @@ object ProbeScratch {
 
   def main(args: Array[String]): Unit = {
     val d = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB timing probe: runs a named query once (same session wiring as
   * [[graft.Bench]], noop sink) with a listener recording every Spark job's
@@ -11,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * query function *builds* shared stages / DML lifecycles, which never
   * appear in the final read's `explain` output. The call-site column maps
   * each job back to the operator that launched it (`parquet at
-  * Stage.scala:60` = a stage write, `collect at SnapshotLog.scala:...` =
+  * Stage.scala:<line>` = a stage write, `collect at SnapshotLog.scala:...` =
   * a commit-planning action, `save at ProfileQuery.scala` = the timed
   * read).
   *
@@ -31,13 +30,9 @@ object ProfileQuery {
     val passes = if (args.length >= 3) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shuffle = graft.Bench.autoShufflePartitions(sfDir, cpus)
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -48,7 +43,7 @@ object ProfileQuery {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         // the result stage's name embeds the action call site ("parquet at
-        // Stage.scala:60"); stage count + total task count size the job
+        // Stage.scala:<line>"); stage count + total task count size the job
         val site = e.stageInfos.lastOption.map(_.name).getOrElse("")
         val tasks = e.stageInfos.map(_.numTasks).sum
         val stages = e.stageInfos.map(si =>
@@ -70,7 +65,7 @@ object ProfileQuery {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       lastSec = (System.nanoTime() - t0) / 1e9
     }
-    Thread.sleep(500) // let the listener bus drain the final JobEnd events
+    org.apache.spark.sql.graftshim.CatalystBridge.drainListeners(spark.sparkContext, 60000L)
     spark.stop()
     import scala.jdk.CollectionConverters._
     val recs = jobs.values.asScala.toSeq.filter(_.ended > 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.SnapshotLog
 
 /** Separate-JVM writer for SnapshotRaceSpec's end-to-end concurrency
@@ -24,7 +23,7 @@ object RaceWriter {
     }
     val n = nStr.toInt
     val w = writerId.toLong
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master("local[2]")
       .appName(s"graft-race-$writerId")
       .config("spark.sql.shuffle.partitions", "2")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{SnapshotLog, SyntheticShares}
 import graft.queries.MigrationQueries.Merge0
@@ -31,11 +30,9 @@ object SkipProbe {
     val passes = if (args.length >= 3) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val shuffle = graft.Bench.autoShufflePartitions(sfDir, cpus)
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

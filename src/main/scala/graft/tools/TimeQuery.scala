@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing probe with an EXPLICIT shuffle-partition count —
   * the controls tool for isolating partition-sizing effects that
   * [[graft.Bench.autoShufflePartitions]]'s data-driven sizing would fold
@@ -22,13 +20,9 @@ object TimeQuery {
       if (args(2) == "auto") graft.Bench.autoShufflePartitions(sfDir, cpus)
       else args(2).toInt
     val passes = if (args.length >= 4) args(3).toInt else 3
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -69,4 +69,12 @@ object CatalystBridge {
     org.apache.spark.sql.execution.datasources.PartitionedFile(
       org.apache.spark.sql.catalyst.InternalRow.empty,
       org.apache.spark.paths.SparkPath.fromPathString(path), 0L, length)
+
+  /** Block until every event posted so far has reached every listener
+    * (`private[spark]`): a job's end event is posted before its action
+    * returns, so a listener read after this has seen every finished job.
+    * Throws `java.util.concurrent.TimeoutException` after `timeoutMs`.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

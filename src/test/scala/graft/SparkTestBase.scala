@@ -19,14 +19,10 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts nanos
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.catalog.graft", classOf[graft.sql.GraftTableCatalog].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
