@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,48 +17,16 @@ final case class CowFileStats(file: String, lo: Long, hi: Long, hasStats: Boolea
 final case class CowMergeReport(
     nFilesBefore: Int,    // data files in the table before the merge
     nRewritten: Int,      // files whose key range intersected the upd/del footprint
-    nUntouched: Int,      // files carried over byte-identical (renamed, never copied)
+    nUntouched: Int,      // files carried over byte-identical (referenced, never copied)
     nNewFiles: Int)       // files written (rewritten data + admitted inserts)
 
-/** Copy-on-write keyed MERGE against a parquet table directory — the
-  * lakehouse sink: a 100 TB corpus lives in parquet files, where "apply
-  * this changeset" must mean REWRITING ONLY THE FILES THAT CONTAIN
-  * AFFECTED KEYS and leaving every other file physically untouched.
-  * Rewriting the whole table per changeset (the naive
-  * read-merge-overwrite) is a full-table write amplification no
-  * production pipeline survives; this operator bounds the write to the
-  * changeset's key footprint.
-  *
-  * Semantics are EXACTLY [[Merge.apply]]'s functional MERGE (partial
-  * updates via coalesce, delete drops, WHEN-NOT-MATCHED insert ignores
-  * keys the base already holds) — CowMergeSpec certifies row-for-row
-  * equality against it, and the m11 oracle entry certifies the on-disk
-  * result against m09's DuckDB MERGE twin.
-  *
-  * How it scales:
-  *  - PLANNING reads parquet FOOTERS, not data: per-file min/max of the
-  *    key column (narrow when the table is written clustered by key —
-  *    [[writeKeyed]]/[[Compaction.compact]] layouts). The footer loop is
-  *    file-count-sized metadata work, the same order as Spark's own file
-  *    index build; the key-to-file match is one broadcast range join of
-  *    the changeset's distinct keys against the |files|-row stats table.
-  *  - REWRITE reads only the affected files, applies the upd/del
-  *    changeset with [[Merge.apply]]'s joins (hash-partitioned on the
-  *    key), and re-clusters the replacement files by key range so the
-  *    NEXT merge's footers stay narrow.
-  *  - INSERT admission (WHEN NOT MATCHED) anti-joins the insert keys
-  *    against the key column of ONLY the files whose range could contain
-  *    them — a column-pruned scan of the insert footprint, not the table.
-  *  - COMMIT is metadata-only for the untouched files: they are RENAMED
-  *    into the assembled table (same inode — byte identity is trivial,
-  *    cost is a filesystem metadata op even for a 100 TB table), new
-  *    files are renamed in beside them, and the table path is swapped in
-  *    one directory rename. Single-writer discipline is assumed (the
-  *    changeset batch is the writer); a crash between the two final
-  *    renames leaves the fully-assembled table under a dot-prefixed
-  *    sibling, recoverable by completing the rename — the remaining
-  *    window a manifest/transaction-log layer (Iceberg/Delta-style)
-  *    would close.
+/** The copy-on-write planning and layout pieces [[SnapshotLog]]'s merge,
+  * OPTIMIZE and stage writes run on: the key-clustered writer
+  * ([[writeKeyed]]), per-file key ranges from parquet footers
+  * ([[keyRangesOf]]) and the changeset-key-to-file range join
+  * ([[matchFiles]]). Planning reads footers or manifest stamps, never
+  * data, and narrow per-file ranges are what let it prune a merge's
+  * rewrite down to the changeset's key footprint.
   */
 object CowMerge {
 
@@ -71,31 +39,11 @@ object CowMerge {
       .sortWithinPartitions(col(key))
       .write.mode("overwrite").parquet(dir)
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Parquet data files under `dir` (markers and dotfiles excluded). */
-  private def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
-    val it = fs(spark, dir).listFiles(new Path(dir), true)
-    val out = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) out += f.getPath
-    }
-    out.result()
-  }
-
-  /** Per-file [min, max] of integral column `key` from parquet footers —
-    * metadata reads only (one ranged footer fetch per file), never a data
-    * scan. Files without usable stats come back `hasStats=false`.
-    */
-  def keyRanges(spark: SparkSession, dir: String, key: String): Seq[CowFileStats] =
-    keyRangesOf(spark, dataFiles(spark, dir), key)
-
-  /** [[keyRanges]] over an explicit file list — the manifest-table form
-    * ([[SnapshotLog]]), where "the table" is a committed file set, not a
-    * directory listing.
+  /** Per-file [min, max] of integral column `key` from the parquet
+    * footers of `files` (the committed file set of a [[SnapshotLog]]
+    * version) — metadata reads only (one ranged footer fetch per file),
+    * never a data scan. Files without usable stats come back
+    * `hasStats=false`.
     */
   def keyRangesOf(spark: SparkSession, files: Seq[Path], key: String): Seq[CowFileStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -160,83 +108,5 @@ object CowMerge {
         !col("hasStats") || (col("__k") >= col("lo") && col("__k") <= col("hi")))
       .select("file").distinct()
       .as[String].collect().toSeq
-  }
-
-  /** Apply changeset `cs` (op + key + payload columns, [[Merge.apply]]'s
-    * contract) to the parquet table at `tableDir` copy-on-write, in
-    * place. Returns the file-level report; the table at `tableDir` holds
-    * the merged rows afterwards.
-    */
-  def execute(spark: SparkSession, tableDir: String, cs: DataFrame,
-      key: String): CowMergeReport = {
-    val ranges = keyRanges(spark, tableDir, key)
-    val before = ranges.map(_.file)
-
-    val updDel = cs.where(col("op").isin(Merge.OpUpdate, Merge.OpDelete))
-    val ins = cs.where(col("op") === Merge.OpInsert)
-    val affected = matchFiles(spark, ranges, updDel.select(col(key))).toSet
-    val insCheck = matchFiles(spark, ranges, ins.select(col(key)))
-    val untouched = before.filterNot(affected)
-
-    // rewritten data: the functional MERGE restricted to the affected
-    // files (every row matching an upd/del key lives there, by planning)
-    val rewritten: Option[DataFrame] =
-      if (affected.isEmpty) None
-      else Some(Merge(spark.read.parquet(affected.toSeq: _*), updDel, key))
-
-    // WHEN NOT MATCHED admission: drop inserts whose key exists anywhere
-    // in the base — only files whose range could hold them are scanned,
-    // and only their key column is read
-    val payload = spark.read.parquet(before: _*).columns.filterNot(_ == key).toSeq
-    val admitted: Option[DataFrame] =
-      if (ins.isEmpty) None
-      else {
-        val insRows = ins.select(col(key) +: payload.map(col): _*)
-        Some(
-          if (insCheck.isEmpty) insRows
-          else insRows.join(
-            spark.read.parquet(insCheck: _*).select(col(key)), Seq(key), "left_anti"))
-      }
-
-    val newData = (rewritten, admitted) match {
-      case (Some(r), Some(i)) => Some(r.unionByName(i))
-      case (Some(r), None)    => Some(r)
-      case (None, Some(i))    => Some(i)
-      case (None, None)       => None
-    }
-
-    val hfs = fs(spark, tableDir)
-    val table = new Path(tableDir)
-    val parent = table.getParent
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val scratch = new Path(parent, s".${table.getName}-cow-new-$tag")
-    val assembled = new Path(parent, s".${table.getName}-cow-asm-$tag")
-
-    // stage the replacement files (re-clustered by key so the next CoW's
-    // footers stay narrow); file count follows the rewritten footprint
-    val nNew = newData.map { df =>
-      val n = math.max(1, affected.size)
-      df.repartitionByRange(n, col(key)).sortWithinPartitions(col(key))
-        .write.mode("overwrite").parquet(scratch.toString)
-      dataFiles(spark, scratch.toString).size
-    }.getOrElse(0)
-
-    // assemble: untouched files RENAMED in (metadata-only, same bytes),
-    // new files renamed in beside them, then one directory swap
-    require(hfs.mkdirs(assembled), s"cannot create $assembled")
-    untouched.foreach { f =>
-      val p = new Path(f)
-      require(hfs.rename(p, new Path(assembled, p.getName)), s"rename failed: $f")
-    }
-    if (nNew > 0) dataFiles(spark, scratch.toString).foreach { p =>
-      require(hfs.rename(p, new Path(assembled, p.getName)), s"rename failed: $p")
-    }
-    val old = new Path(parent, s".${table.getName}-cow-old-$tag")
-    require(hfs.rename(table, old), s"swap failed: $table -> $old")
-    require(hfs.rename(assembled, table), s"swap failed: $assembled -> $table")
-    hfs.delete(old, true)
-    hfs.delete(scratch, true)
-
-    CowMergeReport(before.size, affected.size, untouched.size, nNew)
   }
 }

@@ -17,12 +17,11 @@ final case class SnapshotCommit(version: Long, report: CowMergeReport)
 final class ConcurrentCommitException(msg: String)
     extends IllegalStateException(msg)
 
-/** Manifest-committed versioned parquet table — the transaction-log layer
-  * [[CowMerge]]'s docstring names as its remaining gap. CowMerge commits
-  * by directory rename, which (a) leaves a crash window between the two
-  * final renames and (b) does not exist as an atomic operation on object
-  * stores, where a 100 TB table actually lives. This operator removes the
-  * rename from the commit path entirely:
+/** Manifest-committed versioned parquet table. A commit by directory
+  * rename would (a) leave a crash window between the final renames and
+  * (b) not exist as an atomic operation on object stores, where a 100 TB
+  * table actually lives. This operator keeps the rename out of the
+  * commit path entirely:
   *
   *  - DATA FILES ARE IMMUTABLE. Every write lands under `data/` with a
   *    globally-unique name and is never modified or moved afterwards.
@@ -49,7 +48,7 @@ final class ConcurrentCommitException(msg: String)
   *    merge that produced v+1 rewrote only its key footprint, so v and
   *    v+1 SHARE every untouched file (referenced by both manifests, never
   *    copied — byte identity for free, the CoW sharing CowMergeSpec
-  *    proves by md5 here proven by name identity).
+  *    proves by name and md5).
   *  - CDC READS FROM FILE DIFFS: [[cdc]](v0, v1) reads ONLY the files the
   *    two manifests do not share. A changeset touching 0.1% of a 100 TB
   *    table yields a diff scan of ~0.1% of its files; rows rewritten
@@ -71,10 +70,11 @@ final class ConcurrentCommitException(msg: String)
   *    (expired versions + crash orphans) — retention is a policy knob,
   *    not a correctness one.
   *
-  * Merge semantics are [[Merge.apply]]'s, planned file-level exactly as
-  * [[CowMerge.execute]] (footer min/max pruning, insert admission scoped
-  * to the insert footprint); m12 certifies the CDC output against the
-  * DuckDB-derived changeset and SnapshotLogSpec pins the physical facts.
+  * Merge semantics are [[Merge.apply]]'s, planned file-level from
+  * per-file key ranges ([[CowMerge.matchFiles]]; insert admission scoped
+  * to the insert footprint); m11 certifies the merged table and m12 the
+  * CDC output against DuckDB, and SnapshotLogSpec/CowMergeSpec pin the
+  * physical facts.
   *
   * MANIFEST SIZING, stated honestly: a manifest lists the version's FULL
   * file set plus its stamps — the key `range=` line and up to
@@ -1362,23 +1362,20 @@ object SnapshotLog {
   }
 
   /** The merge-source materialization decision (see the comment at the
-    * use site): conf override wins; otherwise persist exactly when the
-    * changeset plan carries a non-deterministic expression.
+    * use site): persist exactly when the changeset plan carries a
+    * non-deterministic expression.
     */
-  private[graft] def shouldMaterialize(spark: SparkSession,
-      cs: DataFrame): Boolean =
-    spark.conf.getOption("spark.graft.mergeMaterialize") match {
-      case Some(v) => v.toBoolean
-      case None => cs.queryExecution.analyzed.exists(
-        _.expressions.exists(e => e.find(!_.deterministic).nonEmpty))
-    }
+  private[graft] def shouldMaterialize(cs: DataFrame): Boolean =
+    cs.queryExecution.analyzed.exists(
+      _.expressions.exists(e => e.find(!_.deterministic).nonEmpty))
 
   /** Apply changeset `cs` ([[Merge.apply]]'s contract) to the latest
     * version, copy-on-write, committing the result as the next version.
-    * Planning and rewrite are [[CowMerge.execute]]'s (footer pruning,
-    * scoped insert admission); the difference is the commit — untouched
-    * files are REFERENCED by the new manifest, never moved, and the old
-    * version remains readable.
+    * Planning prunes the rewrite to the files whose stamped key range
+    * holds an update or delete key, and scopes insert admission to the
+    * files that could hold an insert key; untouched files are REFERENCED
+    * by the new manifest, never moved, and the old version remains
+    * readable.
     */
   def merge(spark: SparkSession, tableDir: String, cs: DataFrame,
       key: String, meta: Seq[String] = Nil): SnapshotCommit = {
@@ -1449,11 +1446,8 @@ object SnapshotLog {
     // (bounded) and usually derives from page-cached columnar input, so
     // recomputation is cheaper than the cache's serialize-into-block-
     // store pass — MEASURED at sf0.1: always-persist cost +20-25% across
-    // the merge-lifecycle suite (m12/m17/m23/m24/d31 A-B, r16). Callers
-    // with expensive deterministic sources (a JDBC scan, a long view
-    // chain) opt in via spark.graft.mergeMaterialize=true; =false forces
-    // off (accepting the non-deterministic hazard).
-    val doMat = shouldMaterialize(spark, cs)
+    // the merge-lifecycle suite (m12/m17/m23/m24/d31 A-B, r16).
+    val doMat = shouldMaterialize(cs)
     val csM =
       if (doMat) cs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else cs

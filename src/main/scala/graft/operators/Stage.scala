@@ -56,13 +56,6 @@ object Stage {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A fresh stage-root subdirectory path for writers that manage their
-    * own format (bucketed tables, sidecars) — same root/lifecycle as
-    * [[table]] stages, no write performed here.
-    */
-  def dirFor(spark: org.apache.spark.sql.SparkSession, name: String): String =
-    s"${rootFor(spark)}/$name-${seq.incrementAndGet()}"
-
   /** Materialize `df` as a written parquet table; return a scan of it. */
   def table(df: DataFrame, name: String): DataFrame =
     tableWithPath(df, name)._1
@@ -159,9 +152,9 @@ object Stage {
   }
 
   /** Memoized shared OUTPUT DIRECTORY: like [[sharedTable]] but the
-    * builder writes the path itself (e.g. [[Compaction.compact]], whose
-    * output layout is the whole point). First caller builds; later
-    * callers get the same path.
+    * builder writes the path itself (e.g. a [[SnapshotLog]] table, or
+    * v14's [[CowMerge.writeKeyed]] compaction, whose output layout is the
+    * whole point). First caller builds; later callers get the same path.
     */
   def sharedDir(spark: org.apache.spark.sql.SparkSession, name: String,
                 dir: String)(write: String => Unit): String =

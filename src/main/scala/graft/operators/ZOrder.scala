@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * layout only ever skips on its leading column — the trailing dimension's
   * min/max spans the whole domain in every file.
   *
-  * This is a WRITE-side operator like [[Bucketing]]: pay one clustering
+  * This is a WRITE-side operator: pay one clustering
   * shuffle at layout time, harvest it on every subsequent scan. At 100 TB
   * the skip ratio is the difference between touching 1/numFiles of the
   * data and touching all of it; the clustering itself is one

@@ -589,6 +589,19 @@ object DedupQueries {
   private def ngramPairs(s: SparkSession, d: String): DataFrame =
     Stage.sharedTable(s, "ngram_pairs", d)(ngramPairsUnstaged(s, d))
 
+  /** The PPJoin candidate predicate for J >= 1/2 over a prefix index
+    * self-joined as `a`/`b` (columns `doc_id`, `sz`, `rnk` and the shared
+    * token column `tok`): same token, ordered pair, size filter
+    * (2*min(sz) >= max(sz)) and positional filter
+    * (3*(1 + min(sz - rnk)) >= sz_a + sz_b). d06 and d28 derive the
+    * bounds; both join on exactly this predicate.
+    */
+  private def ppjoinCandidate(tok: String): Column =
+    col(s"a.$tok") === col(s"b.$tok") && col("a.doc_id") < col("b.doc_id") &&
+      col("a.sz") * 2 >= col("b.sz") && col("b.sz") * 2 >= col("a.sz") &&
+      (lit(1) + least(col("a.sz") - col("a.rnk"),
+        col("b.sz") - col("b.rnk"))) * 3 >= col("a.sz") + col("b.sz")
+
   /** The inverted-index pipeline BEFORE the outer staging — the plan
     * PlanShapeSpec's join-shape assertions run against.
     *
@@ -612,40 +625,6 @@ object DedupQueries {
     * corpus's 3-gram vocabulary) even ONE collision anywhere is a coin
     * flip, and one that also crosses a df boundary vanishing.
     */
-  /** Conf gate for the BUCKETED-index variant of d06: write the (doc_id,
-    * h, sz, rnk) PREFIX index ONCE as an h-bucketed table, so the
-    * candidate self-join consumes the bucket layout with ZERO h-shuffles
-    * (EnsureRequirements sees HashPartitioning(h) from the scan —
-    * PlanShapeSpec pins both the parity and the no-h-exchange plan fact).
-    *
-    * MEASURED AND REJECTED as the default (r14, sf1 documents = 50k
-    * docs, local[32], min of passes): shuffled 44.8 s, bucketed 71.8 s.
-    * Why it loses: exchange reuse already dedupes the df-aggregate and
-    * index-join shuffles of the identical exploded child, so the
-    * "three shuffles" are physically ONE — and the bucketed parquet
-    * write (encode + disk) of the exploded set costs strictly more than
-    * that single in-memory/local-spill shuffle. The flag stays (with its
-    * parity test) for the cluster regime where a shuffle is network-
-    * bound and the index is REUSED across runs — the case bucketing
-    * exists for — but single-run local execution keeps the shuffled
-    * form. The r13 typed-Aggregator precedent: alternatives are
-    * measured, not assumed.
-    */
-  val NgramBucketedKey = "spark.graft.d06.bucketed"
-
-  /** The PPJoin candidate predicate for J >= 1/2 over a prefix index
-    * self-joined as `a`/`b` (columns `doc_id`, `sz`, `rnk` and the shared
-    * token column `tok`): same token, ordered pair, size filter
-    * (2*min(sz) >= max(sz)) and positional filter
-    * (3*(1 + min(sz - rnk)) >= sz_a + sz_b). d06 and d28 derive the
-    * bounds; both join on exactly this predicate.
-    */
-  private def ppjoinCandidate(tok: String): Column =
-    col(s"a.$tok") === col(s"b.$tok") && col("a.doc_id") < col("b.doc_id") &&
-      col("a.sz") * 2 >= col("b.sz") && col("b.sz") * 2 >= col("a.sz") &&
-      (lit(1) + least(col("a.sz") - col("a.rnk"),
-        col("b.sz") - col("b.rnk"))) * 3 >= col("a.sz") + col("b.sz")
-
   private[graft] def ngramPairsUnstaged(s: SparkSession, d: String): DataFrame = {
       GraftNative.ensure(s)
       val sh = shingleStage(s, d)
@@ -677,27 +656,11 @@ object DedupQueries {
       // earlier shared rare shingle that passes — the emitted pair SET
       // (and the d06/d12/d14/d31 oracle hashes) is unchanged.
       val w = Window.partitionBy("doc_id").orderBy(col("df"), col("h"))
-      val idx0 = inv0.join(dft, Seq("h"))
+      val idx = inv0.join(dft, Seq("h"))
         .withColumn("rnk", row_number().over(w))
         .where(col("df").between(2, NgramMaxDf) &&
           col("rnk") <= col("sz") - expr("(sz + 1) DIV 2") + 1)
         .select("doc_id", "h", "sz", "rnk")
-      val idx =
-        if (!s.conf.getOption(NgramBucketedKey).exists(_.toBoolean)) idx0
-        else {
-          val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-          val tbl = s"d06_idx_bucketed_${java.util.UUID.randomUUID().toString.take(8)}"
-          val path = Stage.dirFor(s, s"d06_idx_b_$tbl")
-          // ONE shuffle by the bucket expression (so each task owns one
-          // bucket and writes one file), then the bucketed write — the
-          // self-join below consumes the h-layout shuffle-free. The
-          // written artifact is the PREFIX index (post df-cap + prefix
-          // filters), the reusable cluster-regime asset — not the raw
-          // exploded set, which only the one-time write job ever holds.
-          graft.operators.Bucketing.writeBucketed(
-            idx0.repartition(n, col("h")), tbl, path, Seq("h"), n)
-          graft.operators.Bucketing.readBucketed(s, tbl)
-        }
       val cand = idx.as("a").join(idx.as("b"), ppjoinCandidate("h"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()

@@ -317,33 +317,33 @@ object MigrationQueries {
 
     // Copy-on-write parquet keyed MERGE (m11) — the lakehouse sink: the
     // SAME changeset as m09 applied to the share table stored AS PARQUET
-    // FILES, where the merge plans affected files from footer key
-    // min/max, rewrites only those, carries every other file over by
-    // rename (byte-identical), and admits inserts against a key-column
-    // scan of only the files that could hold them
-    // ([[graft.operators.CowMerge]]). The oracle is m09's DuckDB MERGE
-    // twin verbatim, so the on-disk table is certified hash-equal to the
-    // functional merge; CowMergeSpec pins the physical facts (untouched
-    // files byte-identical, rewrite count = key footprint). The base is
-    // written range-clustered by id ([[CowMerge.writeKeyed]]) — the
-    // layout whose narrow footers make planning prune; this fixture's
-    // changeset touches every file (updates hit every 5th id), so the
-    // narrow-footprint path is CowMergeSpec's job, and this entry
-    // certifies SEMANTICS at full footprint.
+    // FILES through [[graft.operators.SnapshotLog.merge]], which plans
+    // affected files from the key ranges stamped in the manifest,
+    // rewrites only those, references every other file unchanged from
+    // the new manifest, and admits inserts against a key-column scan of
+    // only the files that could hold them. The table is m12's ("m12_snap":
+    // 8 files range-clustered by id at v0, the m09 changeset merged at
+    // v1). The oracle is m09's DuckDB MERGE twin verbatim, so the
+    // committed table is certified hash-equal to the functional merge;
+    // CowMergeSpec pins the physical facts (untouched files kept by name,
+    // rewrite count = key footprint). This fixture's changeset touches
+    // every file (updates hit every 5th id), so the narrow-footprint path
+    // is CowMergeSpec's job, and this entry certifies SEMANTICS at full
+    // footprint.
     Q("m11_cow_merge", Merge0.keyedMergeSql) { (s, d) =>
-      import graft.operators.{CowMerge, Stage}
-      val dir = Stage.sharedDir(s, "m11_cow", d) { out =>
+      import graft.operators.{SnapshotLog, Stage}
+      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
         val shares = SyntheticShares.shares(Tables.orders(s, d))
-        CowMerge.writeKeyed(shares, "id", numFiles = 8, out)
-        CowMerge.execute(s, out, Merge0.changeset(shares), "id")
+        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
+        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
       }
-      s.read.parquet(dir)
+      SnapshotLog.readLatest(s, dir)
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
           "item_target", "file_source", "file_target")
         .orderBy("id")
     },
 
-    // Snapshot-log CDC (m12) — the transaction-log layer over m11's
+    // Snapshot-log CDC (m12) — the transaction-log layer under m11's
     // copy-on-write merge ([[graft.operators.SnapshotLog]]): the table is
     // a manifest-committed file set (commit = ONE exclusive manifest
     // create, no directory rename — the protocol that survives object

@@ -221,36 +221,14 @@ object SimilarityQueries {
     }(Encoders.product[ScoredNeighbor])
   }
 
-  /** Reduce-strategy switch for the bounded per-probe top-k, both ending
-    * in the same exact rank (identical results by construction; pinned by
-    * SimilaritySpec's parity test):
-    *
-    *  - `window` (default): feed the FULL scored set into
-    *    `row_number() <= k`. Spark >= 3.5 plans WindowGroupLimit(Partial)
-    *    BEFORE the probe_id exchange, so each map partition ships at most
-    *    k rows per probe — the same bounded-shuffle shape as the heap,
-    *    without leaving columnar/codegen execution for a Scala
-    *    mapPartitions (no encoder round-trip per scored row).
-    *  - `heap`: the explicit mapPartitions bounded heap ([[partialTopK]]),
-    *    kept as the measured fallback and for the k x partitions
-    *    pre-shuffle shape PqSpec's shortlist reuses.
-    *
-    * Measured at sf0.1 (min of 3 passes, v01+v02+v04+v06 total, two
-    * repeats each): window 1.64/1.67 s vs heap 1.75/1.75 s — the builtin
-    * wins ~5% on every query in the family; at larger row counts the
-    * per-scored-row encoder round-trip only the heap pays grows with N,
-    * so `window` is the default. Override for measurement via
-    * `spark.graft.topk.impl` or SPARK_GRAFT_TOPK.
-    */
-  private def useHeapTopK(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.topk.impl")
-      .orElse(sys.env.get("SPARK_GRAFT_TOPK"))
-      .contains("heap")
-
   /** Score the joined (vectors x broadcast probes) frame and reduce it
-    * to the exact per-probe top-k — partial group limit before the
-    * shuffle (WindowGroupLimit or heap, see [[useHeapTopK]]), exact rank
-    * after — the shared tail of v01/v02/v04/v06.
+    * to the exact per-probe top-k — the shared tail of v01/v02/v04/v06.
+    * The full scored set feeds `row_number() <= k`: Spark plans
+    * WindowGroupLimit(Partial) BEFORE the probe_id exchange, so each map
+    * partition ships at most k rows per probe, the bounded shuffle
+    * [[partialTopK]]'s heap gives, without leaving columnar/codegen
+    * execution. Measured at sf0.1 (v01+v02+v04+v06, min of 3 passes, two
+    * repeats): 1.64/1.67 s against 1.75/1.75 s for the heap.
     */
   private[graft] def scoreAndRank(joined: DataFrame): DataFrame = {
     val scored = joined
@@ -261,10 +239,7 @@ object SimilarityQueries {
       .as[ScoredNeighbor](Encoders.product[ScoredNeighbor])
     val w = Window.partitionBy("probe_id")
       .orderBy(col("cosine").desc, col("vec_id"))
-    val pre =
-      if (useHeapTopK(joined.sparkSession)) partialTopK(scored, K).toDF()
-      else scored.toDF()
-    pre
+    scored.toDF()
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= K)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("rnk"), col("cosine"))
@@ -1039,22 +1014,29 @@ object SimilarityQueries {
 
     // Tombstone COMPACTION (v14): the other half of the delete lifecycle
     // v13's own comment promises — a compaction job rewrites the written
-    // bucket index MINUS the tombstone set ([[graft.operators.Compaction
-    // .compactMinus]]: broadcast anti-join, file count sized from the
-    // input's bytes, range-layout restored on the bucket key), and
-    // steady-state queries probe the compacted files with NO mask at all.
+    // bucket index MINUS the tombstone set (size-guarded broadcast
+    // anti-join, then [[graft.operators.CowMerge.writeKeyed]] on the
+    // bucket key, the writer OPTIMIZE's stageFiles uses, into
+    // ceil(input bytes / CompactTargetBytes) files), and steady-state
+    // queries probe the compacted files with NO mask at all.
     // Certification: the compacted probe must produce EXACTLY v13's
     // masked answers (same oracle SQL) — if compaction dropped a live
     // row, kept a deleted one, or perturbed the layout-sensitive scoring,
     // the hash fails. CompactionSpec additionally pins the physical
     // facts: tombstoned ids absent from the FILES, row-count parity, and
-    // the file count the byte-sizing predicts.
+    // at most the planned file count.
     Q("v14_ann_compaction", tombstoneMaskedSql) { (s, d) =>
       val (_, idxPath) = dupEmbIndexWithPath(s, d)
       val tomb = tombstones(s, d)
       val compactedDir = Stage.sharedDir(s, "v14_compacted", d) { out =>
-        graft.operators.Compaction.compactMinus(s, idxPath, out,
-          CompactTargetBytes, tomb, "vec_id", sortBy = Seq("bucket"))
+        val p = new org.apache.hadoop.fs.Path(idxPath)
+        val bytes = p.getFileSystem(s.sessionState.newHadoopConf())
+          .getContentSummary(p).getLength
+        val n = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
+        graft.operators.CowMerge.writeKeyed(
+          s.read.parquet(idxPath).join(graft.operators.Joins.sizedBroadcast(tomb),
+            Seq("vec_id"), "left_anti"),
+          "bucket", n, out)
       }
       val compacted = s.read.parquet(compactedDir)
       val index = compacted.where(col("vec_id") < DedupQueries.BatchIdOffset)

@@ -28,9 +28,8 @@ object TimeQuery {
     spark.sparkContext.setLogLevel("ERROR")
     try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // args beyond [passes] are session conf overrides (`k=v`) — how the
-    // measured-alternative experiments (e.g. the d06 bucketed index) are
-    // toggled without a recompile
+    // args beyond [passes] are session conf overrides (`k=v`), e.g.
+    // spark.sql.shuffle.partitions=64, applied without a recompile
     val confs = args.drop(4).filter(_.contains('=')).map { kv =>
       val i = kv.indexOf('='); (kv.substring(0, i), kv.substring(i + 1))
     }

@@ -1,34 +1,61 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Compaction
+import graft.operators.{CowMerge, Merge, SnapshotLog, Stage}
+import graft.sql.SnapshotDml
 
-/** Compaction rewrites a fragmented table into few right-sized files
-  * without changing its rows, and the sorted variant restores per-file
-  * clustering on the sort key.
+/** Compaction: OPTIMIZE rewrites a fragmented snapshot table into few
+  * right-sized, key-clustered files without changing its rows, and v14's
+  * tombstone compaction removes deleted ids from the files it writes.
   */
 class CompactionSpec extends SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("fragmented table compacts to ~target-size files with identical rows") {
-    val root = Files.createTempDirectory("graft_compact").toString
-    val li = Tables.lineitem(spark, sfDir)
-    li.repartition(64).write.parquet(s"$root/frag")
-    val fragFiles = spark.read.parquet(s"$root/frag").inputFiles.length
-    assert(fragFiles >= 32, s"fixture not fragmented: $fragFiles files")
+  /** The orders table committed as `rounds` insert-only merges, one
+    * residue class of `o_orderkey` per round: every data file spans the
+    * whole key domain — the layout an append-heavy writer leaves.
+    */
+  private def fragmented(tag: String, rounds: Int): (String, DataFrame) = {
+    val dir = Files.createTempDirectory(tag).toString + "/t"
+    val orders = Tables.orders(spark, sfDir)
+    def slice(r: Int) = orders.where(col("o_orderkey") % rounds === r)
+    SnapshotLog.init(spark, dir, slice(0), "o_orderkey", numFiles = 1)
+    (1 until rounds).foreach { r =>
+      SnapshotLog.merge(spark, dir,
+        slice(r).withColumn("op", lit(Merge.OpInsert)), "o_orderkey")
+    }
+    (dir, orders)
+  }
 
-    val bytes = Compaction.dataBytes(spark, s"$root/frag")
+  private def keyRanges(dir: String) = {
+    val v = SnapshotLog.latestVersion(spark, dir)
+    CowMerge.keyRangesOf(spark, SnapshotLog.manifest(spark, dir, v)
+      .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n")), "o_orderkey")
+  }
+
+  test("fragmented table compacts to ~target-size files with identical rows") {
+    val (dir, orders) = fragmented("graft_compact", rounds = 8)
+    val fragFiles = keyRanges(dir).size
+    assert(fragFiles >= 8, s"fixture not fragmented: $fragFiles files")
+    val bytes = SnapshotLog.manifest(spark, dir, SnapshotLog.latestVersion(spark, dir))
+      .map(n => new java.io.File(s"$dir/data/$n").length).sum
     assert(bytes > 0)
-    val n = Compaction.compact(spark, s"$root/frag", s"$root/compact", bytes / 4 + 1)
-    val outFiles = spark.read.parquet(s"$root/compact").inputFiles.length
+
+    SnapshotDml.register(spark, "compact_frag", dir)
+    spark.conf.set(SnapshotDml.CompactTargetKey, (bytes / 4 + 1).toString)
+    val out = try spark.sql("OPTIMIZE compact_frag").head()
+      finally spark.conf.unset(SnapshotDml.CompactTargetKey)
+    val outFiles = SnapshotLog.manifest(spark, dir, out.getLong(0)).size
+    assert(out.getLong(2) == outFiles.toLong)
     assert(outFiles <= 4 && outFiles < fragFiles,
-      s"expected <= 4 files after compaction, got $outFiles (planned $n)")
+      s"expected <= 4 files after compaction, got $outFiles")
     // rows unchanged: same count and same checksum of a stable projection
-    def sig(dir: String) = spark.read.parquet(dir)
-      .agg(count(lit(1)), sum(col("l_orderkey") * col("l_linenumber"))).head()
-    assert(sig(s"$root/frag") == sig(s"$root/compact"))
+    def sig(df: DataFrame) =
+      df.agg(count(lit(1)), sum(col("o_orderkey") * col("o_custkey"))).head()
+    assert(sig(SnapshotLog.readLatest(spark, dir)) == sig(orders))
   }
 
   test("v14: compaction physically removes tombstones and probes match v13 row-for-row") {
@@ -40,50 +67,49 @@ class CompactionSpec extends SparkTestBase {
     assert(v14.nonEmpty)
     assert(v14.toSeq == v13.toSeq,
       "compacted-index probe diverged from the masked-index probe")
-    // the physical facts: files contain NO tombstoned corpus id, live
-    // rows all survive, and the returned count is the ACTUAL file count,
-    // bounded above by the byte-sized plan (range partitions can come up
-    // empty and write no file — actual == planned is not an invariant)
+    // the physical facts of the files v14 wrote (the memoized stage; a
+    // hit does not run the builder): no tombstoned corpus id, every live
+    // row, and at least one but at most the byte-sized plan of files
+    // (range partitions can come up empty and write no file)
     import graft.queries.{DedupQueries, SimilarityQueries}
+    val compactedDir = Stage.sharedDir(spark, "v14_compacted", sfDir)(
+      _ => fail("v14 did not build its compacted stage"))
     val (idx, idxPath) = SimilarityQueries.dupEmbIndexWithPath(spark, sfDir)
-    val root = Files.createTempDirectory("graft_tomb").toString
-    val tomb = SimilarityQueries.tombstones(spark, sfDir)
-    val actual = Compaction.compactMinus(spark, idxPath, s"$root/compacted",
-      SimilarityQueries.CompactTargetBytes, tomb, "vec_id", sortBy = Seq("bucket"))
-    assert(actual == Compaction.dataFileCount(spark, s"$root/compacted"),
-      "compactMinus must return the written data-file count")
-    val planned = math.max(1L, (Compaction.dataBytes(spark, idxPath) +
-      SimilarityQueries.CompactTargetBytes - 1) / SimilarityQueries.CompactTargetBytes)
+    val inputBytes = new java.io.File(idxPath).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum
+    val target = SimilarityQueries.CompactTargetBytes
+    val planned = math.max(1L, (inputBytes + target - 1) / target)
+    val compacted = spark.read.parquet(compactedDir)
+    val actual = compacted.inputFiles.length
     assert(actual >= 1 && actual <= planned,
       s"actual file count $actual outside [1, planned=$planned]")
-    val compacted = spark.read.parquet(s"$root/compacted")
     val deletedPresent = compacted
       .where(col("vec_id") % SimilarityQueries.TombstoneMod === 0 &&
         col("vec_id") < DedupQueries.BatchIdOffset).count()
     assert(deletedPresent == 0L, "a tombstoned id survived compaction")
-    val nTomb = tomb.count()
+    val nTomb = SimilarityQueries.tombstones(spark, sfDir).count()
     assert(nTomb > 0L, "tombstone fixture vacuous")
     assert(compacted.count() == idx.count() - nTomb,
       "compaction changed live-row count")
   }
 
   test("sorted compaction restores narrow per-file min/max on the sort key") {
-    val root = Files.createTempDirectory("graft_compact").toString
-    val li = Tables.lineitem(spark, sfDir)
-    li.repartition(32).write.parquet(s"$root/frag")
-    val bytes = Compaction.dataBytes(spark, s"$root/frag")
-    Compaction.compact(spark, s"$root/frag", s"$root/sorted", bytes / 4 + 1,
-      sortBy = Seq("l_orderkey"))
-    val ranges = spark.read.parquet(s"$root/sorted")
-      .groupBy(input_file_name())
-      .agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
+    val (dir, orders) = fragmented("graft_compact_sorted", rounds = 8)
     val span = {
-      val r = li.agg(min("l_orderkey"), max("l_orderkey")).head()
+      val r = orders.agg(min("o_orderkey"), max("o_orderkey")).head()
       (r.getLong(1) - r.getLong(0)).toDouble
     }
-    val avgFrac = ranges.map { case (lo, hi) => (hi - lo) / span }.sum / ranges.length
-    assert(avgFrac < 0.5,
-      s"sorted compaction left wide per-file ranges (avg frac $avgFrac)")
+    def avgFrac: Double = {
+      val rs = keyRanges(dir)
+      assert(rs.forall(_.hasStats))
+      rs.map(r => (r.hi - r.lo) / span).sum / rs.size
+    }
+    val pre = avgFrac
+    assert(pre > 0.9, s"fixture not fragmented: avg per-file key span $pre")
+    SnapshotLog.compact(spark, dir, numFiles = 4)
+    val post = avgFrac
+    assert(post < 0.5,
+      s"OPTIMIZE left wide per-file ranges (avg frac $pre -> $post)")
+    assert(SnapshotLog.readLatest(spark, dir).count() == orders.count())
   }
 }

@@ -3,13 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import org.apache.spark.sql.functions._
-import graft.operators.{CowMerge, Merge, SyntheticShares}
+import graft.operators.{CowMerge, Merge, SnapshotLog, SyntheticShares}
 import graft.queries.MigrationQueries.Merge0
 
-/** Copy-on-write parquet MERGE: only files whose footer key range
-  * intersects the changeset are rewritten, everything else is carried
-  * over byte-identical, and the resulting table is row-for-row the
-  * functional merge.
+/** Copy-on-write keyed MERGE on a snapshot table ([[SnapshotLog.merge]]):
+  * only files whose key range intersects the changeset are rewritten,
+  * every other file stays referenced byte-identical by the new manifest,
+  * and the resulting table is row-for-row the functional merge.
   */
 class CowMergeSpec extends SparkTestBase {
 
@@ -19,10 +19,9 @@ class CowMergeSpec extends SparkTestBase {
     MessageDigest.getInstance("MD5").digest(Files.readAllBytes(Paths.get(path)))
       .map("%02x".format(_)).mkString
 
-  private def fileMd5s(dir: String): Map[String, String] =
-    new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(f => f.getName -> md5(f.getAbsolutePath)).toMap
+  /** name -> md5 of every data file the manifest of version `v` lists. */
+  private def manifestMd5s(dir: String, v: Long): Map[String, String] =
+    SnapshotLog.manifest(spark, dir, v).map(n => n -> md5(s"$dir/data/$n")).toMap
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select(col("id"), col("share_type"), col("uid_owner"), col("item_type"),
@@ -30,11 +29,10 @@ class CowMergeSpec extends SparkTestBase {
       .collect().map(_.mkString("|")).sorted.toSeq
 
   test("narrow changeset rewrites only the key-footprint files; untouched are byte-identical") {
-    val root = Files.createTempDirectory("graft_cow").toString
-    val dir = s"$root/table"
-    // base: the share fixture, written range-clustered into 8 files
+    val dir = Files.createTempDirectory("graft_cow").toString + "/t"
+    // base: the share fixture, committed range-clustered into 8 files
     val base = SyntheticShares.shares(Tables.orders(spark, sfDir))
-    CowMerge.writeKeyed(base, "id", numFiles = 8, dir)
+    SnapshotLog.init(spark, dir, base, "id", numFiles = 8)
 
     val maxId = base.agg(max("id")).head().getLong(0)
     val cut = maxId / 10 // ids in the lowest ~decile only
@@ -64,20 +62,23 @@ class CowMergeSpec extends SparkTestBase {
         "item_source", "item_target", "file_source", "file_target")
     val cs = csUpd.unionByName(csDel).unionByName(csIns)
 
-    // expected affected files, computed independently from the pre-merge
-    // footers and the collected (small) changeset key set
-    val ranges = CowMerge.keyRanges(spark, dir, "id")
+    // expected affected files, computed independently from the v0 footers
+    // and the collected (small) changeset key set
+    val ranges = CowMerge.keyRangesOf(spark,
+      SnapshotLog.manifest(spark, dir, 0L)
+        .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n")), "id")
     assert(ranges.forall(_.hasStats), "clustered write must produce key stats")
     val updDelKeys = csUpd.select("id").unionByName(csDel.select("id"))
       .collect().map(_.getLong(0)).toSet
     val expectedAffected = ranges.filter(r => updDelKeys.exists(k => k >= r.lo && k <= r.hi))
-      .map(_.file).toSet
+      .map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet
     assert(expectedAffected.nonEmpty && expectedAffected.size < ranges.size,
       s"fixture degenerate: ${expectedAffected.size} of ${ranges.size} files affected")
 
-    val before = fileMd5s(dir)
+    val before = manifestMd5s(dir, 0L)
     val expectedFunctional = rows(Merge(base, cs, "id"))
-    val report = CowMerge.execute(spark, dir, cs, "id")
+    val commit = SnapshotLog.merge(spark, dir, cs, "id")
+    val report = commit.report
 
     assert(report.nFilesBefore == ranges.size)
     assert(report.nRewritten == expectedAffected.size,
@@ -85,31 +86,29 @@ class CowMergeSpec extends SparkTestBase {
     assert(report.nUntouched == ranges.size - expectedAffected.size)
     assert(report.nNewFiles >= 1)
 
-    // untouched files: same names still present, byte-identical
-    val after = fileMd5s(dir)
-    val untouchedNames = ranges.map(_.file).filterNot(expectedAffected)
-      .map(f => new org.apache.hadoop.fs.Path(f).getName)
-    untouchedNames.foreach { n =>
-      assert(after.contains(n), s"untouched file $n missing after merge")
+    // untouched files: the new manifest still references each by name,
+    // and its bytes are unchanged
+    val after = manifestMd5s(dir, commit.version)
+    before.keySet.filterNot(expectedAffected).foreach { n =>
+      assert(after.contains(n), s"untouched file $n missing from the new manifest")
       assert(after(n) == before(n), s"untouched file $n changed bytes")
     }
-    // affected files' names are gone (replaced by new part files)
-    expectedAffected.map(f => new org.apache.hadoop.fs.Path(f).getName)
-      .foreach(n => assert(!after.contains(n), s"affected file $n not rewritten"))
+    // affected files are no longer referenced (replaced by new files)
+    expectedAffected.foreach(n =>
+      assert(!after.contains(n), s"affected file $n not rewritten"))
 
-    // semantics: on-disk table == functional merge (incl. the ignored
-    // existing-key insert)
-    val got = rows(spark.read.parquet(dir))
+    // semantics: the committed table == functional merge (incl. the
+    // ignored existing-key insert)
+    val got = rows(SnapshotLog.read(spark, dir, commit.version))
     assert(got == expectedFunctional, "CoW result diverged from functional merge")
     assert(!got.exists(_.contains("/cow/dup")), "existing-key insert must be ignored")
     assert(got.exists(_.contains("/cow/new")), "fresh-key insert missing")
   }
 
   test("changeset outside every file range rewrites nothing and appends inserts") {
-    val root = Files.createTempDirectory("graft_cow2").toString
-    val dir = s"$root/table"
+    val dir = Files.createTempDirectory("graft_cow2").toString + "/t"
     val base = SyntheticShares.shares(Tables.orders(spark, sfDir))
-    CowMerge.writeKeyed(base, "id", numFiles = 4, dir)
+    SnapshotLog.init(spark, dir, base, "id", numFiles = 4)
     val maxId = base.agg(max("id")).head().getLong(0)
     import spark.implicits._
     val cs = Seq(
@@ -120,45 +119,44 @@ class CowMergeSpec extends SparkTestBase {
         java.lang.Long.valueOf(9L), "/a.dat"))
       .toDF("op", "id", "share_type", "uid_owner", "item_type",
         "item_source", "item_target", "file_source", "file_target")
-    val before = fileMd5s(dir)
-    val report = CowMerge.execute(spark, dir, cs, "id")
+    val before = manifestMd5s(dir, 0L)
+    val commit = SnapshotLog.merge(spark, dir, cs, "id")
+    val report = commit.report
     assert(report.nRewritten == 0 && report.nUntouched == report.nFilesBefore)
     assert(report.nNewFiles >= 1)
-    val after = fileMd5s(dir)
+    val after = manifestMd5s(dir, commit.version)
     before.foreach { case (n, h) => assert(after.get(n).contains(h)) }
-    assert(spark.read.parquet(dir).count() == base.count() + 1)
-    assert(spark.read.parquet(dir).where(col("item_target") === "/appended").count() == 1)
+    assert(after.size == before.size + report.nNewFiles)
+    val v1 = SnapshotLog.read(spark, dir, commit.version)
+    assert(v1.count() == base.count() + 1)
+    assert(v1.where(col("item_target") === "/appended").count() == 1)
   }
 
   test("m11's full-footprint CoW equals m09's functional merge row-for-row") {
-    val root = Files.createTempDirectory("graft_cow3").toString
-    val dir = s"$root/table"
     val base = SyntheticShares.shares(Tables.orders(spark, sfDir))
-    CowMerge.writeKeyed(base, "id", numFiles = 8, dir)
-    val cs = Merge0.changeset(base)
-    CowMerge.execute(spark, dir, cs, "id")
-    assert(rows(spark.read.parquet(dir)) == rows(Merge(base, cs, "id")))
+    val m11 = SparkEntry.queries("m11_cow_merge")(spark, sfDir)
+    assert(rows(m11) == rows(Merge(base, Merge0.changeset(base), "id")))
   }
 
   test("non-integral key: planning degrades to rewrite-all, never drops updates or admits dup inserts") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_cow4").toString
-    val dir = s"$root/table"
-    // STRING-keyed table: parquet footers carry binary stats the long-
-    // range planner can't use — the conservative path must treat every
-    // file as affected, not cast the keys to all-null and match nothing
+    val dir = Files.createTempDirectory("graft_cow4").toString + "/t"
+    // STRING-keyed table: the long-range planner can't use string
+    // ranges — the conservative path must treat every file as affected,
+    // not cast the keys to all-null and match nothing
     val base = (1 to 50).map(i => (f"k$i%03d", i.toLong)).toDF("k", "x")
-    CowMerge.writeKeyed(base, "k", numFiles = 4, dir)
+    SnapshotLog.init(spark, dir, base, "k", numFiles = 4)
     val cs = Seq(
       (Merge.OpUpdate, "k010", 9999L),
       (Merge.OpDelete, "k020", 0L),
       (Merge.OpInsert, "k030", 7L),   // existing key: must be IGNORED
       (Merge.OpInsert, "zzz1", 42L))  // fresh key: must land
       .toDF("op", "k", "x")
-    val report = CowMerge.execute(spark, dir, cs, "k")
+    val commit = SnapshotLog.merge(spark, dir, cs, "k")
+    val report = commit.report
     assert(report.nRewritten == report.nFilesBefore,
       s"string key must match all files conservatively, got $report")
-    val got = spark.read.parquet(dir).collect()
+    val got = SnapshotLog.read(spark, dir, commit.version).select("k", "x").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got("k010") == 9999L, "update silently dropped on non-integral key")
     assert(!got.contains("k020"), "delete silently dropped on non-integral key")

@@ -153,16 +153,6 @@ class PlanShapeSpec extends SparkTestBase {
       s"the per-label quota must bound rows before the shuffle:\n$p")
   }
 
-  test("v01 heap/window top-k reduce strategies agree row-for-row") {
-    val run = () => SparkEntry.queries("v01_knn_brute")(spark, dir).collect().toSeq
-    val window = run()
-    spark.conf.set("spark.graft.topk.impl", "heap")
-    try {
-      val heap = run()
-      assert(window == heap, "top-k strategies diverge")
-    } finally spark.conf.unset("spark.graft.topk.impl")
-  }
-
   test("v06 multi-probe ANN: the exploded probe set still broadcasts (bucket equi-join)") {
     val p = planOf("v06_ann_recall_multiprobe")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
@@ -246,25 +236,6 @@ class PlanShapeSpec extends SparkTestBase {
         assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
           s"$n must join on band/key equality:\n$p")
       }
-  }
-
-  test("d06 bucketed index variant: pair parity, and the bucket layout kills the h-shuffles") {
-    import graft.queries.DedupQueries
-    val base = DedupQueries.ngramPairsUnstaged(spark, dir)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    spark.conf.set(DedupQueries.NgramBucketedKey, "true")
-    try {
-      val bucketed = DedupQueries.ngramPairsUnstaged(spark, dir)
-      val p = bucketed.queryExecution.executedPlan.toString
-      val got = bucketed.orderBy("doc_a", "doc_b").collect().toSeq
-      assert(got == base, "bucketed d06 must be pair-identical to the shuffled form")
-      // the df aggregate + index join + self-join consume the bucket
-      // layout: no hashpartitioning exchange keyed on h anywhere
-      val hExchanges = p.split('\n')
-        .filter(l => l.contains("Exchange hashpartitioning(h#"))
-      assert(hExchanges.isEmpty,
-        s"the bucketed index must not re-shuffle on h:\n${hExchanges.mkString("\n")}")
-    } finally spark.conf.unset(DedupQueries.NgramBucketedKey)
   }
 
   test("t09 CMS: the fixed-size sketch broadcasts into the estimate join") {

@@ -454,22 +454,16 @@ class SnapshotLogSpec extends SparkTestBase {
   }
 
   test("merge-source materialization: non-deterministic changesets persist, " +
-      "deterministic ones don't, conf overrides both ways") {
+      "deterministic ones don't") {
     import spark.implicits._
     val det = Seq(("insert", 1L, "a")).toDF("op", "id", "x")
     val nondet = det.withColumn("x",
       concat(lit("r"), (rand() * 10).cast("long").cast("string")))
-    assert(!SnapshotLog.shouldMaterialize(spark, det),
+    assert(!SnapshotLog.shouldMaterialize(det),
       "a deterministic changeset must not pay the cache pass")
-    assert(SnapshotLog.shouldMaterialize(spark, nondet),
+    assert(SnapshotLog.shouldMaterialize(nondet),
       "a non-deterministic changeset MUST materialize: the planned " +
         "footprint and the written rows would otherwise draw independently")
-    try {
-      spark.conf.set("spark.graft.mergeMaterialize", "true")
-      assert(SnapshotLog.shouldMaterialize(spark, det))
-      spark.conf.set("spark.graft.mergeMaterialize", "false")
-      assert(!SnapshotLog.shouldMaterialize(spark, nondet))
-    } finally spark.conf.unset("spark.graft.mergeMaterialize")
     // end-to-end: a rand()-routed changeset merges into a consistent
     // table (row count conserved, every key present exactly once)
     val dir = java.nio.file.Files.createTempDirectory("mat").toString + "/t"
@@ -482,5 +476,130 @@ class SnapshotLogSpec extends SparkTestBase {
     val after = SnapshotLog.readLatest(spark, dir)
     assert(after.count() == 100L)
     assert(after.select("id").distinct().count() == 100L)
+  }
+
+  /** Rows of `df` as sorted text, columns in name order. */
+  private def allRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      .collect().map(_.mkString("|")).sorted.toSeq
+
+  /** Merge `cs` into the latest version of `dir` and assert the committed
+    * version equals [[Merge.apply]] over the version it merged into.
+    */
+  private def mergeAsReference(dir: String, cs: DataFrame, key: String) = {
+    val v = SnapshotLog.latestVersion(spark, dir)
+    val expected = allRows(Merge(SnapshotLog.read(spark, dir, v), cs, key))
+    val c = SnapshotLog.merge(spark, dir, cs, key)
+    assert(c.version == v + 1)
+    assert(allRows(SnapshotLog.read(spark, dir, c.version)) == expected,
+      s"merge at v$v diverged from Merge.apply")
+    c
+  }
+
+  test("merge planner: a null key in each change class matches Merge.apply") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_snapnull").toString + "/t"
+    SnapshotLog.init(spark, dir,
+      (1L to 200L).map(i => (i, s"v$i")).toDF("id", "x"), "id", numFiles = 4)
+    // a delete vector masking ids 10 and 20, so the masked-key
+    // re-insert path has something to scope
+    SnapshotLog.deleteKeys(spark, dir, Seq(10L, 20L).toDF("id"), "id")
+    def cs(rows: (String, java.lang.Long, String)*): DataFrame =
+      rows.toDF("op", "id", "x")
+    val nullKey: java.lang.Long = null
+    mergeAsReference(dir, cs(("update", nullKey, "u-null"), ("update", 5L, "u5")), "id")
+    mergeAsReference(dir, cs(("delete", nullKey, null), ("delete", 6L, null)), "id")
+    mergeAsReference(dir, cs(("insert", nullKey, "i-null"), ("insert", 1000L, "i1000")), "id")
+    val c = mergeAsReference(dir,
+      cs(("insert", 10L, "re10"), ("insert", nullKey, "i-null2")), "id")
+    val after = SnapshotLog.read(spark, dir, c.version)
+    assert(after.where(col("id") === 10L).select("x").as[String].collect().toSeq ==
+      Seq("re10"), "the masked key's re-insert must land exactly once")
+    assert(after.where(col("id") === 20L).isEmpty, "the other masked key resurfaced")
+    assert(SnapshotLog.deletes(spark, dir, c.version).nonEmpty,
+      "the vector still masks id 20")
+  }
+
+  test("merge planner: string keys on an unbucketed and a bucket(4, key) layout match Merge.apply") {
+    import spark.implicits._
+    val base = (1 to 120).map(i => (f"k$i%03d", i.toLong)).toDF("k", "x")
+    val cs = Seq(
+      ("update", "k010", 9999L), ("update", "k077", 7777L),
+      ("delete", "k020", 0L), ("delete", "nope", 0L),
+      ("insert", "k030", 7L), ("insert", "zz1", 42L))
+      .toDF("op", "k", "x")
+    Seq(None, Some(("k", 4))).foreach { bucketBy =>
+      val dir = Files.createTempDirectory("graft_snapstr").toString + "/t"
+      SnapshotLog.init(spark, dir, base, "k", numFiles = 4, bucketBy = bucketBy)
+      assert(SnapshotLog.partitionBucket(spark, dir, 0L) == bucketBy)
+      val c = mergeAsReference(dir, cs, "k")
+      assert(c.report.nRewritten >= 1, s"$bucketBy: nothing rewritten")
+      if (bucketBy.isEmpty)
+        assert(c.report.nRewritten == c.report.nFilesBefore,
+          "an unbucketed string key cannot prune: every file is rewritten")
+      // a second merge on top of the first keeps matching
+      mergeAsReference(dir, Seq(("update", "k030", 1L), ("delete", "zz1", 0L))
+        .toDF("op", "k", "x"), "k")
+    }
+  }
+
+  test("merge planner: an empty changeset commits a version that keeps every file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_snapempty").toString + "/t"
+    SnapshotLog.init(spark, dir,
+      (1L to 100L).map(i => (i, s"v$i")).toDF("id", "x"), "id", numFiles = 4)
+    val empty = Seq.empty[(String, Long, String)].toDF("op", "id", "x")
+    val c = mergeAsReference(dir, empty, "id")
+    assert(c.version == 1L)
+    assert(c.report == graft.operators.CowMergeReport(4, 0, 4, 0))
+    assert(SnapshotLog.manifest(spark, dir, 1L) == SnapshotLog.manifest(spark, dir, 0L))
+    assert(SnapshotLog.cdc(spark, dir, 0L, 1L, "id").isEmpty)
+  }
+
+  test("merge planner differential: rewritten files cover every file holding an " +
+      "update/delete key and stay inside the stamped ranges") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_snapdiff").toString + "/t"
+    // ids are multiples of 3, so id + 1 is always absent
+    SnapshotLog.init(spark, dir,
+      (0L until 2000L).map(i => (i * 3, s"v$i")).toDF("id", "x"), "id", numFiles = 8)
+    val rnd = new scala.util.Random(20261017L)
+    (1 to 6).foreach { round =>
+      val v = SnapshotLog.latestVersion(spark, dir)
+      val names = SnapshotLog.manifest(spark, dir, v)
+      // clustered keys (narrow footprint) or spread keys (wide), present
+      // or absent, plus one key outside the domain
+      val keys = {
+        val n = 3 + rnd.nextInt(10)
+        val centre = rnd.nextInt(6000)
+        val raw =
+          if (rnd.nextBoolean()) Seq.fill(n)(centre + rnd.nextInt(90))
+          else Seq.fill(n)(rnd.nextInt(6000))
+        (raw.map(k => if (rnd.nextInt(4) == 0) k - k % 3 + 1 else k - k % 3) :+
+          (if (rnd.nextBoolean()) -7 else 9000 + round)).map(_.toLong).distinct
+      }
+      val ops = keys.map(k => (Seq("update", "delete", "insert")(rnd.nextInt(3)), k,
+        s"r$round-$k"))
+      val cs = ops.toDF("op", "id", "x")
+      val updDel = ops.collect { case (op, k, _) if op != "insert" => k }.toSet
+
+      // brute force: the files of v that physically hold an update or
+      // delete key
+      val holding = spark.read.parquet(names.map(n => s"$dir/data/$n"): _*)
+        .select(input_file_name(), col("id")).as[(String, Long)].collect()
+        .collect { case (f, k) if updDel(k) => f.substring(f.lastIndexOf('/') + 1) }
+        .toSet
+      val stampedHit = SnapshotLog.keyRangesOfVersion(spark, dir, v, "id")
+        .filter(r => updDel.exists(k => k >= r.lo && k <= r.hi))
+        .map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet
+
+      val c = mergeAsReference(dir, cs, "id")
+      val rewritten = names.toSet -- SnapshotLog.manifest(spark, dir, c.version)
+      assert(c.report.nRewritten == rewritten.size)
+      assert(holding.subsetOf(rewritten),
+        s"round $round: files holding keys not rewritten: ${holding -- rewritten}")
+      assert(rewritten.subsetOf(stampedHit),
+        s"round $round: rewrote files outside the stamped ranges: ${rewritten -- stampedHit}")
+    }
   }
 }
