@@ -1,8 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import graft.GraftConf
 
 /** One change-set row, shaped exactly like [[Migration.changeset]] output. */
@@ -34,9 +34,10 @@ trait UpsertConnection extends AutoCloseable {
 }
 
 /** Serializable seam: shipped to executors, each partition opens its own
-  * connection. A real MySQL implementation wraps `java.sql.DriverManager`;
-  * the sandbox has no database, so [[FakeJdbcFactory]] is the test double
-  * (same pattern as `NamespaceConnector`/`FakeConnector`).
+  * connection. [[DriverManagerUpsertFactory]] wraps `java.sql.DriverManager`
+  * (MySQL in the reference deployment, embedded Derby in the JDBC specs
+  * and the benchmark); the test tree's `FakeJdbcFactory` is an in-JVM
+  * double (same pattern as `NamespaceConnector`/`FakeConnector`).
   */
 trait UpsertConnectionFactory extends Serializable {
   def connect(): UpsertConnection
@@ -53,6 +54,7 @@ trait UpsertConnectionFactory extends Serializable {
   * main.go:232-238; >1 rows = corrupt-key assertion). At 100 TB the
   * change-set is the small residue of the pipeline, and cluster-wide write
   * parallelism = partition count, sized by the caller via `repartition`.
+  * [[Merge.execute]] shares the statement loop ([[execute]]).
   */
 object JdbcUpsert {
 
@@ -67,54 +69,14 @@ object JdbcUpsert {
   /** Write the change-set through the connection seam. `dryRun` (K2,
     * main.go:219-221) emits the would-be outcomes without touching the
     * sink; `debug` (main.go:30,35 per-command trace) logs each bound
-    * statement.
+    * statement. `maxRetries` counts attempts per row (1 = no retry).
     */
   def write(cs: Dataset[UpsertRow], factory: UpsertConnectionFactory,
             dryRun: Boolean = false, debug: Boolean = false,
             maxRetries: Int = 5): Dataset[UpsertOutcome] = {
     implicit val enc = Encoders.product[UpsertOutcome]
-    if (dryRun) cs.map { r =>
-      if (debug) System.err.println(s"[graft dry-run] $UpdateSql <- ${bind(r)}")
-      UpsertOutcome(r.id, 0, None)
-    }
-    else cs.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val conn = factory.connect()
-        val stmt = conn.prepare(UpdateSql) // prepared ONCE per partition
-        var closed = false
-        def closeOnce(): Unit =
-          if (!closed) { closed = true; stmt.close(); conn.close() }
-        // close on task completion even when the iterator is abandoned
-        // mid-stream (limit/take downstream, task failure) — otherwise the
-        // connection leaks once per partition
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        val out = it.map { r =>
-          if (debug) System.err.println(s"[graft] $UpdateSql <- ${bind(r)}")
-          try {
-            val n = Migration.retryWithBackoff(maxRetries, initialDelayMs = 10) {
-              () => stmt.executeUpdate(bind(r))
-            }
-            if (n == 1) UpsertOutcome(r.id, n, None)
-            else if (n == 0) UpsertOutcome(r.id, 0, Some(ErrShareDeleted))
-            else UpsertOutcome(r.id, n, Some(s"expected 1 row affected, got $n"))
-          } catch {
-            case e: Exception =>
-              UpsertOutcome(r.id, -1,
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-          }
-        }
-        new Iterator[UpsertOutcome] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          def next(): UpsertOutcome = out.next()
-        }
-      }
-    }
+    execute(cs, factory, dryRun, debug, maxRetries)(_ => Merge.OpUpdate, bind,
+      (r, n, err) => UpsertOutcome(r.id, n, err))
   }
 
   /** Config-driven entry: dry-run from `spark.graft.notouchdb` (K2), trace
@@ -128,6 +90,76 @@ object JdbcUpsert {
 
   private def bind(r: UpsertRow): Seq[Any] =
     Seq(r.new_item_source, r.new_item_target, r.new_file_source, r.new_file_target, r.id)
+
+  /** The one per-partition statement loop behind [[write]] and
+    * [[Merge.execute]]. Per non-empty partition: one connection, one
+    * prepared statement per distinct SQL text (prepared on first use, so
+    * a failed prepare is that row's error), closed once when the rows run
+    * out or the task completes. Per row: `op` picks the statement
+    * ([[Merge.sqlFor]]; an unknown op is an error row) and the
+    * affected-rows rule, the statement runs with `maxRetries` attempts
+    * ([[Migration.retryWithBackoff]]), and `outcome` gets the affected
+    * count (-1 when the row failed) and the K4 error:
+    *   update: 1 = ok, 0 = K1's "share deleted";
+    *   delete: 0 or 1 both ok (idempotent);
+    *   insert: 1 = ok, sink key-constraint violations surface on the
+    *     error channel (the strict WHEN-MATCHED-insert signal);
+    *   any other count is an error.
+    */
+  private[operators] def execute[R, O: Encoder](rows: Dataset[R],
+      factory: UpsertConnectionFactory, dryRun: Boolean, debug: Boolean, maxRetries: Int)(
+      op: R => String, bind: R => Seq[Any], outcome: (R, Int, Option[String]) => O): Dataset[O] =
+    if (dryRun) rows.map { r =>
+      if (debug)
+        System.err.println(s"[graft dry-run] ${Merge.sqlFor.getOrElse(op(r), op(r))} <- ${bind(r)}")
+      outcome(r, 0, None)
+    }
+    else rows.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val conn = factory.connect()
+        val stmts = mutable.Map.empty[String, PreparedUpsert]
+        var closed = false
+        def closeOnce(): Unit =
+          if (!closed) { closed = true; stmts.values.foreach(_.close()); conn.close() }
+        // close on task completion even when the iterator is abandoned
+        // mid-stream (limit/take downstream, task failure) — otherwise the
+        // connection leaks once per partition
+        Option(TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
+        val out = it.map { r =>
+          val o = op(r)
+          Merge.sqlFor.get(o) match {
+            case None => outcome(r, -1, Some(s"unknown op '$o'"))
+            case Some(sql) =>
+              if (debug) System.err.println(s"[graft] $sql <- ${bind(r)}")
+              try {
+                val stmt = stmts.getOrElseUpdate(sql, conn.prepare(sql))
+                val n = Migration.retryWithBackoff(maxRetries, initialDelayMs = 10) {
+                  () => stmt.executeUpdate(bind(r))
+                }
+                outcome(r, n, o match {
+                  case Merge.OpUpdate if n == 0 => Some(ErrShareDeleted)
+                  case Merge.OpDelete if n <= 1 => None
+                  case _ if n == 1 => None
+                  case _ => Some(s"expected 1 row affected, got $n")
+                })
+              } catch {
+                case e: Exception =>
+                  outcome(r, -1, Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
+              }
+          }
+        }
+        new Iterator[O] {
+          def hasNext: Boolean = {
+            val h = out.hasNext
+            if (!h) closeOnce()
+            h
+          }
+          def next(): O = out.next()
+        }
+      }
+    }
 }
 
 /** The real-JDBC implementation of the connection seam: one
@@ -161,52 +193,4 @@ final class DriverManagerUpsertFactory(url: String,
     }
     override def close(): Unit = conn.close()
   }
-}
-
-/** In-JVM fake database for tests/local runs: a shared id-keyed table per
-  * `storeId`. `executeUpdate` affects 1 row when the id exists, 0 when it
-  * does not (the reference's deleted-share case), and throws for ids in
-  * `failIds` (exercising retry + the error channel).
-  */
-final class FakeJdbcFactory(storeId: String, failIds: Set[Long] = Set.empty)
-    extends UpsertConnectionFactory {
-
-  override def connect(): UpsertConnection = new UpsertConnection {
-    FakeJdbcStore.connectCalls.incrementAndGet()
-    override def prepare(sql: String): PreparedUpsert = {
-      FakeJdbcStore.prepareCalls.incrementAndGet()
-      require(sql == JdbcUpsert.UpdateSql, s"unexpected statement: $sql")
-      new PreparedUpsert {
-        override def executeUpdate(params: Seq[Any]): Int = {
-          val Seq(itemSource, itemTarget, fileSource, fileTarget, id) = params
-          val key = id.asInstanceOf[Long]
-          if (failIds(key)) throw new RuntimeException(s"connection lost on id $key")
-          val table = FakeJdbcStore.table(storeId)
-          if (table.replace(key,
-              Vector(itemSource, itemTarget, fileSource, fileTarget)) != null) 1
-          else 0
-        }
-        override def close(): Unit = ()
-      }
-    }
-    override def close(): Unit = ()
-  }
-}
-
-object FakeJdbcStore {
-  // JVM-wide: executor threads in local mode share it with the driver.
-  private val tables =
-    new ConcurrentHashMap[String, ConcurrentHashMap[Long, Vector[Any]]]()
-  val prepareCalls = new AtomicLong(0L)
-  val connectCalls = new AtomicLong(0L)
-
-  def table(storeId: String): ConcurrentHashMap[Long, Vector[Any]] =
-    tables.computeIfAbsent(storeId, _ => new ConcurrentHashMap())
-  def seed(storeId: String, id: Long): Unit =
-    table(storeId).put(id, Vector("", "", 0L, ""))
-  def rows(storeId: String): Map[Long, Vector[Any]] = {
-    import scala.jdk.CollectionConverters._
-    table(storeId).asScala.toMap
-  }
-  def reset(storeId: String): Unit = tables.remove(storeId)
 }

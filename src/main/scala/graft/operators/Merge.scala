@@ -42,11 +42,10 @@ final case class MergeOutcome(id: Long, op: String, affected: Int, error: Option
   * split is small (the common case: the changeset is the day's residue,
   * the base is the 100 TB table). No driver-side state anywhere.
   *
-  * [[Merge.execute]] is the PHYSICAL form against a JDBC sink: one
-  * connection + three prepared statements per partition (insert/update/
-  * delete, each compiled once, the JdbcUpsert convention), rows
-  * dispatched by op, affected-rows validation mapped onto the outcome
-  * channel.
+  * [[Merge.execute]] is the PHYSICAL form against a JDBC sink: rows
+  * dispatched by op to the insert/update/delete statements through
+  * [[JdbcUpsert]]'s per-partition statement loop, which also runs K1's
+  * update-only sink.
   */
 object Merge {
 
@@ -122,6 +121,8 @@ object Merge {
     "INSERT INTO oc_share (item_source, item_target, file_source, file_target, id) VALUES (?, ?, ?, ?, ?)"
   val UpdateSql: String = JdbcUpsert.UpdateSql
   val DeleteSql: String = "DELETE FROM oc_share WHERE id=?"
+  private[operators] val sqlFor: Map[String, String] =
+    Map(OpInsert -> InsertSql, OpUpdate -> UpdateSql, OpDelete -> DeleteSql)
 
   private def bind(r: MergeChange): Seq[Any] = r.op match {
     case OpDelete => Seq(r.id)
@@ -129,63 +130,15 @@ object Merge {
       r.new_file_target, r.id)
   }
 
-  /** Physical MERGE through the [[UpsertConnectionFactory]] seam: per
-    * partition one connection and one prepared statement per op (compiled
-    * lazily, so an all-update partition never prepares the others),
-    * per-row dispatch, affected-rows validation:
-    *   update: 1 = ok, 0 = K1's "share deleted";
-    *   delete: 0 or 1 both ok (idempotent);
-    *   insert: 1 = ok, sink key-constraint violations surface on the
-    *     error channel (the strict WHEN-MATCHED-insert signal).
+  /** Physical MERGE through the [[UpsertConnectionFactory]] seam: each
+    * row runs its op's statement in [[JdbcUpsert]]'s statement loop,
+    * which states the affected-rows rules. `maxRetries` counts attempts
+    * per row (1 = no retry).
     */
   def execute(cs: Dataset[MergeChange], factory: UpsertConnectionFactory,
               dryRun: Boolean = false, maxRetries: Int = 5): Dataset[MergeOutcome] = {
     implicit val enc = Encoders.product[MergeOutcome]
-    val sqlFor = Map(OpInsert -> InsertSql, OpUpdate -> UpdateSql, OpDelete -> DeleteSql)
-    if (dryRun) cs.map(r => MergeOutcome(r.id, r.op, 0, None))
-    else cs.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val conn = factory.connect()
-        val stmts = scala.collection.mutable.Map.empty[String, PreparedUpsert]
-        var closed = false
-        def closeOnce(): Unit =
-          if (!closed) { closed = true; stmts.values.foreach(_.close()); conn.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        val out = it.map { r =>
-          sqlFor.get(r.op) match {
-            case None => MergeOutcome(r.id, r.op, -1, Some(s"unknown op '${r.op}'"))
-            case Some(sql) =>
-              try {
-                val stmt = stmts.getOrElseUpdate(r.op, conn.prepare(sql))
-                val n = Migration.retryWithBackoff(maxRetries, initialDelayMs = 10) {
-                  () => stmt.executeUpdate(bind(r))
-                }
-                r.op match {
-                  case OpUpdate if n == 0 =>
-                    MergeOutcome(r.id, r.op, 0, Some(JdbcUpsert.ErrShareDeleted))
-                  case OpDelete if n <= 1 => MergeOutcome(r.id, r.op, n, None)
-                  case _ if n == 1        => MergeOutcome(r.id, r.op, 1, None)
-                  case _ =>
-                    MergeOutcome(r.id, r.op, n, Some(s"expected 1 row affected, got $n"))
-                }
-              } catch {
-                case e: Exception =>
-                  MergeOutcome(r.id, r.op, -1,
-                    Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-              }
-          }
-        }
-        new Iterator[MergeOutcome] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          def next(): MergeOutcome = out.next()
-        }
-      }
-    }
+    JdbcUpsert.execute(cs, factory, dryRun, debug = false, maxRetries)(_.op, bind,
+      (r, n, err) => MergeOutcome(r.id, r.op, n, err))
   }
 }

@@ -193,7 +193,10 @@ object Migration {
   /** C3 (main.go:156-172): retry-with-backoff for external connectors. The
     * reference hot-loops 5 reads with no sleep; this adds exponential backoff
     * with a deterministic cap. Used by connector code inside
-    * `foreachPartition` — never on the driver hot path.
+    * `foreachPartition` and by the JDBC sink — never on the driver hot
+    * path. `maxRetries` counts attempts (1 = no retry). A
+    * `SQLNonTransientException` (duplicate key, missing table, bad SQL)
+    * is rethrown at once: no retry can make it succeed.
     */
   def retryWithBackoff[T](maxRetries: Int = 5, initialDelayMs: Long = 100,
                           maxDelayMs: Long = 5000)(op: () => T): T = {
@@ -202,6 +205,7 @@ object Migration {
     while (true) {
       try return op()
       catch {
+        case e: java.sql.SQLNonTransientException => throw e
         case e: Exception =>
           attempt += 1
           if (attempt >= maxRetries) throw e

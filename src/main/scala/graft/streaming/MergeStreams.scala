@@ -17,10 +17,11 @@ import graft.operators.{Merge, MergeChange, MergeOutcome, UpsertConnectionFactor
   * replayed delete reports 0 rows), so the ledger is the difference
   * between exactly-once semantics and an error-channel flood.
   *
-  * One sink implementation, two execution modes: the per-partition
-  * connection + three lazily-prepared statements, op dispatch, and
-  * outcome validation all live in [[Merge.execute]]; this file only adds
-  * the epoch protocol. MergeStreamsSpec pins two-micro-batch replay
+  * One sink implementation, two execution modes: op dispatch lives in
+  * [[Merge.execute]], and the per-partition connection, lazily-prepared
+  * statements and outcome validation in the statement loop it shares
+  * with [[graft.operators.JdbcUpsert]]; this file only adds the epoch
+  * protocol. MergeStreamsSpec pins two-micro-batch replay
   * against embedded Derby to row-for-row parity with the batch
   * functional merge.
   */

@@ -105,10 +105,11 @@ final class JdbcEpochLedger(url: String, table: String = "graft_epochs",
 
 /** Streaming twin of the K1 keyed-upsert sink: an unbounded change-set
   * stream drains into [[JdbcUpsert.write]] one micro-batch at a time via
-  * foreachBatch — the same per-partition connection + prepared-statement
-  * reuse, affected-rows validation, and K4 continue-on-error outcomes as
-  * the batch sink (one sink implementation, two execution modes; the
-  * reference's one-shot `main` has no streaming at all, main.go:241-322).
+  * foreachBatch — the batch sink's one statement loop (per-partition
+  * connection + prepared-statement reuse, affected-rows validation, K4
+  * continue-on-error outcomes), shared with [[MergeStreams]]' CDC apply
+  * (one sink implementation, two execution modes; the reference's
+  * one-shot `main` has no streaming at all, main.go:241-322).
   *
   * `onOutcomes` receives each micro-batch's outcome rows (audit/error
   * channels) together with the batch id. [[writeStreamExactlyOnce]] adds

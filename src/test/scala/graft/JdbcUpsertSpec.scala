@@ -131,4 +131,77 @@ class JdbcUpsertSpec extends SparkTestBase {
     assert(FakeJdbcStore.rows(store)(5L) == Vector("5", "/5", 5L, "/f5.dat"))
     assert(FakeJdbcStore.rows(store)(4L) == Vector("", "", 0L, "")) // not written
   }
+
+  // --- the statement loop shared with Merge.execute ----------------------
+
+  test("a transient failure is retried: an id failing 2 of 3 attempts is written") {
+    val store = "t-flaky"
+    FakeJdbcStore.reset(store)
+    (1L to 4L).foreach(FakeJdbcStore.seed(store, _))
+    val out = JdbcUpsert.write(changeset(1L to 4L),
+      new FakeJdbcFactory(store, flakyIds = Map(3L -> 2)), maxRetries = 3)
+      .collect().sortBy(_.id)
+    assert(out.forall(o => o.affected == 1 && o.error.isEmpty), out.toSeq)
+    assert(FakeJdbcStore.attempts(store, 3L) == 3)
+    assert(FakeJdbcStore.rows(store)(3L) == Vector("3", "/3", 3L, "/f3.dat"))
+  }
+
+  test("maxRetries counts attempts: a non-transient SQL error gets one, others all") {
+    val store = "t-nontransient"
+    FakeJdbcStore.reset(store)
+    (1L to 4L).foreach(FakeJdbcStore.seed(store, _))
+    val out = JdbcUpsert.write(changeset(1L to 4L),
+      new FakeJdbcFactory(store, failIds = Set(2L), fatalIds = Set(3L)), maxRetries = 3)
+      .collect().map(o => o.id -> o).toMap
+    assert(FakeJdbcStore.attempts(store, 3L) == 1, "SQLNonTransientException was retried")
+    assert(FakeJdbcStore.attempts(store, 2L) == 3)
+    assert(Seq(2L, 3L).forall(i => out(i).affected == -1 && out(i).error.nonEmpty))
+    assert(out(1L).error.isEmpty && out(4L).error.isEmpty)
+  }
+
+  test("a statement reporting 2 affected rows is an error row") {
+    val store = "t-two-rows"
+    FakeJdbcStore.reset(store)
+    (1L to 3L).foreach(FakeJdbcStore.seed(store, _))
+    val out = JdbcUpsert.write(changeset(1L to 3L),
+      new FakeJdbcFactory(store, reportAffected = Map(2L -> 2))).collect().sortBy(_.id)
+    assert(out.toSeq == Seq(UpsertOutcome(1L, 1, None),
+      UpsertOutcome(2L, 2, Some("expected 1 row affected, got 2")), UpsertOutcome(3L, 1, None)))
+  }
+
+  test("each non-empty partition opens one connection and closes it once, " +
+    "also when limit(1) abandons the rows") {
+    import spark.implicits._
+    val store = "t-close"
+    FakeJdbcStore.reset(store)
+    (1L to 50L).foreach(FakeJdbcStore.seed(store, _))
+    def connects = FakeJdbcStore.connectCalls.get()
+    def closes = FakeJdbcStore.closeCalls.get()
+
+    // 3 rows in 8 slices: 5 partitions are empty and open nothing
+    val sparse = spark.sparkContext.parallelize(
+      (1L to 3L).map(i => UpsertRow(i, "s", "/s", i, "/s")), 8).toDS()
+    val (c0, x0) = (connects, closes)
+    assert(JdbcUpsert.write(sparse, new FakeJdbcFactory(store)).collect().length == 3)
+    assert((connects - c0, closes - x0) == ((3L, 3L)))
+
+    val (c1, x1) = (connects, closes)
+    val first = JdbcUpsert.write(changeset(1L to 50L).repartition(1),
+      new FakeJdbcFactory(store)).limit(1).collect()
+    assert(first.length == 1)
+    assert((1L to 50L).map(FakeJdbcStore.attempts(store, _)).sum < 50,
+      "limit(1) drained the partition; the abandoned-iterator path went untested")
+    assert((connects - c1, closes - x1) == ((1L, 1L)))
+  }
+
+  test("a statement that cannot be prepared becomes error rows, not a failed task") {
+    val store = "t-unpreparable"
+    FakeJdbcStore.reset(store)
+    (1L to 3L).foreach(FakeJdbcStore.seed(store, _))
+    val out = JdbcUpsert.write(changeset(1L to 3L),
+      new FakeJdbcFactory(store, unpreparable = Set(JdbcUpsert.UpdateSql))).collect()
+    assert(out.length == 3 &&
+      out.forall(o => o.affected == -1 && o.error.exists(_.contains("cannot prepare"))))
+    assert(FakeJdbcStore.rows(store)(2L) == Vector("", "", 0L, ""))
+  }
 }

@@ -75,6 +75,69 @@ class MergeSpec extends SparkTestBase {
     assert(out.length == 2 && out.forall(o => o.affected == 0 && o.error.isEmpty))
   }
 
+  // --- physical path through the fake: JdbcUpsert's statement loop ------
+
+  private def seedStore(store: String, ids: Seq[Long]): Unit = {
+    FakeJdbcStore.reset(store)
+    ids.foreach(FakeJdbcStore.seed(store, _))
+  }
+
+  private def upd(i: Long) = MergeChange(Merge.OpUpdate, i, s"$i", s"/$i", i, s"/f$i")
+  private def ins(i: Long) = MergeChange(Merge.OpInsert, i, s"$i", s"/$i", i, s"/f$i")
+  private def del(i: Long) = MergeChange(Merge.OpDelete, i, null, null, null, null)
+
+  test("physical merge: transient faults retry, a duplicate insert gets one " +
+    "attempt, 2 affected rows is an error") {
+    val store = "m-rules"
+    seedStore(store, 1L to 4L)
+    val f = new FakeJdbcFactory(store, flakyIds = Map(2L -> 2), reportAffected = Map(4L -> 2))
+    val out = Merge.execute(Seq(upd(2), del(3), ins(1), upd(4), ins(9)).toDS(), f,
+        maxRetries = 3)
+      .collect().map(o => o.id -> o).toMap
+    assert(out(2L) == MergeOutcome(2L, "update", 1, None))
+    assert(FakeJdbcStore.attempts(store, 2L) == 3)
+    assert(out(3L) == MergeOutcome(3L, "delete", 1, None))
+    assert(out(9L) == MergeOutcome(9L, "insert", 1, None))
+    assert(out(1L).affected == -1 && out(1L).error.exists(_.contains("duplicate key")))
+    assert(FakeJdbcStore.attempts(store, 1L) == 1, "a duplicate-key insert was retried")
+    assert(out(4L) == MergeOutcome(4L, "update", 2, Some("expected 1 row affected, got 2")))
+    assert(FakeJdbcStore.rows(store).keySet == Set(1L, 2L, 4L, 9L))
+  }
+
+  test("physical merge: each non-empty partition opens one connection and " +
+    "closes it once, also when limit(1) abandons the rows") {
+    val store = "m-close"
+    seedStore(store, 1L to 50L)
+    val f = new FakeJdbcFactory(store)
+    def connects = FakeJdbcStore.connectCalls.get()
+    def closes = FakeJdbcStore.closeCalls.get()
+
+    val sparse = spark.sparkContext.parallelize(Seq(upd(1), del(2), ins(60)), 8).toDS()
+    val (c0, x0) = (connects, closes)
+    assert(Merge.execute(sparse, f).collect().forall(_.error.isEmpty))
+    assert((connects - c0, closes - x0) == ((3L, 3L)))
+
+    val (c1, x1) = (connects, closes)
+    val first = Merge.execute((3L to 50L).map(upd).toDS().repartition(1), f)
+      .limit(1).collect()
+    assert(first.length == 1)
+    assert((3L to 50L).map(FakeJdbcStore.attempts(store, _)).sum < 48,
+      "limit(1) drained the partition; the abandoned-iterator path went untested")
+    assert((connects - c1, closes - x1) == ((1L, 1L)))
+  }
+
+  test("physical merge: a statement that cannot be prepared errs only its own rows") {
+    val store = "m-unpreparable"
+    seedStore(store, 1L to 3L)
+    val f = new FakeJdbcFactory(store, unpreparable = Set(Merge.DeleteSql))
+    val out = Merge.execute(Seq(del(1), upd(2), del(3), ins(4)).toDS(), f)
+      .collect().map(o => o.id -> o).toMap
+    assert(Seq(1L, 3L).forall(i =>
+      out(i).affected == -1 && out(i).error.exists(_.contains("cannot prepare"))))
+    assert(out(2L).error.isEmpty && out(4L).error.isEmpty)
+    assert(FakeJdbcStore.rows(store).keySet == Set(1L, 2L, 3L, 4L))
+  }
+
   // --- physical path against embedded Derby + parity with functional ----
 
   private val derbyUrl = "jdbc:derby:memory:graftmerge;create=true"
