@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR, materializing each result through the `noop` sink
   * (full execution incl. projections — a bare `.count()` would let Catalyst
@@ -38,25 +40,17 @@ object Bench {
     ((slabs + cpus - 1) / cpus) * cpus // round UP to whole waves
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Partition sizing is DATA-DRIVEN, no hand-knob: shuffle partitions
-    // scale with the input bytes actually under sfDir (one compressed-
-    // parquet ~3 MB slab per partition, floored at the thread count,
-    // rounded up to whole waves) — 32 at sf0.1, 64 at sf1, 192+ at sf3.
-    // This removes the old SPARK_GRAFT_SHUFFLE env override: a fixed
-    // count that fits sf0.1 made individual sort/agg partitions spill at
-    // 30x rows, and a knob an operator must remember to turn IS the bug.
-    // The alternative fix — AQE-owned sizing (initialPartitionNum=512,
-    // advisory 64m) — was measured and REJECTED: it regressed d06 3x at
-    // sf3 (207 s vs 72.7 s; recorded in BENCH_sf3_heavy.json), because
-    // AQE coalesces on compressed shuffle-write bytes, which for the
-    // exploded shingle working set under-estimates in-memory sort size.
-    val shuffle = autoShufflePartitions(sfDir, cpus.toInt)
+  /** The bench session: `local[cpus]`, [[autoShufflePartitions]] shuffle
+    * partitions, the AQE coalescing floor below, UI off, log level ERROR.
+    * Every harness that reports figures meant to match Bench's builds here
+    * ([[graft.tools.ProfileQuery]] too). The floor stays out of
+    * [[GraftSession.configure]] so Verify's and the specs' sessions keep
+    * Spark's default.
+    */
+  def session(sfDir: String, cpus: Int): SparkSession = {
     val spark = GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle.toString)
+      .config("spark.sql.shuffle.partitions", autoShufflePartitions(sfDir, cpus).toString)
       // AQE coalescing floor (r16, guide §2.2/§2.5): shuffle BYTES are a
       // poor proxy for task COST on expression-dense stages — d28's
       // array-jaccard verify carries ~30 bytes/pair but ~400 string hash
@@ -72,6 +66,25 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Partition sizing is DATA-DRIVEN, no hand-knob: shuffle partitions
+    // scale with the input bytes actually under sfDir (one compressed-
+    // parquet ~3 MB slab per partition, floored at the thread count,
+    // rounded up to whole waves) — 32 at sf0.1, 64 at sf1, 192+ at sf3.
+    // This removes the old SPARK_GRAFT_SHUFFLE env override: a fixed
+    // count that fits sf0.1 made individual sort/agg partitions spill at
+    // 30x rows, and a knob an operator must remember to turn IS the bug.
+    // The alternative fix — AQE-owned sizing (initialPartitionNum=512,
+    // advisory 64m) — was measured and REJECTED: it regressed d06 3x at
+    // sf3 (207 s vs 72.7 s; recorded in BENCH_sf3_heavy.json), because
+    // AQE coalesces on compressed shuffle-write bytes, which for the
+    // exploded shingle working set under-estimates in-memory sort size.
+    val spark = session(sfDir, cpus.toInt)
     // JVM/codegen/parquet-reader warmup on the smallest sf (untimed)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

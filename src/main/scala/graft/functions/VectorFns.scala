@@ -33,16 +33,6 @@ object VectorFns {
     when(d === 0.0, lit(0.0)).otherwise(dot(a, b) / d)
   }
 
-  /** Squared euclidean distance (cheaper than sqrt for nearest-centroid). */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   // --------------------------------------------------------------------
   // Integer-quantized vector math. Floating-point folds are sequential
   // and deterministic WITHIN one engine, but cross-engine (oracle) parity

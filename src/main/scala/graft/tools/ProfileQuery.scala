@@ -1,81 +1,113 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graftshim.CatalystBridge
 
-/** Per-JOB timing probe: runs a named query once (same session wiring as
-  * [[graft.Bench]], noop sink) with a listener recording every Spark job's
-  * wall duration and submitting call site, then prints one line per job
-  * sorted by cost. This is the measurement layer [[TimeQuery]] lacks for
-  * STAGED queries — their bench seconds are mostly jobs launched while the
-  * query function *builds* shared stages / DML lifecycles, which never
-  * appear in the final read's `explain` output. The call-site column maps
-  * each job back to the operator that launched it (`parquet at
-  * Stage.scala:<line>` = a stage write, `collect at SnapshotLog.scala:...` =
-  * a commit-planning action, `save at ProfileQuery.scala` = the timed
-  * read).
+/** Plan and per-JOB attribution for named queries on [[graft.Bench.session]]
+  * (noop sink, so the figures are the ones Bench measures). For each query
+  * it prints the final read's `explain("formatted")`, bracketed by
+  * `=== PLAN <name> ===` / `=== END <name> ===` so a caller can split
+  * multi-query output into `plans/` dumps, then one line per Spark job of
+  * the last pass, sorted by cost. Staged queries spend most of their bench
+  * seconds in jobs launched while the query function *builds* shared
+  * stages or DML lifecycles, which never appear in the final read's plan;
+  * each job line starts with the call site of the SQL action it belongs
+  * to, which maps it back to the operator that launched it (`parquet at
+  * Stage.scala:<line>` = a stage write, `collect at SnapshotLog.scala:...`
+  * = a commit-planning action, `save at ProfileQuery.scala` = the timed
+  * read, `-` = a job outside any SQL execution).
   *
-  * Usage: `ProfileQuery <sfDir> <query> [passes]` — pass 2+ to see the
-  * warmed profile (JIT distorts single-pass numbers; the LAST pass is
-  * printed).
+  * Usage: `ProfileQuery <sfDir> <query>[,<query>...] [passes]` — passes
+  * default to 2 so the printed (last) pass is warmed; JIT distorts
+  * single-pass numbers.
   */
 object ProfileQuery {
 
-  private final case class JobRec(id: Int, started: Long,
-      var ended: Long = -1L, site: String = "", desc: String = "")
+  /** One Spark job of the profiled pass; `ms` is -1 if its end was not seen. */
+  final case class Job(id: Int, ms: Long, desc: String)
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ProfileQuery <sfDir> <query> [passes]")
-    val sfDir = args(0)
-    val name = args(1)
-    val passes = if (args.length >= 3) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val shuffle = graft.Bench.autoShufflePartitions(sfDir, cpus)
-    val spark = graft.GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+  /** `plan` is the formatted explain of the final read's (unexecuted)
+    * `QueryExecution`; `jobs` are every job of the last pass, costliest first.
+    */
+  final case class Profile(name: String, plan: String, lastPassSec: Double, jobs: Seq[Job])
 
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+  private final case class JobRec(started: Long, desc: String) {
+    @volatile var ended: Long = -1L
+  }
+
+  /** Runs `name` `passes` times on `spark` (shared stages rebuilt each
+    * pass, as in Bench) and records the jobs of the last pass.
+    */
+  def profile(spark: SparkSession, sfDir: String, name: String, passes: Int): Profile = {
+    require(passes >= 1, s"passes must be >= 1, got $passes")
+    val fn = graft.SparkEntry.queries(name)
+    def run(): (DataFrame, Double) = {
+      graft.operators.Stage.resetShared()
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      (df, (System.nanoTime() - t0) / 1e9)
+    }
+    (1 until passes).foreach(_ => run())
+
+    val jobs = new ConcurrentHashMap[Int, JobRec]()
+    val sites = new ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      // an SQL execution's description is its action's call site ("parquet
+      // at Stage.scala:<line>"); AQE submits the execution's shuffle stages
+      // from its own pool, so their stage names only say CompletableFuture
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sites.put(x.executionId, x.description)
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // the result stage's name embeds the action call site ("parquet at
-        // Stage.scala:<line>"); stage count + total task count size the job
-        val site = e.stageInfos.lastOption.map(_.name).getOrElse("")
+        val site = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(sites.get(id.toLong))).getOrElse("-")
         val tasks = e.stageInfos.map(_.numTasks).sum
         val stages = e.stageInfos.map(si =>
           s"${si.stageId}:${si.numTasks}t:${si.name.takeWhile(_ != '\n').take(60)}")
           .mkString(" | ")
-        val desc = s"[${e.stageInfos.size} stages/$tasks tasks] $stages"
-        jobs.put(e.jobId, JobRec(e.jobId, e.time, site = site, desc = desc))
+        jobs.put(e.jobId,
+          JobRec(e.time, s"$site [${e.stageInfos.size} stages/$tasks tasks] $stages"))
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val r = jobs.get(e.jobId); if (r != null) r.ended = e.time
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach(_.ended = e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (df, sec) =
+      try run()
+      finally {
+        CatalystBridge.drainListeners(sc, 60000L)
+        sc.removeSparkListener(listener)
       }
+    val recorded = jobs.asScala.toSeq.map { case (id, r) =>
+      Job(id, if (r.ended < 0) -1L else r.ended - r.started, r.desc)
     }
-    val fn = graft.SparkEntry.queries(name)
-    var lastSec = 0.0
-    (1 to passes).foreach { p =>
-      graft.operators.Stage.resetShared()
-      if (p == passes) spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      lastSec = (System.nanoTime() - t0) / 1e9
-    }
-    org.apache.spark.sql.graftshim.CatalystBridge.drainListeners(spark.sparkContext, 60000L)
-    spark.stop()
-    import scala.jdk.CollectionConverters._
-    val recs = jobs.values.asScala.toSeq.filter(_.ended > 0)
-      .map(r => (r.ended - r.started, r))
-    val totalJobMs = recs.map(_._1).sum
-    println(f"=== $name: last-pass wall ${lastSec}%.3f s, ${recs.size} jobs, " +
-      f"sum-of-jobs ${totalJobMs / 1000.0}%.3f s ===")
-    recs.sortBy(-_._1).take(40).foreach { case (ms, r) =>
-      val what = if (r.desc.nonEmpty) r.desc else r.site
-      println(f"  job ${r.id}%4d  ${ms}%6d ms  $what")
-    }
+    Profile(name, df.queryExecution.explainString(FormattedMode), sec, recorded.sortBy(-_.ms))
+  }
+
+  /** The printed form: the plan block, a summary line, the 40 costliest jobs. */
+  def render(p: Profile): String =
+    (Seq(s"=== PLAN ${p.name} ===", p.plan, s"=== END ${p.name} ===",
+      f"=== ${p.name}: last-pass wall ${p.lastPassSec}%.3f s, ${p.jobs.size} jobs, " +
+        f"sum-of-jobs ${p.jobs.map(_.ms).filter(_ > 0).sum / 1000.0}%.3f s ===") ++
+      p.jobs.take(40).map(j => f"  job ${j.id}%4d  ${j.ms}%6d ms  ${j.desc}")).mkString("\n")
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: ProfileQuery <sfDir> <query>[,<query>...] [passes]")
+    val sfDir = args(0)
+    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val passes = if (args.length >= 3) args(2).toInt else 2
+    val spark = graft.Bench.session(sfDir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try names.foreach(n => println(render(profile(spark, sfDir, n, passes))))
+    finally spark.stop()
   }
 }

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.operators.SnapshotLog
-import graft.sources.SnapshotFileIndex
 
 /** Per-file Bloom key stamps — the hash-key pruning path where min/max
   * ranges are structurally useless: sidecar build at commit, point-probe
@@ -45,22 +43,6 @@ class BloomStampSpec extends SparkTestBase {
       }
     }
     if (bloom) withBloom(body()) else body()
-  }
-
-  private def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-    p.collect {
-      case f: FileSourceScanExec => Seq(f)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scansIn(q.plan)
-    }.flatten
-
-  private def filesRead(df: DataFrame): Long = {
-    df.collect()
-    scansIn(df.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
-      .head.metrics("numFiles").value
   }
 
   private def withBloom[A](body: => A): A = {

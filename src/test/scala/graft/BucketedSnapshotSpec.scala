@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.operators.SnapshotLog
-import graft.sources.SnapshotFileIndex
 
 /** `PARTITIONED BY (bucket(N, col))` — the hash layout for uniform keys:
   * every write distributes rows into N stable `pt_graftbucket=` dirs by
@@ -15,23 +12,6 @@ import graft.sources.SnapshotFileIndex
   * maintenance surface (OPTIMIZE, restore) keeps the tree.
   */
 class BucketedSnapshotSpec extends SparkTestBase {
-
-  private def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-    p.collect {
-      case f: FileSourceScanExec => Seq(f)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scansIn(q.plan)
-    }.flatten
-
-  private def filesRead(df: DataFrame): Long = {
-    df.collect()
-    val scans = scansIn(df.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
-    assert(scans.size == 1)
-    scans.head.metrics("numFiles").value
-  }
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"bucket_$tag").toString + "/t"

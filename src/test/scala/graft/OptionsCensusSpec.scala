@@ -41,7 +41,7 @@ class OptionsCensusSpec extends SparkTestBase {
     "spark.graft.user" -> (Reference, "single-user filter"),
     "spark.graft.debug" -> (Reference, "debug output"),
     "SPARK_GRAFT_CPUS" -> (Deploy,
-      "local core count of Bench, Verify and the tools mains"),
+      "local core count of Bench, Verify and ProfileQuery"),
     "SPARK_GRAFT_MASTER" -> (Deploy, "Spark master of ScaleData"),
     "SPARK_GRAFT_ONLY" -> (Deploy, "the query subset Bench times"),
     "SPARK_GRAFT_SF_DIR" -> (Deploy, "the input directory Bench reads"))

@@ -37,7 +37,7 @@ class PartitionPruningSpec extends SparkTestBase {
   /** Files actually READ (post-pruning) — `inputFiles` lists the
     * relation's files before partition filters apply.
     */
-  private def filesRead(df: org.apache.spark.sql.DataFrame): Long =
+  private def distinctInputFiles(df: org.apache.spark.sql.DataFrame): Long =
     df.select(input_file_name()).distinct().count()
 
   test("static partition pruning: a year predicate prunes the file set") {
@@ -47,8 +47,9 @@ class PartitionPruningSpec extends SparkTestBase {
     val plan = one.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("oyear"),
       s"expected a partition filter in:\n$plan")
-    assert(filesRead(one) < filesRead(all),
-      s"pruned scan reads ${filesRead(one)} of ${filesRead(all)} files — no pruning")
+    assert(distinctInputFiles(one) < distinctInputFiles(all),
+      s"pruned scan reads ${distinctInputFiles(one)} of " +
+        s"${distinctInputFiles(all)} files — no pruning")
     // pruning must not change results: same rows as a post-scan filter
     val expected = Tables.orders(spark, sfDir)
       .where(year(col("o_orderdate")) === 1996).count()

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.operators.SnapshotLog
-import graft.sources.SnapshotFileIndex
 
 /** Hive-style identity partitioning on snapshot tables: layout, declared
   * partition values, static pruning, DYNAMIC partition pruning, DML
@@ -22,26 +20,6 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     (0L until n).map(i => (i, (i % 5).toInt, s"u${i % 7}", i * 3))
       .toDF("id", "day", "owner", "x")
   }
-
-  private def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-    p.collect {
-      case f: FileSourceScanExec => Seq(f)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scansIn(q.plan)
-    }.flatten
-
-  private def snapScan(df: DataFrame): FileSourceScanExec = {
-    df.collect()
-    val scans = scansIn(df.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
-    assert(scans.size == 1, df.queryExecution.executedPlan.treeString)
-    scans.head
-  }
-
-  private def filesRead(df: DataFrame): Long =
-    snapScan(df).metrics("numFiles").value
 
   test("partitioned init: hive layout, manifest-declared values, read equality") {
     val dir = freshDir("init")
@@ -87,7 +65,7 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     assert(both.count() == 10)
 
     // the scan declares the partition schema (DPP eligibility)
-    assert(snapScan(oneDay).relation.partitionSchema.fieldNames.toSeq == Seq("day"))
+    assert(snapshotScan(oneDay).relation.partitionSchema.fieldNames.toSeq == Seq("day"))
   }
 
   test("dynamic partition pruning against a filtered dimension") {
@@ -106,8 +84,7 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     val joined = fact.join(broadcast(dim), fact("day") === dim("d"))
     assert(joined.collect().length == 120)
     val plan = joined.queryExecution.executedPlan.treeString
-    val scan = scansIn(joined.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex]).head
+    val scan = snapshotScan(joined)
     assert(plan.contains("dynamicpruning"),
       s"expected a DPP filter in the plan:\n$plan")
     // the runtime metric must show fewer files than the full table

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.operators.SnapshotLog
@@ -189,31 +188,6 @@ class SnapshotSkipSpec extends SparkTestBase {
     (0L until n).map(i => (i, s"row$i", (i % 7).toInt)).toDF("id", "x", "grp")
   }
 
-  private def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-    p.collect {
-      case f: FileSourceScanExec => Seq(f)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scansIn(q.plan)
-    }.flatten
-
-  /** The SnapshotFileIndex-backed scan of an executed frame (a MoR read
-    * also scans its delete-vector files — those use a plain listing).
-    */
-  private def scanOf(df: DataFrame): FileSourceScanExec = {
-    df.collect() // populate metrics
-    val scans = scansIn(df.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
-    assert(scans.size == 1,
-      s"expected one snapshot scan, got ${scans.size}:\n" +
-        df.queryExecution.executedPlan.treeString)
-    scans.head
-  }
-
-  private def filesRead(df: DataFrame): Long =
-    scanOf(df).metrics("numFiles").value
-
   test("key predicates skip whole files at planning time; answers unchanged") {
     val dir = freshDir("e2e")
     SnapshotLog.init(spark, dir, fixture(), "id", numFiles = 8)
@@ -252,6 +226,14 @@ class SnapshotSkipSpec extends SparkTestBase {
     val none = SnapshotLog.read(spark, dir, 0L).where(col("id") === 100000L)
     assert(filesRead(none) == 0)
     assert(none.count() == 0)
+
+    // the point read stays at 1 file as the table grows: the same fixture
+    // at 10x the rows over 64 files
+    val big = freshDir("e2e-10x")
+    SnapshotLog.init(spark, big, fixture(8000), "id", numFiles = 64)
+    assert(filesRead(SnapshotLog.read(spark, big, 0L)) == 64)
+    assert(filesRead(SnapshotLog.read(spark, big, 0L).where(col("id") === 42L)) == 1,
+      "a point query must open exactly 1 file of 64 too")
   }
 
   test("skipping composes with delete vectors and survives merges") {
