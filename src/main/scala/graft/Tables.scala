@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -14,8 +17,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.preserveCharVarcharTypeInfo")
+
+  /** Inferred schemas by (qualified path, modification time, inference
+    * confs): a rewritten input gets a new modification time and is
+    * inferred again (at the filesystem's millisecond resolution).
+    */
+  private val schemas =
+    new graft.operators.LruCache[(String, Long, Seq[Option[String]]), StructType](64)
+
+  /** Scan input table `name` under `dir`. Inferring its schema is a Spark
+    * job (a footer read), so the schema is inferred once per input
+    * version and later loads scan with it in hand. Schemas holding
+    * CHAR/VARCHAR are inferred every time: a given read schema cannot
+    * carry them (as in [[graft.operators.Stage]]).
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val hfs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val k = (hfs.makeQualified(path).toString, hfs.getFileStatus(path).getModificationTime,
+      inferenceConfs.map(spark.conf.getOption))
+    var inferred: DataFrame = null
+    val schema = schemas.getOrLoad(k) {
+      inferred = spark.read.parquet(path.toString)
+      inferred.schema
+    }
+    if (inferred != null) inferred
+    else if (CharVarcharUtils.hasCharVarchar(schema)) spark.read.parquet(path.toString)
+    else spark.read.schema(schema).parquet(path.toString)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

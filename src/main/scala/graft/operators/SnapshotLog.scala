@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
+import graft.sources.Stamps
 
 /** A committed table version: the log version number plus the file-level
   * merge report that produced it (v0's report is all-new-files).
@@ -71,15 +72,15 @@ final class ConcurrentCommitException(msg: String)
   *    not a correctness one.
   *
   * Merge semantics are [[Merge.apply]]'s, planned file-level from
-  * per-file key ranges ([[CowMerge.matchFiles]]; insert admission scoped
-  * to the insert footprint); m11 certifies the merged table and m12 the
+  * per-file key ranges ([[matchFiles]]; insert admission scoped to the
+  * insert footprint); m11 certifies the merged table and m12 the
   * CDC output against DuckDB, and SnapshotLogSpec/CowMergeSpec pin the
   * physical facts.
   *
   * MANIFEST SIZING, stated honestly: a manifest lists the version's FULL
-  * file set plus its stamps — the key `range=` line and up to
-  * [[graft.sources.Stamps.MaxStampedCols]] typed `cstats=` lines per
-  * file — so each commit writes O(live files) metadata text: ~1 KB/file
+  * file set plus its stamps — one `rows=` line and up to
+  * [[Stamps.MaxStampedCols]] typed `cstats=` lines per file — so each
+  * commit writes O(live files) metadata text: ~1 KB/file
   * fully stamped, i.e. ~100 MB per commit on a 10^5-file table, still
   * noise beside the data write it accompanies and read once per
   * planning operation (cheaper than the per-file footer fetches it
@@ -443,7 +444,6 @@ object SnapshotLog {
     commit(spark, table, v + 1, names,
       s"op=add-constraint $name" +: (metaOf(key, cur,
         partitionCols(spark, tableDir, v), partitionBucket(spark, tableDir, v)) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true) ++
         carriedEvolution(spark, tableDir, v) ++
         constraintMeta(existing :+ (name -> exprSql))),
@@ -469,7 +469,6 @@ object SnapshotLog {
     commit(spark, table, v + 1, names,
       s"op=drop-constraint $name" +: (metaOf(key, cur,
         partitionCols(spark, tableDir, v), partitionBucket(spark, tableDir, v)) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true) ++
         carriedEvolution(spark, tableDir, v) ++
         constraintMeta(existing.filterNot(_._1.equalsIgnoreCase(name)))),
@@ -528,19 +527,19 @@ object SnapshotLog {
     manifest(spark, tableDir, v).map(n => new Path(dataDir(table), n))
   }
 
-  // ---- Commit-time key-range stats ----------------------------------
+  // ---- Per-file statistics -------------------------------------------
   //
-  // Every committing op here KNOWS the key ranges of the files it just
-  // wrote (it reads their footers once, commit-footprint-sized work) and
-  // stamps them into the manifest (`# range=<name>:<lo>:<hi>`, `:-` for
-  // no-stats files). Readers then plan merges / point lookups / CDC
-  // B-parts from ONE manifest read instead of a footer fetch per file —
-  // at 100 TB (10^5 files) the per-operation planning cost drops from
-  // 10^5 driver-side ranged reads to a metadata file it already reads.
-  // Files without a stamp (manifests committed by older code or raw
-  // commit() calls) fall back to the footer read, per file.
-
-  private val RangePrefix = "range="
+  // Every committing op reads the footers of the files it just wrote,
+  // once ([[newFileStamps]]: commit-footprint-sized work), and stamps
+  // their typed `rows=`/`cstats=` lines ([[Stamps]]) into the manifest;
+  // reference-carrying commits copy the lines of the files they keep
+  // ([[carriedStampLines]]). Merge planning, point lookups,
+  // CDC B-parts, predicate-scoped compaction and read-side skipping all
+  // plan from ONE manifest read instead of a footer fetch per file — at
+  // 100 TB (10^5 files) that replaces 10^5 driver-side ranged reads per
+  // operation with a metadata file the planner already reads. A file
+  // with no `rows=` line (a raw [[commit]]) falls back to a footer read
+  // through the same [[Stamps.read]].
 
   /** Manifest name of a full data-file path: relative to `data/` — the
     * base name on flat layouts, `pt_c=v/part-...` on partitioned ones.
@@ -551,137 +550,102 @@ object SnapshotLog {
     else full.substring(full.lastIndexOf('/') + 1)
   }
 
-  private def rangeMeta(table: Path, stats: Seq[CowFileStats]): Seq[String] =
-    stats.map { st =>
-      val name = relName(table, st.file)
-      if (st.hasStats) s"$RangePrefix$name:${st.lo}:${st.hi}"
-      else s"$RangePrefix$name:-"
-    }
-
-  // Second-dimension stamps (`# colrange=<col>:<file>:<lo>:<hi>`):
-  // the LEGACY Z-order dimension form, superseded by the typed
-  // `cstats=` stamps ([[graft.sources.Stamps]]) that cover every
-  // supported column. PARSE-ONLY now: still read from older manifests
-  // (and carried forward by reference-only commits), never written.
-  private val ColRangePrefix = "colrange="
-
-  /** Per-file SECOND-dimension intervals of version `v`:
-    * file name -> (column -> [lo, hi]).
-    */
-  private def stampedColRanges(spark: SparkSession, tableDir: String,
-      v: Long): Map[String, Map[String, (Long, Long)]] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(ColRangePrefix) =>
-        val body = m.stripPrefix(ColRangePrefix)
-        val Array(col, name, lo, hi) = body.split(":", 4)
-        (name, col, (lo.toLong, hi.toLong))
-    }.groupBy(_._1).map { case (name, entries) =>
-      name -> entries.map(e => e._2 -> e._3).toMap
-    }
-
-  /** The raw per-file stat lines of version `v` (`colrange=` legacy
-    * Z-order stamps, typed `cstats=` column stats, `rows=` counts) whose
-    * file survives into the next commit — how reference-carrying commits
-    * keep data skipping alive without re-reading a footer.
+  /** The raw per-file stat lines of version `v` (`cstats=` column stats,
+    * `rows=` counts) whose file survives into the next commit — how
+    * reference-carrying commits keep planning and skipping alive without
+    * re-reading a footer.
     */
   private def carriedStampLines(spark: SparkSession, tableDir: String,
       v: Long, keep: String => Boolean): Seq[String] =
     manifestMeta(spark, tableDir, v).filter { m =>
-      if (m.startsWith(ColRangePrefix)) {
-        val parts = m.stripPrefix(ColRangePrefix).split(":", 4)
-        parts.length == 4 && keep(parts(1))
-      } else if (m.startsWith(graft.sources.Stamps.CStatsPrefix)) {
-        keep(m.stripPrefix(graft.sources.Stamps.CStatsPrefix).split(":", 6)(0))
-      } else if (m.startsWith(graft.sources.Stamps.RowsPrefix)) {
-        val body = m.stripPrefix(graft.sources.Stamps.RowsPrefix)
-        val i = body.lastIndexOf(':')
-        i > 0 && keep(body.substring(0, i))
-      } else if (m.startsWith(BloomIdxPrefix)) {
-        // sidecars cover their commit's files; carried unconditionally —
-        // verdict rows for since-rewritten files are filtered by the
-        // candidate set at probe time, never consulted for dead files
-        true
-      } else false
+      // sidecars cover their commit's files; carried unconditionally —
+      // verdict rows for since-rewritten files are filtered by the
+      // candidate set at probe time, never consulted for dead files
+      m.startsWith(BloomIdxPrefix) || Stamps.fileOf(m).exists(keep)
     }
 
-  /** ALL stamped per-file column statistics of version `v` — the typed
-    * `cstats=`/`rows=` stamps merged over the legacy long `range=` (key)
-    * and `colrange=` (Z-order) forms, typed winning per column (it
-    * carries null counts): file name -> [[graft.sources.Stamps.FileStamp]].
-    * What the skipping seams ([[read]]'s FileIndex, [[compactWhere]]'s
-    * footprint selection) evaluate predicates against. Unstamped files
-    * are simply absent.
+  /** The stamped per-file statistics of version `v`: file name ->
+    * [[Stamps.FileStamp]]. What the skipping seams ([[read]]'s FileIndex,
+    * [[compactWhere]]'s footprint selection) evaluate predicates
+    * against. Unstamped files are simply absent.
     */
-  private[graft] def stampedIntervals(spark: SparkSession, tableDir: String,
-      v: Long): Map[String, graft.sources.Stamps.FileStamp] = {
-    import graft.sources.Stamps
-    val meta = manifestMeta(spark, tableDir, v)
-    val typed = Stamps.parse(meta)
-    val key = meta.collectFirst {
-      case m if m.startsWith("key=") => m.stripPrefix("key=")
-    }
-    val keyRanges: Map[String, Map[String, Stamps.ColStamp]] = key match {
-      case Some(k) => stampedRanges(spark, tableDir, v).collect {
-        case (n, st) if st.hasStats =>
-          n -> Map(k -> Stamps.ColStamp(Some(Stamps.LongIv(st.lo, st.hi)), None))
-      }
-      case None => Map.empty
-    }
-    val legacy = stampedColRanges(spark, tableDir, v).foldLeft(keyRanges) {
-      case (acc, (n, cols)) =>
-        val asStamps = cols.map { case (c, (lo, hi)) =>
-          c -> Stamps.ColStamp(Some(Stamps.LongIv(lo, hi)), None)
-        }
-        acc.updated(n, acc.getOrElse(n, Map.empty) ++ asStamps)
-    }
-    (typed.keySet ++ legacy.keySet).map { n =>
-      val t = typed.getOrElse(n, Stamps.EmptyFileStamp)
-      n -> Stamps.FileStamp(t.rows, legacy.getOrElse(n, Map.empty) ++ t.cols)
-    }.toMap
-  }
+  private def fileStamps(spark: SparkSession, tableDir: String,
+      v: Long): Map[String, Stamps.FileStamp] =
+    Stamps.parse(manifestMeta(spark, tableDir, v))
 
-  private def stampedRanges(spark: SparkSession, tableDir: String,
-      v: Long): Map[String, CowFileStats] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(RangePrefix) =>
-        val body = m.stripPrefix(RangePrefix)
-        val i = body.indexOf(':')
-        val name = body.substring(0, i)
-        val stat = body.substring(i + 1) match {
-          case "-" => CowFileStats(name, Long.MinValue, Long.MaxValue, hasStats = false)
-          case lohi =>
-            val j = lohi.indexOf(':')
-            CowFileStats(name, lohi.substring(0, j).toLong,
-              lohi.substring(j + 1).toLong, hasStats = true)
-        }
-        name -> stat
-    }.toMap
-
-  /** Per-file key ranges of version `v`: from the manifest's commit-time
-    * stamps where present, footer reads only for unstamped files. The
-    * `file` field holds the full path (what [[CowMerge.matchFiles]]'s
-    * planning join returns).
+  /** Per-file key intervals of version `v`, keyed by full path (what
+    * [[matchFiles]]'s planning join returns). A file with a `rows=` stamp
+    * takes its key's stamped interval; an unstamped file's comes from
+    * one footer read. None — no integral interval (a string key, an
+    * all-null or statless key column) — matches every key.
     */
-  private[graft] def keyRangesOfVersion(spark: SparkSession, tableDir: String,
-      v: Long, key: String): Seq[CowFileStats] = {
+  private[graft] def keyIntervals(spark: SparkSession, tableDir: String, v: Long,
+      key: String): Seq[(String, Option[Stamps.LongIv])] = {
     val table = new Path(tableDir)
-    val stamped = stampedRanges(spark, tableDir, v)
-    val (have, missing) = manifest(spark, tableDir, v)
-      .partition(stamped.contains)
-    val fromStamps = have.map { n =>
-      stamped(n).copy(file = new Path(dataDir(table), n).toString)
+    val names = manifest(spark, tableDir, v)
+    val stamped = fileStamps(spark, tableDir, v).filter(_._2.rows.nonEmpty)
+    val missing = names.filterNot(stamped.contains)
+    val footers =
+      if (missing.isEmpty) Map.empty[String, Stamps.FileStamp]
+      else {
+        val keyType = tableSchema(spark, tableDir, v)
+          .flatMap(_.find(_.name == key)).fold[DataType](LongType)(_.dataType)
+        Stamps.read(spark, missing.map(n => n -> new Path(dataDir(table), n)),
+          StructType(Seq(StructField(key, keyType))), key)
+      }
+    val stamps = stamped ++ footers
+    names.map { n =>
+      new Path(dataDir(table), n).toString ->
+        stamps.get(n).flatMap(_.cols.get(key)).flatMap(_.iv).collect {
+          case iv: Stamps.LongIv => iv
+        }
     }
-    val fromFooters =
-      if (missing.isEmpty) Nil
-      else CowMerge.keyRangesOf(spark,
-        missing.map(n => new Path(dataDir(table), n)), key)
-    fromStamps ++ fromFooters
   }
 
+  /** Files from `ranges` whose key interval intersects any key in `keys`
+    * — the broadcast range join of planning. `keys` is changeset-sized;
+    * `ranges` is |files|-rows and broadcast.
+    *
+    * The intervals are only compared for INTEGRAL keys. For any other key
+    * type planning degrades to the conservative answer — every file
+    * matches (so the merge rewrites everything, correct but unpruned) —
+    * rather than casting the keys to long, which for e.g. a string key
+    * yields all-null → zero matches → updates and deletes silently
+    * dropped.
+    */
+  private def matchFiles(spark: SparkSession,
+      ranges: Seq[(String, Option[Stamps.LongIv])], keys: DataFrame): Seq[String] = {
+    if (ranges.isEmpty) return Nil
+    val integral = keys.schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _                                             => false
+    }
+    if (!integral) return if (keys.isEmpty) Nil else ranges.map(_._1)
+    import spark.implicits._
+    val rdf = ranges.map { case (f, iv) =>
+      (f, iv.fold(Long.MinValue)(_.lo), iv.fold(Long.MaxValue)(_.hi), iv.nonEmpty)
+    }.toDF("file", "lo", "hi", "hasStats")
+    keys.select(col(keys.columns.head).cast("long").as("__k")).na.drop().distinct()
+      .join(broadcast(rdf),
+        !col("hasStats") || (col("__k") >= col("lo") && col("__k") <= col("hi")))
+      .select("file").distinct()
+      .as[String].collect().toSeq
+  }
+
+  /** The keys of delete-vector files `names`, read with the one-field
+    * schema of the table's key type — no footer-inference job. Every
+    * vector is written in that type ([[deleteKeys]], [[merge]]'s purge).
+    * `keyType` is None only on a raw-commit table with no schema stamp,
+    * which infers.
+    */
   private def readDeleteKeys(spark: SparkSession, table: Path,
-      names: Seq[String], key: String): DataFrame =
-    spark.read.parquet(names.map(n => new Path(dataDir(table), n).toString): _*)
-      .select(key)
+      names: Seq[String], key: String, keyType: Option[DataType]): DataFrame = {
+    val paths = names.map(n => new Path(dataDir(table), n).toString)
+    keyType match {
+      case Some(t) => spark.read.schema(StructType(Seq(StructField(key, t)))).parquet(paths: _*)
+      case None    => spark.read.parquet(paths: _*).select(key)
+    }
+  }
 
   /** The table as of version `v` — any retained version, not just the
     * latest (time travel). Delete vectors, if the version carries any,
@@ -691,7 +655,7 @@ object SnapshotLog {
     * gained since a file was written come back null, unrewritten.
     *
     * The scan is backed by [[graft.sources.SnapshotFileIndex]] over the
-    * manifest's commit-time range stamps, so a key predicate on the
+    * manifest's commit-time stat stamps, so a key predicate on the
     * returned frame SKIPS whole data files at planning time (`WHERE key
     * = k` on a key-clustered 100 TB table opens ~1 file) — same physical
     * parquet scan otherwise, pushdown/pruning/codegen unchanged. Files
@@ -749,7 +713,7 @@ object SnapshotLog {
         // (identity when the table never renamed — the common case)
         val pm = physMap(spark, tableDir, v)
         val scanned = graft.sources.SnapshotFileIndex.scan(spark, table,
-          names.map(n => n -> byName(n)), stampedIntervals(spark, tableDir, v),
+          names.map(n => n -> byName(n)), fileStamps(spark, tableDir, v),
           eraSchema(schema, pm), pcols, pvals, bloomProbe, bucketProbe)
         if (pm.isEmpty) scanned
         else scanned.select(eraProjection(schema, pm): _*)
@@ -758,31 +722,32 @@ object SnapshotLog {
     if (dels.isEmpty) data
     else {
       val key = tableKey(spark, tableDir, v)
-      data.join(readDeleteKeys(spark, table, dels, key), Seq(key), "left_anti")
+      data.join(readDeleteKeys(spark, table, dels, key, Some(data.schema(key).dataType)),
+        Seq(key), "left_anti")
     }
   }
 
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
     read(spark, tableDir, latestVersion(spark, tableDir))
 
-  /** Footer-pruned point lookup: the rows of version `v` whose key is in
-    * `keys`, reading ONLY the data files whose footer key range can hold
+  /** Stamp-pruned point lookup: the rows of version `v` whose key is in
+    * `keys`, reading ONLY the data files whose stamped key range can hold
     * one of them — on a key-clustered 100 TB table a point lookup touches
-    * ~1 file, not the table. Planning is [[CowMerge]]'s broadcast range
-    * join over footer stats (metadata cost, |files| rows); delete-vector
-    * masks still apply, so a MoR-deleted key returns nothing.
+    * ~1 file, not the table. Planning is [[matchFiles]]' broadcast range
+    * join over the key intervals (metadata cost, |files| rows);
+    * delete-vector masks still apply, so a MoR-deleted key returns
+    * nothing.
     */
   def lookupKeys(spark: SparkSession, tableDir: String, v: Long,
       keys: DataFrame): DataFrame = {
     val table = new Path(tableDir)
     val key = tableKey(spark, tableDir, v)
-    val rangeHit = CowMerge.matchFiles(spark,
-      keyRangesOfVersion(spark, tableDir, v, key), keys)
+    val rangeHit = matchFiles(spark, keyIntervals(spark, tableDir, v, key), keys)
     // per-file Bloom stamps close the hash-key gap: when ranges cannot
     // prune (uniform keys — every file's range spans the domain), the
     // sidecar verdicts cut the candidates to ~fpp of the files
     val keyType = tableSchema(spark, tableDir, v).map(_(key).dataType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
+      .getOrElse(LongType)
     // hash-bucket layout: drop candidates whose bucket directory no
     // lookup key hashes into (exact, one ≤N-row distinct job)
     val bucketHit = partitionBucket(spark, tableDir, v) match {
@@ -805,7 +770,8 @@ object SnapshotLog {
       .join(keys.select(col(keys.columns.head).as(key)), Seq(key), "left_semi")
     val dels = deletes(spark, tableDir, v)
     if (dels.isEmpty) data
-    else data.join(readDeleteKeys(spark, table, dels, key), Seq(key), "left_anti")
+    else data.join(readDeleteKeys(spark, table, dels, key, Some(data.schema(key).dataType)),
+      Seq(key), "left_anti")
   }
 
   /** Exclusive-create commit of manifest `v`. Atomic winner-takes-the-
@@ -926,8 +892,8 @@ object SnapshotLog {
 
   /** One row per retained version — the DESCRIBE HISTORY surface:
     * (version, ts millis, operation, data files, delete-vector files,
-    * range stamps, txn stamp). All from the manifest chain; no data file
-    * is touched.
+    * files with a `rows=` stat stamp, txn stamp). All from the manifest
+    * chain; no data file is touched.
     */
   def history(spark: SparkSession, tableDir: String)
       : Seq[(Long, Option[Long], Option[String], Int, Int, Int, Option[String])] =
@@ -938,7 +904,7 @@ object SnapshotLog {
       }
       (v, commitTimeMs(spark, tableDir, v), operationOf(spark, tableDir, v),
         manifest(spark, tableDir, v).size, deletes(spark, tableDir, v).size,
-        meta.count(_.startsWith(RangePrefix)), txn)
+        meta.count(_.startsWith(Stamps.RowsPrefix)), txn)
     }
 
   /** Stage immutable data files under `data/` via `write(scratchDir)` and
@@ -1144,31 +1110,18 @@ object SnapshotLog {
 
   /** ONE footer pass over just-written files — the only footer read each
     * file ever needs, paid at commit time by the writer that produced
-    * it: the key's [[CowFileStats]] (the legacy `range=` stamps write
-    * planning runs on) plus typed `rows=`/`cstats=` lines for every
-    * supported column ([[graft.sources.Stamps]] — what plain reads and
-    * predicate-scoped maintenance skip on, null counts included). With
-    * [[BloomIndexKey]] set, additionally builds the commit's per-file
-    * Bloom sidecar (one extra narrow pass over the NEW files' key
-    * column).
+    * it: typed `rows=`/`cstats=` lines for every supported column, key
+    * first ([[Stamps]] — what planning, plain reads and predicate-scoped
+    * maintenance prune on, null counts included). With [[BloomIndexKey]]
+    * set, additionally builds the commit's per-file Bloom sidecar (one
+    * extra narrow pass over the NEW files' key column).
     */
   private def newFileStamps(spark: SparkSession, table: Path,
-      names: Seq[String], key: String,
-      schema: StructType): (Seq[CowFileStats], Seq[String]) = {
-    import graft.sources.Stamps
+      names: Seq[String], key: String, schema: StructType): Seq[String] = {
     val stats = Stamps.read(spark,
       names.map(n => n -> new Path(dataDir(table), n)), schema, key)
-    val cow = names.map { n =>
-      val full = new Path(dataDir(table), n).toString
-      stats.get(n).flatMap(_.cols.get(key)) match {
-        case Some(Stamps.ColStamp(Some(Stamps.LongIv(lo, hi)), _)) =>
-          CowFileStats(full, lo, hi, hasStats = true)
-        case _ => CowFileStats(full, Long.MinValue, Long.MaxValue, hasStats = false)
-      }
-    }
     val rowsOf = stats.flatMap { case (n, st) => st.rows.map(n -> _) }
-    (cow, Stamps.metaLines(stats) ++
-      bloomSidecarLines(spark, table, names, key, rowsOf))
+    Stamps.metaLines(stats) ++ bloomSidecarLines(spark, table, names, key, rowsOf)
   }
 
   // ---- Per-file Bloom key stamps -------------------------------------
@@ -1354,10 +1307,9 @@ object SnapshotLog {
         s"bucket column name not stamp-safe: '$c'")
     }
     val names = stageFiles(spark, table, df, key, numFiles, partitionBy, bucketBy)
-    val (cow, typed) = newFileStamps(spark, table, names, key, df.schema)
+    val typed = newFileStamps(spark, table, names, key, df.schema)
     commit(spark, table, 0L, names,
-      ("op=init" +: meta) ++ metaOf(key, df.schema, partitionBy, bucketBy) ++
-        rangeMeta(table, cow) ++ typed)
+      ("op=init" +: meta) ++ metaOf(key, df.schema, partitionBy, bucketBy) ++ typed)
     SnapshotCommit(0L, CowMergeReport(0, 0, 0, names.size))
   }
 
@@ -1403,13 +1355,15 @@ object SnapshotLog {
     val evolved = StructType(baseSchema.fields ++ widening)
     def readEvolved(paths: Seq[String]): DataFrame =
       readEra(spark, evolved, pm, paths)
+    val keyType = baseSchema(key).dataType
     val delKeys: Option[DataFrame] =
-      if (delNames.isEmpty) None else Some(readDeleteKeys(spark, table, delNames, key))
+      if (delNames.isEmpty) None
+      else Some(readDeleteKeys(spark, table, delNames, key, Some(keyType)))
     def masked(df: DataFrame): DataFrame =
       delKeys.fold(df)(dk => df.join(dk, Seq(key), "left_anti"))
     // planning ranges from the manifest's commit-time stamps — one
     // metadata read, not a footer fetch per file
-    val ranges = keyRangesOfVersion(spark, tableDir, v, key)
+    val ranges = keyIntervals(spark, tableDir, v, key)
     // on a hash-bucketed KEY the range join cannot prune (every file
     // spans the domain), but the LAYOUT can: a candidate file whose
     // bucket directory no changeset key hashes into is out of the
@@ -1424,7 +1378,6 @@ object SnapshotLog {
           // join/union paths) would compute wrong buckets and silently
           // drop the truly-affected files from the CoW footprint — the
           // same cast [[lookupKeys]] and the read-side probe apply
-          val keyType = baseSchema(key).dataType
           val buckets = keyDf
             .select(pmod(xxhash64(col(key).cast(keyType)), lit(n))
               .cast("int").as("b"))
@@ -1464,14 +1417,14 @@ object SnapshotLog {
       delKeys.map(dk => insKeys.join(dk, Seq(key), "left_semi"))
     val maskedHitFiles = maskedIns match {
       case Some(mi) if !ins.isEmpty =>
-        bucketScope(CowMerge.matchFiles(spark, ranges, mi), mi)
+        bucketScope(matchFiles(spark, ranges, mi), mi)
       case _ => Nil
     }
     val updDelKeys = updDel.select(col(key))
     val affected = bucketScope(
-      CowMerge.matchFiles(spark, ranges, updDelKeys), updDelKeys).toSet ++
+      matchFiles(spark, ranges, updDelKeys), updDelKeys).toSet ++
       maskedHitFiles
-    val insCheck = bucketScope(CowMerge.matchFiles(spark, ranges, insKeys), insKeys)
+    val insCheck = bucketScope(matchFiles(spark, ranges, insKeys), insKeys)
     val untouchedNames = names.filterNot(n =>
       affected.contains(new Path(dataDir(table), n).toString))
 
@@ -1497,7 +1450,8 @@ object SnapshotLog {
     val newDelNames: Seq[String] = (delKeys, maskedIns) match {
       case (Some(dk), Some(mi)) if !ins.isEmpty && !mi.isEmpty =>
         val remaining = dk.join(insKeys, Seq(key), "left_anti")
-        if (remaining.isEmpty) Nil else stageFiles(spark, table, remaining, key, 1)
+        if (remaining.isEmpty) Nil
+        else stageFiles(spark, table, remaining.select(col(key).cast(keyType)), key, 1)
       case _ => delNames
     }
 
@@ -1517,14 +1471,12 @@ object SnapshotLog {
         math.max(1, affected.size), pcols, pb)
       case None     => Nil
     }
-    // range stamps: untouched files carry their already-known ranges
-    // forward; only the files this merge WROTE get a footer read
+    // stat stamps: untouched files carry theirs forward; only the files
+    // this merge WROTE get a footer read
     val untouchedSet = untouchedNames.toSet
-    val carried = ranges.filter(st => untouchedSet(relName(table, st.file)))
-    val (newCow, newTyped) = newFileStamps(spark, table, newNames, key, evolved)
+    val newTyped = newFileStamps(spark, table, newNames, key, evolved)
     commit(spark, table, v + 1, untouchedNames ++ newNames,
-      ("op=merge" +: meta) ++ metaOf(key, evolved, pcols, pb) ++
-        rangeMeta(table, carried ++ newCow) ++ newTyped ++
+      ("op=merge" +: meta) ++ metaOf(key, evolved, pcols, pb) ++ newTyped ++
         carriedStampLines(spark, tableDir, v, untouchedSet) ++
         (if (untouchedNames.isEmpty) Nil  // full rewrite retires evolution
          else carriedEvolution(spark, tableDir, v)) ++
@@ -1551,10 +1503,9 @@ object SnapshotLog {
     val pb = partitionBucket(spark, tableDir, v)
     enforceConstraints(spark, tableDir, v, df, "INSERT OVERWRITE")
     val names = stageFiles(spark, table, df, key, numFiles, pcols, pb)
-    val (cow, typed) = newFileStamps(spark, table, names, key, df.schema)
+    val typed = newFileStamps(spark, table, names, key, df.schema)
     commit(spark, table, v + 1, names,
-      ("op=overwrite" +: meta) ++ metaOf(key, df.schema, pcols, pb) ++
-        rangeMeta(table, cow) ++ typed ++
+      ("op=overwrite" +: meta) ++ metaOf(key, df.schema, pcols, pb) ++ typed ++
         carriedConstraints(spark, tableDir, v))
     SnapshotCommit(v + 1,
       CowMergeReport(before.size, before.size, 0, names.size))
@@ -1576,18 +1527,20 @@ object SnapshotLog {
     val v = latestVersion(spark, tableDir)
     val names = manifest(spark, tableDir, v)
     val old = deletes(spark, tableDir, v)
-    val all =
-      if (old.isEmpty) keys.select(col(key)).distinct()
-      else readDeleteKeys(spark, table, old, key)
-        .unionByName(keys.select(col(key))).distinct()
-    val newDel = stageFiles(spark, table, all, key, 1)
     val schema = tableSchema(spark, tableDir, v)
       .getOrElse(read(spark, tableDir, v).schema)
-    // every data file is carried by reference — its range stamps too
+    // the vector holds the table's key type, whatever `keys` arrives as
+    val keyType = schema(key).dataType
+    val given = keys.select(col(key).cast(keyType))
+    val all =
+      if (old.isEmpty) given.distinct()
+      else readDeleteKeys(spark, table, old, key, Some(keyType))
+        .unionByName(given).distinct()
+    val newDel = stageFiles(spark, table, all, key, 1)
+    // every data file is carried by reference — its stat stamps too
     commit(spark, table, v + 1, names,
       "op=delete" +: (metaOf(key, schema, partitionCols(spark, tableDir, v),
         partitionBucket(spark, tableDir, v)) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true) ++
         carriedEvolution(spark, tableDir, v) ++
         carriedConstraints(spark, tableDir, v)),
@@ -1610,10 +1563,9 @@ object SnapshotLog {
     val pcols = partitionCols(spark, tableDir, v)
     val pb = partitionBucket(spark, tableDir, v)
     val newNames = stageFiles(spark, table, data, key, numFiles, pcols, pb)
-    val (cow, typed) = newFileStamps(spark, table, newNames, key, data.schema)
+    val typed = newFileStamps(spark, table, newNames, key, data.schema)
     commit(spark, table, v + 1, newNames,
-      "op=optimize" +: (metaOf(key, data.schema, pcols, pb) ++
-        rangeMeta(table, cow) ++ typed ++
+      "op=optimize" +: (metaOf(key, data.schema, pcols, pb) ++ typed ++
         carriedConstraints(spark, tableDir, v)))
     SnapshotCommit(v + 1,
       CowMergeReport(before.size, before.size, 0, newNames.size))
@@ -1644,7 +1596,7 @@ object SnapshotLog {
     val v = latestVersion(spark, tableDir)
     val key = tableKey(spark, tableDir, v)
     val names = manifest(spark, tableDir, v)
-    val intervals = stampedIntervals(spark, tableDir, v)
+    val intervals = fileStamps(spark, tableDir, v)
     val resolver = spark.sessionState.conf.resolver
     val (stampHit, stampCarried) = names.partition { n =>
       intervals.get(n) match {
@@ -1685,18 +1637,15 @@ object SnapshotLog {
       hitPaths.map(_.toString))
     val data =
       if (dels.isEmpty) data0
-      else data0.join(readDeleteKeys(spark, table, dels, key), Seq(key), "left_anti")
+      else data0.join(readDeleteKeys(spark, table, dels, key, Some(schema(key).dataType)),
+        Seq(key), "left_anti")
     val pcols = partitionCols(spark, tableDir, v)
     val pb = partitionBucket(spark, tableDir, v)
     val newNames = stageFiles(spark, table, data, key, numFiles, pcols, pb)
-    val carriedSet = carried.toSet
-    val carriedStats = keyRangesOfVersion(spark, tableDir, v, key)
-      .filter(st => carriedSet(relName(table, st.file)))
-    val (newCow, newTyped) = newFileStamps(spark, table, newNames, key, schema)
+    val newTyped = newFileStamps(spark, table, newNames, key, schema)
     commit(spark, table, v + 1, carried ++ newNames,
-      "op=optimize-where" +: (metaOf(key, schema, pcols, pb) ++
-        rangeMeta(table, carriedStats ++ newCow) ++ newTyped ++
-        carriedStampLines(spark, tableDir, v, carriedSet) ++
+      "op=optimize-where" +: (metaOf(key, schema, pcols, pb) ++ newTyped ++
+        carriedStampLines(spark, tableDir, v, carried.toSet) ++
         (if (carried.isEmpty) Nil  // full rewrite retires evolution
          else carriedEvolution(spark, tableDir, v)) ++
         carriedConstraints(spark, tableDir, v)),
@@ -1722,16 +1671,17 @@ object SnapshotLog {
     val m0 = manifest(spark, tableDir, v0).toSet
     val m1 = manifest(spark, tableDir, v1).toSet
     val table = new Path(tableDir)
+    val sch0 = tableSchema(spark, tableDir, v0)
+    val sch1 = tableSchema(spark, tableDir, v1)
+    val keyType = sch1.orElse(sch0).flatMap(_.find(_.name == key)).map(_.dataType)
     def delKeysOf(v: Long): Option[DataFrame] = {
       val ns = deletes(spark, tableDir, v)
-      if (ns.isEmpty) None else Some(readDeleteKeys(spark, table, ns, key))
+      if (ns.isEmpty) None else Some(readDeleteKeys(spark, table, ns, key, keyType))
     }
     def maskWith(df: DataFrame, dk: Option[DataFrame]): DataFrame =
       dk.fold(df)(k => df.join(k, Seq(key), "left_anti"))
     val dk0 = delKeysOf(v0)
     val dk1 = delKeysOf(v1)
-    val sch0 = tableSchema(spark, tableDir, v0)
-    val sch1 = tableSchema(spark, tableDir, v1)
     // both sides read in v1's LOGICAL space, through a physmap composed
     // over the WHOLE window: v1's own chains don't suffice, because a
     // full rewrite inside (v0, v1] retires them while the before side
@@ -1822,9 +1772,9 @@ object SnapshotLog {
       val shared = m0 & m1
       if (shared.isEmpty) None
       else {
-        val sharedRanges = keyRangesOfVersion(spark, tableDir, v1, key)
-          .filter(st => shared(relName(table, st.file)))
-        val hit = CowMerge.matchFiles(spark, sharedRanges, newlyMasked)
+        val sharedRanges = keyIntervals(spark, tableDir, v1, key)
+          .filter { case (f, _) => shared(relName(table, f)) }
+        val hit = matchFiles(spark, sharedRanges, newlyMasked)
         if (hit.isEmpty) None
         else {
           val raw = sch1 match {
@@ -1880,11 +1830,10 @@ object SnapshotLog {
     // cstats stamps cover EVERY supported column, BOTH Morton dimensions
     // included, so SnapshotFileIndex-backed reads skip on either one (a
     // filter on `b` alone prunes — the payoff a key-sorted layout can
-    // never give). The legacy `colrange=` form is parse-only now.
-    val (cow, typed) = newFileStamps(spark, table, newNames, key, data.schema)
+    // never give).
+    val typed = newFileStamps(spark, table, newNames, key, data.schema)
     commit(spark, table, v + 1, newNames,
-      "op=optimize-zorder" +: (metaOf(key, data.schema) ++
-        rangeMeta(table, cow) ++ typed ++
+      "op=optimize-zorder" +: (metaOf(key, data.schema) ++ typed ++
         carriedConstraints(spark, tableDir, v)))
     SnapshotCommit(v + 1,
       CowMergeReport(before.size, before.size, 0, newNames.size))
@@ -1969,7 +1918,7 @@ object SnapshotLog {
 
   /** RESTORE: commit `toVersion`'s exact state as the NEW latest version
     * — one manifest write referencing that version's data files, delete
-    * vectors, schema/key stamps and range/colrange stamps, all by name
+    * vectors, schema/key stamps and per-file stat stamps, all by name
     * (nothing moves; the restored-over versions stay time-travel
     * readable until vacuumed, so a restore is itself undoable by another
     * restore). This is the recovery path time travel exists for: a bad
@@ -2004,7 +1953,6 @@ object SnapshotLog {
       s"op=restore from=$toVersion" +: (
         metaOf(key, schema, partitionCols(spark, tableDir, toVersion),
           partitionBucket(spark, tableDir, toVersion)) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, toVersion, key)) ++
         carriedStampLines(spark, tableDir, toVersion, _ => true) ++
         carriedEvolution(spark, tableDir, toVersion) ++
         // constraints are the table's CONTRACT, not its state: a restore
@@ -2017,8 +1965,8 @@ object SnapshotLog {
   }
 
   /** ALTER TABLE's metadata-only schema commit: the next version carries
-    * the SAME file set (and delete vectors, range stamps, colrange
-    * stamps — all by reference) under a WIDER stamped schema. No data
+    * the SAME file set (and delete vectors and per-file stat stamps —
+    * all by reference) under a WIDER stamped schema. No data
     * moves: files older than the new schema read THROUGH it, the added
     * columns null — the same read-through contract schema-evolving
     * merges already rely on ([[tableSchema]]). On a 100 TB table this is
@@ -2063,41 +2011,11 @@ object SnapshotLog {
     commit(spark, table, v + 1, names,
       "op=altertable" +: (metaOf(key, next, partitionCols(spark, tableDir, v),
         partitionBucket(spark, tableDir, v)) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true) ++
         carriedEvolution(spark, tableDir, v) ++
         carriedConstraints(spark, tableDir, v)),
       deletes(spark, tableDir, v))
     SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
-  }
-
-  /** The column a typed per-file stat line describes, or None for lines
-    * not keyed by a column (`rows=`, `bloomidx=`).
-    */
-  private def stampColOf(line: String): Option[String] = {
-    import graft.sources.Stamps
-    if (line.startsWith(Stamps.CStatsPrefix)) {
-      val parts = line.stripPrefix(Stamps.CStatsPrefix).split(":", 6)
-      if (parts.length == 6) Some(parts(1)) else None
-    } else if (line.startsWith(ColRangePrefix)) {
-      val parts = line.stripPrefix(ColRangePrefix).split(":", 4)
-      if (parts.length == 4) Some(parts(0)) else None
-    } else None
-  }
-
-  private def remapStampCol(line: String, from: String, to: String): String = {
-    import graft.sources.Stamps
-    if (line.startsWith(Stamps.CStatsPrefix)) {
-      val parts = line.stripPrefix(Stamps.CStatsPrefix).split(":", 6)
-      if (parts.length == 6 && parts(1) == from)
-        Stamps.CStatsPrefix + parts.updated(1, to).mkString(":")
-      else line
-    } else if (line.startsWith(ColRangePrefix)) {
-      val parts = line.stripPrefix(ColRangePrefix).split(":", 4)
-      if (parts.length == 4 && parts(0) == from)
-        ColRangePrefix + parts.updated(0, to).mkString(":")
-      else line
-    } else line
   }
 
   /** `ALTER TABLE RENAME COLUMN` as a METADATA-ONLY commit (see the
@@ -2168,9 +2086,8 @@ object SnapshotLog {
     val names = manifest(spark, tableDir, v)
     commit(spark, table, v + 1, names,
       s"op=rename-column $fromExact:$to" +: (metaOf(key, next, pcols, pb) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true)
-          .map(remapStampCol(_, fromExact, to)) ++
+          .map(Stamps.renameCol(_, fromExact, to)) ++
         evolutionMeta(newPm, dropped) ++ constraintMeta(renamedCons)),
       deletes(spark, tableDir, v))
     SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
@@ -2216,9 +2133,8 @@ object SnapshotLog {
     val names = manifest(spark, tableDir, v)
     commit(spark, table, v + 1, names,
       s"op=drop-column $nameExact" +: (metaOf(key, next, pcols, pb) ++
-        rangeMeta(table, keyRangesOfVersion(spark, tableDir, v, key)) ++
         carriedStampLines(spark, tableDir, v, _ => true)
-          .filterNot(l => stampColOf(l).exists(deadSet)) ++
+          .filterNot(l => Stamps.colOf(l).exists(deadSet)) ++
         evolutionMeta(pm - nameExact, dropped ++ deadSet) ++
         carriedConstraints(spark, tableDir, v)),
       deletes(spark, tableDir, v))

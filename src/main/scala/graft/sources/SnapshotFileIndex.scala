@@ -12,14 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Stamps.{ColStamp, FileStamp, LongIv, StrIv}
 
 /** Planning-time FILE SKIPPING for snapshot-log reads — the missing half
-  * of the manifest stamps (typed `# cstats=` column statistics plus the
-  * legacy long `# range=`/`# colrange=` forms, stamped by every
-  * committing op in [[graft.operators.SnapshotLog]]). The stamps already
-  * plan WRITES (CoW merge footprints, point lookups, CDC B-parts); this
-  * class hands the same metadata to Spark's scan planner so plain READS
-  * skip too: `SELECT ... FROM graft.t WHERE key < 10` — or `WHERE
-  * category = 'news'`, or `WHERE ts >= timestamp'...'`, or `WHERE c IS
-  * NULL` — opens only the data files whose stamped statistics admit the
+  * of the manifest stamps (typed `# cstats=` column statistics, stamped
+  * by every committing op in [[graft.operators.SnapshotLog]]). The
+  * stamps already plan WRITES (CoW merge footprints, point lookups, CDC
+  * B-parts); this class hands the same metadata to Spark's scan planner
+  * so plain READS skip too: `SELECT ... FROM graft.t WHERE key < 10` —
+  * or `WHERE category = 'news'`, or `WHERE ts >= timestamp'...'`, or
+  * `WHERE c IS NULL` — opens only the data files whose stamped statistics admit the
   * predicate, at manifest cost, before a single footer is fetched.
   *
   * This is the standard lakehouse data-skipping seam (Delta's

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** TYPED, NULL-AWARE per-file column statistics for manifest stamping —
-  * the generalization of the long-only `# range=` / `# colrange=` stamps
-  * to every orderable column a real table filters on.
+  * the one per-file statistics format of a snapshot manifest, covering
+  * every orderable column a real table filters on, the key included
+  * (merge planning, point lookups and CDC take the key's interval from
+  * here).
   *
   * A stamp for (file, column) is a [[ColStamp]]: an optional min/max
   * interval (absent when footer stats are unusable or the column is
@@ -41,11 +43,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * point is excluded on purpose: parquet min/max with NaNs present are
   * unreliable by spec.
   *
-  * Reading is one footer fetch per file (the fetch the committing
-  * writer already pays for key-range stamps), amortized over ALL
-  * stamped columns; [[MaxStampedCols]] bounds the manifest metadata to
-  * O(16) lines per file — the Delta-style "first N columns" data-
-  * skipping budget.
+  * Reading is one footer fetch per file, paid once by the committing
+  * writer and amortized over ALL stamped columns; [[MaxStampedCols]]
+  * bounds the manifest metadata to O(16) lines per file — the
+  * Delta-style "first N columns" data-skipping budget.
   */
 object Stamps {
 
@@ -67,7 +68,6 @@ object Stamps {
   final case class FileStamp(rows: Option[Long], cols: Map[String, ColStamp]) {
     def nonEmpty: Boolean = rows.nonEmpty || cols.nonEmpty
   }
-  val EmptyFileStamp: FileStamp = FileStamp(None, Map.empty)
 
   /** Longest string (UTF-8 bytes) stamped as an interval bound. */
   val MaxStrBytes = 64
@@ -232,6 +232,32 @@ object Stamps {
       rows ++ cols
     }
 
+  /** The fields of a `cstats=` line (file, column, kind, lo, hi, nulls);
+    * None for any other line.
+    */
+  private def cstatsFields(line: String): Option[Array[String]] =
+    if (!line.startsWith(CStatsPrefix)) None
+    else Some(line.stripPrefix(CStatsPrefix).split(":", 6)).filter(_.length == 6)
+
+  /** The file a `rows=`/`cstats=` line describes; None for any other line. */
+  def fileOf(line: String): Option[String] =
+    if (line.startsWith(RowsPrefix)) {
+      val body = line.stripPrefix(RowsPrefix)
+      val i = body.lastIndexOf(':')
+      if (i > 0) Some(body.substring(0, i)) else None
+    } else cstatsFields(line).map(_(0))
+
+  /** The column a `cstats=` line describes; None for any other line. */
+  def colOf(line: String): Option[String] = cstatsFields(line).map(_(1))
+
+  /** `line` restamped under column `to` if it is a `cstats=` line of
+    * column `from` (a column rename: an interval describes values, which
+    * a rename does not change); any other line unchanged.
+    */
+  def renameCol(line: String, from: String, to: String): String =
+    cstatsFields(line).filter(_(1) == from)
+      .fold(line)(p => CStatsPrefix + p.updated(1, to).mkString(":"))
+
   /** Parse manifest meta lines (# stripped) back to per-file stamps.
     * Stamps are ADVISORY: a malformed or truncated line (hand-edited
     * manifest, future format drift) is silently dropped — the file just
@@ -248,24 +274,22 @@ object Stamps {
         else body.substring(i + 1).toLongOption.map(body.substring(0, i) -> _)
       case _ => None
     }.toMap
-    val cols = meta.flatMap {
-      case m if m.startsWith(CStatsPrefix) =>
-        m.stripPrefix(CStatsPrefix).split(":", 6) match {
-          case Array(name, col, kind, lo, hi, n) =>
-            try {
-              val iv: Option[Iv] =
-                if (lo == "-" || hi == "-") None
-                else if (kind == "s") Some(StrIv(unb64(lo), unb64(hi)))
-                else Some(LongIv(lo.toLong, hi.toLong))
-              val nulls = if (n == "-") None else Some(n.toLong)
-              Some((name, col, ColStamp(iv, nulls)))
-            } catch {
-              case _: NumberFormatException | _: IllegalArgumentException =>
-                None // unparseable stamp: conservative drop
-            }
-          case _ => None
-        }
-      case _ => None
+    val cols = meta.flatMap { m =>
+      cstatsFields(m) match {
+        case Some(Array(name, col, kind, lo, hi, n)) =>
+          try {
+            val iv: Option[Iv] =
+              if (lo == "-" || hi == "-") None
+              else if (kind == "s") Some(StrIv(unb64(lo), unb64(hi)))
+              else Some(LongIv(lo.toLong, hi.toLong))
+            val nulls = if (n == "-") None else Some(n.toLong)
+            Some((name, col, ColStamp(iv, nulls)))
+          } catch {
+            case _: NumberFormatException | _: IllegalArgumentException =>
+              None // unparseable stamp: conservative drop
+          }
+        case _ => None
+      }
     }.groupBy(_._1).map { case (name, entries) =>
       name -> entries.map(e => e._2 -> e._3).toMap
     }

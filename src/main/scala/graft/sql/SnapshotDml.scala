@@ -646,7 +646,8 @@ object SnapshotDml {
 
   /** `DESCRIBE HISTORY name` — the manifest chain as rows, newest first:
     * version, commit wall-time, operation label, data-file /
-    * delete-vector / range-stamp counts, streaming txn stamp. Pure
+    * delete-vector counts, `range_stamps` (files with a `rows=` stat
+    * stamp), streaming txn stamp. Pure
     * manifest metadata ([[SnapshotLog.history]]); no data file is read.
     */
   final case class DescribeHistoryCommand(target: Target)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CowMerge, Merge, SnapshotLog, Stage}
+import graft.operators.{Merge, SnapshotLog, Stage}
 import graft.sql.SnapshotDml
 
 /** Compaction: OPTIMIZE rewrites a fragmented snapshot table into few
@@ -30,11 +30,8 @@ class CompactionSpec extends SparkTestBase {
     (dir, orders)
   }
 
-  private def keyRanges(dir: String) = {
-    val v = SnapshotLog.latestVersion(spark, dir)
-    CowMerge.keyRangesOf(spark, SnapshotLog.manifest(spark, dir, v)
-      .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n")), "o_orderkey")
-  }
+  private def keyRanges(dir: String): Seq[Option[(Long, Long)]] =
+    footerRanges(dir, SnapshotLog.latestVersion(spark, dir), "o_orderkey").values.toSeq
 
   test("fragmented table compacts to ~target-size files with identical rows") {
     val (dir, orders) = fragmented("graft_compact", rounds = 8)
@@ -101,8 +98,8 @@ class CompactionSpec extends SparkTestBase {
     }
     def avgFrac: Double = {
       val rs = keyRanges(dir)
-      assert(rs.forall(_.hasStats))
-      rs.map(r => (r.hi - r.lo) / span).sum / rs.size
+      assert(rs.forall(_.nonEmpty))
+      rs.flatten.map { case (lo, hi) => (hi - lo) / span }.sum / rs.size
     }
     val pre = avgFrac
     assert(pre > 0.9, s"fixture not fragmented: avg per-file key span $pre")

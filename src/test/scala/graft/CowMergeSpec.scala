@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import org.apache.spark.sql.functions._
-import graft.operators.{CowMerge, Merge, SnapshotLog, SyntheticShares}
+import graft.operators.{Merge, SnapshotLog, SyntheticShares}
 import graft.queries.MigrationQueries.Merge0
 
 /** Copy-on-write keyed MERGE on a snapshot table ([[SnapshotLog.merge]]):
@@ -64,14 +64,13 @@ class CowMergeSpec extends SparkTestBase {
 
     // expected affected files, computed independently from the v0 footers
     // and the collected (small) changeset key set
-    val ranges = CowMerge.keyRangesOf(spark,
-      SnapshotLog.manifest(spark, dir, 0L)
-        .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n")), "id")
-    assert(ranges.forall(_.hasStats), "clustered write must produce key stats")
+    val ranges = footerRanges(dir, 0L, "id")
+    assert(ranges.values.forall(_.nonEmpty), "clustered write must produce key stats")
     val updDelKeys = csUpd.select("id").unionByName(csDel.select("id"))
       .collect().map(_.getLong(0)).toSet
-    val expectedAffected = ranges.filter(r => updDelKeys.exists(k => k >= r.lo && k <= r.hi))
-      .map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet
+    val expectedAffected = ranges.collect {
+      case (n, Some((lo, hi))) if updDelKeys.exists(k => k >= lo && k <= hi) => n
+    }.toSet
     assert(expectedAffected.nonEmpty && expectedAffected.size < ranges.size,
       s"fixture degenerate: ${expectedAffected.size} of ${ranges.size} files affected")
 

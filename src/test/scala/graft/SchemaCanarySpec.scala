@@ -171,4 +171,27 @@ class SchemaCanarySpec extends SparkTestBase {
     assert(df.schema("text").dataType == StringType)
     assert(df.orderBy("doc_id").select("text").head().getString(0) == "doc 0")
   }
+
+  test("Tables.load infers a table's schema once: a second load submits no job, " +
+      "a rewritten directory is inferred again") {
+    val dir = Files.createTempDirectory("canary-load-").toString
+    spark.range(3).select(col("id").as("r_regionkey"), lit("x").as("r_name"))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    var first: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { first = Tables.load(spark, dir, "region") } > 0,
+      "the control: the first load's schema inference is a job")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { second = Tables.load(spark, dir, "region") } == 0,
+      "a second load of an unchanged table ran a job")
+    assert(second.schema == first.schema)
+    assert(second.orderBy("r_regionkey").collect().toSeq ==
+      first.orderBy("r_regionkey").collect().toSeq)
+
+    spark.range(2).select(col("id").as("r_regionkey"), lit("y").as("r_name"),
+        lit(1.5).as("r_extra"))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val rewritten = Tables.load(spark, dir, "region")
+    assert(rewritten.schema.fieldNames.toSeq == Seq("r_regionkey", "r_name", "r_extra"))
+    assert(rewritten.count() == 2L)
+  }
 }

@@ -334,41 +334,43 @@ class SnapshotLogSpec extends SparkTestBase {
   }
 
   test("commit-time range stamps equal footer ranges; unstamped manifests fall back to footers") {
-    import graft.operators.CowMerge
+    import graft.sources.Stamps
+    import org.apache.hadoop.fs.Path
     val dir = Files.createTempDirectory("graft_snaprg").toString + "/t"
     val b = base
     SnapshotLog.init(spark, dir, b, "id", numFiles = 8)
     SnapshotLog.merge(spark, dir, narrowChangeset(b), "id")
 
-    def footerRanges(v: Long) = CowMerge.keyRangesOf(spark,
-      SnapshotLog.manifest(spark, dir, v)
-        .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n")), "id")
-      .map(st => (st.file, st.lo, st.hi, st.hasStats)).sortBy(_._1)
-    def stamped(v: Long) = SnapshotLog.keyRangesOfVersion(spark, dir, v, "id")
-      .map(st => (st.file, st.lo, st.hi, st.hasStats)).sortBy(_._1)
+    def names(v: Long) = SnapshotLog.manifest(spark, dir, v)
+    def fresh(v: Long) = Stamps.read(spark,
+      names(v).map(n => n -> new Path(s"$dir/data/$n")), b.schema, "id")
+    def stamped(v: Long) = Stamps.parse(SnapshotLog.manifestMeta(spark, dir, v))
+    // planning's key intervals, against the footers' key ranges
+    def planned(v: Long) = SnapshotLog.keyIntervals(spark, dir, v, "id")
+      .map { case (f, iv) => new Path(f).getName -> iv.map(i => (i.lo, i.hi)) }.toMap
 
     // every committed version carries stamps identical to the footers
     (0L to 1L).foreach { v =>
-      assert(SnapshotLog.manifestMeta(spark, dir, v).exists(_.startsWith("range=")),
-        s"v$v missing range stamps")
-      assert(stamped(v) == footerRanges(v), s"v$v stamps diverge from footers")
+      assert(names(v).forall(n => stamped(v).get(n).exists(_.rows.nonEmpty)),
+        s"v$v missing stat stamps")
+      assert(stamped(v) == fresh(v), s"v$v stamps diverge from footers")
+      assert(planned(v) == footerRanges(dir, v, "id"), s"v$v key intervals diverge")
     }
-    // a raw commit with NO stamps (older-code manifests): planning falls
-    // back to footer reads and keeps working
-    val names = SnapshotLog.manifest(spark, dir, 1)
-    SnapshotLog.commit(spark, new org.apache.hadoop.fs.Path(dir), 2L, names,
-      meta = Seq("key=id"))
-    assert(stamped(2L) == footerRanges(2L), "fallback diverged from footers")
+    // a raw commit with NO stamps: planning falls back to footer reads
+    // and keeps working
+    val raw = names(1)
+    SnapshotLog.commit(spark, new Path(dir), 2L, raw, meta = Seq("key=id"))
+    assert(stamped(2L).isEmpty, "a raw commit carries no stamps")
+    assert(planned(2L) == footerRanges(dir, 2L, "id"), "fallback diverged from footers")
     import spark.implicits._
     val someId = SnapshotLog.read(spark, dir, 2L).agg(min("id")).head().getLong(0)
     val hit = SnapshotLog.lookupKeys(spark, dir, 2L, Seq(someId).toDF("id"))
     assert(hit.count() == 1L)
-    assert(hit.inputFiles.length < names.size, "lookup on fallback ranges scanned everything")
+    assert(hit.inputFiles.length < raw.size, "lookup on fallback ranges scanned everything")
   }
 
   test("compactZ: z-ordered OPTIMIZE is CDC-invisible and narrows footers on BOTH dims") {
     import spark.implicits._
-    import graft.operators.CowMerge
     val dir = Files.createTempDirectory("graft_snapz").toString + "/t"
     // ts decorrelated from id (Knuth multiplicative hash), so the
     // key-clustered layout leaves every file's ts span ~ the full domain
@@ -376,11 +378,9 @@ class SnapshotLogSpec extends SparkTestBase {
       .toDF("id", "ts", "v")
     SnapshotLog.init(spark, dir, df, "id", numFiles = 8)
     def avgSpan(v: Long, colName: String): Double = {
-      val paths = SnapshotLog.manifest(spark, dir, v)
-        .map(n => new org.apache.hadoop.fs.Path(s"$dir/data/$n"))
-      val rs = CowMerge.keyRangesOf(spark, paths, colName)
-      assert(rs.forall(_.hasStats), s"missing $colName stats at v$v")
-      rs.map(r => (r.hi - r.lo).toDouble).sum / rs.size
+      val rs = footerRanges(dir, v, colName).values.toSeq
+      assert(rs.forall(_.nonEmpty), s"missing $colName stats at v$v")
+      rs.flatten.map { case (lo, hi) => (hi - lo).toDouble }.sum / rs.size
     }
     val preTs = avgSpan(0, "ts")
     assert(preTs > 4096 * 0.6, s"fixture degenerate: pre-z ts span $preTs")
@@ -589,9 +589,13 @@ class SnapshotLogSpec extends SparkTestBase {
         .select(input_file_name(), col("id")).as[(String, Long)].collect()
         .collect { case (f, k) if updDel(k) => f.substring(f.lastIndexOf('/') + 1) }
         .toSet
-      val stampedHit = SnapshotLog.keyRangesOfVersion(spark, dir, v, "id")
-        .filter(r => updDel.exists(k => k >= r.lo && k <= r.hi))
-        .map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet
+      val stamps = graft.sources.Stamps.parse(SnapshotLog.manifestMeta(spark, dir, v))
+      val stampedHit = names.filter { n =>
+        stamps.get(n).flatMap(_.cols.get("id")).flatMap(_.iv) match {
+          case Some(graft.sources.Stamps.LongIv(lo, hi)) => updDel.exists(k => k >= lo && k <= hi)
+          case _ => updDel.nonEmpty
+        }
+      }.toSet
 
       val c = mergeAsReference(dir, cs, "id")
       val rewritten = names.toSet -- SnapshotLog.manifest(spark, dir, c.version)
@@ -601,5 +605,114 @@ class SnapshotLogSpec extends SparkTestBase {
       assert(rewritten.subsetOf(stampedHit),
         s"round $round: rewrote files outside the stamped ranges: ${rewritten -- stampedHit}")
     }
+  }
+
+  test("delete vectors are read with the key's schema: building a MoR read submits no job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dvjobs").toString + "/t"
+    SnapshotLog.init(spark, dir, (0L until 100L).map(i => (i, s"v$i")).toDF("id", "x"),
+      "id", numFiles = 2)
+    // INT keys against a BIGINT table key: the vector is written as BIGINT
+    val c = SnapshotLog.deleteKeys(spark, dir, Seq(3, 5).toDF("id"), "id")
+    val dv = SnapshotLog.deletes(spark, dir, c.version)
+    assert(dv.size == 1)
+    assert(spark.read.parquet(s"$dir/data/${dv.head}").schema("id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    var df: DataFrame = null
+    assert(jobsDuring { df = SnapshotLog.read(spark, dir, c.version) } == 0,
+      "building the read ran a job (delete-vector schema inference)")
+    // the control: counting sees the read's own jobs
+    assert(jobsDuring(assert(df.count() == 98L)) > 0)
+    assert(df.where(col("id").isin(3L, 5L)).isEmpty)
+  }
+
+  test("one per-file stats format: every committing op stamps one rows= line per file, " +
+      "equal to a fresh footer read, and reads stay exact") {
+    import spark.implicits._
+    import graft.sources.Stamps
+    import graft.operators.SnapshotCommit
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft_onefmt").toString + "/t"
+    val rnd = new scala.util.Random(20261018L)
+    val ids = rnd.shuffle((0L until 600L).toList).take(400)
+    val init = ids.map(i => (i, s"x$i", rnd.nextInt(1000).toLong)).toDF("id", "x", "y")
+    var expected: DataFrame = init
+    val expectedAt = scala.collection.mutable.Map.empty[Long, DataFrame]
+
+    def canon(df: DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+    // the footers of version v's files, read in each file's physical
+    // column names (every file live at a rename here predates it) and
+    // reported under the logical ones
+    def freshStamps(v: Long): Map[String, Stamps.FileStamp] = {
+      val pm = SnapshotLog.physMap(spark, dir, v)
+      val physical = StructType(SnapshotLog.tableSchema(spark, dir, v).get
+        .map(f => pm.get(f.name).fold(f)(olds => f.copy(name = olds.head))))
+      val toLogical = pm.map { case (l, olds) => olds.head -> l }
+      Stamps.read(spark, SnapshotLog.manifest(spark, dir, v)
+        .map(n => n -> new Path(s"$dir/data/$n")), physical, "id")
+        .map { case (n, st) =>
+          n -> st.copy(cols = st.cols.map { case (c, cs) => toLogical.getOrElse(c, c) -> cs })
+        }
+    }
+    def check(op: String, c: SnapshotCommit): Unit = {
+      val v = c.version
+      val names = SnapshotLog.manifest(spark, dir, v)
+      val meta = SnapshotLog.manifestMeta(spark, dir, v)
+      val rowsOf = meta.filter(_.startsWith(Stamps.RowsPrefix)).flatMap(Stamps.fileOf)
+      assert(rowsOf.sorted == names.sorted, s"$op: rows= lines $rowsOf vs files $names")
+      assert(!meta.exists(l => l.startsWith("range=") || l.startsWith("colrange=")),
+        s"$op: a second stats format is stamped")
+      assert(Stamps.parse(meta) == freshStamps(v), s"$op: stamps diverge from the footers")
+      val h = SnapshotLog.history(spark, dir).find(_._1 == v).get
+      assert(h._6 == h._4, s"$op: range_stamps ${h._6} != files ${h._4}")
+      val cols = expected.columns.toSeq
+      val got = SnapshotLog.read(spark, dir, v)
+      assert(got.columns.toSeq.sorted == cols.sorted, s"$op: columns ${got.columns.toSeq}")
+      assert(canon(got, cols) == canon(expected, cols), s"$op: read diverged")
+      val probe = (Seq.fill(6)(rnd.nextInt(700).toLong) :+
+        expected.select("id").head().getLong(0)).distinct
+      assert(canon(SnapshotLog.lookupKeys(spark, dir, v, probe.toDF("id")), cols) ==
+        canon(expected.where(col("id").isin(probe: _*)), cols), s"$op: lookupKeys diverged")
+      expectedAt(v) = expected
+    }
+    def changeset(n: Int, tag: String): DataFrame =
+      Seq.fill(n)(rnd.nextInt(700).toLong).distinct.map { k =>
+        val op = Seq(Merge.OpUpdate, Merge.OpDelete, Merge.OpInsert)(rnd.nextInt(3))
+        (op, k, Option(s"$tag$k"), if (op == Merge.OpInsert) Option(k) else None)
+      }.toDF("op", "id", "x", "y")
+
+    check("init", SnapshotLog.init(spark, dir, init, "id", numFiles = 4))
+    val cs1 = changeset(30, "m")
+    expected = Merge(expected, cs1, "id")
+    check("merge", SnapshotLog.merge(spark, dir, cs1, "id"))
+    expected = expected.withColumn("y", col("y") + 1)
+    check("overwrite", SnapshotLog.overwrite(spark, dir, expected, "id", numFiles = 4))
+    val dels = expected.select("id").as[Long].collect().take(20).map(_.toInt).toSeq
+    expected = expected.where(!col("id").isin(dels: _*))
+    check("deleteKeys", SnapshotLog.deleteKeys(spark, dir, dels.toDF("id"), "id"))
+    val vDel = SnapshotLog.latestVersion(spark, dir)
+    check("compact", SnapshotLog.compact(spark, dir, numFiles = 3))
+    check("compactWhere", SnapshotLog.compactWhere(spark, dir,
+      spark.sessionState.sqlParser.parseExpression("id < 200"), targetBytes = 1L << 30))
+    check("compactZ", SnapshotLog.compactZ(spark, dir, "id", "y", numFiles = 4))
+    expected = expectedAt(vDel)
+    check("restore", SnapshotLog.restore(spark, dir, vDel))
+    // re-inserting a masked key purges it from the restored vector
+    val cs2 = (Seq((Merge.OpInsert, dels.head.toLong, Option("back"), Option(1L))) ++
+      Seq((Merge.OpUpdate, expected.select("id").head().getLong(0), Option("upd"),
+        Option.empty[Long]))).toDF("op", "id", "x", "y")
+    expected = Merge(expected, cs2, "id")
+    check("merge after restore", SnapshotLog.merge(spark, dir, cs2, "id"))
+    expected = expected.withColumn("z", lit(null).cast("long"))
+    check("addColumns", SnapshotLog.addColumns(spark, dir,
+      Seq(StructField("z", LongType, nullable = true))))
+    expected = expected.withColumnRenamed("x", "x2")
+    check("renameColumn", SnapshotLog.renameColumn(spark, dir, "x", "x2"))
+    expected = expected.drop("y")
+    check("dropColumn", SnapshotLog.dropColumn(spark, dir, "y"))
+    check("addConstraint", SnapshotLog.addConstraint(spark, dir, "id_nonneg", "id >= 0"))
+    check("dropConstraint", SnapshotLog.dropConstraint(spark, dir, "id_nonneg"))
   }
 }

@@ -267,8 +267,8 @@ class SnapshotSkipSpec extends SparkTestBase {
     val v = SnapshotLog.latestVersion(spark, dir)
 
     // point filter on the second dimension: a key-sorted layout reads all
-    // 16 files (d2 spans the domain in each); the z-layout + colrange
-    // stamps must skip most of them
+    // 16 files (d2 spans the domain in each); the z-layout + typed
+    // cstats stamps must skip most of them
     val byD2 = SnapshotLog.read(spark, dir, v).where(col("d2") === 111L)
     assert(filesRead(byD2) <= 8, "second-dimension filter must skip files")
     assert(byD2.select("id").as[Long].collect().toSeq ==
@@ -279,11 +279,11 @@ class SnapshotSkipSpec extends SparkTestBase {
     assert(filesRead(byKey) <= 8)
     assert(byKey.count() == 1)
 
-    // a reference-only commit (MoR delete) carries the colrange stamps
+    // a reference-only commit (MoR delete) carries the cstats stamps
     SnapshotLog.deleteKeys(spark, dir, Seq(0L).toDF("id"), "id")
     val v2 = SnapshotLog.latestVersion(spark, dir)
     val afterDel = SnapshotLog.read(spark, dir, v2).where(col("d2") === 111L)
-    assert(filesRead(afterDel) <= 8, "colrange stamps must survive a MoR delete")
+    assert(filesRead(afterDel) <= 8, "cstats stamps must survive a MoR delete")
     assert(afterDel.count() == 1)
   }
 

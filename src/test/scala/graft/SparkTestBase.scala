@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graftshim.CatalystBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SnapshotFileIndex
 
@@ -40,6 +44,43 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** Files the snapshot scan of `df` opened (its `numFiles` metric). */
   def filesRead(df: DataFrame): Long = snapshotScan(df).metrics("numFiles").value
+
+  /** Spark jobs started by `body` on this thread, counted once the
+    * listener bus has delivered every event posted so far.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try body
+    finally {
+      sc.clearJobGroup()
+      CatalystBridge.drainListeners(sc, 60000L)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  /** Per data file of snapshot version `v` of table `dir`, by manifest
+    * name: the [lo, hi] of integral column `c`, read fresh from the
+    * parquet footer through [[graft.sources.Stamps.read]]; None where
+    * the footer gives no interval.
+    */
+  def footerRanges(dir: String, v: Long, c: String): Map[String, Option[(Long, Long)]] = {
+    import graft.sources.Stamps
+    val names = graft.operators.SnapshotLog.manifest(spark, dir, v)
+    Stamps.read(spark, names.map(n => n -> new org.apache.hadoop.fs.Path(s"$dir/data/$n")),
+      StructType(Seq(StructField(c, LongType))), c).map { case (n, st) =>
+      n -> st.cols.get(c).flatMap(_.iv).collect { case Stamps.LongIv(lo, hi) => (lo, hi) }
+    }
+  }
 }
 
 object SparkTestBase {

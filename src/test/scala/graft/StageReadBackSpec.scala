@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CatalystBridge
 import org.apache.spark.sql.types._
 import graft.operators.Stage
 
@@ -78,29 +75,6 @@ class StageReadBackSpec extends SparkTestBase {
       assert(typed.schema("v").dataType == VarcharType(20))
       assertReadBack(typed, "rb_typed")
     } finally spark.conf.unset("spark.sql.preserveCharVarcharTypeInfo")
-  }
-
-  /** Spark jobs started by `body` on this thread, counted once the
-    * listener bus has delivered every event posted so far.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"stage-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "StageReadBackSpec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      CatalystBridge.drainListeners(sc, 60000L)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("Stage.table runs exactly one Spark job; a memo hit runs none and skips its thunk") {
