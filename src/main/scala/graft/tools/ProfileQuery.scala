@@ -2,9 +2,11 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftshim.CatalystBridge
@@ -21,7 +23,9 @@ import org.apache.spark.sql.graftshim.CatalystBridge
   * to, which maps it back to the operator that launched it (`parquet at
   * Stage.scala:<line>` = a stage write, `collect at SnapshotLog.scala:...`
   * = a commit-planning action, `save at ProfileQuery.scala` = the timed
-  * read, `-` = a job outside any SQL execution).
+  * read, `-` = a job outside any SQL execution). The summary line also
+  * gives the generated classes compiled during the last pass and their
+  * compile time, counted JVM-wide (a concurrent query's compiles count).
   *
   * Usage: `ProfileQuery <sfDir> <query>[,<query>...] [passes]` — passes
   * default to 2 so the printed (last) pass is warmed; JIT distorts
@@ -33,9 +37,12 @@ object ProfileQuery {
   final case class Job(id: Int, ms: Long, desc: String)
 
   /** `plan` is the formatted explain of the final read's (unexecuted)
-    * `QueryExecution`; `jobs` are every job of the last pass, costliest first.
+    * `QueryExecution`; `jobs` are every job of the last pass, costliest first;
+    * `compiled` and `compileMs` are the generated classes compiled during
+    * the last pass and the time spent compiling them.
     */
-  final case class Profile(name: String, plan: String, lastPassSec: Double, jobs: Seq[Job])
+  final case class Profile(name: String, plan: String, lastPassSec: Double, jobs: Seq[Job],
+                           compiled: Long, compileMs: Double)
 
   private final case class JobRec(started: Long, desc: String) {
     @volatile var ended: Long = -1L
@@ -82,6 +89,8 @@ object ProfileQuery {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val (df, sec) =
       try run()
       finally {
@@ -91,14 +100,17 @@ object ProfileQuery {
     val recorded = jobs.asScala.toSeq.map { case (id, r) =>
       Job(id, if (r.ended < 0) -1L else r.ended - r.started, r.desc)
     }
-    Profile(name, df.queryExecution.explainString(FormattedMode), sec, recorded.sortBy(-_.ms))
+    Profile(name, df.queryExecution.explainString(FormattedMode), sec, recorded.sortBy(-_.ms),
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0,
+      (CodeGenerator.compileTime - compileNs0) / 1e6)
   }
 
   /** The printed form: the plan block, a summary line, the 40 costliest jobs. */
   def render(p: Profile): String =
     (Seq(s"=== PLAN ${p.name} ===", p.plan, s"=== END ${p.name} ===",
       f"=== ${p.name}: last-pass wall ${p.lastPassSec}%.3f s, ${p.jobs.size} jobs, " +
-        f"sum-of-jobs ${p.jobs.map(_.ms).filter(_ > 0).sum / 1000.0}%.3f s ===") ++
+        f"sum-of-jobs ${p.jobs.map(_.ms).filter(_ > 0).sum / 1000.0}%.3f s, " +
+        f"${p.compiled} classes compiled, compile ${p.compileMs}%.0f ms ===") ++
       p.jobs.take(40).map(j => f"  job ${j.id}%4d  ${j.ms}%6d ms  ${j.desc}")).mkString("\n")
 
   def main(args: Array[String]): Unit = {

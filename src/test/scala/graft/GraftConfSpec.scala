@@ -62,6 +62,10 @@ class GraftConfSpec extends SparkTestBase {
       org.apache.spark.sql.SparkSession.builder()).getOrCreate()
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    // a static conf: getOrCreate on an existing session ignores it, so
+    // read what the session was built with
+    assert(s.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") == "4096")
     // the extension class the builder would install resolves and applies
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)

@@ -7,7 +7,8 @@ import graft.tools.ProfileQuery
   * `Stage.sharedTable` before its final read (m02) and one that does not
   * (q01). Each prints a non-empty plan block, and the last pass's jobs are
   * all on the listener when `profile` returns, because it drains the bus
-  * before reading it.
+  * before reading it. The summary line carries the last pass's compiled
+  * classes and compile time, and a warmed query compiles none.
   */
 class ProfileQuerySpec extends SparkTestBase {
 
@@ -30,7 +31,16 @@ class ProfileQuerySpec extends SparkTestBase {
       val reads = p.jobs.filter(_.desc.startsWith("save at ProfileQuery.scala"))
       assert(reads.nonEmpty, p.jobs.map(_.desc).mkString("\n"))
       assert(reads.forall(_.ms >= 0), s"job ends missing: $reads")
+
+      val summary = out.linesIterator.find(_.startsWith(s"=== $name: last-pass wall "))
+      assert(summary.exists(_.endsWith(
+        f"${p.compiled} classes compiled, compile ${p.compileMs}%.0f ms ===")), out.take(500))
     }
+  }
+
+  test("q01_pricing_summary's second pass compiles no class") {
+    val p = ProfileQuery.profile(spark, sfDir, "q01_pricing_summary", passes = 2)
+    assert(p.compiled == 0, s"second pass compiled ${p.compiled} classes in ${p.compileMs} ms")
   }
 
   test("the listener bus is drained with drainListeners, not a sleep") {
