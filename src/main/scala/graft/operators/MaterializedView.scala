@@ -30,15 +30,18 @@ import org.apache.spark.sql.functions._
   */
 object MaterializedView {
 
-  private val AsofPrefix = "asof="
-  private val MeasuresPrefix = "measures="
-  private val BasePrefix = "basedir="
+  private val AsofTag = "asof"
+  private val MeasuresTag = "measures"
+  private val BaseTag = "basedir"
+
+  /** The view version's value of tag `name`; fails when it has none. */
+  private def stamp(spark: SparkSession, viewDir: String, v: Long, name: String): String =
+    SnapshotLog.manifestOf(spark, viewDir, v).tag(name)
+      .getOrElse(sys.error(s"version $v of $viewDir has no $name= stamp"))
 
   /** The base version a view table's version `v` reflects. */
   def asof(spark: SparkSession, viewDir: String, v: Long): Long =
-    SnapshotLog.manifestMeta(spark, viewDir, v).collectFirst {
-      case m if m.startsWith(AsofPrefix) => m.stripPrefix(AsofPrefix).toLong
-    }.getOrElse(sys.error(s"version $v of $viewDir has no $AsofPrefix stamp"))
+    stamp(spark, viewDir, v, AsofTag).toLong
 
   /** The view's STALENESS surface — what a user monitoring a maintained
     * aggregate actually watches: (asof watermark, base's latest version,
@@ -48,15 +51,11 @@ object MaterializedView {
     * absorbed. Manifest metadata only, no data read.
     */
   def staleness(spark: SparkSession, viewDir: String): Option[(Long, Long, Long)] = {
-    val v = SnapshotLog.latestVersion(spark, viewDir)
-    val meta = SnapshotLog.manifestMeta(spark, viewDir, v)
+    val m = SnapshotLog.manifestOf(spark, viewDir,
+      SnapshotLog.latestVersion(spark, viewDir))
     for {
-      from <- meta.collectFirst {
-        case m if m.startsWith(AsofPrefix) => m.stripPrefix(AsofPrefix).toLong
-      }
-      base <- meta.collectFirst {
-        case m if m.startsWith(BasePrefix) => m.stripPrefix(BasePrefix)
-      }
+      from <- m.tag(AsofTag).map(_.toLong)
+      base <- m.tag(BaseTag)
     } yield {
       val latest = SnapshotLog.latestVersion(spark, base)
       (from, latest, latest - from)
@@ -64,15 +63,12 @@ object MaterializedView {
   }
 
   private def measureNames(spark: SparkSession, viewDir: String, v: Long): Seq[String] =
-    SnapshotLog.manifestMeta(spark, viewDir, v).collectFirst {
-      case m if m.startsWith(MeasuresPrefix) =>
-        m.stripPrefix(MeasuresPrefix).split(",").toSeq.filter(_.nonEmpty)
-    }.getOrElse(sys.error(s"version $v of $viewDir has no $MeasuresPrefix stamp"))
+    stamp(spark, viewDir, v, MeasuresTag).split(",").toSeq.filter(_.nonEmpty)
 
   private def stamps(baseV: Long, measures: Seq[(String, Column)],
-      baseDir: String): Seq[String] =
-    Seq(s"$AsofPrefix$baseV", s"$MeasuresPrefix${measures.map(_._1).mkString(",")}",
-      s"$BasePrefix$baseDir")
+      baseDir: String): Seq[(String, String)] =
+    Seq(AsofTag -> baseV.toString, MeasuresTag -> measures.map(_._1).mkString(","),
+      BaseTag -> baseDir)
 
   /** Build the view from the base's CURRENT version (the one full scan a
     * standing aggregate ever pays) and commit it as view version 0.
@@ -84,7 +80,7 @@ object MaterializedView {
     val view = IncrementalView.build(
       SnapshotLog.read(spark, baseDir, baseV), group, measures)
     SnapshotLog.init(spark, viewDir, view, group, numFiles,
-      meta = stamps(baseV, measures, baseDir))
+      tags = stamps(baseV, measures, baseDir))
   }
 
   /** Absorb every base version committed since the view's watermark, in
@@ -110,7 +106,7 @@ object MaterializedView {
       val next = IncrementalView.applyCdc(
         SnapshotLog.read(spark, viewDir, viewV), signed, group, measures)
       Some(SnapshotLog.overwrite(spark, viewDir, next, group, numFiles,
-        meta = stamps(latest, measures, baseDir)))
+        tags = stamps(latest, measures, baseDir)))
     }
   }
 }

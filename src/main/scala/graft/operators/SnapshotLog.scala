@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
-import graft.sources.Stamps
+import graft.sources.{Manifest, Stamps}
+import graft.sources.Manifest.{Carry, Written}
 
 /** A committed table version: the log version number plus the file-level
   * merge report that produced it (v0's report is all-new-files).
@@ -77,33 +78,26 @@ final class ConcurrentCommitException(msg: String)
   * CDC output against DuckDB, and SnapshotLogSpec/CowMergeSpec pin the
   * physical facts.
   *
-  * MANIFEST SIZING, stated honestly: a manifest lists the version's FULL
-  * file set plus its stamps — one `rows=` line and up to
-  * [[Stamps.MaxStampedCols]] typed `cstats=` lines per file — so each
-  * commit writes O(live files) metadata text: ~1 KB/file
-  * fully stamped, i.e. ~100 MB per commit on a 10^5-file table, still
-  * noise beside the data write it accompanies and read once per
-  * planning operation (cheaper than the per-file footer fetches it
-  * replaced, which is exactly what the stamps exist to avoid). The
-  * full-listing format is what buys O(1)-read time travel and
-  * set-algebra CDC ([[cdc]] diffs two manifests, no log replay); the
-  * total metadata footprint is bounded by [[vacuum]]'s retention, not
-  * by table lifetime. A Delta-style add/remove delta log with periodic
-  * checkpoints trades manifest write size for reader-side log replay
-  * and checkpoint machinery — the right trade past ~10^5-10^6 live
-  * files per table, at which point partitioning the table (many logs,
-  * and since round 14 a first-class layout here) is the simpler lever.
-  * Bloom sidecars ([[BloomIndexKey]]) deliberately live OUTSIDE the
-  * manifest as parquet files: at ~1 bit-something per row they are
-  * data-sized, not metadata-sized.
+  * The manifest's line grammar and sizing are [[Manifest]]'s; this
+  * object owns the table-directory layout (`data/`, `_log/`), the
+  * commit protocol and the operations.
   */
 object SnapshotLog {
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def logDir(table: Path) = new Path(table, "_log")
-  private def dataDir(table: Path) = new Path(table, "data")
+  private val LogDirName = "_log"
+  private val DataDirName = "data"
+  private def logDir(table: Path) = new Path(table, LogDirName)
+  private def dataDir(table: Path) = new Path(table, DataDirName)
+
+  /** True for the directory names a snapshot table keeps under its root. */
+  private[graft] def isLayoutDir(name: String): Boolean =
+    name == LogDirName || name == DataDirName
+
+  /** The manifest directory of `tableDir` (what a version feed tails). */
+  private[graft] def logDirOf(tableDir: String): Path = logDir(new Path(tableDir))
   private def manifestPath(table: Path, v: Long) =
     new Path(logDir(table), f"$v%06d.manifest")
 
@@ -186,83 +180,75 @@ object SnapshotLog {
       if (st.isDirectory) listDataFiles(hfs, st.getPath) else Seq(st)
     }
 
-  /** Read-through cache over manifest TEXT: a manifest is IMMUTABLE once
-    * committed (commit = exclusive create, never rewrite), so its lines
-    * are process-lifetime cacheable — and every planning step reads them
-    * (schema, key, physmap, partition spec, stamps, constraints: 10+
-    * [[manifestLines]] calls per DML operation). On local disk that is
-    * milliseconds; against an object store each re-read is a 20-100 ms
-    * round trip, so an uncached log walk dominates planning latency at
-    * cluster scale. Invalidation: [[vacuum]] drops expired versions and
-    * [[init]] / the catalog's DROP/RENAME TABLE drop the directory's
-    * entries (a re-created table at the same path must never see its
-    * predecessor's lines). A FOREIGN process's vacuum cannot invalidate
-    * this JVM's cache — a stale hit then fails at the data-file scan
-    * instead of the manifest open, the same terminal outcome the
-    * retention contract already assigns to reading an expired version.
+  /** Read-through cache of parsed manifests: a manifest is IMMUTABLE once
+    * committed (commit = exclusive create, never rewrite), so its parse
+    * is process-lifetime cacheable — and every planning step reads it
+    * (schema, key, physmap, partition spec, stamps, constraints). On
+    * local disk a re-read is milliseconds; against an object store each
+    * is a 20-100 ms round trip, so an uncached log walk dominates
+    * planning latency at cluster scale. Invalidation: [[vacuum]] drops
+    * expired versions and [[init]] / the catalog's DROP/RENAME TABLE drop
+    * the directory's entries (a re-created table at the same path must
+    * never see its predecessor's manifests). A FOREIGN process's vacuum
+    * cannot invalidate this JVM's cache — a stale hit then fails at the
+    * data-file scan instead of the manifest open, the same terminal
+    * outcome the retention contract already assigns to reading an
+    * expired version.
     */
-  private val manifestLineCache = new LruCache[(String, Long), Seq[String]](512)
+  private val manifestCache = new LruCache[(String, Long), Manifest](512)
 
   private[graft] def invalidateManifestCache(tableDir: String): Unit =
-    manifestLineCache.invalidateIf(_._1 == tableDir)
+    manifestCache.invalidateIf(_._1 == tableDir)
 
-  private def manifestLines(spark: SparkSession, tableDir: String,
-      v: Long): Seq[String] =
-    manifestLineCache.getOrLoad((tableDir, v)) {
+  /** Version `v` of `tableDir`, parsed once ([[Manifest]]). */
+  private[graft] def manifestOf(spark: SparkSession, tableDir: String,
+      v: Long): Manifest =
+    manifestCache.getOrLoad((tableDir, v)) {
       val table = new Path(tableDir)
       val in = fs(spark, table).open(manifestPath(table, v))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toList
+      try Manifest.parse(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
       finally in.close()
     }
 
   /** DATA file names (relative to `data/`) of version `v`, as committed
-    * (sorted — manifest content is deterministic). Line grammar:
-    * `# k=v` = commit metadata, `-name` = delete-vector file
-    * ([[deletes]]), plain = data file.
+    * (sorted — manifest content is deterministic).
     */
   def manifest(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    manifestLines(spark, tableDir, v)
-      .filterNot(l => l.startsWith("#") || l.startsWith("-"))
+    manifestOf(spark, tableDir, v).files
 
   /** Delete-vector file names of version `v` (parquet key lists under
-    * `data/`, committed as `-name` manifest lines): rows whose key they
-    * hold are logically absent from this version without their data file
-    * having been rewritten — the merge-on-read delete path.
+    * `data/`): rows whose key they hold are logically absent from this
+    * version without their data file having been rewritten — the
+    * merge-on-read delete path.
     */
   def deletes(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    manifestLines(spark, tableDir, v).filter(_.startsWith("-")).map(_.drop(1))
-
-  /** Commit metadata recorded with version `v` (the table's `key=` stamp,
-    * streaming transaction stamps `txn=<streamId>/<epochId>`), `#`
-    * stripped.
-    */
-  def manifestMeta(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    manifestLines(spark, tableDir, v).filter(_.startsWith("#"))
-      .map(_.stripPrefix("#").trim)
+    manifestOf(spark, tableDir, v).deletes
 
   /** The table's key column, as stamped into every manifest — what lets
     * [[read]] apply delete vectors without the caller re-supplying it.
     */
   def tableKey(spark: SparkSession, tableDir: String, v: Long): String =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith("key=") => m.stripPrefix("key=")
-    }.getOrElse(sys.error(s"version $v of $tableDir has no key= stamp"))
+    keyOf(manifestOf(spark, tableDir, v), tableDir, v)
 
-  /** Version `v`'s LOGICAL schema, as stamped into its manifest (one json
-    * line) — how the table evolves without touching data: a version whose
-    * schema gained a column reads old files THROUGH the wider schema
-    * (parquet resolves columns by name; absent ones come back null), so
-    * schema resolution is a metadata lookup, never a footer sweep of a
-    * 100 TB file set (`mergeSchema`'s cost). Absent on manifests
-    * committed by raw [[commit]] calls — readers fall back to file-derived
-    * schema.
+  private def keyOf(m: Manifest, tableDir: String, v: Long): String =
+    m.key.getOrElse(sys.error(s"version $v of $tableDir has no key= stamp"))
+
+  /** Version `v`'s LOGICAL schema, as stamped into its manifest — how the
+    * table evolves without touching data: a version whose schema gained a
+    * column reads old files THROUGH the wider schema (parquet resolves
+    * columns by name; absent ones come back null), so schema resolution
+    * is a metadata lookup, never a footer sweep of a 100 TB file set
+    * (`mergeSchema`'s cost). Absent on manifests committed by raw
+    * [[commit]] calls — readers fall back to file-derived schema.
     */
   def tableSchema(spark: SparkSession, tableDir: String, v: Long): Option[StructType] =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith("schema=") =>
-        DataType.fromJson(m.stripPrefix("schema=")).asInstanceOf[StructType]
-    }
+    manifestOf(spark, tableDir, v).schema
+
+  /** [[tableSchema]], or the schema of the version's files when the
+    * manifest stamps none (raw commits).
+    */
+  private def schemaOf(spark: SparkSession, tableDir: String, v: Long): StructType =
+    tableSchema(spark, tableDir, v).getOrElse(read(spark, tableDir, v).schema)
 
   // ---- Column rename/drop without column-mapping ids -----------------
   //
@@ -285,40 +271,17 @@ object SnapshotLog {
   // it. Time travel is era-exact for free: each version's manifest
   // carries its own map.
 
-  private val PhysMapPrefix = "physmap="
-  private val DroppedPrefix = "dropped="
-
   /** Renamed columns of version `v`: logical name -> prior physical
-    * names, newest first (`physmap=<logical>:<prev>[:<older>...]`).
+    * names, newest first.
     */
   def physMap(spark: SparkSession, tableDir: String, v: Long): Map[String, Seq[String]] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(PhysMapPrefix) =>
-        val parts = m.stripPrefix(PhysMapPrefix).split(":").toSeq
-        parts.head -> parts.tail
-    }.toMap
+    manifestOf(spark, tableDir, v).physMap
 
   /** Names tombstoned by DROP COLUMN as of version `v` — dead physical
     * names still present in live files, unavailable for re-introduction.
     */
   def droppedNames(spark: SparkSession, tableDir: String, v: Long): Set[String] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(DroppedPrefix) => m.stripPrefix(DroppedPrefix)
-    }.toSet
-
-  private def evolutionMeta(pm: Map[String, Seq[String]],
-      dropped: Set[String]): Seq[String] =
-    pm.toSeq.sortBy(_._1).map { case (l, olds) =>
-      s"$PhysMapPrefix$l:${olds.mkString(":")}"
-    } ++ dropped.toSeq.sorted.map(DroppedPrefix + _)
-
-  /** The evolution records version `v`'s reference-carrying successor
-    * must re-emit (partial rewrites keep pre-evolution files alive; full
-    * rewrites simply don't call this, retiring the records).
-    */
-  private def carriedEvolution(spark: SparkSession, tableDir: String,
-      v: Long): Seq[String] =
-    evolutionMeta(physMap(spark, tableDir, v), droppedNames(spark, tableDir, v))
+    manifestOf(spark, tableDir, v).dropped
 
   // ---- WRITE-TIME CONSTRAINTS (CHECK / NOT NULL) ---------------------
   //
@@ -340,32 +303,13 @@ object SnapshotLog {
   // a table scan. The only full-table validation is the one ADD
   // CONSTRAINT itself runs, once, at add time — Delta's rule.
 
-  /** Carried meta line: `constraint=<name>:<check expr sql>` (names are
-    * stamp-safe identifiers; the first ':' splits; exprs are single-line
-    * SQL text re-parsed by the session at enforcement time).
+  /** The CHECK constraints stamped on version `v`, in add order: (name,
+    * single-line check SQL, re-parsed by the session at enforcement
+    * time).
     */
-  private val ConstraintPrefix = "constraint="
-
-  /** The CHECK constraints stamped on version `v`, in add order. */
   def constraintsOf(spark: SparkSession, tableDir: String,
       v: Long): Seq[(String, String)] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(ConstraintPrefix) =>
-        val body = m.stripPrefix(ConstraintPrefix)
-        val i = body.indexOf(':')
-        (body.substring(0, i), body.substring(i + 1))
-    }
-
-  private def constraintMeta(cons: Seq[(String, String)]): Seq[String] =
-    cons.map { case (n, e) => s"$ConstraintPrefix$n:$e" }
-
-  /** The constraint stamps version `v`'s successor re-emits — EVERY
-    * successor: unlike evolution records, constraints never retire on a
-    * full rewrite (they describe the table's contract, not its files).
-    */
-  private def carriedConstraints(spark: SparkSession, tableDir: String,
-      v: Long): Seq[String] =
-    constraintMeta(constraintsOf(spark, tableDir, v))
+    manifestOf(spark, tableDir, v).constraints
 
   /** Abort unless every row of `df` (the rows a commit is about to
     * write) satisfies every stamped constraint — ONE aggregate pass
@@ -374,8 +318,8 @@ object SnapshotLog {
     * contract, generalized.
     */
   private def enforceConstraints(spark: SparkSession, tableDir: String,
-      v: Long, df: DataFrame, what: String): Unit = {
-    val cons = constraintsOf(spark, tableDir, v)
+      m: Manifest, df: DataFrame, what: String): Unit = {
+    val cons = m.constraints
     if (cons.nonEmpty) {
       val counts = df.agg(
         sum(when(expr(cons.head._2) <=> lit(false), 1L).otherwise(0L))
@@ -411,17 +355,16 @@ object SnapshotLog {
     */
   def addConstraint(spark: SparkSession, tableDir: String, name: String,
       exprSql: String): SnapshotCommit = {
-    val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val cur = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val cur = schemaOf(spark, tableDir, v)
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name must be a plain identifier, got '$name'")
     require(!exprSql.contains('\n') && !exprSql.contains('\r'),
       "constraint expression must be single-line (it is stamped as one " +
         "manifest meta line)")
-    val existing = constraintsOf(spark, tableDir, v)
+    val existing = m.constraints
     require(!existing.exists(_._1.equalsIgnoreCase(name)),
       s"constraint $name already exists on $tableDir (DROP CONSTRAINT " +
         "first to replace it)")
@@ -440,15 +383,8 @@ object SnapshotLog {
     if (bad > 0) throw new IllegalStateException(
       s"cannot add constraint $name CHECK ($exprSql) to $tableDir: " +
         s"$bad existing row(s) violate it")
-    val names = manifest(spark, tableDir, v)
-    commit(spark, table, v + 1, names,
-      s"op=add-constraint $name" +: (metaOf(key, cur,
-        partitionCols(spark, tableDir, v), partitionBucket(spark, tableDir, v)) ++
-        carriedStampLines(spark, tableDir, v, _ => true) ++
-        carriedEvolution(spark, tableDir, v) ++
-        constraintMeta(existing :+ (name -> exprSql))),
-      deletes(spark, tableDir, v))
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+    commitMetadata(spark, tableDir, v, m.next(s"add-constraint $name", key, cur)
+      .copy(constraints = existing :+ (name -> exprSql)))
   }
 
   /** `ALTER TABLE DROP CONSTRAINT name` — metadata-only commit without
@@ -456,32 +392,33 @@ object SnapshotLog {
     */
   def dropConstraint(spark: SparkSession, tableDir: String,
       name: String): SnapshotCommit = {
-    val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val cur = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
-    val existing = constraintsOf(spark, tableDir, v)
-    require(existing.exists(_._1.equalsIgnoreCase(name)),
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val cur = schemaOf(spark, tableDir, v)
+    require(m.constraints.exists(_._1.equalsIgnoreCase(name)),
       s"no constraint $name on $tableDir (have: " +
-        s"${existing.map(_._1).mkString(", ")})")
-    val names = manifest(spark, tableDir, v)
-    commit(spark, table, v + 1, names,
-      s"op=drop-constraint $name" +: (metaOf(key, cur,
-        partitionCols(spark, tableDir, v), partitionBucket(spark, tableDir, v)) ++
-        carriedStampLines(spark, tableDir, v, _ => true) ++
-        carriedEvolution(spark, tableDir, v) ++
-        constraintMeta(existing.filterNot(_._1.equalsIgnoreCase(name)))),
-      deletes(spark, tableDir, v))
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+        s"${m.constraints.map(_._1).mkString(", ")})")
+    commitMetadata(spark, tableDir, v, m.next(s"drop-constraint $name", key, cur)
+      .copy(constraints = m.constraints.filterNot(_._1.equalsIgnoreCase(name))))
+  }
+
+  /** Commit `next` — a metadata-only successor of version `v`, every file
+    * carried by reference — as version `v + 1`.
+    */
+  private def commitMetadata(spark: SparkSession, tableDir: String, v: Long,
+      next: Manifest): SnapshotCommit = {
+    commit(spark, new Path(tableDir), v + 1, next)
+    val n = next.files.size
+    SnapshotCommit(v + 1, CowMergeReport(n, 0, n, 0))
   }
 
   /** Every name that may still exist physically in live files under a
     * meaning OTHER than its current logical one — blocked for ADD, for
     * RENAME targets and for merge-driven schema evolution.
     */
-  private def blockedNames(pm: Map[String, Seq[String]],
-      dropped: Set[String]): Set[String] = pm.values.flatten.toSet ++ dropped
+  private def blockedNames(m: Manifest): Set[String] =
+    m.physMap.values.flatten.toSet ++ m.dropped
 
   /** Scan schema widened with each renamed column's prior physical names
     * (all chain fields nullable: any given file holds exactly one of
@@ -522,18 +459,13 @@ object SnapshotLog {
     else spark.read.schema(eraSchema(schema, pm)).parquet(paths: _*)
       .select(eraProjection(schema, pm): _*)
 
-  private def filesOf(spark: SparkSession, tableDir: String, v: Long): Seq[Path] = {
-    val table = new Path(tableDir)
-    manifest(spark, tableDir, v).map(n => new Path(dataDir(table), n))
-  }
-
   // ---- Per-file statistics -------------------------------------------
   //
   // Every committing op reads the footers of the files it just wrote,
   // once ([[newFileStamps]]: commit-footprint-sized work), and stamps
-  // their typed `rows=`/`cstats=` lines ([[Stamps]]) into the manifest;
-  // reference-carrying commits copy the lines of the files they keep
-  // ([[carriedStampLines]]). Merge planning, point lookups,
+  // their typed stamps ([[Stamps]]) into the manifest; reference-carrying
+  // commits carry the stamps of the files they keep ([[Manifest.next]]).
+  // Merge planning, point lookups,
   // CDC B-parts, predicate-scoped compaction and read-side skipping all
   // plan from ONE manifest read instead of a footer fetch per file — at
   // 100 TB (10^5 files) that replaces 10^5 driver-side ranged reads per
@@ -550,29 +482,6 @@ object SnapshotLog {
     else full.substring(full.lastIndexOf('/') + 1)
   }
 
-  /** The raw per-file stat lines of version `v` (`cstats=` column stats,
-    * `rows=` counts) whose file survives into the next commit — how
-    * reference-carrying commits keep planning and skipping alive without
-    * re-reading a footer.
-    */
-  private def carriedStampLines(spark: SparkSession, tableDir: String,
-      v: Long, keep: String => Boolean): Seq[String] =
-    manifestMeta(spark, tableDir, v).filter { m =>
-      // sidecars cover their commit's files; carried unconditionally —
-      // verdict rows for since-rewritten files are filtered by the
-      // candidate set at probe time, never consulted for dead files
-      m.startsWith(BloomIdxPrefix) || Stamps.fileOf(m).exists(keep)
-    }
-
-  /** The stamped per-file statistics of version `v`: file name ->
-    * [[Stamps.FileStamp]]. What the skipping seams ([[read]]'s FileIndex,
-    * [[compactWhere]]'s footprint selection) evaluate predicates
-    * against. Unstamped files are simply absent.
-    */
-  private def fileStamps(spark: SparkSession, tableDir: String,
-      v: Long): Map[String, Stamps.FileStamp] =
-    Stamps.parse(manifestMeta(spark, tableDir, v))
-
   /** Per-file key intervals of version `v`, keyed by full path (what
     * [[matchFiles]]'s planning join returns). A file with a `rows=` stamp
     * takes its key's stamped interval; an unstamped file's comes from
@@ -582,13 +491,14 @@ object SnapshotLog {
   private[graft] def keyIntervals(spark: SparkSession, tableDir: String, v: Long,
       key: String): Seq[(String, Option[Stamps.LongIv])] = {
     val table = new Path(tableDir)
-    val names = manifest(spark, tableDir, v)
-    val stamped = fileStamps(spark, tableDir, v).filter(_._2.rows.nonEmpty)
+    val m = manifestOf(spark, tableDir, v)
+    val names = m.files
+    val stamped = m.stamps.filter(_._2.rows.nonEmpty)
     val missing = names.filterNot(stamped.contains)
     val footers =
       if (missing.isEmpty) Map.empty[String, Stamps.FileStamp]
       else {
-        val keyType = tableSchema(spark, tableDir, v)
+        val keyType = m.schema
           .flatMap(_.find(_.name == key)).fold[DataType](LongType)(_.dataType)
         Stamps.read(spark, missing.map(n => n -> new Path(dataDir(table), n)),
           StructType(Seq(StructField(key, keyType))), key)
@@ -664,13 +574,12 @@ object SnapshotLog {
     */
   def read(spark: SparkSession, tableDir: String, v: Long): DataFrame = {
     val table = new Path(tableDir)
-    val names = manifest(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val names = m.files
     val data =
       if (names.isEmpty) {
         // empty version (freshly created table): schema-only frame
-        tableSchema(spark, tableDir, v)
-          .fold(spark.read)(s => spark.read.schema(s))
-          .parquet(filesOf(spark, tableDir, v).map(_.toString): _*)
+        m.schema.fold(spark.read)(s => spark.read.schema(s)).parquet()
       } else {
         val nameSet = names.toSet
         val hfs = fs(spark, table)
@@ -684,26 +593,24 @@ object SnapshotLog {
         require(missing.isEmpty,
           s"version $v of $tableDir references data files that do not " +
             s"exist (vacuumed or corrupt): ${missing.take(3).mkString(",")}")
-        val schema = tableSchema(spark, tableDir, v).getOrElse(
+        val schema = m.schema.getOrElse(
           spark.read.parquet(names.map(n =>
             new Path(dataDir(table), n).toString): _*).schema)
-        val pcols = partitionCols(spark, tableDir, v)
+        val pcols = m.partCols
         val pvals =
           if (pcols.isEmpty) Map.empty[String, org.apache.spark.sql.catalyst.InternalRow]
           else names.map(n => n -> partValuesOf(n, pcols, schema)).toMap
-        val bloomProbe = {
-          val sidecars = bloomSidecars(spark, tableDir, v)
-          if (sidecars.isEmpty) None
+        val bloomProbe =
+          if (m.blooms.isEmpty) None
           else {
-            val key = tableKey(spark, tableDir, v)
+            val key = keyOf(m, tableDir, v)
             Some(graft.sources.SnapshotFileIndex.BloomProbe(key,
               schema(key).dataType,
-              () => sidecars.flatMap(n =>
+              () => m.blooms.flatMap(n =>
                 loadBloomSidecar(spark, new Path(dataDir(table), n).toString))
                 .toMap))
           }
-        }
-        val bucketProbe = partitionBucket(spark, tableDir, v).map {
+        val bucketProbe = m.bucket.map {
           case (c, n) => graft.sources.SnapshotFileIndex.BucketProbe(
             c, schema(c).dataType, n,
             names.flatMap(nm => bucketOfName(nm).map(nm -> _)).toMap)
@@ -711,19 +618,18 @@ object SnapshotLog {
         // renamed columns: scan the physical-name-widened schema, then
         // project each chain's first non-null back to the logical name
         // (identity when the table never renamed — the common case)
-        val pm = physMap(spark, tableDir, v)
+        val pm = m.physMap
         val scanned = graft.sources.SnapshotFileIndex.scan(spark, table,
-          names.map(n => n -> byName(n)), fileStamps(spark, tableDir, v),
+          names.map(n => n -> byName(n)), m.stamps,
           eraSchema(schema, pm), pcols, pvals, bloomProbe, bucketProbe)
         if (pm.isEmpty) scanned
         else scanned.select(eraProjection(schema, pm): _*)
       }
-    val dels = deletes(spark, tableDir, v)
-    if (dels.isEmpty) data
+    if (m.deletes.isEmpty) data
     else {
-      val key = tableKey(spark, tableDir, v)
-      data.join(readDeleteKeys(spark, table, dels, key, Some(data.schema(key).dataType)),
-        Seq(key), "left_anti")
+      val key = keyOf(m, tableDir, v)
+      data.join(readDeleteKeys(spark, table, m.deletes, key,
+        Some(data.schema(key).dataType)), Seq(key), "left_anti")
     }
   }
 
@@ -741,16 +647,16 @@ object SnapshotLog {
   def lookupKeys(spark: SparkSession, tableDir: String, v: Long,
       keys: DataFrame): DataFrame = {
     val table = new Path(tableDir)
-    val key = tableKey(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
     val rangeHit = matchFiles(spark, keyIntervals(spark, tableDir, v, key), keys)
     // per-file Bloom stamps close the hash-key gap: when ranges cannot
     // prune (uniform keys — every file's range spans the domain), the
     // sidecar verdicts cut the candidates to ~fpp of the files
-    val keyType = tableSchema(spark, tableDir, v).map(_(key).dataType)
-      .getOrElse(LongType)
+    val keyType = m.schema.map(_(key).dataType).getOrElse(LongType)
     // hash-bucket layout: drop candidates whose bucket directory no
     // lookup key hashes into (exact, one ≤N-row distinct job)
-    val bucketHit = partitionBucket(spark, tableDir, v) match {
+    val bucketHit = m.bucket match {
       case Some((c, n)) if c == key && rangeHit.nonEmpty =>
         val buckets = keys
           .select(pmod(xxhash64(col(keys.columns.head).cast(keyType)), lit(n))
@@ -760,18 +666,17 @@ object SnapshotLog {
           bucketOfName(relName(table, f)).forall(buckets.contains))
       case _ => rangeHit
     }
-    val hit = bloomPruneFiles(spark, tableDir, v, bucketHit, keys, key, keyType)
+    val hit = bloomPruneFiles(spark, table, m.blooms, bucketHit, keys, keyType)
     if (hit.isEmpty) return read(spark, tableDir, v).where(lit(false))
-    val raw = tableSchema(spark, tableDir, v) match {
-      case Some(s) => readEra(spark, s, physMap(spark, tableDir, v), hit)
+    val raw = m.schema match {
+      case Some(s) => readEra(spark, s, m.physMap, hit)
       case None    => spark.read.parquet(hit: _*)
     }
     val data = raw
       .join(keys.select(col(keys.columns.head).as(key)), Seq(key), "left_semi")
-    val dels = deletes(spark, tableDir, v)
-    if (dels.isEmpty) data
-    else data.join(readDeleteKeys(spark, table, dels, key, Some(data.schema(key).dataType)),
-      Seq(key), "left_anti")
+    if (m.deletes.isEmpty) data
+    else data.join(readDeleteKeys(spark, table, m.deletes, key,
+      Some(data.schema(key).dataType)), Seq(key), "left_anti")
   }
 
   /** Exclusive-create commit of manifest `v`. Atomic winner-takes-the-
@@ -782,8 +687,7 @@ object SnapshotLog {
     * believing they lost a race.
     */
   private[graft] def commit(spark: SparkSession, table: Path, v: Long,
-      names: Seq[String], meta: Seq[String] = Nil,
-      delNames: Seq[String] = Nil): Unit = {
+      m: Manifest): Unit = {
     val hfs = fs(spark, table)
     hfs.mkdirs(logDir(table))
     val p = manifestPath(table, v)
@@ -822,8 +726,7 @@ object SnapshotLog {
     // every commit stamps its wall-clock time — what TIMESTAMP AS OF and
     // DESCRIBE HISTORY resolve against (Delta's commit-timestamp analogue,
     // riding the same atomic create as the commit itself)
-    val stamped = s"$TsPrefix${System.currentTimeMillis()}" +: meta
-    val lines = stamped.map("# " + _) ++ delNames.sorted.map("-" + _) ++ names.sorted
+    val lines = m.copy(ts = Some(System.currentTimeMillis())).render
     try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     // the commit IS the manifest create above; the pointer is advisory
@@ -831,24 +734,11 @@ object SnapshotLog {
     writeLatestHint(hfs, table, v)
   }
 
-  private val TsPrefix = "ts="
-  private val OpPrefix = "op="
-
   /** Wall-clock commit time of version `v` (millis), as stamped by
     * [[commit]]; None for manifests committed by pre-stamp code.
     */
   def commitTimeMs(spark: SparkSession, tableDir: String, v: Long): Option[Long] =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith(TsPrefix) => m.stripPrefix(TsPrefix).toLong
-    }
-
-  /** The operation label stamped with version `v` (init/merge/delete/
-    * overwrite/optimize/optimize-zorder), None for raw commits.
-    */
-  def operationOf(spark: SparkSession, tableDir: String, v: Long): Option[String] =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith(OpPrefix) => m.stripPrefix(OpPrefix)
-    }
+    manifestOf(spark, tableDir, v).ts
 
   /** TIMESTAMP AS OF resolution: the LATEST version whose commit stamp is
     * <= `tsMillis` — Delta's rule, robust to the (bounded) wall-clock skew
@@ -859,15 +749,11 @@ object SnapshotLog {
     * retained version — metadata, never data.
     */
   def versionAt(spark: SparkSession, tableDir: String, tsMillis: Long): Long = {
-    val vs = versions(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions under $tableDir")
-    val stamped = vs.flatMap(v => commitTimeMs(spark, tableDir, v).map(v -> _))
-    require(stamped.nonEmpty, s"no commit-time stamps under $tableDir — " +
-      "TIMESTAMP AS OF needs manifests committed by stamp-aware code")
+    val stamped = commitTimes(spark, tableDir, "TIMESTAMP AS OF")
     val hit = stamped.filter(_._2 <= tsMillis)
     require(hit.nonEmpty, s"timestamp $tsMillis predates the first " +
       s"retained commit (${stamped.head._2}) of $tableDir")
-    hit.map(_._1).max
+    hit.last._1
   }
 
   /** The EARLIEST retained version committed at or after `tsMillis` —
@@ -878,33 +764,38 @@ object SnapshotLog {
     */
   def versionAtOrAfter(spark: SparkSession, tableDir: String,
       tsMillis: Long): Long = {
-    val vs = versions(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions under $tableDir")
-    val stamped = vs.flatMap(v => commitTimeMs(spark, tableDir, v).map(v -> _))
-    require(stamped.nonEmpty, s"no commit-time stamps under $tableDir — " +
-      "startingTimestamp needs manifests committed by stamp-aware code")
+    val stamped = commitTimes(spark, tableDir, "startingTimestamp")
     val hit = stamped.filter(_._2 >= tsMillis)
     require(hit.nonEmpty, s"timestamp $tsMillis is after the latest " +
       s"retained commit (${stamped.last._2}) of $tableDir — nothing to " +
       "start from (commit newer versions first, or omit the option)")
-    hit.map(_._1).min
+    hit.head._1
+  }
+
+  /** (version, commit millis) of every retained stamped version,
+    * ascending by version; `what` names the caller in the errors.
+    */
+  private def commitTimes(spark: SparkSession, tableDir: String,
+      what: String): Seq[(Long, Long)] = {
+    val vs = versions(spark, tableDir)
+    require(vs.nonEmpty, s"no committed versions under $tableDir")
+    val stamped = vs.flatMap(v => commitTimeMs(spark, tableDir, v).map(v -> _))
+    require(stamped.nonEmpty, s"no commit-time stamps under $tableDir — " +
+      s"$what needs manifests committed by stamp-aware code")
+    stamped
   }
 
   /** One row per retained version — the DESCRIBE HISTORY surface:
     * (version, ts millis, operation, data files, delete-vector files,
-    * files with a `rows=` stat stamp, txn stamp). All from the manifest
+    * files with a row-count stamp, txn stamp). All from the manifest
     * chain; no data file is touched.
     */
   def history(spark: SparkSession, tableDir: String)
       : Seq[(Long, Option[Long], Option[String], Int, Int, Int, Option[String])] =
     versions(spark, tableDir).sorted(Ordering[Long].reverse).map { v =>
-      val meta = manifestMeta(spark, tableDir, v)
-      val txn = meta.collectFirst {
-        case m if m.startsWith("txn=") => m.stripPrefix("txn=")
-      }
-      (v, commitTimeMs(spark, tableDir, v), operationOf(spark, tableDir, v),
-        manifest(spark, tableDir, v).size, deletes(spark, tableDir, v).size,
-        meta.count(_.startsWith(Stamps.RowsPrefix)), txn)
+      val m = manifestOf(spark, tableDir, v)
+      (v, m.ts, m.op, m.files.size, m.deletes.size,
+        m.stamps.count(_._2.rows.nonEmpty), m.tag(Manifest.TxnTag))
     }
 
   /** Stage immutable data files under `data/` via `write(scratchDir)` and
@@ -1011,21 +902,11 @@ object SnapshotLog {
       }
     }
 
-  private def metaOf(key: String, schema: StructType,
-      pcols: Seq[String] = Nil,
-      bucket: Option[(String, Int)] = None): Seq[String] =
-    Seq(s"key=$key", s"schema=${schema.json}") ++
-      (if (pcols.isEmpty) Nil else Seq(s"partcols=${pcols.mkString(",")}")) ++
-      bucket.map { case (c, n) => s"$PartBucketPrefix$c:$n" }.toSeq
-
   /** The table's partition columns, as stamped at [[init]] and carried by
     * every commit; Nil for unpartitioned tables.
     */
   def partitionCols(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith("partcols=") =>
-        m.stripPrefix("partcols=").split(",").toSeq
-    }.getOrElse(Nil)
+    manifestOf(spark, tableDir, v).partCols
 
   // ---- HASH-BUCKET layout (`PARTITIONED BY (bucket(N, col))`) --------
   //
@@ -1042,8 +923,6 @@ object SnapshotLog {
   // the TABLE KEY — that is the point — and the synthetic directory
   // value is planning metadata, never a logical column.
 
-  private val PartBucketPrefix = "partbucket="
-
   /** The synthetic bucket directory column ([[PartDirPrefix]]-prefixed
     * like identity partition dirs, so the existing path parsing, vacuum
     * recursion and carry machinery see nothing new).
@@ -1055,12 +934,7 @@ object SnapshotLog {
     */
   def partitionBucket(spark: SparkSession, tableDir: String,
       v: Long): Option[(String, Int)] =
-    manifestMeta(spark, tableDir, v).collectFirst {
-      case m if m.startsWith(PartBucketPrefix) =>
-        val body = m.stripPrefix(PartBucketPrefix)
-        val i = body.lastIndexOf(':')
-        (body.substring(0, i), body.substring(i + 1).toInt)
-    }
+    manifestOf(spark, tableDir, v).bucket
 
   /** A manifest name's bucket, parsed from its directory segment; None
     * for flat names (delete vectors, unbucketed history).
@@ -1117,11 +991,11 @@ object SnapshotLog {
     * extra narrow pass over the NEW files' key column).
     */
   private def newFileStamps(spark: SparkSession, table: Path,
-      names: Seq[String], key: String, schema: StructType): Seq[String] = {
+      names: Seq[String], key: String, schema: StructType): Written = {
     val stats = Stamps.read(spark,
       names.map(n => n -> new Path(dataDir(table), n)), schema, key)
     val rowsOf = stats.flatMap { case (n, st) => st.rows.map(n -> _) }
-    Stamps.metaLines(stats) ++ bloomSidecarLines(spark, table, names, key, rowsOf)
+    Written(names, stats, writeBloomSidecar(spark, table, names, key, rowsOf))
   }
 
   // ---- Per-file Bloom key stamps -------------------------------------
@@ -1133,8 +1007,8 @@ object SnapshotLog {
   // per row (fpp 3%), far too big for manifest text lines, so each
   // commit writes ONE parquet SIDECAR under `data/` holding
   // (file name, serialized bloom) rows for its new files and references
-  // it with a `# bloomidx=<sidecar>` line. Reference-carrying commits
-  // carry the lines; full rewrites drop them and stamp fresh ones;
+  // it from the manifest ([[Manifest.blooms]]). Reference-carrying commits
+  // carry the references; full rewrites drop them and stamp fresh ones;
   // vacuum keeps sidecars of retained versions alive. Probing
   // ([[lookupKeys]], [[read]]'s FileIndex) matches Spark's own
   // runtime-filter convention — BloomFilterAggregate over
@@ -1149,8 +1023,6 @@ object SnapshotLog {
     */
   val BloomIndexKey = "spark.graft.bloomIndex"
 
-  private val BloomIdxPrefix = "bloomidx="
-
   /** Target false-positive rate of the per-file blooms. */
   private val BloomFpp = 0.03
 
@@ -1159,11 +1031,12 @@ object SnapshotLog {
 
   /** Bloom sidecar file names referenced by version `v`'s manifest. */
   def bloomSidecars(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    manifestMeta(spark, tableDir, v).collect {
-      case m if m.startsWith(BloomIdxPrefix) => m.stripPrefix(BloomIdxPrefix)
-    }
+    manifestOf(spark, tableDir, v).blooms
 
-  private def bloomSidecarLines(spark: SparkSession, table: Path,
+  /** The Bloom sidecar over just-written files `names` (none unless
+    * [[BloomIndexKey]] is set): its manifest name, in a one-element list.
+    */
+  private def writeBloomSidecar(spark: SparkSession, table: Path,
       names: Seq[String], key: String,
       rowsOf: Map[String, Long]): Seq[String] = {
     if (names.isEmpty ||
@@ -1210,9 +1083,7 @@ object SnapshotLog {
     val df = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-    val sidecarNames = stageWith(spark, table)(out =>
-      df.coalesce(1).write.mode("overwrite").parquet(out))
-    sidecarNames.map(n => s"$BloomIdxPrefix$n")
+    stageWith(spark, table)(out => df.coalesce(1).write.mode("overwrite").parquet(out))
   }
 
   /** Sidecar contents, cached per PATH: sidecars are immutable once
@@ -1235,18 +1106,16 @@ object SnapshotLog {
             new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))).toMap
     }
 
-  /** Bloom verdicts for candidate files of version `v`: the subset of
+  /** Bloom verdicts over a version's `sidecars`: the subset of
     * `hit` (full paths) whose per-file Bloom may contain at least one of
     * `keys` — files not covered by any sidecar always survive. A no-op
     * when the version has no sidecars, when the key list exceeds
     * point-lookup shape, or when the keys' type differs from the key
     * column's (hash compatibility is per-type).
     */
-  private def bloomPruneFiles(spark: SparkSession, tableDir: String, v: Long,
-      hit: Seq[String], keys: DataFrame, key: String,
+  private def bloomPruneFiles(spark: SparkSession, table: Path,
+      sidecars: Seq[String], hit: Seq[String], keys: DataFrame,
       keyType: org.apache.spark.sql.types.DataType): Seq[String] = {
-    val table = new Path(tableDir)
-    val sidecars = bloomSidecars(spark, tableDir, v)
     if (sidecars.isEmpty || hit.isEmpty) return hit
     val hashed = keys
       .select(xxhash64(col(keys.columns.head).cast(keyType)).as("h"))
@@ -1277,13 +1146,13 @@ object SnapshotLog {
     * physically present in every file (self-contained CoW planning).
     */
   def init(spark: SparkSession, tableDir: String, df: DataFrame, key: String,
-      numFiles: Int, meta: Seq[String] = Nil,
+      numFiles: Int, tags: Seq[(String, String)] = Nil,
       partitionBy: Seq[String] = Nil,
       bucketBy: Option[(String, Int)] = None): SnapshotCommit = {
     val table = new Path(tableDir)
     require(versions(spark, tableDir).isEmpty, s"$tableDir already initialized")
     // a table re-created at a dropped table's path must never read its
-    // predecessor's cached manifest lines
+    // predecessor's cached manifests
     invalidateManifestCache(tableDir)
     require(partitionBy.isEmpty || bucketBy.isEmpty,
       "identity PARTITIONED BY and bucket(N, col) cannot combine")
@@ -1307,9 +1176,10 @@ object SnapshotLog {
         s"bucket column name not stamp-safe: '$c'")
     }
     val names = stageFiles(spark, table, df, key, numFiles, partitionBy, bucketBy)
-    val typed = newFileStamps(spark, table, names, key, df.schema)
-    commit(spark, table, 0L, names,
-      ("op=init" +: meta) ++ metaOf(key, df.schema, partitionBy, bucketBy) ++ typed)
+    val written = newFileStamps(spark, table, names, key, df.schema)
+    commit(spark, table, 0L,
+      Manifest(key = Some(key), partCols = partitionBy, bucket = bucketBy)
+        .next("init", key, df.schema, Carry.Replace(written), tags))
     SnapshotCommit(0L, CowMergeReport(0, 0, 0, names.size))
   }
 
@@ -1330,25 +1200,24 @@ object SnapshotLog {
     * readable.
     */
   def merge(spark: SparkSession, tableDir: String, cs: DataFrame,
-      key: String, meta: Seq[String] = Nil): SnapshotCommit = {
+      key: String, tags: Seq[(String, String)] = Nil): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val names = manifest(spark, tableDir, v)
-    val files = filesOf(spark, tableDir, v)
-    val delNames = deletes(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val names = m.files
+    val delNames = m.deletes
     // SCHEMA EVOLUTION: changeset columns the base lacks widen the
     // table's stamped schema for v+1 — rewritten/inserted files carry
     // them physically, every untouched file keeps its bytes and reads
     // through the wider stamp as null. The changeset must carry every
     // payload column of the EVOLVED schema (nulls = untouched), the same
     // contract Merge.apply enforces.
-    val baseSchema = tableSchema(spark, tableDir, v)
-      .getOrElse(spark.read.parquet(files.head.toString).schema)
+    val baseSchema = m.schema.getOrElse(
+      spark.read.parquet(new Path(dataDir(table), names.head).toString).schema)
     val widening = cs.schema.fields.filter(f => f.name != "op" && f.name != key &&
       f.name != Merge.SetNullCol && !baseSchema.fieldNames.contains(f.name))
-    val pm = physMap(spark, tableDir, v)
-    val dropped = droppedNames(spark, tableDir, v)
-    widening.foreach(f => require(!blockedNames(pm, dropped).contains(f.name),
+    val pm = m.physMap
+    widening.foreach(f => require(!blockedNames(m).contains(f.name),
       s"changeset column ${f.name} was previously dropped or renamed away " +
         "and live files still hold its old physical values — re-introducing " +
         "it would resurrect them; OPTIMIZE the table first"))
@@ -1464,24 +1333,18 @@ object SnapshotLog {
     // write-time constraints: validate the rows this merge WRITES (the
     // CoW footprint + admitted inserts — never the whole table) before
     // any file is staged
-    newData.foreach(df => enforceConstraints(spark, tableDir, v, df, "MERGE"))
-    val pcols = partitionCols(spark, tableDir, v)
+    newData.foreach(df => enforceConstraints(spark, tableDir, m, df, "MERGE"))
     val newNames = newData match {
       case Some(df) => stageFiles(spark, table, df, key,
-        math.max(1, affected.size), pcols, pb)
+        math.max(1, affected.size), m.partCols, pb)
       case None     => Nil
     }
     // stat stamps: untouched files carry theirs forward; only the files
     // this merge WROTE get a footer read
-    val untouchedSet = untouchedNames.toSet
-    val newTyped = newFileStamps(spark, table, newNames, key, evolved)
-    commit(spark, table, v + 1, untouchedNames ++ newNames,
-      ("op=merge" +: meta) ++ metaOf(key, evolved, pcols, pb) ++ newTyped ++
-        carriedStampLines(spark, tableDir, v, untouchedSet) ++
-        (if (untouchedNames.isEmpty) Nil  // full rewrite retires evolution
-         else carriedEvolution(spark, tableDir, v)) ++
-        carriedConstraints(spark, tableDir, v),
-      newDelNames)
+    val written = newFileStamps(spark, table, newNames, key, evolved)
+    commit(spark, table, v + 1,
+      m.next("merge", key, evolved, Carry.Keep(untouchedNames, written), tags)
+        .copy(deletes = newDelNames))
     SnapshotCommit(v + 1,
       CowMergeReport(names.size, affected.size, untouchedNames.size, newNames.size))
     } finally { if (doMat) csM.unpersist(blocking = false); () }
@@ -1495,20 +1358,25 @@ object SnapshotLog {
     * bounded.
     */
   def overwrite(spark: SparkSession, tableDir: String, df: DataFrame,
-      key: String, numFiles: Int, meta: Seq[String] = Nil): SnapshotCommit = {
+      key: String, numFiles: Int, tags: Seq[(String, String)] = Nil): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val before = manifest(spark, tableDir, v)
-    val pcols = partitionCols(spark, tableDir, v)
-    val pb = partitionBucket(spark, tableDir, v)
-    enforceConstraints(spark, tableDir, v, df, "INSERT OVERWRITE")
-    val names = stageFiles(spark, table, df, key, numFiles, pcols, pb)
-    val typed = newFileStamps(spark, table, names, key, df.schema)
-    commit(spark, table, v + 1, names,
-      ("op=overwrite" +: meta) ++ metaOf(key, df.schema, pcols, pb) ++ typed ++
-        carriedConstraints(spark, tableDir, v))
+    val m = manifestOf(spark, tableDir, v)
+    enforceConstraints(spark, tableDir, m, df, "INSERT OVERWRITE")
+    val names = stageFiles(spark, table, df, key, numFiles, m.partCols, m.bucket)
+    val written = newFileStamps(spark, table, names, key, df.schema)
+    commitReplace(spark, table, v, m,
+      m.next("overwrite", key, df.schema, Carry.Replace(written), tags))
+  }
+
+  /** Commit `next`, which replaces version `v`'s whole file set
+    * (`base`'s files), as version `v + 1`.
+    */
+  private def commitReplace(spark: SparkSession, table: Path, v: Long,
+      base: Manifest, next: Manifest): SnapshotCommit = {
+    commit(spark, table, v + 1, next)
     SnapshotCommit(v + 1,
-      CowMergeReport(before.size, before.size, 0, names.size))
+      CowMergeReport(base.files.size, base.files.size, 0, next.files.size))
   }
 
   /** MERGE-ON-READ delete: commit `keys` as a delete vector — NO data
@@ -1525,10 +1393,9 @@ object SnapshotLog {
       key: String): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val names = manifest(spark, tableDir, v)
-    val old = deletes(spark, tableDir, v)
-    val schema = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
+    val m = manifestOf(spark, tableDir, v)
+    val old = m.deletes
+    val schema = schemaOf(spark, tableDir, v)
     // the vector holds the table's key type, whatever `keys` arrives as
     val keyType = schema(key).dataType
     val given = keys.select(col(key).cast(keyType))
@@ -1538,14 +1405,8 @@ object SnapshotLog {
         .unionByName(given).distinct()
     val newDel = stageFiles(spark, table, all, key, 1)
     // every data file is carried by reference — its stat stamps too
-    commit(spark, table, v + 1, names,
-      "op=delete" +: (metaOf(key, schema, partitionCols(spark, tableDir, v),
-        partitionBucket(spark, tableDir, v)) ++
-        carriedStampLines(spark, tableDir, v, _ => true) ++
-        carriedEvolution(spark, tableDir, v) ++
-        carriedConstraints(spark, tableDir, v)),
-      newDel)
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+    commitMetadata(spark, tableDir, v,
+      m.next("delete", key, schema).copy(deletes = newDel))
   }
 
   /** OPTIMIZE: rewrite the current logical table (delete vectors
@@ -1557,18 +1418,32 @@ object SnapshotLog {
   def compact(spark: SparkSession, tableDir: String, numFiles: Int): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val before = manifest(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
     val data = read(spark, tableDir, v)
-    val pcols = partitionCols(spark, tableDir, v)
-    val pb = partitionBucket(spark, tableDir, v)
-    val newNames = stageFiles(spark, table, data, key, numFiles, pcols, pb)
-    val typed = newFileStamps(spark, table, newNames, key, data.schema)
-    commit(spark, table, v + 1, newNames,
-      "op=optimize" +: (metaOf(key, data.schema, pcols, pb) ++ typed ++
-        carriedConstraints(spark, tableDir, v)))
-    SnapshotCommit(v + 1,
-      CowMergeReport(before.size, before.size, 0, newNames.size))
+    val newNames = stageFiles(spark, table, data, key, numFiles, m.partCols, m.bucket)
+    val written = newFileStamps(spark, table, newNames, key, data.schema)
+    commitReplace(spark, table, v, m,
+      m.next("optimize", key, data.schema, Carry.Replace(written)))
+  }
+
+  /** Total bytes of the data files `names` of `tableDir` — what OPTIMIZE
+    * sizes its rewrite from and DESCRIBE DETAIL reports; one status call
+    * per file, never a directory listing.
+    */
+  private[graft] def dataBytes(spark: SparkSession, tableDir: String, names: Seq[String]): Long = {
+    val table = new Path(tableDir)
+    val hfs = fs(spark, table)
+    names.map(n => hfs.getFileStatus(new Path(dataDir(table), n)).getLen).sum
+  }
+
+  /** Output file count of a compaction rewriting `names`: their bytes
+    * over `targetBytes`, floored at 1.
+    */
+  private[graft] def compactFileCount(spark: SparkSession, tableDir: String,
+      names: Seq[String], targetBytes: Long): Int = {
+    val bytes = dataBytes(spark, tableDir, names)
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
   }
 
   /** OPTIMIZE ... WHERE: FOOTPRINT-BOUNDED compaction — rewrite only the
@@ -1594,12 +1469,12 @@ object SnapshotLog {
       targetBytes: Long): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val names = manifest(spark, tableDir, v)
-    val intervals = fileStamps(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val names = m.files
     val resolver = spark.sessionState.conf.resolver
     val (stampHit, stampCarried) = names.partition { n =>
-      intervals.get(n) match {
+      m.stamps.get(n) match {
         case Some(fsStamp) if fsStamp.nonEmpty =>
           !graft.sources.SnapshotFileIndex.evalOnStamps(pred, fsStamp, resolver)
             .contains(false)
@@ -1610,10 +1485,9 @@ object SnapshotLog {
     // the footprint to its bucket directories — the same exact pruning
     // the read-side FileIndex runs, at the write side, where range stamps
     // are structurally blind on a uniform hash key
-    val bucketSkipped = partitionBucket(spark, tableDir, v) match {
+    val bucketSkipped = m.bucket match {
       case Some((c, n)) =>
-        val colType = tableSchema(spark, tableDir, v)
-          .flatMap(s => s.fields.find(f => resolver(f.name, c)).map(_.dataType))
+        val colType = m.schema.flatMap(s => s.fields.find(f => resolver(f.name, c)).map(_.dataType))
         colType.flatMap(t => graft.sources.SnapshotFileIndex.pointBuckets(
           Seq(pred), c, t, n, resolver)) match {
           case Some(bs) =>
@@ -1626,30 +1500,18 @@ object SnapshotLog {
     val carried = stampCarried ++ stampHit.filter(bucketSkipped)
     if (hit.isEmpty)
       return SnapshotCommit(v, CowMergeReport(names.size, 0, names.size, 0))
-    val hfs = fs(spark, table)
-    val hitPaths = hit.map(n => new Path(dataDir(table), n))
-    val bytes = hitPaths.map(p => hfs.getFileStatus(p).getLen).sum
-    val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val schema = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
-    val dels = deletes(spark, tableDir, v)
-    val data0 = readEra(spark, schema, physMap(spark, tableDir, v),
-      hitPaths.map(_.toString))
+    val numFiles = compactFileCount(spark, tableDir, hit, targetBytes)
+    val schema = schemaOf(spark, tableDir, v)
+    val data0 = readEra(spark, schema, m.physMap,
+      hit.map(n => new Path(dataDir(table), n).toString))
     val data =
-      if (dels.isEmpty) data0
-      else data0.join(readDeleteKeys(spark, table, dels, key, Some(schema(key).dataType)),
-        Seq(key), "left_anti")
-    val pcols = partitionCols(spark, tableDir, v)
-    val pb = partitionBucket(spark, tableDir, v)
-    val newNames = stageFiles(spark, table, data, key, numFiles, pcols, pb)
-    val newTyped = newFileStamps(spark, table, newNames, key, schema)
-    commit(spark, table, v + 1, carried ++ newNames,
-      "op=optimize-where" +: (metaOf(key, schema, pcols, pb) ++ newTyped ++
-        carriedStampLines(spark, tableDir, v, carried.toSet) ++
-        (if (carried.isEmpty) Nil  // full rewrite retires evolution
-         else carriedEvolution(spark, tableDir, v)) ++
-        carriedConstraints(spark, tableDir, v)),
-      dels)
+      if (m.deletes.isEmpty) data0
+      else data0.join(readDeleteKeys(spark, table, m.deletes, key,
+        Some(schema(key).dataType)), Seq(key), "left_anti")
+    val newNames = stageFiles(spark, table, data, key, numFiles, m.partCols, m.bucket)
+    val written = newFileStamps(spark, table, newNames, key, schema)
+    commit(spark, table, v + 1,
+      m.next("optimize-where", key, schema, Carry.Keep(carried, written)))
     SnapshotCommit(v + 1,
       CowMergeReport(names.size, hit.size, carried.size, newNames.size))
   }
@@ -1668,42 +1530,37 @@ object SnapshotLog {
     */
   private def cdcParts(spark: SparkSession, tableDir: String, v0: Long,
       v1: Long, key: String): (DataFrame, Seq[String], Option[DataFrame]) = {
-    val m0 = manifest(spark, tableDir, v0).toSet
-    val m1 = manifest(spark, tableDir, v1).toSet
+    val man0 = manifestOf(spark, tableDir, v0)
+    val man1 = manifestOf(spark, tableDir, v1)
+    val m0 = man0.files.toSet
+    val m1 = man1.files.toSet
     val table = new Path(tableDir)
-    val sch0 = tableSchema(spark, tableDir, v0)
-    val sch1 = tableSchema(spark, tableDir, v1)
+    val sch0 = man0.schema
+    val sch1 = man1.schema
     val keyType = sch1.orElse(sch0).flatMap(_.find(_.name == key)).map(_.dataType)
-    def delKeysOf(v: Long): Option[DataFrame] = {
-      val ns = deletes(spark, tableDir, v)
-      if (ns.isEmpty) None else Some(readDeleteKeys(spark, table, ns, key, keyType))
-    }
+    def delKeysOf(m: Manifest): Option[DataFrame] =
+      if (m.deletes.isEmpty) None
+      else Some(readDeleteKeys(spark, table, m.deletes, key, keyType))
     def maskWith(df: DataFrame, dk: Option[DataFrame]): DataFrame =
       dk.fold(df)(k => df.join(k, Seq(key), "left_anti"))
-    val dk0 = delKeysOf(v0)
-    val dk1 = delKeysOf(v1)
+    val dk0 = delKeysOf(man0)
+    val dk1 = delKeysOf(man1)
     // both sides read in v1's LOGICAL space, through a physmap composed
     // over the WHOLE window: v1's own chains don't suffice, because a
     // full rewrite inside (v0, v1] retires them while the before side
-    // still reads v0-era files — so each rename commit's
-    // `op=rename-column from:to` stamp is replayed backwards from v1's
-    // names and unioned with both endpoint maps (manifest-text reads,
-    // one per window version). A pre-rename before-image then surfaces
+    // still reads v0-era files — so each rename commit's (from, to)
+    // ([[Manifest.renamedColumn]]) is replayed backwards from v1's names
+    // and unioned with both endpoint maps (one manifest read per window
+    // version). A pre-rename before-image then surfaces
     // under the CURRENT column name; columns v1 gained read null on the
     // old side (the existing alignment semantic) and columns v1 dropped
     // are simply absent from the diff.
     val pm1: Map[String, Seq[String]] = {
-      val pmEnd = physMap(spark, tableDir, v1)
-      val pmStart = physMap(spark, tableDir, v0)
+      val pmEnd = man1.physMap
+      val pmStart = man0.physMap
       val renames = versions(spark, tableDir)
-        .filter(x => x > v0 && x <= v1).sorted.flatMap { x =>
-          manifestMeta(spark, tableDir, x).collectFirst {
-            case m if m.startsWith("op=rename-column ") =>
-              val body = m.stripPrefix("op=rename-column ")
-              val i = body.lastIndexOf(':') // names are stamp-safe (no ':')
-              (body.substring(0, i), body.substring(i + 1))
-          }
-        }
+        .filter(x => x > v0 && x <= v1).sorted
+        .flatMap(x => manifestOf(spark, tableDir, x).renamedColumn)
       sch1 match {
         case Some(s) if renames.nonEmpty || pmEnd.nonEmpty || pmStart.nonEmpty =>
           val composed = s.fieldNames.toSeq.map { f =>
@@ -1813,15 +1670,15 @@ object SnapshotLog {
       numFiles: Int): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    require(partitionCols(spark, tableDir, v).isEmpty,
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    require(m.partCols.isEmpty,
       "OPTIMIZE ZORDER is not supported on a partitioned table: a Morton " +
         "rewrite would break the Hive partition tree; compact per " +
         "partition (OPTIMIZE ... WHERE) instead")
-    require(partitionBucket(spark, tableDir, v).isEmpty,
+    require(m.bucket.isEmpty,
       "OPTIMIZE ZORDER is not supported on a bucketed table: a Morton " +
         "rewrite would break the hash-bucket directories")
-    val before = manifest(spark, tableDir, v)
     val data = read(spark, tableDir, v)
     val newNames = stageWith(spark, table)(out =>
       ZOrder.writeClusteredN(data, cols, numFiles, out))
@@ -1831,12 +1688,9 @@ object SnapshotLog {
     // included, so SnapshotFileIndex-backed reads skip on either one (a
     // filter on `b` alone prunes — the payoff a key-sorted layout can
     // never give).
-    val typed = newFileStamps(spark, table, newNames, key, data.schema)
-    commit(spark, table, v + 1, newNames,
-      "op=optimize-zorder" +: (metaOf(key, data.schema) ++ typed ++
-        carriedConstraints(spark, tableDir, v)))
-    SnapshotCommit(v + 1,
-      CowMergeReport(before.size, before.size, 0, newNames.size))
+    val written = newFileStamps(spark, table, newNames, key, data.schema)
+    commitReplace(spark, table, v, m,
+      m.next("optimize-zorder", key, data.schema, Carry.Replace(written)))
   }
 
   /** Changed rows between two committed versions, computed from the
@@ -1927,20 +1781,20 @@ object SnapshotLog {
     * back — their files are gone).
     */
   def restore(spark: SparkSession, tableDir: String, toVersion: Long): SnapshotCommit = {
-    val table = new Path(tableDir)
     val latest = latestVersion(spark, tableDir)
     require(versions(spark, tableDir).contains(toVersion),
       s"version $toVersion of $tableDir is not committed (or was vacuumed)")
-    val key = tableKey(spark, tableDir, toVersion)
-    val schema = tableSchema(spark, tableDir, toVersion)
-      .getOrElse(read(spark, tableDir, toVersion).schema)
+    val to = manifestOf(spark, tableDir, toVersion)
+    val key = keyOf(to, tableDir, toVersion)
+    val schema = schemaOf(spark, tableDir, toVersion)
+    val live = manifestOf(spark, tableDir, latest)
     // the LIVE constraint set rides the restore (see the carry below) —
     // which is only coherent if the restored schema still resolves every
     // expr; a restore past a rename/drop that a constraint references
     // must say so, not poison every later write with an analysis error
     locally {
       val resolver = spark.sessionState.conf.resolver
-      constraintsOf(spark, tableDir, latest).foreach { case (n, e) =>
+      live.constraints.foreach { case (n, e) =>
         constraintRefs(spark, e).foreach(c =>
           require(schema.fieldNames.exists(resolver(_, c)),
             s"cannot RESTORE $tableDir to version $toVersion: live " +
@@ -1948,20 +1802,11 @@ object SnapshotLog {
               s"that version's schema lacks — DROP CONSTRAINT $n first"))
       }
     }
-    val names = manifest(spark, tableDir, toVersion)
-    commit(spark, table, latest + 1, names,
-      s"op=restore from=$toVersion" +: (
-        metaOf(key, schema, partitionCols(spark, tableDir, toVersion),
-          partitionBucket(spark, tableDir, toVersion)) ++
-        carriedStampLines(spark, tableDir, toVersion, _ => true) ++
-        carriedEvolution(spark, tableDir, toVersion) ++
-        // constraints are the table's CONTRACT, not its state: a restore
-        // rewinds the rows but keeps the LIVE constraint set (without
-        // revalidating the restored rows — the documented Delta-style
-        // asymmetry; ADD CONSTRAINT is the only full-table validation)
-        carriedConstraints(spark, tableDir, latest)),
-      deletes(spark, tableDir, toVersion))
-    SnapshotCommit(latest + 1, CowMergeReport(names.size, 0, names.size, 0))
+    // the restored rows are not revalidated against the live constraint
+    // set the restore keeps — the documented Delta-style asymmetry; ADD
+    // CONSTRAINT is the only full-table validation
+    commitMetadata(spark, tableDir, latest,
+      live.next(s"restore from=$toVersion", key, schema, Carry.Restore(to)))
   }
 
   /** ALTER TABLE's metadata-only schema commit: the next version carries
@@ -1984,11 +1829,10 @@ object SnapshotLog {
   def addColumns(spark: SparkSession, tableDir: String,
       added: Seq[org.apache.spark.sql.types.StructField]): SnapshotCommit = {
     require(added.nonEmpty, "ALTER TABLE ADD COLUMNS: no columns given")
-    val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val cur = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val cur = schemaOf(spark, tableDir, v)
     val resolver = spark.sessionState.conf.resolver
     added.foreach { f =>
       require(f.nullable,
@@ -1999,23 +1843,14 @@ object SnapshotLog {
         s"column name ${Merge.SetNullCol} is reserved for the UPDATE " +
           "SET-NULL changeset sidecar")
     }
-    val blocked = blockedNames(physMap(spark, tableDir, v),
-      droppedNames(spark, tableDir, v))
+    val blocked = blockedNames(m)
     added.foreach(f => require(!blocked.exists(resolver(_, f.name)),
       s"column name ${f.name} was previously dropped or renamed away and " +
         "live files still hold its old physical values — re-introducing it " +
         "would resurrect them; OPTIMIZE the table first (a full rewrite " +
         "retires the tombstone)"))
-    val next = StructType(cur.fields ++ added)
-    val names = manifest(spark, tableDir, v)
-    commit(spark, table, v + 1, names,
-      "op=altertable" +: (metaOf(key, next, partitionCols(spark, tableDir, v),
-        partitionBucket(spark, tableDir, v)) ++
-        carriedStampLines(spark, tableDir, v, _ => true) ++
-        carriedEvolution(spark, tableDir, v) ++
-        carriedConstraints(spark, tableDir, v)),
-      deletes(spark, tableDir, v))
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+    commitMetadata(spark, tableDir, v,
+      m.next("altertable", key, StructType(cur.fields ++ added)))
   }
 
   /** `ALTER TABLE RENAME COLUMN` as a METADATA-ONLY commit (see the
@@ -2031,12 +1866,10 @@ object SnapshotLog {
     */
   def renameColumn(spark: SparkSession, tableDir: String, from: String,
       to: String): SnapshotCommit = {
-    val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val cur = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
-    val pcols = partitionCols(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val cur = schemaOf(spark, tableDir, v)
     val resolver = spark.sessionState.conf.resolver
     require(cur.fieldNames.exists(resolver(_, from)),
       s"RENAME COLUMN: no column $from in ${cur.fieldNames.mkString(",")}")
@@ -2045,11 +1878,10 @@ object SnapshotLog {
     require(!resolver(from, key),
       s"renaming the table key $key is not supported: delete vectors, " +
         "range stamps and key clustering are all keyed on it")
-    require(!pcols.exists(resolver(_, from)),
+    require(!m.partCols.exists(resolver(_, from)),
       s"renaming partition column $from is not supported: partition " +
         "values are directory names")
-    val pb = partitionBucket(spark, tableDir, v)
-    require(!pb.exists(b => resolver(b._1, from)),
+    require(!m.bucket.exists(b => resolver(b._1, from)),
       s"renaming bucket column $from is not supported: the bucket " +
         "layout is keyed on it")
     require(!to.contains(',') && !to.contains(':') && !to.contains('/'),
@@ -2057,21 +1889,17 @@ object SnapshotLog {
     require(to != Merge.SetNullCol,
       s"column name ${Merge.SetNullCol} is reserved for the UPDATE " +
         "SET-NULL changeset sidecar")
-    val pm = physMap(spark, tableDir, v)
-    val dropped = droppedNames(spark, tableDir, v)
-    require(!blockedNames(pm, dropped).exists(resolver(_, to)),
+    require(!blockedNames(m).exists(resolver(_, to)),
       s"column name $to was previously dropped or renamed away and live " +
         "files still hold its old physical values — OPTIMIZE the table " +
         "first (a full rewrite retires the tombstone)")
     val fromExact = cur.fieldNames.find(resolver(_, from)).get
-    val chain = fromExact +: pm.getOrElse(fromExact, Seq.empty)
-    val newPm = (pm - fromExact).updated(to, chain)
     val next = StructType(cur.fields.map(f =>
       if (resolver(f.name, from)) f.copy(name = to) else f))
     // constraints follow the rename: exprs referencing the old name are
     // re-parsed, the attribute substituted, and the stamp re-emitted in
     // THIS commit — the table's contract survives its columns' renames
-    val renamedCons = constraintsOf(spark, tableDir, v).map { case (n0, e) =>
+    val renamedCons = m.constraints.map { case (n0, e) =>
       // a NOT NULL ban tracks its column by NAME (notnull_<col>) so
       // DROP NOT NULL keeps finding it after the rename
       val n = if (n0.equalsIgnoreCase(s"notnull_$fromExact")) s"notnull_$to"
@@ -2083,14 +1911,9 @@ object SnapshotLog {
           org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(to)
       }.sql)
     }
-    val names = manifest(spark, tableDir, v)
-    commit(spark, table, v + 1, names,
-      s"op=rename-column $fromExact:$to" +: (metaOf(key, next, pcols, pb) ++
-        carriedStampLines(spark, tableDir, v, _ => true)
-          .map(Stamps.renameCol(_, fromExact, to)) ++
-        evolutionMeta(newPm, dropped) ++ constraintMeta(renamedCons)),
-      deletes(spark, tableDir, v))
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+    commitMetadata(spark, tableDir, v,
+      m.next(Manifest.renameOp(fromExact, to), key, next, Carry.Rename(fromExact, to))
+        .copy(constraints = renamedCons))
   }
 
   /** `ALTER TABLE DROP COLUMN` as a METADATA-ONLY commit: same file set
@@ -2103,42 +1926,28 @@ object SnapshotLog {
     */
   def dropColumn(spark: SparkSession, tableDir: String,
       name: String): SnapshotCommit = {
-    val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
-    val key = tableKey(spark, tableDir, v)
-    val cur = tableSchema(spark, tableDir, v)
-      .getOrElse(read(spark, tableDir, v).schema)
-    val pcols = partitionCols(spark, tableDir, v)
+    val m = manifestOf(spark, tableDir, v)
+    val key = keyOf(m, tableDir, v)
+    val cur = schemaOf(spark, tableDir, v)
     val resolver = spark.sessionState.conf.resolver
     require(cur.fieldNames.exists(resolver(_, name)),
       s"DROP COLUMN: no column $name in ${cur.fieldNames.mkString(",")}")
     require(!resolver(name, key), s"cannot drop the table key $key")
-    require(!pcols.exists(resolver(_, name)),
+    require(!m.partCols.exists(resolver(_, name)),
       s"cannot drop partition column $name: partition values are " +
         "directory names")
-    val pb = partitionBucket(spark, tableDir, v)
-    require(!pb.exists(b => resolver(b._1, name)),
+    require(!m.bucket.exists(b => resolver(b._1, name)),
       s"cannot drop bucket column $name: the bucket layout is keyed on it")
-    val pm = physMap(spark, tableDir, v)
-    val dropped = droppedNames(spark, tableDir, v)
     val nameExact = cur.fieldNames.find(resolver(_, name)).get
-    constraintsOf(spark, tableDir, v).foreach { case (n, e) =>
+    m.constraints.foreach { case (n, e) =>
       require(!constraintRefs(spark, e).exists(resolver(_, nameExact)),
         s"cannot drop column $nameExact: constraint $n CHECK ($e) " +
           s"references it — DROP CONSTRAINT $n first")
     }
-    val chain = nameExact +: pm.getOrElse(nameExact, Seq.empty)
-    val deadSet = chain.toSet
     val next = StructType(cur.fields.filterNot(f => resolver(f.name, name)))
-    val names = manifest(spark, tableDir, v)
-    commit(spark, table, v + 1, names,
-      s"op=drop-column $nameExact" +: (metaOf(key, next, pcols, pb) ++
-        carriedStampLines(spark, tableDir, v, _ => true)
-          .filterNot(l => Stamps.colOf(l).exists(deadSet)) ++
-        evolutionMeta(pm - nameExact, dropped ++ deadSet) ++
-        carriedConstraints(spark, tableDir, v)),
-      deletes(spark, tableDir, v))
-    SnapshotCommit(v + 1, CowMergeReport(names.size, 0, names.size, 0))
+    commitMetadata(spark, tableDir, v,
+      m.next(s"drop-column $nameExact", key, next, Carry.Drop(nameExact)))
   }
 
   /** Delete manifests below `retainFrom` and every data file no retained
@@ -2162,12 +1971,12 @@ object SnapshotLog {
     val hfs = fs(spark, table)
     val (expired, retained) = versions(spark, tableDir).partition(_ < retainFrom)
     require(retained.nonEmpty, s"vacuum would delete every version of $tableDir")
-    manifestLineCache.invalidateIf { case (d, ver) =>
+    manifestCache.invalidateIf { case (d, ver) =>
       d == tableDir && ver < retainFrom }
-    val live = retained
-      .flatMap(v => manifest(spark, tableDir, v) ++ deletes(spark, tableDir, v) ++
-        bloomSidecars(spark, tableDir, v))
-      .toSet
+    val live = retained.flatMap { v =>
+      val m = manifestOf(spark, tableDir, v)
+      m.files ++ m.deletes ++ m.blooms
+    }.toSet
     val cutoff = System.currentTimeMillis() - graceMs
     val dataUri = java.net.URI.create(
       hfs.makeQualified(dataDir(table)).toUri.toString + "/")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.util.Base64
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -46,7 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reading is one footer fetch per file, paid once by the committing
   * writer and amortized over ALL stamped columns; [[MaxStampedCols]]
   * bounds the manifest metadata to O(16) lines per file — the
-  * Delta-style "first N columns" data-skipping budget.
+  * Delta-style "first N columns" data-skipping budget. The stamps'
+  * manifest line encoding is [[Manifest]]'s.
   */
 object Stamps {
 
@@ -196,105 +196,5 @@ object Stamps {
       else None
     val nn = if (nullsKnown) Some(nulls) else None
     if (iv.isEmpty && nn.isEmpty) None else Some(ColStamp(iv, nn))
-  }
-
-  // ---- manifest line encoding -----------------------------------------
-  //
-  //   rows=<file>:<count>
-  //   cstats=<file>:<col>:<kind>:<lo>:<hi>:<nulls>
-  //
-  // kind: i = long-encoded (integral/date-days/timestamp-micros),
-  // s = base64(UTF-8 bytes). '-' = absent. Base64's alphabet contains no
-  // ':' so the colon split stays unambiguous; column names containing
-  // ':' are never stamped (stampColumns).
-
-  val RowsPrefix = "rows="
-  val CStatsPrefix = "cstats="
-
-  private def b64(u: UTF8String): String =
-    Base64.getEncoder.encodeToString(u.getBytes)
-  private def unb64(s: String): UTF8String =
-    UTF8String.fromBytes(Base64.getDecoder.decode(s))
-
-  /** The `# rows=` / `# cstats=` meta lines for freshly written files. */
-  def metaLines(stats: Map[String, FileStamp]): Seq[String] =
-    stats.toSeq.sortBy(_._1).flatMap { case (name, fs) =>
-      val rows = fs.rows.map(r => s"$RowsPrefix$name:$r").toSeq
-      val cols = fs.cols.toSeq.sortBy(_._1).map { case (col, st) =>
-        val (kind, lo, hi) = st.iv match {
-          case Some(LongIv(l, h)) => ("i", l.toString, h.toString)
-          case Some(StrIv(l, h))  => ("s", b64(l), b64(h))
-          case None               => ("i", "-", "-")
-        }
-        val n = st.nulls.map(_.toString).getOrElse("-")
-        s"$CStatsPrefix$name:$col:$kind:$lo:$hi:$n"
-      }
-      rows ++ cols
-    }
-
-  /** The fields of a `cstats=` line (file, column, kind, lo, hi, nulls);
-    * None for any other line.
-    */
-  private def cstatsFields(line: String): Option[Array[String]] =
-    if (!line.startsWith(CStatsPrefix)) None
-    else Some(line.stripPrefix(CStatsPrefix).split(":", 6)).filter(_.length == 6)
-
-  /** The file a `rows=`/`cstats=` line describes; None for any other line. */
-  def fileOf(line: String): Option[String] =
-    if (line.startsWith(RowsPrefix)) {
-      val body = line.stripPrefix(RowsPrefix)
-      val i = body.lastIndexOf(':')
-      if (i > 0) Some(body.substring(0, i)) else None
-    } else cstatsFields(line).map(_(0))
-
-  /** The column a `cstats=` line describes; None for any other line. */
-  def colOf(line: String): Option[String] = cstatsFields(line).map(_(1))
-
-  /** `line` restamped under column `to` if it is a `cstats=` line of
-    * column `from` (a column rename: an interval describes values, which
-    * a rename does not change); any other line unchanged.
-    */
-  def renameCol(line: String, from: String, to: String): String =
-    cstatsFields(line).filter(_(1) == from)
-      .fold(line)(p => CStatsPrefix + p.updated(1, to).mkString(":"))
-
-  /** Parse manifest meta lines (# stripped) back to per-file stamps.
-    * Stamps are ADVISORY: a malformed or truncated line (hand-edited
-    * manifest, future format drift) is silently dropped — the file just
-    * loses that stamp and degrades to never-skipped, exactly how
-    * unstamped files already behave — rather than failing every read of
-    * the version.
-    */
-  def parse(meta: Seq[String]): Map[String, FileStamp] = {
-    val rows = meta.flatMap {
-      case m if m.startsWith(RowsPrefix) =>
-        val body = m.stripPrefix(RowsPrefix)
-        val i = body.lastIndexOf(':')
-        if (i <= 0) None
-        else body.substring(i + 1).toLongOption.map(body.substring(0, i) -> _)
-      case _ => None
-    }.toMap
-    val cols = meta.flatMap { m =>
-      cstatsFields(m) match {
-        case Some(Array(name, col, kind, lo, hi, n)) =>
-          try {
-            val iv: Option[Iv] =
-              if (lo == "-" || hi == "-") None
-              else if (kind == "s") Some(StrIv(unb64(lo), unb64(hi)))
-              else Some(LongIv(lo.toLong, hi.toLong))
-            val nulls = if (n == "-") None else Some(n.toLong)
-            Some((name, col, ColStamp(iv, nulls)))
-          } catch {
-            case _: NumberFormatException | _: IllegalArgumentException =>
-              None // unparseable stamp: conservative drop
-          }
-        case _ => None
-      }
-    }.groupBy(_._1).map { case (name, entries) =>
-      name -> entries.map(e => e._2 -> e._3).toMap
-    }
-    (rows.keySet ++ cols.keySet).map { name =>
-      name -> FileStamp(rows.get(name), cols.getOrElse(name, Map.empty))
-    }.toMap
   }
 }

@@ -288,7 +288,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
     }
     hfs.listStatus(p).toSeq
       .filter(st => st.isDirectory && !exists(st.getPath.toString) &&
-        st.getPath.getName != "data" && st.getPath.getName != "_log")
+        !SnapshotLog.isLayoutDir(st.getPath.getName))
       .map(st => namespace :+ st.getPath.getName)
       .toArray
   }

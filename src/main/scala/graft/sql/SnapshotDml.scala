@@ -456,13 +456,8 @@ object SnapshotDml {
           SnapshotLog.compactWhere(s, dir, pred, targetBytes)
         case None =>
           val v = SnapshotLog.latestVersion(s, dir)
-          val table = new org.apache.hadoop.fs.Path(dir)
-          val hfs = table.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val bytes = SnapshotLog.manifest(s, dir, v).map { n =>
-            hfs.getFileStatus(new org.apache.hadoop.fs.Path(
-              new org.apache.hadoop.fs.Path(table, "data"), n)).getLen
-          }.sum
-          val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+          val numFiles = SnapshotLog.compactFileCount(s, dir,
+            SnapshotLog.manifest(s, dir, v), targetBytes)
           zorder match {
             case Some(cols) => SnapshotLog.compactZ(s, dir, cols, numFiles)
             case None       => SnapshotLog.compact(s, dir, numFiles)
@@ -516,8 +511,8 @@ object SnapshotDml {
     * STALENESS surface: the base version its rows reflect (`asof`), the
     * base's latest committed version, and the lag between them (0 =
     * current; the number a refresh scheduler actually monitors). Null
-    * for plain tables. Manifest metadata plus one directory listing for
-    * the sizes; no data file is read.
+    * for plain tables. Manifest metadata plus one status call per live
+    * file for the sizes; no data file is read.
     */
   final case class DescribeDetailCommand(target: Target)
       extends LeafRunnableCommand {
@@ -544,55 +539,29 @@ object SnapshotDml {
     override def run(s: SparkSession): Seq[Row] = {
       val dir = target.dir
       val v = SnapshotLog.latestVersion(s, dir)
-      val names = SnapshotLog.manifest(s, dir, v).toSet
-      val table = new org.apache.hadoop.fs.Path(dir)
-      val data = new org.apache.hadoop.fs.Path(table, "data")
-      val hfs = table.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val dataUri = java.net.URI.create(
-        hfs.makeQualified(data).toUri.toString + "/")
-      val bytes = {
-        // listStatus recursion, not listFiles(recursive) — see
-        // SnapshotLog.listDataFiles on the per-file permission stat
-        def walk(d: org.apache.hadoop.fs.Path): Long =
-          hfs.listStatus(d).map { st =>
-            if (st.isDirectory) walk(st.getPath)
-            else if (names(dataUri.relativize(st.getPath.toUri).getPath))
-              st.getLen
-            else 0L
-          }.sum
-        walk(data)
-      }
-      val schema = SnapshotLog.tableSchema(s, dir, v)
+      val m = SnapshotLog.manifestOf(s, dir, v)
       val lag = graft.operators.MaterializedView.staleness(s, dir)
-      val layout = {
-        val pcols = SnapshotLog.partitionCols(s, dir, v)
-        val bucket = SnapshotLog.partitionBucket(s, dir, v)
-        if (pcols.nonEmpty) pcols.mkString(",")
-        else bucket.map { case (c, n) => s"bucket($n, $c)" }.orNull
-      }
+      val layout =
+        if (m.partCols.nonEmpty) m.partCols.mkString(",")
+        else m.bucket.map { case (c, n) => s"bucket($n, $c)" }.orNull
       val evolution = {
-        val pm = SnapshotLog.physMap(s, dir, v)
-        val dropped = SnapshotLog.droppedNames(s, dir, v)
         val parts =
-          pm.toSeq.sortBy(_._1).map { case (l, olds) =>
+          m.physMap.toSeq.sortBy(_._1).map { case (l, olds) =>
             s"renamed:$l<-${olds.mkString("<-")}"
-          } ++ (if (dropped.isEmpty) Nil
-                else Seq(s"dropped:${dropped.toSeq.sorted.mkString(",")}"))
+          } ++ (if (m.dropped.isEmpty) Nil
+                else Seq(s"dropped:${m.dropped.toSeq.sorted.mkString(",")}"))
         if (parts.isEmpty) null else parts.mkString(";")
       }
       Seq(Row(dir, SnapshotLog.tableKey(s, dir, v), v,
-        SnapshotLog.commitTimeMs(s, dir, v)
-          .map(ms => new java.sql.Timestamp(ms)).orNull,
-        names.size.toLong, SnapshotLog.deletes(s, dir, v).size.toLong,
-        bytes, schema.map(_.json).orNull,
+        m.ts.map(ms => new java.sql.Timestamp(ms)).orNull,
+        m.files.size.toLong, m.deletes.size.toLong,
+        SnapshotLog.dataBytes(s, dir, m.files), m.schema.map(_.json).orNull,
         lag.map(_._1).map(Long.box).orNull,
         lag.map(_._2).map(Long.box).orNull,
         lag.map(_._3).map(Long.box).orNull,
-        layout, evolution, {
-          val cons = SnapshotLog.constraintsOf(s, dir, v)
-          if (cons.isEmpty) null
-          else cons.map { case (n, e) => s"$n CHECK ($e)" }.mkString("; ")
-        }))
+        layout, evolution,
+        if (m.constraints.isEmpty) null
+        else m.constraints.map { case (n, e) => s"$n CHECK ($e)" }.mkString("; ")))
     }
   }
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.operators.{MaterializedView, SnapshotCommit, SnapshotLog}
+import graft.sources.Manifest
 
 /** Streaming CDC into AND out of the manifest-committed snapshot table —
   * m12's continuous twin, with a twist the other streaming sinks can't
@@ -61,12 +61,13 @@ object SnapshotStreams {
     if (vs.isEmpty) return false
     val (scannedThrough, cachedMax) =
       Option(epochSeen.get(cacheKey)).getOrElse((-1L, Long.MinValue))
-    val stampPrefix = s"txn=$streamId/"
+    val stampPrefix = s"$streamId/"
     var maxEpoch = cachedMax
     vs.iterator.filter(_ > scannedThrough).foreach { v =>
-      SnapshotLog.manifestMeta(spark, tableDir, v).foreach { m =>
-        if (m.startsWith(stampPrefix))
-          maxEpoch = math.max(maxEpoch, m.stripPrefix(stampPrefix).toLong)
+      SnapshotLog.manifestOf(spark, tableDir, v).tags.foreach {
+        case (Manifest.TxnTag, t) if t.startsWith(stampPrefix) =>
+          maxEpoch = math.max(maxEpoch, t.stripPrefix(stampPrefix).toLong)
+        case _ =>
       }
     }
     epochSeen.put(cacheKey, (vs.last, maxEpoch))
@@ -84,7 +85,7 @@ object SnapshotStreams {
       epochId: Long, streamId: String, key: String): Option[SnapshotCommit] =
     if (epochCommitted(spark, tableDir, streamId, epochId)) None
     else Some(SnapshotLog.merge(spark, tableDir, batch, key,
-      meta = Seq(s"txn=$streamId/$epochId")))
+      tags = Seq(Manifest.TxnTag -> s"$streamId/$epochId")))
 
   /** The stream sink: each micro-batch of changeset rows ([[
     * graft.operators.Merge]]'s op + key + payload contract) commits one
@@ -122,7 +123,7 @@ object SnapshotStreams {
     * metadata), never data.
     */
   def readVersionFeed(spark: SparkSession, tableDir: String): DataFrame =
-    spark.readStream.text(new Path(tableDir, "_log").toString)
+    spark.readStream.text(SnapshotLog.logDirOf(tableDir).toString)
       // nullif BEFORE the cast: a non-manifest file in _log (README, a
       // foreign tool's marker) extracts to '' — under ANSI semantics a
       // bare cast('') throws, and the predicate is pushed into file-

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Merge, SnapshotLog, SyntheticShares, ConcurrentCommitException}
 import graft.queries.MigrationQueries.Merge0
+import graft.sources.Manifest
 
 /** Manifest-committed versioned table: time travel, file sharing across
   * versions, exclusive-create commit races, file-diff CDC, vacuum.
@@ -123,10 +124,10 @@ class SnapshotLogSpec extends SparkTestBase {
     val table = new org.apache.hadoop.fs.Path(dir)
     val names = SnapshotLog.manifest(spark, dir, 0)
     // racer wins version 1 (a no-op commit re-referencing v0's files)
-    SnapshotLog.commit(spark, table, 1L, names)
+    SnapshotLog.commit(spark, table, 1L, Manifest(files = names))
     // the loser of the same version number must throw, not overwrite
     intercept[ConcurrentCommitException] {
-      SnapshotLog.commit(spark, table, 1L, names.take(1))
+      SnapshotLog.commit(spark, table, 1L, Manifest(files = names.take(1)))
     }
     assert(SnapshotLog.manifest(spark, dir, 1) == names.sorted,
       "loser overwrote the winner's manifest")
@@ -281,18 +282,20 @@ class SnapshotLogSpec extends SparkTestBase {
       val v = SnapshotLog.latestVersion(spark, dir)
       attempts += 1
       if (attempts == 1) // B sneaks in between A's read and A's create
-        SnapshotLog.commit(spark, table, v + 1, v0Names, meta = Seq("writer=B"))
-      SnapshotLog.commit(spark, table, v + 1, v0Names, meta = Seq("writer=A"))
+        SnapshotLog.commit(spark, table, v + 1,
+          Manifest(files = v0Names, tags = Seq("writer" -> "B")))
+      SnapshotLog.commit(spark, table, v + 1,
+        Manifest(files = v0Names, tags = Seq("writer" -> "A")))
     }
     assert(attempts == 2, s"expected one race retry, took $attempts attempts")
     assert(SnapshotLog.versions(spark, dir) == Seq(0L, 1L, 2L))
-    assert(SnapshotLog.manifestMeta(spark, dir, 1).contains("writer=B"))
-    assert(SnapshotLog.manifestMeta(spark, dir, 2).contains("writer=A"))
+    assert(SnapshotLog.manifestOf(spark, dir, 1).tag("writer").contains("B"))
+    assert(SnapshotLog.manifestOf(spark, dir, 2).tag("writer").contains("A"))
 
     // exhausted retries rethrow the race signal
     intercept[ConcurrentCommitException] {
       SnapshotLog.commitWithRetry(maxAttempts = 2) {
-        SnapshotLog.commit(spark, table, 1L, v0Names)
+        SnapshotLog.commit(spark, table, 1L, Manifest(files = v0Names))
       }
     }
   }
@@ -344,7 +347,7 @@ class SnapshotLogSpec extends SparkTestBase {
     def names(v: Long) = SnapshotLog.manifest(spark, dir, v)
     def fresh(v: Long) = Stamps.read(spark,
       names(v).map(n => n -> new Path(s"$dir/data/$n")), b.schema, "id")
-    def stamped(v: Long) = Stamps.parse(SnapshotLog.manifestMeta(spark, dir, v))
+    def stamped(v: Long) = SnapshotLog.manifestOf(spark, dir, v).stamps
     // planning's key intervals, against the footers' key ranges
     def planned(v: Long) = SnapshotLog.keyIntervals(spark, dir, v, "id")
       .map { case (f, iv) => new Path(f).getName -> iv.map(i => (i.lo, i.hi)) }.toMap
@@ -359,7 +362,7 @@ class SnapshotLogSpec extends SparkTestBase {
     // a raw commit with NO stamps: planning falls back to footer reads
     // and keeps working
     val raw = names(1)
-    SnapshotLog.commit(spark, new Path(dir), 2L, raw, meta = Seq("key=id"))
+    SnapshotLog.commit(spark, new Path(dir), 2L, Manifest(files = raw, key = Some("id")))
     assert(stamped(2L).isEmpty, "a raw commit carries no stamps")
     assert(planned(2L) == footerRanges(dir, 2L, "id"), "fallback diverged from footers")
     import spark.implicits._
@@ -416,8 +419,8 @@ class SnapshotLogSpec extends SparkTestBase {
     // replay of epoch 0 after a lost checkpoint: the txn stamp skips it
     assert(SnapshotStreams.applyEpoch(spark, dir, e0, 0L, "s1", "id").isEmpty)
     assert(SnapshotLog.versions(spark, dir) == Seq(0L, 1L, 2L))
-    assert(SnapshotLog.manifestMeta(spark, dir, 1).contains("txn=s1/0"))
-    assert(SnapshotLog.manifestMeta(spark, dir, 2).contains("txn=s1/1"))
+    assert(SnapshotLog.manifestOf(spark, dir, 1).tag(Manifest.TxnTag).contains("s1/0"))
+    assert(SnapshotLog.manifestOf(spark, dir, 2).tag(Manifest.TxnTag).contains("s1/1"))
     val got = SnapshotLog.readLatest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((1L, "a2"), (3L, "c"), (10L, "j")))
@@ -589,7 +592,7 @@ class SnapshotLogSpec extends SparkTestBase {
         .select(input_file_name(), col("id")).as[(String, Long)].collect()
         .collect { case (f, k) if updDel(k) => f.substring(f.lastIndexOf('/') + 1) }
         .toSet
-      val stamps = graft.sources.Stamps.parse(SnapshotLog.manifestMeta(spark, dir, v))
+      val stamps = SnapshotLog.manifestOf(spark, dir, v).stamps
       val stampedHit = names.filter { n =>
         stamps.get(n).flatMap(_.cols.get("id")).flatMap(_.iv) match {
           case Some(graft.sources.Stamps.LongIv(lo, hi)) => updDel.exists(k => k >= lo && k <= hi)
@@ -659,12 +662,12 @@ class SnapshotLogSpec extends SparkTestBase {
     def check(op: String, c: SnapshotCommit): Unit = {
       val v = c.version
       val names = SnapshotLog.manifest(spark, dir, v)
-      val meta = SnapshotLog.manifestMeta(spark, dir, v)
-      val rowsOf = meta.filter(_.startsWith(Stamps.RowsPrefix)).flatMap(Stamps.fileOf)
+      val m = SnapshotLog.manifestOf(spark, dir, v)
+      val rowsOf = m.stamps.collect { case (f, st) if st.rows.nonEmpty => f }.toSeq
       assert(rowsOf.sorted == names.sorted, s"$op: rows= lines $rowsOf vs files $names")
-      assert(!meta.exists(l => l.startsWith("range=") || l.startsWith("colrange=")),
+      assert(!m.tags.exists(t => t._1 == "range" || t._1 == "colrange"),
         s"$op: a second stats format is stamped")
-      assert(Stamps.parse(meta) == freshStamps(v), s"$op: stamps diverge from the footers")
+      assert(m.stamps == freshStamps(v), s"$op: stamps diverge from the footers")
       val h = SnapshotLog.history(spark, dir).find(_._1 == v).get
       assert(h._6 == h._4, s"$op: range_stamps ${h._6} != files ${h._4}")
       val cols = expected.columns.toSeq

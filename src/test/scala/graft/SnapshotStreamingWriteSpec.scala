@@ -54,7 +54,7 @@ class SnapshotStreamingWriteSpec extends SparkTestBase {
       val dir = s"$warehouse/stw"
       val latest = SnapshotLog.latestVersion(spark, dir)
       val stamps = (0L to latest).flatMap(v =>
-        SnapshotLog.manifestMeta(spark, dir, v).filter(_.startsWith("txn=")))
+        SnapshotLog.manifestOf(spark, dir, v).tag(graft.sources.Manifest.TxnTag))
       assert(stamps.size == 2, s"one txn stamp per non-empty epoch: $stamps")
 
       // replaying the SAME checkpoint with no new data commits nothing

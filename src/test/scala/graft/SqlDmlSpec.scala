@@ -342,6 +342,23 @@ class SqlDmlSpec extends SparkTestBase {
     assert(r.isNullAt(11) && r.isNullAt(12))
   }
 
+  test("DESCRIBE DETAIL size_bytes is the live data files' bytes, not the directory's") {
+    val dir = freshTable("dml_size")
+    SnapshotDml.register(spark, "dml_size", dir)
+    def bytesOf(names: Seq[String]): Long =
+      names.map(n => Files.size(java.nio.file.Paths.get(s"$dir/data/$n"))).sum
+    def sizeBytes: Long = spark.sql("DESCRIBE DETAIL dml_size").head().getLong(6)
+    assert(sizeBytes == bytesOf(SnapshotLog.manifest(spark, dir, 0)))
+    // a CoW UPDATE rewrites one file: the file only v0 references stays on
+    // disk (nothing vacuumed) and must not be counted
+    spark.sql("UPDATE dml_size SET x = x + 1 WHERE id = 2")
+    val live = SnapshotLog.manifest(spark, dir, 1)
+    val onlyPrevious = SnapshotLog.manifest(spark, dir, 0).filterNot(live.contains)
+    assert(onlyPrevious.nonEmpty, "fixture degenerate: the UPDATE rewrote no file")
+    assert(onlyPrevious.forall(n => Files.exists(java.nio.file.Paths.get(s"$dir/data/$n"))))
+    assert(sizeBytes == bytesOf(live))
+  }
+
   test("DESCRIBE DETAIL surfaces layout and pending evolution records") {
     import spark.implicits._
     // bucketed layout
