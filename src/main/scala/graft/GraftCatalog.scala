@@ -50,19 +50,6 @@ object GraftCatalog {
         view
     }
 
-  /** Register a [[graft.operators.SnapshotLog]] table version as a SQL
-    * view — time travel from plain SQL (`v = None` = latest). Delete
-    * masks and the version's stamped schema apply exactly as in the
-    * DataFrame read.
-    */
-  def registerSnapshot(spark: SparkSession, tableDir: String, view: String,
-      v: Option[Long] = None): Long = {
-    import graft.operators.SnapshotLog
-    val ver = v.getOrElse(SnapshotLog.latestVersion(spark, tableDir))
-    SnapshotLog.read(spark, tableDir, ver).createOrReplaceTempView(view)
-    ver
-  }
-
   /** Spark-SQL re-expressions of representative registered queries
     * (result- and plan-parity pinned by SqlSurfaceSpec). Keys are the
     * query names from [[SparkEntry.queries]].

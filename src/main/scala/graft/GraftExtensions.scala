@@ -17,8 +17,9 @@ import graft.functions._
   *
   * After which `SELECT graft_long_dot(a, b)` etc. work from SQL and
   * `call_function` from the DataFrame API — and `MERGE INTO` / `UPDATE` /
-  * `DELETE FROM` against registered snapshot tables execute through the
-  * transaction log ([[graft.sql.SnapshotDml]], via the injected parser).
+  * `DELETE FROM` against `graft.<t>` catalog identifiers execute through
+  * the transaction log ([[graft.sql.SnapshotDml]], via the injected
+  * parser).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.{GraftNative, Q, Tables}
 import graft.functions.{DedupFns, TextFns, VectorFns}
 import graft.operators.Stage
+import graft.sql.GraftTableCatalog
 
 /** Deduplication operator family over the `documents` / `embeddings`
   * tables: exact (normalized-hash groupBy), MinHash+LSH near-dup,
@@ -2296,9 +2297,7 @@ object DedupQueries {
       def fp60(norm: Column): Column =
         conv(substring(md5(norm), 1, 15), 16, 10).cast("long")
       val base = Stage.sharedDir(s, "d31_admit", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val docs = Tables.documents(s, d).select("doc_id", "text")
         docs.select(fp60(DedupFns.normText(col("text"))).as("fp"), col("doc_id"))
           .groupBy("fp").agg(min("doc_id").as("keeper"))

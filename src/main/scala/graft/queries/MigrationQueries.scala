@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{Q, Tables}
 import graft.operators.{Migration, Stage, SyntheticShares}
+import graft.sql.GraftTableCatalog
 
 /** The reference migration pipeline (main.go:241-322) as oracle-checked
   * queries. Inputs are the deterministic [[SyntheticShares]] fixtures (both
@@ -491,7 +492,7 @@ object MigrationQueries {
     },
 
     // SQL DML surface (m17): the m09 changeset applied VIA SQL TEXT — one
-    // `MERGE INTO` statement parsed by the session's own parser
+    // `MERGE INTO graft.m17t` statement parsed by the session's own parser
     // (GraftExtensions injects [[graft.sql.GraftSqlParser]]), rewritten to
     // a runnable command, executed through [[SnapshotLog.merge]]'s
     // copy-on-write transaction-log path. The oracle is m09/m11's DuckDB
@@ -502,14 +503,13 @@ object MigrationQueries {
     // SqlDmlSpec's.
     Q("m17_sql_merge", Merge0.keyedMergeSql) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
-      import graft.sql.SnapshotDml
-      val dir = Stage.sharedDir(s, "m17_sql", d) { out =>
+      val base = Stage.sharedDir(s, "m17_sql", d) { out =>
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotDml.register(s, "m17_snap", out)
+        SnapshotLog.init(s, s"$out/m17t", shares, "id", numFiles = 8)
         Merge0.changeset(shares).createOrReplaceTempView("m17_cs")
         s.sql(
-          """MERGE INTO m17_snap t USING m17_cs c ON t.id = c.id
+          """MERGE INTO graft.m17t t USING m17_cs c ON t.id = c.id
             |WHEN MATCHED AND c.op = 'delete' THEN DELETE
             |WHEN MATCHED AND c.op = 'update' THEN
             |  UPDATE SET item_target = c.item_target, file_target = c.file_target
@@ -517,7 +517,7 @@ object MigrationQueries {
             |""".stripMargin).collect()
         ()
       }
-      SnapshotLog.readLatest(s, dir)
+      SnapshotLog.readLatest(s, s"$base/m17t")
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
           "item_target", "file_source", "file_target")
         .orderBy("id")
@@ -530,17 +530,14 @@ object MigrationQueries {
     // log), `MERGE INTO graft.m18t` applies the m09 changeset by
     // identifier, and the result is read back with a plain
     // `SELECT ... FROM graft.m18t` (the injected resolution rule plans it
-    // as the version's parquet scan + mask). No registered temp view
-    // anywhere; same oracle as m09, so the whole catalog lifecycle is
-    // hash-certified against the functional merge. DDL (DROP/SHOW/
-    // rename), time travel by identifier, and plan-shape facts are
-    // GraftCatalogSqlSpec's.
+    // as the version's parquet scan + mask). Same oracle as m09, so the
+    // whole catalog lifecycle is hash-certified against the functional
+    // merge. DDL (DROP/SHOW/rename), time travel by identifier, and
+    // plan-shape facts are GraftCatalogSqlSpec's.
     Q("m18_catalog_table", Merge0.keyedMergeSql) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m18_cat", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m18_shares")
         s.sql("CREATE TABLE graft.m18t TBLPROPERTIES ('key'='id') AS " +
@@ -556,9 +553,7 @@ object MigrationQueries {
             |""".stripMargin).collect()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target
               |FROM graft.m18t ORDER BY id""".stripMargin)
@@ -648,9 +643,7 @@ object MigrationQueries {
     Q("m21_alter_table", Merge0.evolveSql) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m21_alter", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m21_shares")
         s.sql("CREATE TABLE graft.m21t TBLPROPERTIES ('key'='id') AS " +
@@ -666,9 +659,7 @@ object MigrationQueries {
              |FROM m21_shares WHERE id % 17 = 0""".stripMargin).collect()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target, quota
               |FROM graft.m21t ORDER BY id""".stripMargin)
@@ -676,8 +667,8 @@ object MigrationQueries {
 
     // RESTORE (m22): the recovery path time travel exists FOR — commit a
     // bad merge (m09's changeset, standing in for the incident), then
-    // `RESTORE TABLE t TO VERSION AS OF 0` via SQL text. The restore is
-    // one manifest write referencing v0's files/stamps by name
+    // `RESTORE TABLE graft.m22t TO VERSION AS OF 0` via SQL text. The
+    // restore is one manifest write referencing v0's files/stamps by name
     // ([[SnapshotLog.restore]] — metadata cost on a 100 TB table; the
     // merge's files stay time-travel readable, so the restore is itself
     // undoable). The read-back must be byte-equal to the ORIGINAL shares
@@ -691,16 +682,16 @@ object MigrationQueries {
          |       item_target, file_source, file_target
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
-      import graft.sql.SnapshotDml
-      val dir = Stage.sharedDir(s, "m22_restore", d) { out =>
+      val base = Stage.sharedDir(s, "m22_restore", d) { out =>
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-        SnapshotDml.register(s, "m22_snap", out)
-        s.sql("RESTORE TABLE m22_snap TO VERSION AS OF 0").collect()
+        val dir = s"$out/m22t"
+        SnapshotLog.init(s, dir, shares, "id", numFiles = 8)
+        SnapshotLog.merge(s, dir, Merge0.changeset(shares), "id")
+        s.sql("RESTORE TABLE graft.m22t TO VERSION AS OF 0").collect()
         ()
       }
-      SnapshotLog.readLatest(s, dir)
+      SnapshotLog.readLatest(s, s"$base/m22t")
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
           "item_target", "file_source", "file_target")
         .orderBy("id")
@@ -728,9 +719,7 @@ object MigrationQueries {
          |FROM merged WHERE share_type = 3 ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m23_part", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m23_shares")
         s.sql("CREATE TABLE graft.m23t PARTITIONED BY (share_type) " +
@@ -746,9 +735,7 @@ object MigrationQueries {
             |""".stripMargin).collect()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target
               |FROM graft.m23t WHERE share_type = 3 ORDER BY id""".stripMargin)
@@ -771,9 +758,7 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m24_stream", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m24_shares")
         s.sql("CREATE TABLE graft.m24t TBLPROPERTIES ('key'='id') AS " +
@@ -789,9 +774,7 @@ object MigrationQueries {
         q.awaitTermination()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target
               |FROM graft.m24t ORDER BY id""".stripMargin)
@@ -817,9 +800,7 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m25_streamread", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m25_shares")
         s.sql("CREATE TABLE graft.m25t TBLPROPERTIES ('key'='id') AS " +
@@ -827,9 +808,7 @@ object MigrationQueries {
         s.sql("INSERT INTO graft.m25t SELECT * FROM m25_shares WHERE id % 2 = 1")
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       // fresh checkpoint + accumulator per run: the stream replays the
       // full feed and folds it batch-by-batch (eagerly — the staged
       // micro-batch deltas are reclaimed as each batch commits)
@@ -873,9 +852,7 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m26_rename", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m26_shares")
         s.sql("CREATE TABLE graft.m26t TBLPROPERTIES ('key'='id') AS " +
@@ -886,9 +863,7 @@ object MigrationQueries {
         s.sql("ALTER TABLE graft.m26t DROP COLUMN item_source")
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_target,
               |       file_source, target_path
               |FROM graft.m26t ORDER BY id""".stripMargin)
@@ -911,9 +886,7 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m27_setnull", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m27_shares")
         s.sql("CREATE TABLE graft.m27t TBLPROPERTIES ('key'='id') AS " +
@@ -922,16 +895,14 @@ object MigrationQueries {
           "WHERE id % 7 = 0").collect()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target
               |FROM graft.m27t ORDER BY id""".stripMargin)
     },
 
     // SQL CDC surface (m28): the change feed read back as a TABLE-VALUED
-    // FUNCTION — `SELECT ... FROM table_changes('m28_snap', 1, 2)`
+    // FUNCTION — `SELECT ... FROM table_changes('graft.m28t', 1, 2)`
     // ([[graft.sql.TableChanges]], injected via
     // `SparkSessionExtensions.injectTableFunction` so it composes inside
     // arbitrary SQL). The lifecycle drives BOTH physical change routes:
@@ -944,30 +915,29 @@ object MigrationQueries {
     // rewritten-but-unchanged row not cancelled breaks the hash.
     Q("m28_table_changes", Merge0.tableChangesSql) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
-      import graft.sql.SnapshotDml
-      val dir = Stage.sharedDir(s, "m28_tvf", d) { out =>
+      val base = Stage.sharedDir(s, "m28_tvf", d) { out =>
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotDml.register(s, "m28_snap", out)
+        SnapshotLog.init(s, s"$out/m28t", shares, "id", numFiles = 8)
         Merge0.changeset(shares).createOrReplaceTempView("m28_cs")
         s.sql(
-          """MERGE INTO m28_snap t USING m28_cs c ON t.id = c.id
+          """MERGE INTO graft.m28t t USING m28_cs c ON t.id = c.id
             |WHEN MATCHED AND c.op = 'delete' THEN DELETE
             |WHEN MATCHED AND c.op = 'update' THEN
             |  UPDATE SET item_target = c.item_target, file_target = c.file_target
             |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
             |""".stripMargin).collect()
-        s.sql("DELETE FROM m28_snap WHERE id % 13 = 0").collect()
+        s.sql("DELETE FROM graft.m28t WHERE id % 13 = 0").collect()
         ()
       }
-      // the staging body is memoized: re-point the registry at the
-      // (possibly cached) table unconditionally before the TVF resolves
-      SnapshotDml.register(s, "m28_snap", dir)
+      // the stage is memoized: point the catalog at it even when the body
+      // did not run (another query may have re-pointed it since)
+      GraftTableCatalog.use(s, base)
       s.sql(
         """SELECT id, share_type, uid_owner, item_type, item_source,
           |       item_target, file_source, file_target,
           |       _change_type, _commit_version
-          |FROM table_changes('m28_snap', 1, 2)
+          |FROM table_changes('graft.m28t', 1, 2)
           |ORDER BY _commit_version, id""".stripMargin)
     },
 
@@ -991,9 +961,7 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m29_cons", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val shares = SyntheticShares.shares(Tables.orders(s, d))
         shares.createOrReplaceTempView("m29_shares")
         s.sql("CREATE TABLE graft.m29t TBLPROPERTIES ('key'='id') AS " +
@@ -1013,9 +981,7 @@ object MigrationQueries {
           "concat('/kept/', CAST(id AS STRING)) WHERE id % 23 = 0").collect()
         ()
       }
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sql.GraftTableCatalog].getName)
-      s.conf.set("spark.graft.catalog.location", base)
+      GraftTableCatalog.use(s, base)
       s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
               |       item_target, file_source, file_target
               |FROM graft.m29t ORDER BY id""".stripMargin)
@@ -1198,7 +1164,7 @@ object MigrationQueries {
          |FROM shares WHERE id % 11 = 0
          |ORDER BY id""".stripMargin
 
-    /** The m28 oracle: the `table_changes('m28_snap', 1, 2)` window
+    /** The m28 oracle: the `table_changes('graft.m28t', 1, 2)` window
       * recomputed relationally — version 1's rows are
       * [[snapshotCdcSql]]'s three changeset branches, version 2's the
       * `%13` MoR delete evaluated against the POST-merge table (so a

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import graft.{GraftNative, Q, Tables}
 import graft.functions.VectorFns
 import graft.operators.Stage
+import graft.sql.GraftTableCatalog
 
 /** One scored (probe, candidate) pair in the ANN reduce. */
 final case class ScoredNeighbor(probe_id: Long, vec_id: Long, cosine: Double)
@@ -1124,9 +1125,7 @@ object SimilarityQueries {
          |SELECT probe_id, neighbor_id, rnk, cosine FROM ranked
          |WHERE rnk <= $K ORDER BY probe_id, rnk""".stripMargin) { (s, d) =>
       val base = Stage.sharedDir(s, "v18_ingest", d) { out =>
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sql.GraftTableCatalog].getName)
-        s.conf.set("spark.graft.catalog.location", out)
+        GraftTableCatalog.use(s, out)
         val dup = DedupQueries.dupEmb(s, d)
         graft.streaming.AnnStreams.indexRows(
           dup.where(col("vec_id") < DedupQueries.BatchIdOffset))

@@ -17,8 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.operators.SnapshotLog
 
 /** [[SnapshotLog]] tables as a first-class Spark catalog — the DSv2
-  * `TableCatalog` surface, so snapshot tables are addressed by IDENTIFIER
-  * (`graft.db.t`) instead of per-commit re-pointed temp views:
+  * `TableCatalog` surface and the one way SQL names a snapshot table: by
+  * IDENTIFIER (`graft.db.t`), resolved afresh on every query:
   *
   * {{{
   *   spark.sql.catalog.graft=graft.sql.GraftTableCatalog
@@ -61,11 +61,7 @@ import graft.operators.SnapshotLog
   * location would make the catalog untestable and un-repointable.
   */
 class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
-
-  /** Session conf key for the warehouse root this catalog maps
-    * identifiers under. Read per call — see class doc.
-    */
-  final val LocationKey = "spark.graft.catalog.location"
+  import GraftTableCatalog.LocationKey
 
   private var catalogName: String = _
   private var bootLocation: Option[String] = None
@@ -341,6 +337,23 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
       .filter(st => st.isDirectory && exists(st.getPath.toString))
       .map(st => Identifier.of(namespace, st.getPath.getName))
       .toArray
+  }
+}
+
+object GraftTableCatalog {
+
+  /** Session conf key for the warehouse root the catalog maps
+    * identifiers under. Read per call — see the class doc.
+    */
+  val LocationKey = "spark.graft.catalog.location"
+
+  /** Point `spark`'s `graft` catalog at the warehouse root `location`.
+    * Also registers the catalog class: a session that
+    * [[graft.GraftSession]] did not build lacks it.
+    */
+  def use(spark: SparkSession, location: String): Unit = {
+    spark.conf.set("spark.sql.catalog.graft", classOf[GraftTableCatalog].getName)
+    spark.conf.set(LocationKey, location)
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.sql
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
@@ -13,9 +12,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators.{Merge, SnapshotCommit, SnapshotLog}
 
 /** SQL DML against [[SnapshotLog]] tables — `MERGE INTO` / `UPDATE` /
-  * `DELETE FROM` as plain SQL text, the surface a SQL-only user needs to
-  * WRITE the lakehouse layer (reads were already covered by
-  * [[graft.GraftCatalog.registerSnapshot]] views).
+  * `DELETE FROM` as plain SQL text over a [[GraftTableCatalog]]
+  * identifier (`graft.t`), the surface a SQL-only user needs to WRITE the
+  * lakehouse layer. Reads of the same identifier, time travel included,
+  * resolve through the catalog's `loadTable`.
   *
   * The Spark-native route, not a hand-rolled dialect: Spark's OWN parser
   * already turns the three statements into [[MergeIntoTable]] /
@@ -23,9 +23,9 @@ import graft.operators.{Merge, SnapshotCommit, SnapshotLog}
   * analysis for non-DSv2 tables. [[GraftSqlParser]] (injected via
   * `SparkSessionExtensions.injectParser`, see [[graft.GraftExtensions]])
   * delegates all parsing to the session's parser and then REWRITES those
-  * three nodes — when and only when the target is a [[register]]ed
-  * snapshot table — into runnable commands executing the corresponding
-  * log operation:
+  * three nodes — when and only when the target is a graft-catalog
+  * identifier — into runnable commands executing the corresponding log
+  * operation:
   *
   *  - `DELETE FROM t WHERE p`  -> [[SnapshotLog.deleteKeys]] (merge-on-
   *    read: one key-list parquet + one manifest create, zero rewrites);
@@ -54,35 +54,12 @@ import graft.operators.{Merge, SnapshotCommit, SnapshotLog}
   */
 object SnapshotDml {
 
-  /** name (lowercased) -> snapshot table dir. */
-  private val registry = new ConcurrentHashMap[String, String]()
-
-  /** Register `name` as a DML-addressable snapshot table over `tableDir`,
-    * and publish (or refresh) the same name as a SELECT temp view of the
-    * LATEST version — after every DML commit the view is re-pointed, so
-    * SQL reads always see the newest committed version.
-    */
-  def register(spark: SparkSession, name: String, tableDir: String): Unit = {
-    registry.put(name.toLowerCase, tableDir)
-    refreshView(spark, name.toLowerCase)
-  }
-
-  private[sql] def dirOf(name: String): Option[String] =
-    Option(registry.get(name.toLowerCase))
-
-  private def refreshView(spark: SparkSession, name: String): Unit =
-    SnapshotLog.readLatest(spark, registry.get(name))
-      .createOrReplaceTempView(name)
-
-  /** A resolved DML target: the display name the statement used, the
-    * table directory, and whether it is a [[register]]ed name (whose
-    * SELECT temp view must be re-pointed after a commit) or a
-    * [[GraftTableCatalog]] identifier (whose reads resolve per query —
-    * nothing to refresh). Plain strings only: commands hold one of these
-    * as a case-class member, and QueryPlan's reflection must see no
+  /** A resolved DML target: the identifier the statement used and the
+    * table directory. Plain strings only: commands hold one of these as a
+    * case-class member, and QueryPlan's reflection must see no
     * expressions in it.
     */
-  final case class Target(display: String, dir: String, registered: Boolean)
+  final case class Target(display: String, dir: String)
 
   private def catalogOf(session: SparkSession, name: String)
       : Option[GraftTableCatalog] =
@@ -93,22 +70,20 @@ object SnapshotDml {
       }
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Resolve a (possibly multipart) statement name to a snapshot-table
-    * target: a single registered name, or `<catalog>.<ns...>.<table>`
-    * through a configured [[GraftTableCatalog]] (the identifier must
-    * resolve to a table with at least one committed version).
+  /** Resolve a statement name `<catalog>.<ns...>.<table>` to a
+    * snapshot-table target through a configured [[GraftTableCatalog]]
+    * (the identifier must resolve to a table with at least one committed
+    * version).
     */
   private[sql] def resolveTarget(session: SparkSession,
       parts: Seq[String]): Option[Target] = parts match {
-    case Seq(n) if registry.containsKey(n.toLowerCase) =>
-      Some(Target(n.toLowerCase, registry.get(n.toLowerCase), registered = true))
     case cat +: rest if rest.nonEmpty =>
       catalogOf(session, cat).flatMap { c =>
         val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
           rest.init.toArray, rest.last)
         val dir = c.tableDir(ident)
         if (SnapshotLog.versions(session, dir).nonEmpty)
-          Some(Target(parts.mkString("."), dir, registered = false))
+          Some(Target(parts.mkString("."), dir))
         else None
       }
     case _ => None
@@ -119,7 +94,7 @@ object SnapshotDml {
   // ------------------------------------------------------------------
 
   /** (resolved target, optional alias) of a DML target plan, when it is a
-    * registered snapshot table or a graft-catalog identifier.
+    * graft-catalog identifier.
     */
   private def target(session: SparkSession,
       plan: LogicalPlan): Option[(Target, Option[String])] =
@@ -162,62 +137,11 @@ object SnapshotDml {
       case _ => ()
     }
 
-  /** SQL time travel over REGISTERED names: `SELECT ... FROM name
-    * VERSION AS OF n` / `TIMESTAMP AS OF ts` — Spark's grammar already
-    * parses the suffix into [[RelationTimeTravel]]; for registered
-    * snapshot tables the node is replaced (anywhere in the tree — it's a
-    * relation, not a statement) by the analyzed snapshot read of that
-    * version, masks and stamped schema applied exactly as the DataFrame
-    * read. A timestamp resolves through the manifests' commit stamps
-    * ([[SnapshotLog.versionAt]] — latest version at-or-before, Delta's
-    * rule); it must be a constant-foldable expression (a literal, or
-    * literal arithmetic). Resolution cost is manifest metadata.
-    *
-    * Catalog identifiers (`graft.t VERSION AS OF n`) are intentionally
-    * NOT matched here: the analyzer routes those through
-    * [[GraftTableCatalog.loadTable]]'s version/timestamp overloads — the
-    * native DSv2 path.
+  /** Rewrite a freshly parsed plan: the DML and constraint nodes over a
+    * graft-catalog identifier become runnable commands; everything else
+    * passes through untouched.
     */
-  private def timeTravel(session: SparkSession, plan: LogicalPlan): LogicalPlan =
-    plan transform {
-      case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
-        val reg = tt.relation match {
-          case SubqueryAlias(id, u: UnresolvedRelation)
-              if u.multipartIdentifier.length == 1 =>
-            dirOf(u.multipartIdentifier.head).map((_, Some(id.name)))
-          case u: UnresolvedRelation if u.multipartIdentifier.length == 1 =>
-            dirOf(u.multipartIdentifier.head).map((_, None))
-          case _ => None
-        }
-        reg match {
-          case Some((dir, alias)) =>
-            val v = tt.version.map(_.toLong).getOrElse {
-              val ts = tt.timestamp.getOrElse(
-                fail("time travel needs VERSION AS OF or TIMESTAMP AS OF"))
-              val cast = Cast(ts, org.apache.spark.sql.types.TimestampType,
-                Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
-              if (!cast.resolved || !cast.foldable)
-                fail("TIMESTAMP AS OF over a snapshot table must be a " +
-                  s"constant timestamp, got $ts")
-              val micros = cast.eval(
-                org.apache.spark.sql.catalyst.InternalRow.empty)
-              if (micros == null) fail("TIMESTAMP AS OF evaluated to NULL")
-              SnapshotLog.versionAt(session, dir,
-                micros.asInstanceOf[Long] / 1000L)
-            }
-            val read = SnapshotLog.read(session, dir, v).queryExecution.analyzed
-            alias.fold(read)(a => SubqueryAlias(a, read))
-          case None => tt
-        }
-    }
-
-  /** Rewrite a freshly parsed plan: the three DML nodes over a registered
-    * snapshot table become runnable commands, `VERSION AS OF` relations
-    * become version reads; everything else passes through untouched.
-    */
-  def rewrite(session: SparkSession, plan0: LogicalPlan): LogicalPlan = {
-    val plan = timeTravel(session, plan0)
-    plan match {
+  def rewrite(session: SparkSession, plan: LogicalPlan): LogicalPlan = plan match {
     case d: DeleteFromTable =>
       target(session, d.table).map { case (t, alias) =>
         SnapshotDeleteCommand(t, alias, raw(d.condition))
@@ -280,7 +204,6 @@ object SnapshotDml {
         SnapshotNotNullCommand(t, nullability)
       }.getOrElse(ac)
     case p => p
-    }
   }
 
   private def assignmentOf(a: Assignment, where: String): (String, Expression) =
@@ -337,18 +260,13 @@ object SnapshotDml {
   private[sql] val VersionOutput: Seq[AttributeReference] =
     Seq(AttributeReference("version", LongType, nullable = false)())
 
-  private def finish(s: SparkSession, t: Target, c: SnapshotCommit): Seq[Row] = {
-    // registered names publish a SELECT temp view that must track the
-    // commit; catalog identifiers resolve per query — nothing to refresh
-    if (t.registered) refreshView(s, t.display)
-    Seq(Row(c.version))
-  }
+  private def versionRow(c: SnapshotCommit): Seq[Row] = Seq(Row(c.version))
 
   // ------------------------------------------------------------------
   // Maintenance statements (no Spark grammar to piggyback on: the
   // delegate parser would throw on the raw text, so these two match the
   // statement TEXT before delegation — the Delta-style maintenance
-  // surface, accepted only for registered snapshot tables)
+  // surface, accepted only for graft-catalog identifiers)
   // ------------------------------------------------------------------
 
   private val Name = """[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*"""
@@ -366,9 +284,8 @@ object SnapshotDml {
     s"""(?is)\\s*RESTORE\\s+(?:TABLE\\s+)?($Name)\\s+TO\\s+TIMESTAMP\\s+AS\\s+OF\\s+'([^']+)'\\s*;?\\s*""".r
 
   /** Pre-delegation text match: Some(command) for a maintenance
-    * statement over a registered snapshot table or a graft-catalog
-    * identifier, None otherwise (the text goes to the delegate parser
-    * untouched).
+    * statement over a graft-catalog identifier, None otherwise (the text
+    * goes to the delegate parser untouched).
     */
   def maintenance(session: SparkSession, sqlText: String): Option[LogicalPlan] = {
     def t(name: String): Option[Target] =
@@ -463,7 +380,6 @@ object SnapshotDml {
             case None       => SnapshotLog.compact(s, dir, numFiles)
           }
       }
-      if (target.registered) refreshView(s, target.display)
       Seq(Row(c.version, c.report.nFilesBefore.toLong, c.report.nNewFiles.toLong))
     }
   }
@@ -499,7 +415,6 @@ object SnapshotDml {
       AttributeReference("restored_from", LongType, nullable = false)())
     override def run(s: SparkSession): Seq[Row] = {
       val c = SnapshotLog.restore(s, target.dir, toVersion)
-      if (target.registered) refreshView(s, target.display)
       Seq(Row(c.version, toVersion))
     }
   }
@@ -574,8 +489,7 @@ object SnapshotDml {
       cname: String, condition: String) extends LeafRunnableCommand {
     override def output: Seq[AttributeReference] = VersionOutput
     override def run(s: SparkSession): Seq[Row] =
-      finish(s, target,
-        SnapshotLog.addConstraint(s, target.dir, cname, condition))
+      versionRow(SnapshotLog.addConstraint(s, target.dir, cname, condition))
   }
 
   /** `ALTER TABLE name DROP CONSTRAINT [IF EXISTS] c`. */
@@ -587,8 +501,7 @@ object SnapshotDml {
       if (ifExists && !SnapshotLog.constraintsOf(s, target.dir, v)
           .exists(_._1.equalsIgnoreCase(cname)))
         Seq(Row(v)) // nothing to drop, no empty commit
-      else finish(s, target,
-        SnapshotLog.dropConstraint(s, target.dir, cname))
+      else versionRow(SnapshotLog.dropConstraint(s, target.dir, cname))
     }
   }
 
@@ -609,7 +522,7 @@ object SnapshotDml {
             s"$c IS NOT NULL")
         else SnapshotLog.dropConstraint(s, target.dir, s"notnull_$c")
       }.last
-      finish(s, target, last)
+      versionRow(last)
     }
   }
 
@@ -653,7 +566,7 @@ object SnapshotDml {
       val (dir, _, key, _, aliased) = tableState(s, target, alias)
       val keys = ofRows(s,
         Project(Seq(UnresolvedAttribute.quoted(key)), Filter(condition, aliased)))
-      finish(s, target, SnapshotLog.deleteKeys(s, dir, keys, key))
+      versionRow(SnapshotLog.deleteKeys(s, dir, keys, key))
     }
   }
 
@@ -698,7 +611,7 @@ object SnapshotDml {
           }) :+ Alias(setNull, Merge.SetNullCol)()
       val filtered = condition.fold(aliased)(c => Filter(c, aliased))
       val cs = ofRows(s, Project(projections, filtered))
-      finish(s, target, SnapshotLog.merge(s, dir, cs, key))
+      versionRow(SnapshotLog.merge(s, dir, cs, key))
     }
   }
 
@@ -913,7 +826,7 @@ object SnapshotDml {
         .map(ofRows(s, _))
       if (parts.isEmpty) fail("MERGE needs at least one WHEN clause")
       val cs = parts.reduce(_ unionByName _).where(col("op").isNotNull)
-      finish(s, target, SnapshotLog.merge(s, dir, cs, key))
+      versionRow(SnapshotLog.merge(s, dir, cs, key))
     }
 
     /** Extract the SOURCE side of `ON target.key = <source expr>`. */
@@ -939,7 +852,7 @@ object SnapshotDml {
 }
 
 /** Parser injected by [[graft.GraftExtensions]]: delegate everything,
-  * then rewrite freshly parsed DML over registered snapshot tables into
+  * then rewrite freshly parsed DML over graft-catalog identifiers into
   * [[SnapshotDml]] commands. Statements over anything else — and every
   * other parser entry point — pass through byte-identical.
   */

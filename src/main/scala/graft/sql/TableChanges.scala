@@ -98,11 +98,11 @@ object TableChanges {
   }
 
   /** The `injectTableFunction` registration tuple. The builder runs at
-    * analysis time: arguments must be literals (a table name that is a
-    * [[SnapshotDml.register]]ed name or a graft-catalog identifier, and
-    * integer version bounds), and the returned plan is the change-rows
-    * DataFrame's logical plan — parquet diffs and key joins the outer
-    * query composes over like any other relation.
+    * analysis time: arguments must be literals (a graft-catalog
+    * identifier such as `'graft.t'`, and integer version bounds), and the
+    * returned plan is the change-rows DataFrame's logical plan — parquet
+    * diffs and key joins the outer query composes over like any other
+    * relation.
     */
   def registration: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan) =
@@ -132,8 +132,8 @@ object TableChanges {
       case other   => bad(s"$what must be an integer version, got $other")
     }
     val tgt = SnapshotDml.resolveTarget(spark, name.split('.').toSeq)
-      .getOrElse(bad(s"'$name' is not a registered snapshot table or " +
-        "graft-catalog identifier"))
+      .getOrElse(bad(s"'$name' is not a graft-catalog snapshot table " +
+        "identifier (graft.<table>)"))
     val from = ver(args(1), "startVersion")
     val to = args.lift(2).map(ver(_, "endVersion"))
       .getOrElse(SnapshotLog.latestVersion(spark, tgt.dir))

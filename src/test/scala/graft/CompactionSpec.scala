@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Merge, SnapshotLog, Stage}
@@ -19,7 +18,7 @@ class CompactionSpec extends SparkTestBase {
     * whole key domain — the layout an append-heavy writer leaves.
     */
   private def fragmented(tag: String, rounds: Int): (String, DataFrame) = {
-    val dir = Files.createTempDirectory(tag).toString + "/t"
+    val dir = catalogTableDir(tag)
     val orders = Tables.orders(spark, sfDir)
     def slice(r: Int) = orders.where(col("o_orderkey") % rounds === r)
     SnapshotLog.init(spark, dir, slice(0), "o_orderkey", numFiles = 1)
@@ -41,9 +40,8 @@ class CompactionSpec extends SparkTestBase {
       .map(n => new java.io.File(s"$dir/data/$n").length).sum
     assert(bytes > 0)
 
-    SnapshotDml.register(spark, "compact_frag", dir)
     spark.conf.set(SnapshotDml.CompactTargetKey, (bytes / 4 + 1).toString)
-    val out = try spark.sql("OPTIMIZE compact_frag").head()
+    val out = try spark.sql("OPTIMIZE graft.graft_compact").head()
       finally spark.conf.unset(SnapshotDml.CompactTargetKey)
     val outFiles = SnapshotLog.manifest(spark, dir, out.getLong(0)).size
     assert(out.getLong(2) == outFiles.toLong)

@@ -8,8 +8,7 @@ import graft.operators.SnapshotLog
 /** Snapshot tables through the `graft` DSv2 TableCatalog
   * ([[graft.sql.GraftTableCatalog]]): CREATE TABLE / CTAS / INSERT INTO /
   * INSERT OVERWRITE / SELECT (+ time travel) / MERGE / UPDATE / DELETE /
-  * OPTIMIZE / VACUUM / DESCRIBE HISTORY, all against catalog IDENTIFIERS
-  * — no registered temp views anywhere in this suite.
+  * OPTIMIZE / VACUUM / DESCRIBE HISTORY, all against catalog IDENTIFIERS.
   */
 class GraftCatalogSqlSpec extends SparkTestBase {
 
@@ -134,6 +133,28 @@ class GraftCatalogSqlSpec extends SparkTestBase {
       spark.sql("INSERT INTO graft.tt VERSION AS OF 1 VALUES (9, 9)")
     }
     assert(e2 != null)
+  }
+
+  test("a Scala-API commit and another session's DELETE both show in the next SELECT") {
+    import spark.implicits._
+    val base = freshBase("fresh")
+    val dir = s"$base/fr"
+    SnapshotLog.init(spark, dir, (1L to 10L).map(i => (i, i * 10)).toDF("id", "x"),
+      "id", numFiles = 2)
+    def count(s: org.apache.spark.sql.SparkSession): Long =
+      s.sql("SELECT count(*) AS n FROM graft.fr").head().getLong(0)
+    assert(count(spark) == 10L)
+    // a commit made outside SQL: the identifier resolves the new latest
+    SnapshotLog.merge(spark, dir, Seq(("insert", 11L, 110L)).toDF("op", "id", "x"), "id")
+    assert(count(spark) == 11L)
+    // a second session has its own SQL conf: point its catalog at the
+    // same warehouse, and its SELECT and DELETE address the same table
+    val other = spark.newSession()
+    graft.sql.GraftTableCatalog.use(other, base)
+    assert(count(other) == 11L)
+    assert(other.sql("DELETE FROM graft.fr WHERE id = 1").head().getLong(0) == 2L)
+    assert(spark.sql("SELECT id FROM graft.fr").as[Long].collect().toSet ==
+      (2L to 11L).toSet)
   }
 
   test("catalog DDL: EXISTS / DROP / SHOW TABLES / namespaces map to directories") {

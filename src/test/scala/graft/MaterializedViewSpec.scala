@@ -15,8 +15,12 @@ class MaterializedViewSpec extends SparkTestBase {
 
   private val measures: Seq[(String, Column)] = Seq("sum_x" -> col("x"))
 
+  /** (base table dir, view dir) in a fresh warehouse that the session's
+    * catalog names `graft.base` and `graft.view`.
+    */
   private def fresh(): (String, String) = {
     val root = Files.createTempDirectory("graft_mv").toString
+    graft.sql.GraftTableCatalog.use(spark, root)
     val base = s"$root/base"
     val df = (1L to 20L).map(i => (i, if (i <= 10) "g1" else "g2", i))
       .toDF("id", "g", "x")
@@ -76,8 +80,7 @@ class MaterializedViewSpec extends SparkTestBase {
     assert(MaterializedView.staleness(spark, view) == Some((0L, 2L, 2L)))
 
     // DESCRIBE DETAIL reports the same numbers through SQL
-    graft.sql.SnapshotDml.register(spark, "mv_detail", view)
-    val r = spark.sql("DESCRIBE DETAIL mv_detail").head()
+    val r = spark.sql("DESCRIBE DETAIL graft.view").head()
     assert(r.getLong(r.fieldIndex("view_asof_base_version")) == 0L)
     assert(r.getLong(r.fieldIndex("base_latest_version")) == 2L)
     assert(r.getLong(r.fieldIndex("staleness_versions")) == 2L)
@@ -85,11 +88,10 @@ class MaterializedViewSpec extends SparkTestBase {
     // refresh absorbs both: lag back to 0
     MaterializedView.refresh(spark, base, view, measures)
     assert(MaterializedView.staleness(spark, view) == Some((2L, 2L, 0L)))
-    val r2 = spark.sql("DESCRIBE DETAIL mv_detail").head()
+    val r2 = spark.sql("DESCRIBE DETAIL graft.view").head()
     assert(r2.getLong(r2.fieldIndex("staleness_versions")) == 0L)
     // plain tables surface nulls in the staleness columns
-    graft.sql.SnapshotDml.register(spark, "mv_base_detail", base)
-    val rb = spark.sql("DESCRIBE DETAIL mv_base_detail").head()
+    val rb = spark.sql("DESCRIBE DETAIL graft.base").head()
     assert(rb.isNullAt(rb.fieldIndex("staleness_versions")))
   }
 
@@ -148,18 +150,19 @@ class MaterializedViewSpec extends SparkTestBase {
       SnapshotLog.latestVersion(spark, view)) == 2L)
   }
 
-  test("snapshot versions register as SQL views (time travel from SQL)") {
+  test("snapshot versions read by catalog identifier (time travel from SQL)") {
     val (base, _) = fresh()
     SnapshotLog.merge(spark, base,
       Seq((Merge.OpDelete, 1L, null.asInstanceOf[String], None: Option[Long]))
         .toDF("op", "id", "g", "x"), "id")
-    assert(GraftCatalog.registerSnapshot(spark, base, "snap_v0", Some(0L)) == 0L)
-    assert(GraftCatalog.registerSnapshot(spark, base, "snap_latest") == 1L)
-    val n0 = spark.sql("SELECT COUNT(*) FROM snap_v0").head().getLong(0)
-    val n1 = spark.sql("SELECT COUNT(*) FROM snap_latest").head().getLong(0)
+    assert(spark.sql("DESCRIBE DETAIL graft.base").head().getLong(2) == 1L)
+    val n0 = spark.sql("SELECT COUNT(*) FROM graft.base VERSION AS OF 0")
+      .head().getLong(0)
+    val n1 = spark.sql("SELECT COUNT(*) FROM graft.base").head().getLong(0)
     assert(n0 == 20L && n1 == 19L)
     assert(spark.sql(
-      "SELECT COUNT(*) FROM snap_v0 v0 LEFT ANTI JOIN snap_latest v1 ON v0.id = v1.id")
+      "SELECT COUNT(*) FROM graft.base VERSION AS OF 0 v0 " +
+        "LEFT ANTI JOIN graft.base v1 ON v0.id = v1.id")
       .head().getLong(0) == 1L)
   }
 

@@ -289,13 +289,12 @@ class SnapshotSkipSpec extends SparkTestBase {
 
   test("OPTIMIZE ZORDER BY (a, b, c): 3-dim SQL statement, stamps skip on every dimension") {
     import spark.implicits._
-    val dir = freshDir("zord3")
+    val dir = catalogTableDir("zord3")
     val rows = (0L until 2048L).map(i =>
       (i, (i * 37L) % 2048L, (i * 101L) % 2048L, s"r$i"))
       .toDF("id", "d2", "d3", "x")
     SnapshotLog.init(spark, dir, rows, "id", numFiles = 4)
-    graft.sql.SnapshotDml.register(spark, "zord3", dir)
-    val out = spark.sql("OPTIMIZE zord3 ZORDER BY (id, d2, d3)").collect()
+    val out = spark.sql("OPTIMIZE graft.zord3 ZORDER BY (id, d2, d3)").collect()
     assert(out.head.getLong(2) >= 1L)
     // CTAS-sized OPTIMIZE may produce few files on tiny data; re-cluster
     // with a fixed fan-out for a meaningful skip metric
@@ -311,7 +310,7 @@ class SnapshotSkipSpec extends SparkTestBase {
     }
     // one column is a sort, not a curve — rejected loudly
     val e = intercept[IllegalArgumentException] {
-      spark.sql("OPTIMIZE zord3 ZORDER BY (id)")
+      spark.sql("OPTIMIZE graft.zord3 ZORDER BY (id)")
     }
     assert(e.getMessage.contains("at least 2"))
   }

@@ -42,6 +42,16 @@ trait SparkTestBase extends AnyFunSuite {
     scans.head
   }
 
+  /** A fresh warehouse with the session's `graft` catalog pointed at it;
+    * returns the directory of table `graft.<name>` there. The table
+    * exists once a commit (`SnapshotLog.init`, `CREATE TABLE`) lands.
+    */
+  def catalogTableDir(name: String): String = {
+    val warehouse = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    graft.sql.GraftTableCatalog.use(spark, warehouse)
+    s"$warehouse/$name"
+  }
+
   /** Files the snapshot scan of `df` opened (its `numFiles` metric). */
   def filesRead(df: DataFrame): Long = snapshotScan(df).metrics("numFiles").value
 

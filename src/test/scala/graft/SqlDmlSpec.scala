@@ -4,9 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Merge, SnapshotLog}
-import graft.sql.SnapshotDml
 
-/** SQL DML against snapshot tables ([[SnapshotDml]] via the injected
+/** SQL DML against snapshot tables named `graft.<t>`
+  * ([[graft.sql.SnapshotDml]] via the injected
   * [[graft.sql.GraftSqlParser]]): MERGE INTO / UPDATE / DELETE FROM as
   * plain `spark.sql(...)` text, executing through the transaction log
   * with [[Merge.apply]]'s semantics. m17 certifies the MERGE path against
@@ -15,9 +15,10 @@ import graft.sql.SnapshotDml
   */
 class SqlDmlSpec extends SparkTestBase {
 
+  /** 60 rows committed as table `graft.<tag>`; returns its directory. */
   private def freshTable(tag: String): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(s"graft_$tag").toString + "/t"
+    val dir = catalogTableDir(tag)
     val base = (1L to 60L).map(i => (i, s"u${i % 3}", i * 10, s"/p/$i"))
       .toDF("id", "owner", "x", "path")
     SnapshotLog.init(spark, dir, base, "id", numFiles = 3)
@@ -29,13 +30,12 @@ class SqlDmlSpec extends SparkTestBase {
 
   private def snap(dir: String): DataFrame = SnapshotLog.readLatest(spark, dir)
 
-  test("UPDATE ... SET ... WHERE is a partial copy-on-write merge; the SELECT view tracks the commit") {
+  test("UPDATE ... SET ... WHERE is a partial copy-on-write merge that SELECT sees") {
     val dir = freshTable("dml_upd")
-    SnapshotDml.register(spark, "dml_upd", dir)
     val before = rows(snap(dir))
 
     val out = spark.sql(
-      "UPDATE dml_upd SET x = x + 1000, path = concat('/moved', path) WHERE id % 10 = 0")
+      "UPDATE graft.dml_upd SET x = x + 1000, path = concat('/moved', path) WHERE id % 10 = 0")
     assert(out.collect().map(_.getLong(0)).toSeq == Seq(1L), "must return the committed version")
 
     val expected = before.map { r =>
@@ -44,17 +44,16 @@ class SqlDmlSpec extends SparkTestBase {
     }
     assert(rows(snap(dir)) == expected)
     // assignment exprs evaluate over the PRE-update row (x = x + 1000);
-    // unassigned columns (owner) kept base values; the registered SELECT
-    // view was re-pointed at the new version
-    assert(rows(spark.sql("SELECT id, owner, x, path FROM dml_upd")) == expected)
+    // unassigned columns (owner) kept base values; a SELECT by identifier
+    // reads the new version
+    assert(rows(spark.sql("SELECT id, owner, x, path FROM graft.dml_upd")) == expected)
   }
 
   test("DELETE FROM ... WHERE commits a merge-on-read delete vector — zero data files rewritten") {
     val dir = freshTable("dml_del")
-    SnapshotDml.register(spark, "dml_del", dir)
     val m0 = SnapshotLog.manifest(spark, dir, 0)
 
-    spark.sql("DELETE FROM dml_del WHERE owner = 'u1' AND x > 100")
+    spark.sql("DELETE FROM graft.dml_del WHERE owner = 'u1' AND x > 100")
     val v = SnapshotLog.latestVersion(spark, dir)
     assert(v == 1L)
     // MoR: the new version references the SAME data files plus a vector
@@ -68,7 +67,6 @@ class SqlDmlSpec extends SparkTestBase {
   test("MERGE INTO via SQL text equals the functional Merge over the same changeset") {
     import spark.implicits._
     val dir = freshTable("dml_merge")
-    SnapshotDml.register(spark, "dml_merge", dir)
     val base = snap(dir)
 
     val cs = Seq(
@@ -81,7 +79,7 @@ class SqlDmlSpec extends SparkTestBase {
     cs.createOrReplaceTempView("dml_merge_cs")
 
     spark.sql(
-      """MERGE INTO dml_merge t USING dml_merge_cs c ON t.id = c.id
+      """MERGE INTO graft.dml_merge t USING dml_merge_cs c ON t.id = c.id
         |WHEN MATCHED AND c.op = 'delete' THEN DELETE
         |WHEN MATCHED AND c.op = 'update' THEN UPDATE SET x = c.x, path = c.path
         |WHEN NOT MATCHED AND c.op = 'insert' THEN
@@ -107,14 +105,13 @@ class SqlDmlSpec extends SparkTestBase {
   test("MERGE UPDATE SET * and WHEN NOT MATCHED BY SOURCE (delete + target-side update)") {
     import spark.implicits._
     val dir = freshTable("dml_nmbs")
-    SnapshotDml.register(spark, "dml_nmbs", dir)
     // source: keys 1..10 with new x/path (no owner column — SET * maps
     // only the columns the source carries; owner keeps base values)
     (1L to 10L).map(i => (i, i * 100, s"/src/$i"))
       .toDF("id", "x", "path").createOrReplaceTempView("dml_nmbs_cs")
 
     spark.sql(
-      """MERGE INTO dml_nmbs t USING dml_nmbs_cs c ON t.id = c.id
+      """MERGE INTO graft.dml_nmbs t USING dml_nmbs_cs c ON t.id = c.id
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED BY SOURCE AND x > 500 THEN DELETE
         |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET path = '/stale'
@@ -136,7 +133,7 @@ class SqlDmlSpec extends SparkTestBase {
     // source-column references in an NMBS clause are rejected
     val e = intercept[IllegalArgumentException] {
       spark.sql(
-        """MERGE INTO dml_nmbs t USING dml_nmbs_cs c ON t.id = c.id
+        """MERGE INTO graft.dml_nmbs t USING dml_nmbs_cs c ON t.id = c.id
           |WHEN NOT MATCHED BY SOURCE AND c.x > 0 THEN DELETE""".stripMargin)
     }
     assert(e.getMessage.contains("source column"))
@@ -145,20 +142,19 @@ class SqlDmlSpec extends SparkTestBase {
   test("MERGE WITH SCHEMA EVOLUTION widens the table from the source; without it, unknown columns fail loudly") {
     import spark.implicits._
     val dir = freshTable("dml_evo")
-    SnapshotDml.register(spark, "dml_evo", dir)
     Seq((6L, 777L), (2000L, 999L)).toDF("id", "quota")
       .createOrReplaceTempView("dml_evo_cs")
 
     // without the keyword: assigning a column the target lacks is an error
     val e = intercept[IllegalArgumentException] {
       spark.sql(
-        """MERGE INTO dml_evo t USING dml_evo_cs c ON t.id = c.id
+        """MERGE INTO graft.dml_evo t USING dml_evo_cs c ON t.id = c.id
           |WHEN MATCHED THEN UPDATE SET quota = c.quota""".stripMargin)
     }
     assert(e.getMessage.contains("unknown column quota"))
 
     spark.sql(
-      """MERGE WITH SCHEMA EVOLUTION INTO dml_evo t USING dml_evo_cs c ON t.id = c.id
+      """MERGE WITH SCHEMA EVOLUTION INTO graft.dml_evo t USING dml_evo_cs c ON t.id = c.id
         |WHEN MATCHED THEN UPDATE SET quota = c.quota
         |WHEN NOT MATCHED THEN INSERT (id, owner, quota) VALUES (c.id, 'evo', c.quota)
         |""".stripMargin)
@@ -174,76 +170,74 @@ class SqlDmlSpec extends SparkTestBase {
 
   test("VERSION AS OF and TIMESTAMP AS OF read past versions from SQL text") {
     val dir = freshTable("dml_tt")
-    SnapshotDml.register(spark, "dml_tt", dir)
     val v0Rows = rows(snap(dir))
     val tsAfterV0 = new java.sql.Timestamp(System.currentTimeMillis())
     Thread.sleep(20) // commit stamps are millis; order the commit after ts
-    spark.sql("UPDATE dml_tt SET x = 0 WHERE id <= 5")
+    spark.sql("UPDATE graft.dml_tt SET x = 0 WHERE id <= 5")
     val v1Rows = rows(snap(dir))
     assert(v1Rows != v0Rows)
 
     def q(sql: String): Set[String] =
       rows(spark.sql(s"SELECT id, owner, x, path FROM $sql"))
-    assert(q("dml_tt VERSION AS OF 0") == v0Rows, "time travel to v0 diverged")
-    assert(q("dml_tt VERSION AS OF 1") == v1Rows)
+    assert(q("graft.dml_tt VERSION AS OF 0") == v0Rows, "time travel to v0 diverged")
+    assert(q("graft.dml_tt VERSION AS OF 1") == v1Rows)
     // works with an alias and inside a bigger query
     val n = spark.sql(
-      "SELECT count(*) AS n FROM dml_tt VERSION AS OF 0 t WHERE t.x > 0")
+      "SELECT count(*) AS n FROM graft.dml_tt VERSION AS OF 0 t WHERE t.x > 0")
       .head().getLong(0)
     assert(n == 60L)
     // TIMESTAMP AS OF: a stamp between commit 0 and commit 1 resolves to
     // version 0 (latest at-or-before); the head resolves to version 1
-    assert(q(s"dml_tt TIMESTAMP AS OF '$tsAfterV0'") == v0Rows)
+    assert(q(s"graft.dml_tt TIMESTAMP AS OF '$tsAfterV0'") == v0Rows)
     val tsHead = new java.sql.Timestamp(System.currentTimeMillis())
-    assert(q(s"dml_tt TIMESTAMP AS OF '$tsHead'") == v1Rows)
+    assert(q(s"graft.dml_tt TIMESTAMP AS OF '$tsHead'") == v1Rows)
     // ... and a timestamp before the first commit is a loud error
     val e = intercept[Exception] {
-      spark.sql("SELECT * FROM dml_tt TIMESTAMP AS OF '1999-01-01'").collect()
+      spark.sql("SELECT * FROM graft.dml_tt TIMESTAMP AS OF '1999-01-01'").collect()
     }
     assert(e.getMessage.contains("predates"))
   }
 
   test("OPTIMIZE and VACUUM statements run the log maintenance ops") {
     val dir = freshTable("dml_maint")
-    SnapshotDml.register(spark, "dml_maint", dir)
-    spark.sql("DELETE FROM dml_maint WHERE id % 4 = 0") // leaves a MoR vector
+    spark.sql("DELETE FROM graft.dml_maint WHERE id % 4 = 0") // leaves a MoR vector
     val before = rows(snap(dir))
 
     // OPTIMIZE: mask materialized away, rows identical, fresh version
-    val opt = spark.sql("OPTIMIZE dml_maint").head()
+    val opt = spark.sql("OPTIMIZE graft.dml_maint").head()
     assert(opt.getLong(0) == 2L, "OPTIMIZE must commit the next version")
     assert(SnapshotLog.deletes(spark, dir, 2L).isEmpty,
       "OPTIMIZE must materialize the delete vector away")
     assert(rows(snap(dir)) == before)
 
     // OPTIMIZE ZORDER BY: still answer-invariant
-    spark.sql("OPTIMIZE dml_maint ZORDER BY (id, x)")
+    spark.sql("OPTIMIZE graft.dml_maint ZORDER BY (id, x)")
     assert(rows(snap(dir)) == before)
 
     // VACUUM RETAIN 1 VERSIONS: old manifests gone, latest readable;
     // grace keeps the young expired data files until a later sweep
-    val vac = spark.sql("VACUUM dml_maint RETAIN 1 VERSIONS").head()
+    val vac = spark.sql("VACUUM graft.dml_maint RETAIN 1 VERSIONS").head()
     assert(vac.getLong(0) == 3L, s"expected 3 expired manifests, got $vac")
     assert(SnapshotLog.versions(spark, dir) == Seq(3L))
     assert(rows(snap(dir)) == before)
 
-    // unregistered target: the text falls through to Spark's parser
-    intercept[Exception] { spark.sql("OPTIMIZE not_registered") }
+    // a name that is no snapshot table: the text falls through to
+    // Spark's parser
+    intercept[Exception] { spark.sql("OPTIMIZE graft.no_such_table") }
   }
 
   test("OPTIMIZE ... WHERE rewrites only the predicate's file footprint") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ow").toString + "/t"
+    val dir = catalogTableDir("dml_ow")
     val base = (0L until 800L).map(i => (i, i * 3)).toDF("id", "x")
     SnapshotLog.init(spark, dir, base, "id", numFiles = 8)
-    SnapshotDml.register(spark, "dml_ow", dir)
     // MoR-delete one key inside the footprint, one outside
-    spark.sql("DELETE FROM dml_ow WHERE id = 5 OR id = 500")
+    spark.sql("DELETE FROM graft.dml_ow WHERE id = 5 OR id = 500")
     val v1 = SnapshotLog.latestVersion(spark, dir)
     val files1 = SnapshotLog.manifest(spark, dir, v1)
     assert(files1.size == 8 && SnapshotLog.deletes(spark, dir, v1).size == 1)
 
-    val r = spark.sql("OPTIMIZE dml_ow WHERE id < 100").head()
+    val r = spark.sql("OPTIMIZE graft.dml_ow WHERE id < 100").head()
     val v2 = r.getLong(0)
     val files2 = SnapshotLog.manifest(spark, dir, v2)
     // exactly one 100-key file was in the footprint; the other 7 carried
@@ -252,24 +246,24 @@ class SqlDmlSpec extends SparkTestBase {
     // content identical; masked keys still absent (the vector is kept —
     // the carried files may hold masked physical rows)
     assert(SnapshotLog.deletes(spark, dir, v2).nonEmpty)
-    assert(spark.sql("SELECT count(*) AS n FROM dml_ow").head().getLong(0) == 798L)
-    assert(spark.sql("SELECT count(*) AS n FROM dml_ow WHERE id IN (5, 500)")
+    assert(spark.sql("SELECT count(*) AS n FROM graft.dml_ow").head().getLong(0) == 798L)
+    assert(spark.sql("SELECT count(*) AS n FROM graft.dml_ow WHERE id IN (5, 500)")
       .head().getLong(0) == 0L)
-    assert(spark.sql("SELECT sum(x) AS s FROM dml_ow").head().getLong(0) ==
+    assert(spark.sql("SELECT sum(x) AS s FROM graft.dml_ow").head().getLong(0) ==
       (0L until 800L).filterNot(i => i == 5 || i == 500).map(_ * 3).sum)
     // the partial rewrite is CDC-invisible (rewritten-unchanged rows
     // cancel; masked rows are masked on both sides)
     assert(SnapshotLog.cdc(spark, dir, v1, v2, "id").isEmpty)
     // no-op footprint: nothing matches, no commit
-    val r2 = spark.sql("OPTIMIZE dml_ow WHERE id > 100000").head()
+    val r2 = spark.sql("OPTIMIZE graft.dml_ow WHERE id > 100000").head()
     assert(r2.getLong(0) == v2)
     // guard: ZORDER BY + WHERE cannot combine
     val e = intercept[Exception](
-      spark.sql("OPTIMIZE dml_ow ZORDER BY (id, x) WHERE id < 10").collect())
+      spark.sql("OPTIMIZE graft.dml_ow ZORDER BY (id, x) WHERE id < 10").collect())
     assert(e.getMessage.contains("cannot combine"), e.getMessage)
     // guard: a present-but-empty WHERE is a parse error, never a silent
     // full-table compaction
-    val eEmpty = intercept[Exception](spark.sql("OPTIMIZE dml_ow WHERE "))
+    val eEmpty = intercept[Exception](spark.sql("OPTIMIZE graft.dml_ow WHERE "))
     assert(eEmpty.getMessage.contains("empty WHERE"), eEmpty.getMessage)
 
     // the re-insert trap across a partial compact: id=5's masked row was
@@ -279,57 +273,55 @@ class SqlDmlSpec extends SparkTestBase {
     // physically-absent masked key is handled)
     Seq(("insert", 5L, 555L)).toDF("op", "id", "x")
       .createOrReplaceTempView("ow_reins")
-    spark.sql("""MERGE INTO dml_ow t USING ow_reins c ON t.id = c.id
+    spark.sql("""MERGE INTO graft.dml_ow t USING ow_reins c ON t.id = c.id
                 |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
-    assert(spark.sql("SELECT x FROM dml_ow WHERE id = 5").head().getLong(0) == 555L)
+    assert(spark.sql("SELECT x FROM graft.dml_ow WHERE id = 5").head().getLong(0) == 555L)
     val vLast = SnapshotLog.latestVersion(spark, dir)
     // 500's entry must survive (its physical row lives in a carried file)
     assert(SnapshotLog.deletes(spark, dir, vLast).nonEmpty)
-    assert(spark.sql("SELECT count(*) AS n FROM dml_ow WHERE id = 500")
+    assert(spark.sql("SELECT count(*) AS n FROM graft.dml_ow WHERE id = 500")
       .head().getLong(0) == 0L)
   }
 
   test("RESTORE TO VERSION AS OF: state comes back exactly, undo is undoable, vacuumed versions refuse") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_restore").toString + "/t"
+    val dir = catalogTableDir("dml_rst")
     val base = (0L until 100L).map(i => (i, i * 2)).toDF("id", "x")
     SnapshotLog.init(spark, dir, base, "id", numFiles = 4)
-    SnapshotDml.register(spark, "dml_rst", dir)
-    spark.sql("UPDATE dml_rst SET x = 0 WHERE id % 10 = 0")
-    spark.sql("DELETE FROM dml_rst WHERE id = 7")
+    spark.sql("UPDATE graft.dml_rst SET x = 0 WHERE id % 10 = 0")
+    spark.sql("DELETE FROM graft.dml_rst WHERE id = 7")
     val v2 = SnapshotLog.latestVersion(spark, dir)
     assert(v2 == 2L)
 
-    val r = spark.sql("RESTORE TABLE dml_rst TO VERSION AS OF 0").head()
+    val r = spark.sql("RESTORE TABLE graft.dml_rst TO VERSION AS OF 0").head()
     assert(r.getLong(0) == 3L && r.getLong(1) == 0L)
-    // exact original state, through the re-pointed SELECT view
-    assert(spark.sql("SELECT sum(x) AS s FROM dml_rst").head().getLong(0) ==
+    // exact original state, read by identifier
+    assert(spark.sql("SELECT sum(x) AS s FROM graft.dml_rst").head().getLong(0) ==
       (0L until 100L).map(_ * 2).sum)
-    assert(spark.sql("SELECT count(*) AS n FROM dml_rst").head().getLong(0) == 100L)
+    assert(spark.sql("SELECT count(*) AS n FROM graft.dml_rst").head().getLong(0) == 100L)
     // the restored-over state is still time-travel readable -> undo the undo
-    spark.sql("RESTORE dml_rst TO VERSION AS OF 2")
-    assert(spark.sql("SELECT count(*) AS n FROM dml_rst").head().getLong(0) == 99L)
-    assert(spark.sql("SELECT x FROM dml_rst WHERE id = 20").head().getLong(0) == 0L)
+    spark.sql("RESTORE graft.dml_rst TO VERSION AS OF 2")
+    assert(spark.sql("SELECT count(*) AS n FROM graft.dml_rst").head().getLong(0) == 99L)
+    assert(spark.sql("SELECT x FROM graft.dml_rst WHERE id = 20").head().getLong(0) == 0L)
     // history labels the restores with their source version
-    val ops = spark.sql("DESCRIBE HISTORY dml_rst")
+    val ops = spark.sql("DESCRIBE HISTORY graft.dml_rst")
       .select("operation").collect().map(_.getString(0)).toSeq
     assert(ops.take(2) == Seq("restore from=2", "restore from=0"))
     // RESTORE TO TIMESTAMP AS OF resolves through the same commit stamps
     val tsNow = new java.sql.Timestamp(System.currentTimeMillis())
-    val rt = spark.sql(s"RESTORE dml_rst TO TIMESTAMP AS OF '$tsNow'").head()
+    val rt = spark.sql(s"RESTORE graft.dml_rst TO TIMESTAMP AS OF '$tsNow'").head()
     assert(rt.getLong(1) == 4L, s"head stamp must resolve to the latest, got $rt")
     // a vacuumed version cannot come back
-    spark.sql("VACUUM dml_rst RETAIN 2 VERSIONS")
+    spark.sql("VACUUM graft.dml_rst RETAIN 2 VERSIONS")
     val e = intercept[Exception](
-      spark.sql("RESTORE dml_rst TO VERSION AS OF 1").collect())
+      spark.sql("RESTORE graft.dml_rst TO VERSION AS OF 1").collect())
     assert(e.getMessage.contains("not committed"), e.getMessage)
   }
 
   test("DESCRIBE DETAIL summarizes the live version from metadata") {
     val dir = freshTable("dml_detail")
-    SnapshotDml.register(spark, "dml_detail", dir)
-    spark.sql("DELETE FROM dml_detail WHERE id = 1")
-    val r = spark.sql("DESCRIBE DETAIL dml_detail").head()
+    spark.sql("DELETE FROM graft.dml_detail WHERE id = 1")
+    val r = spark.sql("DESCRIBE DETAIL graft.dml_detail").head()
     assert(r.getString(0) == dir)
     assert(r.getString(1) == "id")
     assert(r.getLong(2) == 1L) // the delete's version
@@ -344,14 +336,13 @@ class SqlDmlSpec extends SparkTestBase {
 
   test("DESCRIBE DETAIL size_bytes is the live data files' bytes, not the directory's") {
     val dir = freshTable("dml_size")
-    SnapshotDml.register(spark, "dml_size", dir)
     def bytesOf(names: Seq[String]): Long =
       names.map(n => Files.size(java.nio.file.Paths.get(s"$dir/data/$n"))).sum
-    def sizeBytes: Long = spark.sql("DESCRIBE DETAIL dml_size").head().getLong(6)
+    def sizeBytes: Long = spark.sql("DESCRIBE DETAIL graft.dml_size").head().getLong(6)
     assert(sizeBytes == bytesOf(SnapshotLog.manifest(spark, dir, 0)))
     // a CoW UPDATE rewrites one file: the file only v0 references stays on
     // disk (nothing vacuumed) and must not be counted
-    spark.sql("UPDATE dml_size SET x = x + 1 WHERE id = 2")
+    spark.sql("UPDATE graft.dml_size SET x = x + 1 WHERE id = 2")
     val live = SnapshotLog.manifest(spark, dir, 1)
     val onlyPrevious = SnapshotLog.manifest(spark, dir, 0).filterNot(live.contains)
     assert(onlyPrevious.nonEmpty, "fixture degenerate: the UPDATE rewrote no file")
@@ -362,38 +353,35 @@ class SqlDmlSpec extends SparkTestBase {
   test("DESCRIBE DETAIL surfaces layout and pending evolution records") {
     import spark.implicits._
     // bucketed layout
-    val bDir = Files.createTempDirectory("graft_detb").toString + "/t"
+    val bDir = catalogTableDir("det_bkt")
     SnapshotLog.init(spark, bDir,
       (1L to 20L).map(i => (i, i)).toDF("id", "x"), "id", numFiles = 2,
       bucketBy = Some(("id", 4)))
-    SnapshotDml.register(spark, "det_bkt", bDir)
-    val rb = spark.sql("DESCRIBE DETAIL det_bkt").head()
+    val rb = spark.sql("DESCRIBE DETAIL graft.det_bkt").head()
     assert(rb.getString(11) == "bucket(4, id)", rb.getString(11))
 
     // rename chain + drop tombstone until a full rewrite retires them
-    val eDir = Files.createTempDirectory("graft_dete").toString + "/t"
+    val eDir = catalogTableDir("det_evo")
     SnapshotLog.init(spark, eDir,
       (1L to 20L).map(i => (i, i, i)).toDF("id", "a", "z"), "id", numFiles = 2)
     SnapshotLog.renameColumn(spark, eDir, "a", "b")
     SnapshotLog.dropColumn(spark, eDir, "z")
-    SnapshotDml.register(spark, "det_evo", eDir)
-    val re = spark.sql("DESCRIBE DETAIL det_evo").head()
+    val re = spark.sql("DESCRIBE DETAIL graft.det_evo").head()
     assert(re.getString(12) == "renamed:b<-a;dropped:z", re.getString(12))
     SnapshotLog.compact(spark, eDir, numFiles = 1) // full rewrite retires
-    assert(spark.sql("DESCRIBE DETAIL det_evo").head().isNullAt(12))
+    assert(spark.sql("DESCRIBE DETAIL graft.det_evo").head().isNullAt(12))
   }
 
   test("UPDATE SET c = NULL writes NULL (the __set_null sidecar), " +
     "literal, typed and computed; unassigned columns still keep base") {
     val dir = freshTable("dml_setnull")
-    SnapshotDml.register(spark, "dml_setnull", dir)
     // literal NULL
-    spark.sql("UPDATE dml_setnull SET path = NULL WHERE id = 1").collect()
+    spark.sql("UPDATE graft.dml_setnull SET path = NULL WHERE id = 1").collect()
     // typed NULL
-    spark.sql("UPDATE dml_setnull SET path = CAST(NULL AS STRING) " +
+    spark.sql("UPDATE graft.dml_setnull SET path = CAST(NULL AS STRING) " +
       "WHERE id = 2").collect()
     // computed-to-null, plus a non-null assignment in the SAME statement
-    spark.sql("UPDATE dml_setnull SET path = nullif(owner, owner), x = 777 " +
+    spark.sql("UPDATE graft.dml_setnull SET path = nullif(owner, owner), x = 777 " +
       "WHERE id = 3").collect()
     val got = snap(dir).where(col("id") <= 4).orderBy("id")
       .select("id", "owner", "x", "path").collect()
@@ -407,17 +395,16 @@ class SqlDmlSpec extends SparkTestBase {
       (4L, "u1", 40L, "/p/4")  // untouched row
     ), s"SET NULL semantics: $got")
     // a computed value that happens to be non-null still overwrites
-    spark.sql("UPDATE dml_setnull SET path = concat(owner, '!') " +
+    spark.sql("UPDATE graft.dml_setnull SET path = concat(owner, '!') " +
       "WHERE id = 4").collect()
     assert(snap(dir).where(col("id") === 4).head().getString(3) == "u1!")
   }
 
   test("guard rails reject what the changeset semantics cannot honor") {
     val dir = freshTable("dml_guard")
-    SnapshotDml.register(spark, "dml_guard", dir)
     // assigning the key column
     val e2 = intercept[IllegalArgumentException] {
-      spark.sql("UPDATE dml_guard SET id = 99 WHERE id = 1")
+      spark.sql("UPDATE graft.dml_guard SET id = 99 WHERE id = 1")
     }
     assert(e2.getMessage.contains("key"))
     // target-column references outside the merge condition
@@ -425,7 +412,7 @@ class SqlDmlSpec extends SparkTestBase {
     Seq((1L, 5L)).toDF("id", "x").createOrReplaceTempView("dml_guard_cs")
     val e3 = intercept[IllegalArgumentException] {
       spark.sql(
-        """MERGE INTO dml_guard t USING dml_guard_cs c ON t.id = c.id
+        """MERGE INTO graft.dml_guard t USING dml_guard_cs c ON t.id = c.id
           |WHEN MATCHED THEN UPDATE SET x = t.x + c.x""".stripMargin)
     }
     assert(e3.getMessage.contains("target column"))
@@ -434,7 +421,7 @@ class SqlDmlSpec extends SparkTestBase {
     // could address, so it fails per-action, loudly
     val e4 = intercept[IllegalArgumentException] {
       spark.sql(
-        """MERGE INTO dml_guard t USING dml_guard_cs c ON t.id = c.id
+        """MERGE INTO graft.dml_guard t USING dml_guard_cs c ON t.id = c.id
           |WHEN NOT MATCHED AND c.x > 0 THEN INSERT (id, x) VALUES (c.id, c.x)
           |WHEN NOT MATCHED THEN INSERT (x) VALUES (c.x)""".stripMargin)
     }
@@ -443,13 +430,13 @@ class SqlDmlSpec extends SparkTestBase {
     Seq((5L, "/s")).toDF("x", "path").createOrReplaceTempView("dml_guard_nokey")
     val e5 = intercept[IllegalArgumentException] {
       spark.sql(
-        """MERGE INTO dml_guard t USING dml_guard_nokey c ON t.id = c.x
+        """MERGE INTO graft.dml_guard t USING dml_guard_nokey c ON t.id = c.x
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     }
     assert(e5.getMessage.contains("key column id") &&
       e5.getMessage.contains("INSERT *"))
-    // DML over an UNREGISTERED table parses to Spark's own plan (and
-    // fails Spark's analysis, not our rewrite)
+    // DML over a name that is no graft-catalog table parses to Spark's
+    // own plan (and fails Spark's analysis, not our rewrite)
     intercept[Exception] {
       spark.sql("DELETE FROM not_a_snapshot WHERE x = 1")
     }
@@ -460,12 +447,11 @@ class SqlDmlSpec extends SparkTestBase {
   test("CHECK constraints: add validates existing rows, every write path " +
       "enforces on its written rows and aborts with the count") {
     val dir = freshTable("dml_cons")
-    SnapshotDml.register(spark, "dml_cons", dir)
-    assert(spark.sql("ALTER TABLE dml_cons ADD CONSTRAINT x_pos CHECK (x > 0)")
+    assert(spark.sql("ALTER TABLE graft.dml_cons ADD CONSTRAINT x_pos CHECK (x > 0)")
       .head().getLong(0) == 1L)
     // add-time validation: existing rows violating → no commit
     val eAdd = intercept[IllegalStateException] {
-      spark.sql("ALTER TABLE dml_cons ADD CONSTRAINT x_small CHECK (x < 100)")
+      spark.sql("ALTER TABLE graft.dml_cons ADD CONSTRAINT x_small CHECK (x < 100)")
         .collect()
     }
     assert(eAdd.getMessage.contains("existing row(s) violate"))
@@ -481,17 +467,17 @@ class SqlDmlSpec extends SparkTestBase {
         "a rejected write must not commit")
     }
     // UPDATE (CoW merge path)
-    rejected("UPDATE dml_cons SET x = -5 WHERE id = 3", "1 row(s)")
+    rejected("UPDATE graft.dml_cons SET x = -5 WHERE id = 3", "1 row(s)")
     // MERGE insert + MERGE update, each with its own count
     import spark.implicits._
     Seq((100L, -1L), (101L, -2L)).toDF("id", "x")
       .createOrReplaceTempView("dml_cons_bad")
     rejected(
-      """MERGE INTO dml_cons t USING dml_cons_bad c ON t.id = c.id
+      """MERGE INTO graft.dml_cons t USING dml_cons_bad c ON t.id = c.id
         |WHEN NOT MATCHED THEN INSERT (id, x) VALUES (c.id, c.x)""".stripMargin,
       "2 row(s)")
     // a PASSING write commits normally
-    spark.sql("UPDATE dml_cons SET x = x + 1 WHERE id = 3").collect()
+    spark.sql("UPDATE graft.dml_cons SET x = x + 1 WHERE id = 3").collect()
     assert(SnapshotLog.latestVersion(spark, dir) == 2L)
     // INSERT OVERWRITE path enforces too
     val eOw = intercept[IllegalStateException] {
@@ -500,31 +486,30 @@ class SqlDmlSpec extends SparkTestBase {
     }
     assert(eOw.getMessage.contains("INSERT OVERWRITE"))
     // DROP CONSTRAINT lifts enforcement; IF EXISTS of a missing one no-ops
-    spark.sql("ALTER TABLE dml_cons DROP CONSTRAINT x_pos").collect()
-    spark.sql("ALTER TABLE dml_cons DROP CONSTRAINT IF EXISTS nope").collect()
-    spark.sql("UPDATE dml_cons SET x = -5 WHERE id = 3").collect()
+    spark.sql("ALTER TABLE graft.dml_cons DROP CONSTRAINT x_pos").collect()
+    spark.sql("ALTER TABLE graft.dml_cons DROP CONSTRAINT IF EXISTS nope").collect()
+    spark.sql("UPDATE graft.dml_cons SET x = -5 WHERE id = 3").collect()
     assert(snap(dir).where(col("id") === 3).head().getAs[Long]("x") == -5L)
   }
 
   test("NOT NULL rides the constraint machinery; constraints survive " +
       "RENAME COLUMN and block DROP COLUMN") {
     val dir = freshTable("dml_nn")
-    SnapshotDml.register(spark, "dml_nn", dir)
-    spark.sql("ALTER TABLE dml_nn ALTER COLUMN owner SET NOT NULL").collect()
+    spark.sql("ALTER TABLE graft.dml_nn ALTER COLUMN owner SET NOT NULL").collect()
     val eNn = intercept[IllegalStateException] {
-      spark.sql("UPDATE dml_nn SET owner = nullif(owner, owner) WHERE id = 2")
+      spark.sql("UPDATE graft.dml_nn SET owner = nullif(owner, owner) WHERE id = 2")
         .collect()
     }
     assert(eNn.getMessage.contains("notnull_owner CHECK (owner IS NOT NULL)"))
-    spark.sql("ALTER TABLE dml_nn ALTER COLUMN owner DROP NOT NULL").collect()
-    spark.sql("UPDATE dml_nn SET owner = nullif(owner, owner) WHERE id = 2")
+    spark.sql("ALTER TABLE graft.dml_nn ALTER COLUMN owner DROP NOT NULL").collect()
+    spark.sql("UPDATE graft.dml_nn SET owner = nullif(owner, owner) WHERE id = 2")
       .collect()
     assert(snap(dir).where(col("id") === 2).head().isNullAt(1))
 
     // rename: the expr follows the column (and notnull_<c> tracks its
     // name); enforcement keeps working under the new name
-    spark.sql("ALTER TABLE dml_nn ADD CONSTRAINT x_pos CHECK (x > 0)").collect()
-    spark.sql("ALTER TABLE dml_nn ALTER COLUMN x SET NOT NULL").collect()
+    spark.sql("ALTER TABLE graft.dml_nn ADD CONSTRAINT x_pos CHECK (x > 0)").collect()
+    spark.sql("ALTER TABLE graft.dml_nn ALTER COLUMN x SET NOT NULL").collect()
     SnapshotLog.renameColumn(spark, dir, "x", "amount")
     val v = SnapshotLog.latestVersion(spark, dir)
     val cons = SnapshotLog.constraintsOf(spark, dir, v).toMap
@@ -532,7 +517,7 @@ class SqlDmlSpec extends SparkTestBase {
       s"expr must follow the rename, got ${cons("x_pos")}")
     assert(cons.contains("notnull_amount") && !cons.contains("notnull_x"))
     val eRn = intercept[IllegalStateException] {
-      spark.sql("UPDATE dml_nn SET amount = -1 WHERE id = 4").collect()
+      spark.sql("UPDATE graft.dml_nn SET amount = -1 WHERE id = 4").collect()
     }
     assert(eRn.getMessage.contains("x_pos"))
     // DROP COLUMN of a referenced column is rejected with the fix
@@ -549,7 +534,7 @@ class SqlDmlSpec extends SparkTestBase {
     assert(eRs.getMessage.contains("x_pos") &&
       eRs.getMessage.contains("DROP CONSTRAINT"))
     // DESCRIBE DETAIL surfaces the live set
-    val detail = spark.sql("DESCRIBE DETAIL dml_nn")
+    val detail = spark.sql("DESCRIBE DETAIL graft.dml_nn")
       .select("constraints").head().getString(0)
     assert(detail.contains("x_pos CHECK"))
   }
@@ -557,9 +542,8 @@ class SqlDmlSpec extends SparkTestBase {
   test("constraints survive RESTORE and OPTIMIZE when the schema still " +
       "resolves them (the contract, not the state)") {
     val dir = freshTable("dml_cons_rs")
-    SnapshotDml.register(spark, "dml_cons_rs", dir)
-    spark.sql("UPDATE dml_cons_rs SET x = x + 1 WHERE id = 7").collect() // v1
-    spark.sql("ALTER TABLE dml_cons_rs ADD CONSTRAINT x_pos CHECK (x > 0)")
+    spark.sql("UPDATE graft.dml_cons_rs SET x = x + 1 WHERE id = 7").collect() // v1
+    spark.sql("ALTER TABLE graft.dml_cons_rs ADD CONSTRAINT x_pos CHECK (x > 0)")
       .collect() // v2
     SnapshotLog.restore(spark, dir, 1L) // v3: old rows, live contract
     val v = SnapshotLog.latestVersion(spark, dir)
@@ -568,7 +552,7 @@ class SqlDmlSpec extends SparkTestBase {
     assert(SnapshotLog.constraintsOf(spark, dir,
       SnapshotLog.latestVersion(spark, dir)).toMap.contains("x_pos"))
     val e = intercept[IllegalStateException] {
-      spark.sql("UPDATE dml_cons_rs SET x = -1 WHERE id = 7").collect()
+      spark.sql("UPDATE graft.dml_cons_rs SET x = -1 WHERE id = 7").collect()
     }
     assert(e.getMessage.contains("x_pos"))
   }
