@@ -7,6 +7,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 import graft.sources.{Manifest, Stamps}
 import graft.sources.Manifest.{Carry, Written}
 
+/** What a copy-on-write commit did to the table's files. */
+final case class CowMergeReport(
+    nFilesBefore: Int,    // data files in the table before the commit
+    nRewritten: Int,      // files read and rewritten (the commit's footprint)
+    nUntouched: Int,      // files carried over byte-identical (referenced, never copied)
+    nNewFiles: Int)       // files written
+
 /** A committed table version: the log version number plus the file-level
   * merge report that produced it (v0's report is all-new-files).
   */
@@ -60,13 +67,13 @@ final class ConcurrentCommitException(msg: String)
   *  - MERGE-ON-READ DELETES: [[deleteKeys]] commits a key-list delete
   *    vector instead of rewriting anything — dropping 0.01% of a 100 TB
   *    table is one small parquet write + one manifest create; readers
-  *    pay one anti-join until [[compact]] materializes. The one key-mask
+  *    pay one anti-join until [[optimize]] materializes. The one key-mask
   *    subtlety — re-inserting a masked key — is handled by [[merge]]
   *    with a scoped CoW of the masked row's file (mask purged only after
   *    its physical row is gone), which is exactly the invariant that
   *    keeps [[cdc]] sound across delete vectors.
-  *  - [[compact]] (OPTIMIZE) rewrites the logical table into fresh
-  *    key-clustered files as a NEW version — masked rows materialized
+  *  - [[optimize]] (OPTIMIZE) rewrites the logical table into fresh
+  *    clustered files as a NEW version — masked rows materialized
   *    away, small files coalesced, old versions untouched.
   *  - [[vacuum]] deletes data files no RETAINED manifest references
   *    (expired versions + crash orphans) — retention is a policy knob,
@@ -462,7 +469,7 @@ object SnapshotLog {
   // ---- Per-file statistics -------------------------------------------
   //
   // Every committing op reads the footers of the files it just wrote,
-  // once ([[newFileStamps]]: commit-footprint-sized work), and stamps
+  // once ([[stage]]: commit-footprint-sized work), and stamps
   // their typed stamps ([[Stamps]]) into the manifest; reference-carrying
   // commits carry the stamps of the files they keep ([[Manifest.next]]).
   // Merge planning, point lookups,
@@ -870,37 +877,61 @@ object SnapshotLog {
     */
   private[graft] val PartDirPrefix = "pt_"
 
-  /** [[stageWith]] in the default key-clustered layout (narrow footer
-    * min/max on the key — what CoW planning and [[lookupKeys]] prune on);
-    * with `pcols`, the same clustering INSIDE a Hive-style partition tree
-    * (range partitioning over (pcols, key) gives one file per partition
-    * value per range, keys clustered within each).
+  /** The one range-clustered file writer: range-partition `df` into
+    * `numFiles` partitions on `order`, sort each partition by it, drop
+    * the helper columns `drop` and write Hive-style directories from
+    * `dirs`. Each file then holds one contiguous slice of `order`, so
+    * its footer min/max on the leading columns stays narrow — what CoW
+    * planning, [[lookupKeys]] and read-side skipping prune on. Table
+    * writes reach it through [[stage]].
     */
-  private def stageFiles(spark: SparkSession, table: Path, df: DataFrame,
-      key: String, numFiles: Int, pcols: Seq[String] = Nil,
-      bucket: Option[(String, Int)] = None): Seq[String] =
-    bucket match {
-      case Some((c, n)) => stageWith(spark, table) { out =>
-        // bucket dir + key order: each bucket directory's files stay
-        // key-sorted, so range stamps still prune WITHIN a bucket
-        val withDir = df.withColumn(BucketDirCol, bucketExpr(c, n))
-        withDir.repartitionByRange(numFiles, col(BucketDirCol), col(key))
-          .sortWithinPartitions(col(BucketDirCol), col(key))
-          .write.partitionBy(BucketDirCol).mode("overwrite").parquet(out)
-      }
-      case None if pcols.isEmpty =>
-        stageWith(spark, table)(out => CowMerge.writeKeyed(df, key, numFiles, out))
-      case None => stageWith(spark, table) { out =>
-        val dirCols = pcols.map(c => PartDirPrefix + c)
-        val withDirs = pcols.zip(dirCols).foldLeft(df) { case (d, (c, dc)) =>
-          d.withColumn(dc, col(c))
-        }
-        val order = pcols.map(col) :+ col(key)
-        withDirs.repartitionByRange(numFiles, order: _*)
-          .sortWithinPartitions(order: _*)
-          .write.partitionBy(dirCols: _*).mode("overwrite").parquet(out)
+  private[graft] def writeClustered(df: DataFrame, order: Seq[String],
+      numFiles: Int, out: String, dirs: Seq[String] = Nil,
+      drop: Seq[String] = Nil): Unit =
+    df.repartitionByRange(numFiles, order.map(col): _*)
+      .sortWithinPartitions(order.map(col): _*)
+      .drop(drop: _*)
+      .write.partitionBy(dirs: _*).mode("overwrite").parquet(out)
+
+  /** Stage `df` as new data files in `layout`'s clustering
+    * ([[writeClustered]]) and stamp them:
+    *  - flat: key order;
+    *  - identity partitions: `pt_<col>` directories, (pcols, key) order —
+    *    one file per partition value per range;
+    *  - hash buckets: bucket directories, (bucket, key) order — stamps
+    *    still prune WITHIN a bucket;
+    *  - `zorder`: the scaled Morton value of those columns
+    *    ([[ZOrder.withZ]]), flat.
+    * Then ONE footer pass over the new files — the only footer read each
+    * file ever needs: typed `rows=`/`cstats=` stamps for every supported
+    * column, key first ([[Stamps]]), plus the commit's Bloom sidecar
+    * under [[BloomIndexKey]].
+    */
+  private def stage(spark: SparkSession, table: Path, df: DataFrame,
+      key: String, numFiles: Int, schema: StructType, layout: Manifest,
+      zorder: Seq[String] = Nil): Written = {
+    val names = stageWith(spark, table) { out =>
+      if (zorder.nonEmpty)
+        writeClustered(ZOrder.withZ(df, zorder), Seq(ZOrder.ZCol), numFiles,
+          out, drop = Seq(ZOrder.ZCol))
+      else layout.bucket match {
+        case Some((c, n)) =>
+          writeClustered(df.withColumn(BucketDirCol, bucketExpr(c, n)),
+            Seq(BucketDirCol, key), numFiles, out, dirs = Seq(BucketDirCol))
+        case None =>
+          val pcols = layout.partCols
+          val dirCols = pcols.map(PartDirPrefix + _)
+          val withDirs = pcols.zip(dirCols).foldLeft(df) { case (d, (c, dc)) =>
+            d.withColumn(dc, col(c))
+          }
+          writeClustered(withDirs, pcols :+ key, numFiles, out, dirs = dirCols)
       }
     }
+    val stats = Stamps.read(spark,
+      names.map(n => n -> new Path(dataDir(table), n)), schema, key)
+    val rowsOf = stats.flatMap { case (n, st) => st.rows.map(n -> _) }
+    Written(names, stats, writeBloomSidecar(spark, table, names, key, rowsOf))
+  }
 
   /** The table's partition columns, as stamped at [[init]] and carried by
     * every commit; Nil for unpartitioned tables.
@@ -980,22 +1011,6 @@ object SnapshotLog {
       }
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values.toArray)
-  }
-
-  /** ONE footer pass over just-written files — the only footer read each
-    * file ever needs, paid at commit time by the writer that produced
-    * it: typed `rows=`/`cstats=` lines for every supported column, key
-    * first ([[Stamps]] — what planning, plain reads and predicate-scoped
-    * maintenance prune on, null counts included). With [[BloomIndexKey]]
-    * set, additionally builds the commit's per-file Bloom sidecar (one
-    * extra narrow pass over the NEW files' key column).
-    */
-  private def newFileStamps(spark: SparkSession, table: Path,
-      names: Seq[String], key: String, schema: StructType): Written = {
-    val stats = Stamps.read(spark,
-      names.map(n => n -> new Path(dataDir(table), n)), schema, key)
-    val rowsOf = stats.flatMap { case (n, st) => st.rows.map(n -> _) }
-    Written(names, stats, writeBloomSidecar(spark, table, names, key, rowsOf))
   }
 
   // ---- Per-file Bloom key stamps -------------------------------------
@@ -1175,12 +1190,11 @@ object SnapshotLog {
       require(!c.contains(',') && !c.contains(':') && !c.contains('/'),
         s"bucket column name not stamp-safe: '$c'")
     }
-    val names = stageFiles(spark, table, df, key, numFiles, partitionBy, bucketBy)
-    val written = newFileStamps(spark, table, names, key, df.schema)
+    val m0 = Manifest(key = Some(key), partCols = partitionBy, bucket = bucketBy)
+    val written = stage(spark, table, df, key, numFiles, df.schema, m0)
     commit(spark, table, 0L,
-      Manifest(key = Some(key), partCols = partitionBy, bucket = bucketBy)
-        .next("init", key, df.schema, Carry.Replace(written), tags))
-    SnapshotCommit(0L, CowMergeReport(0, 0, 0, names.size))
+      m0.next("init", key, df.schema, Carry.Replace(written), tags))
+    SnapshotCommit(0L, CowMergeReport(0, 0, 0, written.files.size))
   }
 
   /** The merge-source materialization decision (see the comment at the
@@ -1320,7 +1334,8 @@ object SnapshotLog {
       case (Some(dk), Some(mi)) if !ins.isEmpty && !mi.isEmpty =>
         val remaining = dk.join(insKeys, Seq(key), "left_anti")
         if (remaining.isEmpty) Nil
-        else stageFiles(spark, table, remaining.select(col(key).cast(keyType)), key, 1)
+        else stageWith(spark, table)(
+          writeClustered(remaining.select(col(key).cast(keyType)), Seq(key), 1, _))
       case _ => delNames
     }
 
@@ -1334,19 +1349,15 @@ object SnapshotLog {
     // CoW footprint + admitted inserts — never the whole table) before
     // any file is staged
     newData.foreach(df => enforceConstraints(spark, tableDir, m, df, "MERGE"))
-    val newNames = newData match {
-      case Some(df) => stageFiles(spark, table, df, key,
-        math.max(1, affected.size), m.partCols, pb)
-      case None     => Nil
-    }
     // stat stamps: untouched files carry theirs forward; only the files
     // this merge WROTE get a footer read
-    val written = newFileStamps(spark, table, newNames, key, evolved)
+    val written = newData.fold(Written(Nil, Map.empty, Nil))(df =>
+      stage(spark, table, df, key, math.max(1, affected.size), evolved, m))
     commit(spark, table, v + 1,
       m.next("merge", key, evolved, Carry.Keep(untouchedNames, written), tags)
         .copy(deletes = newDelNames))
-    SnapshotCommit(v + 1,
-      CowMergeReport(names.size, affected.size, untouchedNames.size, newNames.size))
+    SnapshotCommit(v + 1, CowMergeReport(names.size, affected.size,
+      untouchedNames.size, written.files.size))
     } finally { if (doMat) csM.unpersist(blocking = false); () }
   }
 
@@ -1363,27 +1374,18 @@ object SnapshotLog {
     val v = latestVersion(spark, tableDir)
     val m = manifestOf(spark, tableDir, v)
     enforceConstraints(spark, tableDir, m, df, "INSERT OVERWRITE")
-    val names = stageFiles(spark, table, df, key, numFiles, m.partCols, m.bucket)
-    val written = newFileStamps(spark, table, names, key, df.schema)
-    commitReplace(spark, table, v, m,
+    val written = stage(spark, table, df, key, numFiles, df.schema, m)
+    commit(spark, table, v + 1,
       m.next("overwrite", key, df.schema, Carry.Replace(written), tags))
-  }
-
-  /** Commit `next`, which replaces version `v`'s whole file set
-    * (`base`'s files), as version `v + 1`.
-    */
-  private def commitReplace(spark: SparkSession, table: Path, v: Long,
-      base: Manifest, next: Manifest): SnapshotCommit = {
-    commit(spark, table, v + 1, next)
     SnapshotCommit(v + 1,
-      CowMergeReport(base.files.size, base.files.size, 0, next.files.size))
+      CowMergeReport(m.files.size, m.files.size, 0, written.files.size))
   }
 
   /** MERGE-ON-READ delete: commit `keys` as a delete vector — NO data
     * file is rewritten (every data line is carried by reference; the
     * report shows zero rewrites), so dropping 0.01% of a 100 TB table is
     * one small parquet write + one manifest create, against CoW's
-    * footprint rewrite. Readers pay one anti-join until [[compact]]
+    * footprint rewrite. Readers pay one anti-join until [[optimize]]
     * materializes. Successive calls consolidate into ONE vector file
     * (cost stays O(deleted keys), not O(delete commits)). Deleting an
     * absent key is a harmless no-op mask, same as MERGE's delete
@@ -1403,77 +1405,96 @@ object SnapshotLog {
       if (old.isEmpty) given.distinct()
       else readDeleteKeys(spark, table, old, key, Some(keyType))
         .unionByName(given).distinct()
-    val newDel = stageFiles(spark, table, all, key, 1)
+    val newDel = stageWith(spark, table)(writeClustered(all, Seq(key), 1, _))
     // every data file is carried by reference — its stat stamps too
     commitMetadata(spark, tableDir, v,
       m.next("delete", key, schema).copy(deletes = newDel))
   }
 
-  /** OPTIMIZE: rewrite the current logical table (delete vectors
-    * materialized, small files coalesced) into `numFiles` key-clustered
-    * files and commit it as the next version — old versions stay
-    * readable; the rewritten-away bytes are reclaimed by [[vacuum]]'s
-    * retention policy, not by this call.
-    */
-  def compact(spark: SparkSession, tableDir: String, numFiles: Int): SnapshotCommit = {
-    val table = new Path(tableDir)
-    val v = latestVersion(spark, tableDir)
-    val m = manifestOf(spark, tableDir, v)
-    val key = keyOf(m, tableDir, v)
-    val data = read(spark, tableDir, v)
-    val newNames = stageFiles(spark, table, data, key, numFiles, m.partCols, m.bucket)
-    val written = newFileStamps(spark, table, newNames, key, data.schema)
-    commitReplace(spark, table, v, m,
-      m.next("optimize", key, data.schema, Carry.Replace(written)))
-  }
-
-  /** Total bytes of the data files `names` of `tableDir` — what OPTIMIZE
-    * sizes its rewrite from and DESCRIBE DETAIL reports; one status call
-    * per file, never a directory listing.
-    */
-  private[graft] def dataBytes(spark: SparkSession, tableDir: String, names: Seq[String]): Long = {
-    val table = new Path(tableDir)
-    val hfs = fs(spark, table)
-    names.map(n => hfs.getFileStatus(new Path(dataDir(table), n)).getLen).sum
-  }
-
-  /** Output file count of a compaction rewriting `names`: their bytes
-    * over `targetBytes`, floored at 1.
-    */
-  private[graft] def compactFileCount(spark: SparkSession, tableDir: String,
-      names: Seq[String], targetBytes: Long): Int = {
-    val bytes = dataBytes(spark, tableDir, names)
-    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-  }
-
-  /** OPTIMIZE ... WHERE: FOOTPRINT-BOUNDED compaction — rewrite only the
-    * files whose stamped intervals might hold rows matching `pred` (the
-    * same tri-state evaluation [[read]]'s FileIndex prunes with, run at
-    * the write side); everything else is carried by reference. On a
-    * 100 TB table whose hot key range is 0.5% of the files, the
-    * maintenance job costs 0.5% of a full OPTIMIZE — the operational
-    * difference between "compaction runs nightly" and "compaction can't
-    * run at all". Unstamped files are conservatively REWRITTEN (they
-    * might match; rewriting also gives them stamps).
+  /** OPTIMIZE: rewrite the table's footprint into `numFiles(footprint)`
+    * freshly clustered files ([[stage]]) and commit them as the next
+    * version. Old versions stay readable; the rewritten-away bytes are
+    * reclaimed by [[vacuum]]'s retention policy, not by this call.
     *
-    * Delete vectors: masked rows inside the rewritten footprint are
-    * materialized away, but the VECTOR IS KEPT — carried files may still
-    * hold masked physical rows. A stale vector entry for a physically
-    * absent key is read-correct (the anti-join misses nothing) and
-    * re-insert-correct ([[merge]]'s scoped-CoW purge re-checks
-    * physically); the vector drops at the next full [[compact]].
-    * Returns a no-op (current version) when no file matches.
+    *  - No `where`: the footprint is every live file. Masked rows are
+    *    materialized away, and the commit REPLACES the file set: delete
+    *    vectors, Bloom sidecars and retired evolution chains drop.
+    *  - `where`: FOOTPRINT-BOUNDED — only the files whose stamped
+    *    intervals might hold rows matching the predicate (the same
+    *    tri-state evaluation [[read]]'s FileIndex prunes with, run at the
+    *    write side) plus, on a bucketed table, only the bucket
+    *    directories a point predicate pins. Everything else is carried by
+    *    reference, so a maintenance job on a 100 TB table whose hot key
+    *    range is 0.5% of the files costs 0.5% of a full OPTIMIZE.
+    *    Unstamped files are conservatively rewritten (they might match;
+    *    rewriting also gives them stamps). Masked rows inside the
+    *    footprint are materialized away, but the VECTOR IS KEPT even when
+    *    the footprint is every file: carried files may still hold masked
+    *    physical rows, and a stale entry for a physically absent key is
+    *    read-correct (the anti-join misses nothing) and re-insert-correct
+    *    ([[merge]]'s scoped-CoW purge re-checks physically). An empty
+    *    footprint commits nothing and returns the current version.
+    *  - `zorder`: the rewritten files cluster on the MORTON CURVE of
+    *    those integer columns instead of the key ([[ZOrder.withZ]]; the
+    *    per-dimension bit budget shrinks as `62 / k`), so footer min/max
+    *    is narrow on EVERY dimension and scans filtered on any one of
+    *    them skip files. Not on partitioned or bucketed tables (the
+    *    rewrite would break their directory trees), and not with `where`
+    *    (a partial rewrite would leave mixed clustering).
+    *
+    * `numFiles` sizes the rewrite from the footprint's file names: the
+    * SQL command's byte rule ([[graft.sql.SnapshotDml.fileCount]]), or a
+    * constant.
     */
-  def compactWhere(spark: SparkSession, tableDir: String,
-      pred: org.apache.spark.sql.catalyst.expressions.Expression,
-      targetBytes: Long): SnapshotCommit = {
+  def optimize(spark: SparkSession, tableDir: String,
+      numFiles: Seq[String] => Int,
+      where: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
+      zorder: Seq[String] = Nil): SnapshotCommit = {
     val table = new Path(tableDir)
     val v = latestVersion(spark, tableDir)
     val m = manifestOf(spark, tableDir, v)
     val key = keyOf(m, tableDir, v)
-    val names = m.files
+    if (zorder.nonEmpty) {
+      require(where.isEmpty, "OPTIMIZE ZORDER cannot take a predicate: a " +
+        "partial rewrite of a Morton layout would leave mixed clustering")
+      require(m.partCols.isEmpty,
+        "OPTIMIZE ZORDER is not supported on a partitioned table: a Morton " +
+          "rewrite would break the Hive partition tree; compact per " +
+          "partition (OPTIMIZE ... WHERE) instead")
+      require(m.bucket.isEmpty,
+        "OPTIMIZE ZORDER is not supported on a bucketed table: a Morton " +
+          "rewrite would break the hash-bucket directories")
+    }
+    val (hit, carried) = where.fold((m.files, Seq.empty[String]))(footprint(spark, m, _))
+    if (where.nonEmpty && hit.isEmpty)
+      return SnapshotCommit(v, CowMergeReport(m.files.size, 0, m.files.size, 0))
+    val (data, schema) = where match {
+      case None =>
+        val all = read(spark, tableDir, v)
+        (all, all.schema)
+      case Some(_) =>
+        val schema = schemaOf(spark, tableDir, v)
+        val hitData = readEra(spark, schema, m.physMap,
+          hit.map(n => new Path(dataDir(table), n).toString))
+        (if (m.deletes.isEmpty) hitData
+        else hitData.join(readDeleteKeys(spark, table, m.deletes, key,
+          Some(schema(key).dataType)), Seq(key), "left_anti"), schema)
+    }
+    val written = stage(spark, table, data, key, numFiles(hit), schema, m, zorder)
+    val (op, carry) =
+      if (where.nonEmpty) ("optimize-where", Carry.Keep(carried, written))
+      else if (zorder.nonEmpty) ("optimize-zorder", Carry.Replace(written))
+      else ("optimize", Carry.Replace(written))
+    commit(spark, table, v + 1, m.next(op, key, schema, carry))
+    SnapshotCommit(v + 1,
+      CowMergeReport(m.files.size, hit.size, carried.size, written.files.size))
+  }
+
+  /** [[optimize]]'s WHERE footprint: (files to rewrite, files to carry). */
+  private def footprint(spark: SparkSession, m: Manifest,
+      pred: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[String], Seq[String]) = {
     val resolver = spark.sessionState.conf.resolver
-    val (stampHit, stampCarried) = names.partition { n =>
+    val (stampHit, stampCarried) = m.files.partition { n =>
       m.stamps.get(n) match {
         case Some(fsStamp) if fsStamp.nonEmpty =>
           !graft.sources.SnapshotFileIndex.evalOnStamps(pred, fsStamp, resolver)
@@ -1496,24 +1517,17 @@ object SnapshotLog {
         }
       case None => Set.empty[String]
     }
-    val hit = stampHit.filterNot(bucketSkipped)
-    val carried = stampCarried ++ stampHit.filter(bucketSkipped)
-    if (hit.isEmpty)
-      return SnapshotCommit(v, CowMergeReport(names.size, 0, names.size, 0))
-    val numFiles = compactFileCount(spark, tableDir, hit, targetBytes)
-    val schema = schemaOf(spark, tableDir, v)
-    val data0 = readEra(spark, schema, m.physMap,
-      hit.map(n => new Path(dataDir(table), n).toString))
-    val data =
-      if (m.deletes.isEmpty) data0
-      else data0.join(readDeleteKeys(spark, table, m.deletes, key,
-        Some(schema(key).dataType)), Seq(key), "left_anti")
-    val newNames = stageFiles(spark, table, data, key, numFiles, m.partCols, m.bucket)
-    val written = newFileStamps(spark, table, newNames, key, schema)
-    commit(spark, table, v + 1,
-      m.next("optimize-where", key, schema, Carry.Keep(carried, written)))
-    SnapshotCommit(v + 1,
-      CowMergeReport(names.size, hit.size, carried.size, newNames.size))
+    (stampHit.filterNot(bucketSkipped), stampCarried ++ stampHit.filter(bucketSkipped))
+  }
+
+  /** Total bytes of the data files `names` of `tableDir` — what OPTIMIZE
+    * sizes its rewrite from and DESCRIBE DETAIL reports; one status call
+    * per file, never a directory listing.
+    */
+  private[graft] def dataBytes(spark: SparkSession, tableDir: String, names: Seq[String]): Long = {
+    val table = new Path(tableDir)
+    val hfs = fs(spark, table)
+    names.map(n => hfs.getFileStatus(new Path(dataDir(table), n)).getLen).sum
   }
 
   /** The shared CDC machinery: the A-part full-outer join over the two
@@ -1646,53 +1660,6 @@ object SnapshotLog {
     (joined, payload, bRows)
   }
 
-  /** OPTIMIZE ZORDER: like [[compact]], but the rewritten files are
-    * clustered on the MORTON CURVE of two integer dimensions
-    * ([[ZOrder.writeClustered]]) instead of the key alone — after it,
-    * footer min/max is narrow on BOTH columns, so scans filtered on
-    * either dimension skip most files (a key-sorted layout only ever
-    * skips on the key; the second dimension spans the whole domain in
-    * every file). Same commit protocol, same CDC-invisibility, masks
-    * materialized away. `a` is typically the table key — [[lookupKeys]]
-    * still prunes on it, over curve-segmented (wider but bounded)
-    * per-file ranges.
-    */
-  def compactZ(spark: SparkSession, tableDir: String, a: String, b: String,
-      numFiles: Int): SnapshotCommit =
-    compactZ(spark, tableDir, Seq(a, b), numFiles)
-
-  /** [[compactZ]] over k >= 2 dimensions ([[ZOrder.writeClusteredN]]) —
-    * the per-dimension bit budget shrinks as `62 / k` (grid coarsens,
-    * locality and correctness hold); typed cstats stamps cover every
-    * dimension, so scans filtered on ANY of the k columns skip files.
-    */
-  def compactZ(spark: SparkSession, tableDir: String, cols: Seq[String],
-      numFiles: Int): SnapshotCommit = {
-    val table = new Path(tableDir)
-    val v = latestVersion(spark, tableDir)
-    val m = manifestOf(spark, tableDir, v)
-    val key = keyOf(m, tableDir, v)
-    require(m.partCols.isEmpty,
-      "OPTIMIZE ZORDER is not supported on a partitioned table: a Morton " +
-        "rewrite would break the Hive partition tree; compact per " +
-        "partition (OPTIMIZE ... WHERE) instead")
-    require(m.bucket.isEmpty,
-      "OPTIMIZE ZORDER is not supported on a bucketed table: a Morton " +
-        "rewrite would break the hash-bucket directories")
-    val data = read(spark, tableDir, v)
-    val newNames = stageWith(spark, table)(out =>
-      ZOrder.writeClusteredN(data, cols, numFiles, out))
-    // key ranges of z-ordered files are curve-segmented (wider but
-    // bounded) — stamped from the same one-time footer read. The typed
-    // cstats stamps cover EVERY supported column, BOTH Morton dimensions
-    // included, so SnapshotFileIndex-backed reads skip on either one (a
-    // filter on `b` alone prunes — the payoff a key-sorted layout can
-    // never give).
-    val written = newFileStamps(spark, table, newNames, key, data.schema)
-    commitReplace(spark, table, v, m,
-      m.next("optimize-zorder", key, data.schema, Carry.Replace(written)))
-  }
-
   /** Changed rows between two committed versions, computed from the
     * manifests' FILE DIFF: only files present in exactly one of the two
     * versions are read. Output: `op` ([[Merge]]'s constants), the key,
@@ -1741,7 +1708,7 @@ object SnapshotLog {
   /** Re-run `plan` on [[ConcurrentCommitException]] — the optimistic-
     * concurrency retry loop every multi-writer deployment needs: `plan`
     * must RE-READ the table state each attempt (every committing op here
-    * does — [[merge]]/[[deleteKeys]]/[[compact]] resolve `latestVersion`
+    * does — [[merge]]/[[deleteKeys]]/[[optimize]] resolve `latestVersion`
     * on entry), so the loser of a version race re-plans against the
     * winner's manifest instead of blindly re-creating the same file.
     * Only the race signal retries; any other failure propagates on the

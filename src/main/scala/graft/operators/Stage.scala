@@ -153,7 +153,7 @@ object Stage {
 
   /** Memoized shared OUTPUT DIRECTORY: like [[sharedTable]] but the
     * builder writes the path itself (e.g. a [[SnapshotLog]] table, or
-    * v14's [[CowMerge.writeKeyed]] compaction, whose output layout is the
+    * v14's [[SnapshotLog.writeClustered]] compaction, whose output layout is the
     * whole point). First caller builds; later callers get the same path.
     */
   def sharedDir(spark: org.apache.spark.sql.SparkSession, name: String,

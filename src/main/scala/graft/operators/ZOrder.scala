@@ -56,7 +56,7 @@ object ZOrder {
     * roughly-uniform domains (keys, timestamps); heavily skewed columns
     * should be mapped through quantile boundaries instead (same idea as
     * range-partition ids), which composes here by pre-computing the rank
-    * column before calling [[writeClustered]].
+    * column before calling [[withZ]].
     */
   private def scaled(c: Column, lo: Column, hi: Column, bits: Int): Column =
     // subtract in DOUBLE, not the column's native integer type: an
@@ -69,28 +69,22 @@ object ZOrder {
           (hi.cast("double") - lo.cast("double") + 1.0d) * (1L << bits))
         .cast("long"))
 
-  /** Write `df` into `numFiles` files clustered by the z-order of integer
-    * columns (`a`, `b`): scale both dims into the shared bit budget (the
-    * min/max bounds ride a one-row broadcast — no driver-side loop),
-    * range-partition on the z-value (contiguous curve segments per file),
-    * sort within each partition (narrow row-group stats too), and drop
-    * the helper columns at the edge.
-    */
-  def writeClustered(df: DataFrame, a: String, b: String, numFiles: Int,
-      path: String, bits: Int = 16): Unit =
-    writeClusteredN(df, Seq(a, b), numFiles, path, bits)
+  /** The column [[withZ]] adds. */
+  val ZCol = "__z"
 
-  /** [[writeClustered]] over k >= 2 dimensions — one bounds broadcast for
-    * all dims, one interleave, one range-clustering shuffle regardless of
-    * k. The per-dimension bit budget shrinks with k (`k * bits <= 62`):
-    * callers keeping the default get 16 bits through k=3 and should pass
-    * a smaller budget beyond (the curve keeps its locality, the grid just
-    * coarsens — file-skip granularity, not correctness).
+  /** `df` plus [[ZCol]], the z-value of integer `cols` (k >= 2): every
+    * dimension scaled into the shared bit budget (the min/max bounds ride
+    * a one-row broadcast — no driver-side loop), then interleaved. The
+    * per-dimension budget is 16 bits through k=3 and `62 / k` beyond (the
+    * curve keeps its locality, the grid just coarsens — file-skip
+    * granularity, not correctness). Range-clustering files on [[ZCol]]
+    * ([[SnapshotLog.writeClustered]]) gives each file a contiguous curve
+    * segment, so per-file (and per-row-group) min/max is narrow in every
+    * dimension.
     */
-  def writeClusteredN(df: DataFrame, cols: Seq[String], numFiles: Int,
-      path: String, bits: Int = 16): Unit = {
+  def withZ(df: DataFrame, cols: Seq[String]): DataFrame = {
     val k = cols.length
-    val b = math.min(bits, 62 / k)
+    val b = math.min(16, 62 / k)
     val bounds = df.agg(
       min(col(cols.head)).as(s"__lo0"), (
         max(col(cols.head)).as(s"__hi0") +:
@@ -100,13 +94,9 @@ object ZOrder {
       .withColumn("__j", lit(1))
     df.withColumn("__j", lit(1))
       .join(broadcast(bounds), Seq("__j"))
-      .withColumn("__z", zvalueN(
+      .withColumn(ZCol, zvalueN(
         cols.zipWithIndex.map { case (c, i) =>
           scaled(col(c), col(s"__lo$i"), col(s"__hi$i"), b) }, b))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z" +: "__j" +: cols.indices.flatMap(i =>
-        Seq(s"__lo$i", s"__hi$i")): _*)
-      .write.mode("overwrite").parquet(path)
+      .drop("__j" +: cols.indices.flatMap(i => Seq(s"__lo$i", s"__hi$i")): _*)
   }
 }

@@ -2297,42 +2297,43 @@ object DedupQueries {
       def fp60(norm: Column): Column =
         conv(substring(md5(norm), 1, 15), 16, 10).cast("long")
       val base = Stage.sharedDir(s, "d31_admit", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        docs.select(fp60(DedupFns.normText(col("text"))).as("fp"), col("doc_id"))
-          .groupBy("fp").agg(min("doc_id").as("keeper"))
-          .createOrReplaceTempView("d31_corpus")
-        // the index is HASH-BUCKETED on fp — the d29-shape composition:
-        // fingerprints are uniform, so range stamps cannot prune the
-        // admission probes, but the bucket(8, fp) layout scopes every
-        // epoch's insert-if-absent planning (and any point probe) to the
-        // changeset fingerprints' bucket directories
-        s.sql("CREATE TABLE graft.d31idx PARTITIONED BY (bucket(8, fp)) " +
-          "TBLPROPERTIES ('key'='fp') AS SELECT * FROM d31_corpus")
-        // two ingest waves as two feed files -> two micro-batches
-        docs.where(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + BatchIdOffset).as("doc_id"),
-            fp60(DedupFns.normText(col("text"))).as("fp"))
-          .coalesce(1).write.parquet(s"$out/feed/w1")
-        docs.where(col("doc_id") % 15 === 0)
-          .select((col("doc_id") + 2 * BatchIdOffset).as("doc_id"),
-            fp60(DedupFns.normText(concat(col("text"), lit(" fresh!")))).as("fp"))
-          .coalesce(1).write.parquet(s"$out/feed/w2")
-        val feedSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.LongType)))
-        val q = graft.streaming.CurationStreams.admitByName(
-          s.readStream.schema(feedSchema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true").parquet(s"$out/feed"),
-          "graft.d31idx", "d31-admit", s"$out/outcomes")
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val docs = Tables.documents(s, d).select("doc_id", "text")
+          docs.select(fp60(DedupFns.normText(col("text"))).as("fp"), col("doc_id"))
+            .groupBy("fp").agg(min("doc_id").as("keeper"))
+            .createOrReplaceTempView("d31_corpus")
+          // the index is HASH-BUCKETED on fp — the d29-shape composition:
+          // fingerprints are uniform, so range stamps cannot prune the
+          // admission probes, but the bucket(8, fp) layout scopes every
+          // epoch's insert-if-absent planning (and any point probe) to the
+          // changeset fingerprints' bucket directories
+          s.sql("CREATE TABLE graft.d31idx PARTITIONED BY (bucket(8, fp)) " +
+            "TBLPROPERTIES ('key'='fp') AS SELECT * FROM d31_corpus")
+          // two ingest waves as two feed files -> two micro-batches
+          docs.where(col("doc_id") % 10 === 0)
+            .select((col("doc_id") + BatchIdOffset).as("doc_id"),
+              fp60(DedupFns.normText(col("text"))).as("fp"))
+            .coalesce(1).write.parquet(s"$out/feed/w1")
+          docs.where(col("doc_id") % 15 === 0)
+            .select((col("doc_id") + 2 * BatchIdOffset).as("doc_id"),
+              fp60(DedupFns.normText(concat(col("text"), lit(" fresh!")))).as("fp"))
+            .coalesce(1).write.parquet(s"$out/feed/w2")
+          val feedSchema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("fp",
+              org.apache.spark.sql.types.LongType)))
+          val q = graft.streaming.CurationStreams.admitByName(
+            s.readStream.schema(feedSchema)
+              .option("maxFilesPerTrigger", "1")
+              .option("recursiveFileLookup", "true").parquet(s"$out/feed"),
+            "graft.d31idx", "d31-admit", s"$out/outcomes")
+            .option("checkpointLocation", s"$out/ckpt")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          ()
+        }
       }
       s.read.parquet(s"$base/outcomes/epoch=*")
         .select(col("doc_id").as("batch_doc"), col("status"), col("keeper"))

@@ -504,18 +504,19 @@ object MigrationQueries {
     Q("m17_sql_merge", Merge0.keyedMergeSql) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
       val base = Stage.sharedDir(s, "m17_sql", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, s"$out/m17t", shares, "id", numFiles = 8)
-        Merge0.changeset(shares).createOrReplaceTempView("m17_cs")
-        s.sql(
-          """MERGE INTO graft.m17t t USING m17_cs c ON t.id = c.id
-            |WHEN MATCHED AND c.op = 'delete' THEN DELETE
-            |WHEN MATCHED AND c.op = 'update' THEN
-            |  UPDATE SET item_target = c.item_target, file_target = c.file_target
-            |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
-            |""".stripMargin).collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          SnapshotLog.init(s, s"$out/m17t", shares, "id", numFiles = 8)
+          Merge0.changeset(shares).createOrReplaceTempView("m17_cs")
+          s.sql(
+            """MERGE INTO graft.m17t t USING m17_cs c ON t.id = c.id
+              |WHEN MATCHED AND c.op = 'delete' THEN DELETE
+              |WHEN MATCHED AND c.op = 'update' THEN
+              |  UPDATE SET item_target = c.item_target, file_target = c.file_target
+              |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
+              |""".stripMargin).collect()
+          ()
+        }
       }
       SnapshotLog.readLatest(s, s"$base/m17t")
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
@@ -537,26 +538,28 @@ object MigrationQueries {
     Q("m18_catalog_table", Merge0.keyedMergeSql) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m18_cat", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m18_shares")
-        s.sql("CREATE TABLE graft.m18t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m18_shares WHERE id % 2 = 0")
-        s.sql("INSERT INTO graft.m18t SELECT * FROM m18_shares WHERE id % 2 = 1")
-        Merge0.changeset(shares).createOrReplaceTempView("m18_cs")
-        s.sql(
-          """MERGE INTO graft.m18t t USING m18_cs c ON t.id = c.id
-            |WHEN MATCHED AND c.op = 'delete' THEN DELETE
-            |WHEN MATCHED AND c.op = 'update' THEN
-            |  UPDATE SET item_target = c.item_target, file_target = c.file_target
-            |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
-            |""".stripMargin).collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m18_shares")
+          s.sql("CREATE TABLE graft.m18t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m18_shares WHERE id % 2 = 0")
+          s.sql("INSERT INTO graft.m18t SELECT * FROM m18_shares WHERE id % 2 = 1")
+          Merge0.changeset(shares).createOrReplaceTempView("m18_cs")
+          s.sql(
+            """MERGE INTO graft.m18t t USING m18_cs c ON t.id = c.id
+              |WHEN MATCHED AND c.op = 'delete' THEN DELETE
+              |WHEN MATCHED AND c.op = 'update' THEN
+              |  UPDATE SET item_target = c.item_target, file_target = c.file_target
+              |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
+              |""".stripMargin).collect()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target
-              |FROM graft.m18t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target
+                |FROM graft.m18t ORDER BY id""".stripMargin)
+      }
     },
 
     // Streaming CDC source under the hash gate (m19): tail the m12
@@ -643,26 +646,28 @@ object MigrationQueries {
     Q("m21_alter_table", Merge0.evolveSql) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m21_alter", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m21_shares")
-        s.sql("CREATE TABLE graft.m21t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m21_shares")
-        s.sql("ALTER TABLE graft.m21t ADD COLUMNS (quota BIGINT)")
-        s.sql("UPDATE graft.m21t SET quota = id * 3 WHERE id % 13 = 0").collect()
-        s.sql(
-          s"""INSERT INTO graft.m21t
-             |SELECT id + ${Merge0.InsertIdOffset}, CAST(4 AS INT), 'evo_user',
-             |       'file', CAST(id AS STRING),
-             |       concat('/evo/', CAST(id AS STRING)), id,
-             |       concat('/e', CAST(id AS STRING), '.dat'), id * 7
-             |FROM m21_shares WHERE id % 17 = 0""".stripMargin).collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m21_shares")
+          s.sql("CREATE TABLE graft.m21t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m21_shares")
+          s.sql("ALTER TABLE graft.m21t ADD COLUMNS (quota BIGINT)")
+          s.sql("UPDATE graft.m21t SET quota = id * 3 WHERE id % 13 = 0").collect()
+          s.sql(
+            s"""INSERT INTO graft.m21t
+               |SELECT id + ${Merge0.InsertIdOffset}, CAST(4 AS INT), 'evo_user',
+               |       'file', CAST(id AS STRING),
+               |       concat('/evo/', CAST(id AS STRING)), id,
+               |       concat('/e', CAST(id AS STRING), '.dat'), id * 7
+               |FROM m21_shares WHERE id % 17 = 0""".stripMargin).collect()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target, quota
-              |FROM graft.m21t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target, quota
+                |FROM graft.m21t ORDER BY id""".stripMargin)
+      }
     },
 
     // RESTORE (m22): the recovery path time travel exists FOR — commit a
@@ -683,13 +688,14 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
       val base = Stage.sharedDir(s, "m22_restore", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        val dir = s"$out/m22t"
-        SnapshotLog.init(s, dir, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, dir, Merge0.changeset(shares), "id")
-        s.sql("RESTORE TABLE graft.m22t TO VERSION AS OF 0").collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          val dir = s"$out/m22t"
+          SnapshotLog.init(s, dir, shares, "id", numFiles = 8)
+          SnapshotLog.merge(s, dir, Merge0.changeset(shares), "id")
+          s.sql("RESTORE TABLE graft.m22t TO VERSION AS OF 0").collect()
+          ()
+        }
       }
       SnapshotLog.readLatest(s, s"$base/m22t")
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
@@ -719,26 +725,28 @@ object MigrationQueries {
          |FROM merged WHERE share_type = 3 ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m23_part", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m23_shares")
-        s.sql("CREATE TABLE graft.m23t PARTITIONED BY (share_type) " +
-          "TBLPROPERTIES ('key'='id') AS SELECT * FROM m23_shares WHERE id % 2 = 0")
-        s.sql("INSERT INTO graft.m23t SELECT * FROM m23_shares WHERE id % 2 = 1")
-        Merge0.changeset(shares).createOrReplaceTempView("m23_cs")
-        s.sql(
-          """MERGE INTO graft.m23t t USING m23_cs c ON t.id = c.id
-            |WHEN MATCHED AND c.op = 'delete' THEN DELETE
-            |WHEN MATCHED AND c.op = 'update' THEN
-            |  UPDATE SET item_target = c.item_target, file_target = c.file_target
-            |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
-            |""".stripMargin).collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m23_shares")
+          s.sql("CREATE TABLE graft.m23t PARTITIONED BY (share_type) " +
+            "TBLPROPERTIES ('key'='id') AS SELECT * FROM m23_shares WHERE id % 2 = 0")
+          s.sql("INSERT INTO graft.m23t SELECT * FROM m23_shares WHERE id % 2 = 1")
+          Merge0.changeset(shares).createOrReplaceTempView("m23_cs")
+          s.sql(
+            """MERGE INTO graft.m23t t USING m23_cs c ON t.id = c.id
+              |WHEN MATCHED AND c.op = 'delete' THEN DELETE
+              |WHEN MATCHED AND c.op = 'update' THEN
+              |  UPDATE SET item_target = c.item_target, file_target = c.file_target
+              |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
+              |""".stripMargin).collect()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target
-              |FROM graft.m23t WHERE share_type = 3 ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target
+                |FROM graft.m23t WHERE share_type = 3 ORDER BY id""".stripMargin)
+      }
     },
 
     // Native streaming ingest into a catalog table (m24):
@@ -758,26 +766,28 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m24_stream", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m24_shares")
-        s.sql("CREATE TABLE graft.m24t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m24_shares WHERE id % 2 = 0")
-        val feed = s"$out/feed"
-        shares.where(col("id") % 2 === 1).write.parquet(feed)
-        val ckpt = java.nio.file.Files.createTempDirectory("m24_ckpt").toString
-        val q = s.readStream.schema(shares.schema).parquet(feed)
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .toTable("graft.m24t")
-        q.awaitTermination()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m24_shares")
+          s.sql("CREATE TABLE graft.m24t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m24_shares WHERE id % 2 = 0")
+          val feed = s"$out/feed"
+          shares.where(col("id") % 2 === 1).write.parquet(feed)
+          val ckpt = java.nio.file.Files.createTempDirectory("m24_ckpt").toString
+          val q = s.readStream.schema(shares.schema).parquet(feed)
+            .writeStream
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .toTable("graft.m24t")
+          q.awaitTermination()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target
-              |FROM graft.m24t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target
+                |FROM graft.m24t ORDER BY id""".stripMargin)
+      }
     },
 
     // Native streaming READ of a catalog table (m25): `spark.readStream
@@ -800,34 +810,36 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m25_streamread", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m25_shares")
-        s.sql("CREATE TABLE graft.m25t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m25_shares WHERE id % 2 = 0")
-        s.sql("INSERT INTO graft.m25t SELECT * FROM m25_shares WHERE id % 2 = 1")
-        ()
-      }
-      GraftTableCatalog.use(s, base)
-      // fresh checkpoint + accumulator per run: the stream replays the
-      // full feed and folds it batch-by-batch (eagerly — the staged
-      // micro-batch deltas are reclaimed as each batch commits)
-      val scratch = java.nio.file.Files.createTempDirectory("m25").toString
-      val acc = s"$scratch/acc"
-      val q = s.readStream.table("graft.m25t")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(acc)
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m25_shares")
+          s.sql("CREATE TABLE graft.m25t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m25_shares WHERE id % 2 = 0")
+          s.sql("INSERT INTO graft.m25t SELECT * FROM m25_shares WHERE id % 2 = 1")
           ()
         }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(acc)
-        .select("id", "share_type", "uid_owner", "item_type", "item_source",
-          "item_target", "file_source", "file_target")
-        .orderBy("id")
+      }
+      GraftTableCatalog.withLocation(s, base) {
+        // fresh checkpoint + accumulator per run: the stream replays the
+        // full feed and folds it batch-by-batch (eagerly — the staged
+        // micro-batch deltas are reclaimed as each batch commits)
+        val scratch = java.nio.file.Files.createTempDirectory("m25").toString
+        val acc = s"$scratch/acc"
+        val q = s.readStream.table("graft.m25t")
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.write.mode("append").parquet(acc)
+            ()
+          }
+          .option("checkpointLocation", s"$scratch/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.read.parquet(acc)
+          .select("id", "share_type", "uid_owner", "item_type", "item_source",
+            "item_target", "file_source", "file_target")
+          .orderBy("id")
+      }
     },
 
     // Column RENAME + DROP as metadata-only DDL (m26): CTAS the share
@@ -852,21 +864,23 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m26_rename", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m26_shares")
-        s.sql("CREATE TABLE graft.m26t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m26_shares")
-        s.sql("ALTER TABLE graft.m26t RENAME COLUMN file_target TO target_path")
-        s.sql("UPDATE graft.m26t SET target_path = concat(target_path, '.r') " +
-          "WHERE id % 13 = 0").collect()
-        s.sql("ALTER TABLE graft.m26t DROP COLUMN item_source")
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m26_shares")
+          s.sql("CREATE TABLE graft.m26t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m26_shares")
+          s.sql("ALTER TABLE graft.m26t RENAME COLUMN file_target TO target_path")
+          s.sql("UPDATE graft.m26t SET target_path = concat(target_path, '.r') " +
+            "WHERE id % 13 = 0").collect()
+          s.sql("ALTER TABLE graft.m26t DROP COLUMN item_source")
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_target,
-              |       file_source, target_path
-              |FROM graft.m26t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_target,
+                |       file_source, target_path
+                |FROM graft.m26t ORDER BY id""".stripMargin)
+      }
     },
 
     // UPDATE SET c = NULL (m27): the partial-update changeset reads a
@@ -886,19 +900,21 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m27_setnull", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m27_shares")
-        s.sql("CREATE TABLE graft.m27t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m27_shares")
-        s.sql("UPDATE graft.m27t SET item_target = nullif(item_target, item_target) " +
-          "WHERE id % 7 = 0").collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m27_shares")
+          s.sql("CREATE TABLE graft.m27t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m27_shares")
+          s.sql("UPDATE graft.m27t SET item_target = nullif(item_target, item_target) " +
+            "WHERE id % 7 = 0").collect()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target
-              |FROM graft.m27t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target
+                |FROM graft.m27t ORDER BY id""".stripMargin)
+      }
     },
 
     // SQL CDC surface (m28): the change feed read back as a TABLE-VALUED
@@ -916,29 +932,31 @@ object MigrationQueries {
     Q("m28_table_changes", Merge0.tableChangesSql) { (s, d) =>
       import graft.operators.{SnapshotLog, Stage}
       val base = Stage.sharedDir(s, "m28_tvf", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, s"$out/m28t", shares, "id", numFiles = 8)
-        Merge0.changeset(shares).createOrReplaceTempView("m28_cs")
-        s.sql(
-          """MERGE INTO graft.m28t t USING m28_cs c ON t.id = c.id
-            |WHEN MATCHED AND c.op = 'delete' THEN DELETE
-            |WHEN MATCHED AND c.op = 'update' THEN
-            |  UPDATE SET item_target = c.item_target, file_target = c.file_target
-            |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
-            |""".stripMargin).collect()
-        s.sql("DELETE FROM graft.m28t WHERE id % 13 = 0").collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          SnapshotLog.init(s, s"$out/m28t", shares, "id", numFiles = 8)
+          Merge0.changeset(shares).createOrReplaceTempView("m28_cs")
+          s.sql(
+            """MERGE INTO graft.m28t t USING m28_cs c ON t.id = c.id
+              |WHEN MATCHED AND c.op = 'delete' THEN DELETE
+              |WHEN MATCHED AND c.op = 'update' THEN
+              |  UPDATE SET item_target = c.item_target, file_target = c.file_target
+              |WHEN NOT MATCHED AND c.op = 'insert' THEN INSERT *
+              |""".stripMargin).collect()
+          s.sql("DELETE FROM graft.m28t WHERE id % 13 = 0").collect()
+          ()
+        }
       }
-      // the stage is memoized: point the catalog at it even when the body
-      // did not run (another query may have re-pointed it since)
-      GraftTableCatalog.use(s, base)
-      s.sql(
-        """SELECT id, share_type, uid_owner, item_type, item_source,
-          |       item_target, file_source, file_target,
-          |       _change_type, _commit_version
-          |FROM table_changes('graft.m28t', 1, 2)
-          |ORDER BY _commit_version, id""".stripMargin)
+      // the stage is memoized: the body may not have run, so the read
+      // names the catalog location itself
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql(
+          """SELECT id, share_type, uid_owner, item_type, item_source,
+            |       item_target, file_source, file_target,
+            |       _change_type, _commit_version
+            |FROM table_changes('graft.m28t', 1, 2)
+            |ORDER BY _commit_version, id""".stripMargin)
+      }
     },
 
     // Write-time constraints (m29): the reference's defining sink
@@ -961,30 +979,32 @@ object MigrationQueries {
          |FROM shares ORDER BY id""".stripMargin) { (s, d) =>
       import graft.operators.Stage
       val base = Stage.sharedDir(s, "m29_cons", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        shares.createOrReplaceTempView("m29_shares")
-        s.sql("CREATE TABLE graft.m29t TBLPROPERTIES ('key'='id') AS " +
-          "SELECT * FROM m29_shares")
-        s.sql("ALTER TABLE graft.m29t ADD CONSTRAINT fs_nonneg " +
-          "CHECK (file_source >= 0)").collect()
-        s.sql("ALTER TABLE graft.m29t ALTER COLUMN uid_owner SET NOT NULL")
-          .collect()
-        def mustReject(sql: String): Unit =
-          try { s.sql(sql).collect(); sys.error(s"constraint MISSED: $sql") }
-          catch { case e: IllegalStateException
-              if e.getMessage.contains("violates table constraint") => () }
-        mustReject("UPDATE graft.m29t SET file_source = -1 WHERE id % 23 = 0")
-        mustReject("UPDATE graft.m29t SET uid_owner = " +
-          "nullif(uid_owner, uid_owner) WHERE id % 31 = 0")
-        s.sql("UPDATE graft.m29t SET file_target = " +
-          "concat('/kept/', CAST(id AS STRING)) WHERE id % 23 = 0").collect()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val shares = SyntheticShares.shares(Tables.orders(s, d))
+          shares.createOrReplaceTempView("m29_shares")
+          s.sql("CREATE TABLE graft.m29t TBLPROPERTIES ('key'='id') AS " +
+            "SELECT * FROM m29_shares")
+          s.sql("ALTER TABLE graft.m29t ADD CONSTRAINT fs_nonneg " +
+            "CHECK (file_source >= 0)").collect()
+          s.sql("ALTER TABLE graft.m29t ALTER COLUMN uid_owner SET NOT NULL")
+            .collect()
+          def mustReject(sql: String): Unit =
+            try { s.sql(sql).collect(); sys.error(s"constraint MISSED: $sql") }
+            catch { case e: IllegalStateException
+                if e.getMessage.contains("violates table constraint") => () }
+          mustReject("UPDATE graft.m29t SET file_source = -1 WHERE id % 23 = 0")
+          mustReject("UPDATE graft.m29t SET uid_owner = " +
+            "nullif(uid_owner, uid_owner) WHERE id % 31 = 0")
+          s.sql("UPDATE graft.m29t SET file_target = " +
+            "concat('/kept/', CAST(id AS STRING)) WHERE id % 23 = 0").collect()
+          ()
+        }
       }
-      GraftTableCatalog.use(s, base)
-      s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
-              |       item_target, file_source, file_target
-              |FROM graft.m29t ORDER BY id""".stripMargin)
+      GraftTableCatalog.withLocation(s, base) {
+        s.sql("""SELECT id, share_type, uid_owner, item_type, item_source,
+                |       item_target, file_source, file_target
+                |FROM graft.m29t ORDER BY id""".stripMargin)
+      }
     }
   )
 

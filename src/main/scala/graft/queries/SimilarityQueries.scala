@@ -57,12 +57,6 @@ object SimilarityQueries {
     */
   val TombstoneMod = 9
 
-  /** v14 compaction target file size: the ~128 MB parquet sweet spot
-    * (the test-sf index compacts to exactly one file; at production N
-    * the same constant yields totalBytes/128MB files).
-    */
-  val CompactTargetBytes: Long = 128L * 1024 * 1024
-
   /** v07 product-quantization shape: 64-dim vectors in 4 subspaces of 16
     * dims, 16 codes per subspace (codes fit a nibble; 3 Lloyd rounds —
     * 5 was measured too: it lifts several per-probe recalls ~0.1 but
@@ -1016,10 +1010,11 @@ object SimilarityQueries {
     // Tombstone COMPACTION (v14): the other half of the delete lifecycle
     // v13's own comment promises — a compaction job rewrites the written
     // bucket index MINUS the tombstone set (size-guarded broadcast
-    // anti-join, then [[graft.operators.CowMerge.writeKeyed]] on the
-    // bucket key, the writer OPTIMIZE's stageFiles uses, into
-    // ceil(input bytes / CompactTargetBytes) files), and steady-state
-    // queries probe the compacted files with NO mask at all.
+    // anti-join, then [[graft.operators.SnapshotLog.writeClustered]] on
+    // the bucket key, the writer OPTIMIZE uses, into OPTIMIZE's file
+    // count for the input bytes, [[graft.sql.SnapshotDml.fileCount]]),
+    // and steady-state queries probe the compacted files with NO mask at
+    // all.
     // Certification: the compacted probe must produce EXACTLY v13's
     // masked answers (same oracle SQL) — if compaction dropped a live
     // row, kept a deleted one, or perturbed the layout-sensitive scoring,
@@ -1033,11 +1028,10 @@ object SimilarityQueries {
         val p = new org.apache.hadoop.fs.Path(idxPath)
         val bytes = p.getFileSystem(s.sessionState.newHadoopConf())
           .getContentSummary(p).getLength
-        val n = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-        graft.operators.CowMerge.writeKeyed(
+        graft.operators.SnapshotLog.writeClustered(
           s.read.parquet(idxPath).join(graft.operators.Joins.sizedBroadcast(tomb),
             Seq("vec_id"), "left_anti"),
-          "bucket", n, out)
+          Seq("bucket"), graft.sql.SnapshotDml.fileCount(bytes), out)
       }
       val compacted = s.read.parquet(compactedDir)
       val index = compacted.where(col("vec_id") < DedupQueries.BatchIdOffset)
@@ -1060,7 +1054,7 @@ object SimilarityQueries {
     // query-time mask. The oracle is v13/v14's DuckDB twin VERBATIM —
     // the THIRD physical route (query-time mask / compacted files /
     // transaction-log delete vector) certified to one logical answer.
-    // OPTIMIZE (SnapshotLog.compact) then materializes the mask away
+    // OPTIMIZE (SnapshotLog.optimize) then materializes the mask away
     // CDC-invisibly — v14's job with a commit protocol —
     // AnnSnapshotSpec pins those physical facts plus pre-delete time
     // travel of the index.
@@ -1125,35 +1119,36 @@ object SimilarityQueries {
          |SELECT probe_id, neighbor_id, rnk, cosine FROM ranked
          |WHERE rnk <= $K ORDER BY probe_id, rnk""".stripMargin) { (s, d) =>
       val base = Stage.sharedDir(s, "v18_ingest", d) { out =>
-        GraftTableCatalog.use(s, out)
-        val dup = DedupQueries.dupEmb(s, d)
-        graft.streaming.AnnStreams.indexRows(
-          dup.where(col("vec_id") < DedupQueries.BatchIdOffset))
-          .createOrReplaceTempView("v18_corpus")
-        s.sql("CREATE TABLE graft.v18idx PARTITIONED BY (bucket) " +
-          "TBLPROPERTIES ('key'='vec_id') AS SELECT * FROM v18_corpus")
-        val batch = dup.where(col("vec_id") >= DedupQueries.BatchIdOffset)
-          .select("vec_id", "embedding")
-        batch.where(col("vec_id") % 100 === 0)
-          .coalesce(1).write.parquet(s"$out/feed/w1")
-        batch.where(col("vec_id") % 100 === 50)
-          .coalesce(1).write.parquet(s"$out/feed/w2")
-        val feedSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType))))
-        val q = graft.streaming.AnnStreams.ingestByName(
-          s.readStream.schema(feedSchema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true").parquet(s"$out/feed"),
-          "graft.v18idx", "v18-ingest", s"$out/matches")
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ()
+        GraftTableCatalog.withLocation(s, out) {
+          val dup = DedupQueries.dupEmb(s, d)
+          graft.streaming.AnnStreams.indexRows(
+            dup.where(col("vec_id") < DedupQueries.BatchIdOffset))
+            .createOrReplaceTempView("v18_corpus")
+          s.sql("CREATE TABLE graft.v18idx PARTITIONED BY (bucket) " +
+            "TBLPROPERTIES ('key'='vec_id') AS SELECT * FROM v18_corpus")
+          val batch = dup.where(col("vec_id") >= DedupQueries.BatchIdOffset)
+            .select("vec_id", "embedding")
+          batch.where(col("vec_id") % 100 === 0)
+            .coalesce(1).write.parquet(s"$out/feed/w1")
+          batch.where(col("vec_id") % 100 === 50)
+            .coalesce(1).write.parquet(s"$out/feed/w2")
+          val feedSchema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("vec_id",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("embedding",
+              org.apache.spark.sql.types.ArrayType(
+                org.apache.spark.sql.types.FloatType))))
+          val q = graft.streaming.AnnStreams.ingestByName(
+            s.readStream.schema(feedSchema)
+              .option("maxFilesPerTrigger", "1")
+              .option("recursiveFileLookup", "true").parquet(s"$out/feed"),
+            "graft.v18idx", "v18-ingest", s"$out/matches")
+            .option("checkpointLocation", s"$out/ckpt")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          ()
+        }
       }
       s.read.parquet(s"$base/matches/epoch=*")
         .select("probe_id", "neighbor_id", "rnk", "cosine")

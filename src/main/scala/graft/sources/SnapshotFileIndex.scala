@@ -59,9 +59,9 @@ import graft.sources.Stamps.{ColStamp, FileStamp, LongIv, StrIv}
   *
   * Columns without a stamp for a file — and whole files without stamps
   * (raw `commit()` manifests, pre-stamp history) — never contribute a
-  * verdict. After `compactZ`, BOTH Morton dimensions carry stamps, so a
-  * filter on either one skips — the actual payoff of Z-ordering, now at
-  * the planning seam rather than the footer.
+  * verdict. After a z-ordered OPTIMIZE, every Morton dimension carries
+  * stamps, so a filter on any one of them skips — the actual payoff of
+  * Z-ordering, now at the planning seam rather than the footer.
   *
   * The scan this index backs is the SAME physical parquet scan
   * `spark.read.parquet(files)` builds — `HadoopFsRelation` + vectorized
@@ -238,7 +238,7 @@ object SnapshotFileIndex {
   /** Bucket directories a point predicate on the bucketed column pins —
     * the LAYOUT analogue of the Bloom probe, exact rather than
     * probabilistic. Shared by the read-side FileIndex and the write-side
-    * footprint selection ([[graft.operators.SnapshotLog.compactWhere]]),
+    * footprint selection ([[graft.operators.SnapshotLog.optimize]]'s WHERE),
     * so `filters` may arrive as un-split conjunct trees (parsed
     * predicates) — conjunctions are split here. Hashing MUST run over
     * the column's own type (xxhash64 is type-sensitive): a literal of a

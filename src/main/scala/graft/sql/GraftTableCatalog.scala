@@ -347,13 +347,18 @@ object GraftTableCatalog {
     */
   val LocationKey = "spark.graft.catalog.location"
 
-  /** Point `spark`'s `graft` catalog at the warehouse root `location`.
-    * Also registers the catalog class: a session that
-    * [[graft.GraftSession]] did not build lacks it.
+  /** Run `body` with `spark`'s `graft` catalog pointed at the warehouse
+    * root `location`, then restore the session's previous location, or
+    * unset it if there was none. Also registers the catalog class: a
+    * session that [[graft.GraftSession]] did not build lacks it. A plan
+    * analyzed inside `body` keeps the tables it resolved there.
     */
-  def use(spark: SparkSession, location: String): Unit = {
+  def withLocation[A](spark: SparkSession, location: String)(body: => A): A = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftTableCatalog].getName)
+    val previous = spark.conf.getOption(LocationKey)
     spark.conf.set(LocationKey, location)
+    try body
+    finally previous.fold(spark.conf.unset(LocationKey))(spark.conf.set(LocationKey, _))
   }
 }
 

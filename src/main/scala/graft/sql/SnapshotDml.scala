@@ -339,22 +339,24 @@ object SnapshotDml {
   }
 
   /** Session conf key for [[SnapshotOptimizeCommand]]'s target file
-    * size; default 128 MB — the parquet sweet spot the compaction
-    * operators already use.
+    * size; default 128 MB — the parquet sweet spot.
     */
   val CompactTargetKey = "spark.graft.compactTargetBytes"
   val DefaultCompactTargetBytes: Long = 128L * 1024 * 1024
 
+  /** Output file count of a rewrite of `bytes` bytes: one file per
+    * `targetBytes`, rounded up, at least 1.
+    */
+  def fileCount(bytes: Long, targetBytes: Long = DefaultCompactTargetBytes): Int =
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+
   /** `OPTIMIZE name [ZORDER BY (a, b)] [WHERE pred]` —
-    * [[SnapshotLog.compact]] / [[SnapshotLog.compactZ]] with the file
-    * count sized from the live table's bytes (totalBytes / target,
-    * floored at 1), committed as the next version; with WHERE, the
-    * FOOTPRINT-BOUNDED [[SnapshotLog.compactWhere]] (only files whose
-    * stamped intervals might match are rewritten — the predicate is
-    * parsed by Spark's own expression grammar and evaluated against the
-    * manifest stamps, so a key-range maintenance job on a 100 TB table
-    * costs its footprint, not the table). Returns (version,
-    * files_before, files_after).
+    * [[SnapshotLog.optimize]] with the file count sized from the
+    * footprint's bytes ([[fileCount]]), committed as the next version.
+    * The WHERE predicate is parsed by Spark's own expression grammar and
+    * evaluated against the manifest stamps, so a key-range maintenance
+    * job on a 100 TB table costs its footprint, not the table. Returns
+    * (version, files_before, files_after).
     */
   final case class SnapshotOptimizeCommand(target: Target,
       zorder: Option[Seq[String]],
@@ -367,19 +369,10 @@ object SnapshotDml {
       val dir = target.dir
       val targetBytes = s.conf.getOption(CompactTargetKey).map(_.toLong)
         .getOrElse(DefaultCompactTargetBytes)
-      val c = where match {
-        case Some(predText) =>
-          val pred = s.sessionState.sqlParser.parseExpression(predText)
-          SnapshotLog.compactWhere(s, dir, pred, targetBytes)
-        case None =>
-          val v = SnapshotLog.latestVersion(s, dir)
-          val numFiles = SnapshotLog.compactFileCount(s, dir,
-            SnapshotLog.manifest(s, dir, v), targetBytes)
-          zorder match {
-            case Some(cols) => SnapshotLog.compactZ(s, dir, cols, numFiles)
-            case None       => SnapshotLog.compact(s, dir, numFiles)
-          }
-      }
+      val c = SnapshotLog.optimize(s, dir,
+        names => fileCount(SnapshotLog.dataBytes(s, dir, names), targetBytes),
+        where.map(s.sessionState.sqlParser.parseExpression),
+        zorder.getOrElse(Nil))
       Seq(Row(c.version, c.report.nFilesBefore.toLong, c.report.nNewFiles.toLong))
     }
   }

@@ -58,10 +58,10 @@ object RaceWriter {
             org.apache.spark.sql.catalyst.expressions.LessThanOrEqual(
               org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("id"),
               org.apache.spark.sql.catalyst.expressions.Literal(w * 1000000L + i)))
-          SnapshotLog.compactWhere(spark, dir, pred, targetBytes = 128L << 20)
+          SnapshotLog.optimize(spark, dir, _ => 1, where = Some(pred))
         }
         if (i == n / 2) SnapshotLog.commitWithRetry(maxAttempts = 100) {
-          SnapshotLog.compact(spark, dir, numFiles = 2)
+          SnapshotLog.optimize(spark, dir, _ => 2)
         }
         // sanity INSIDE the race: this writer's own live keys are exactly
         // its inserts minus its deletes so far — catches a lost update

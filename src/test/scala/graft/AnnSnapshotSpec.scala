@@ -42,7 +42,7 @@ class AnnSnapshotSpec extends SparkTestBase {
     assert(SnapshotLog.read(spark, dir, 0).count() == nAll)
 
     // OPTIMIZE: mask materialized away, rows identical, no vector left
-    val c2 = SnapshotLog.compact(spark, dir, numFiles = 2)
+    val c2 = SnapshotLog.optimize(spark, dir, _ => 2)
     assert(SnapshotLog.deletes(spark, dir, c2.version).isEmpty,
       "compaction must materialize the delete vector away")
     val compacted = SnapshotLog.read(spark, dir, c2.version)

@@ -143,7 +143,7 @@ class BloomStampSpec extends SparkTestBase {
     import spark.implicits._
     val dir = freshDir("vac")
     ingestTable(dir, bloom = true, batches = 4)
-    withBloom { SnapshotLog.compact(spark, dir, numFiles = 4) }
+    withBloom { SnapshotLog.optimize(spark, dir, _ => 4) }
     val v = SnapshotLog.latestVersion(spark, dir)
     val sidecars = SnapshotLog.bloomSidecars(spark, dir, v)
     assert(sidecars.size == 1, "a full compact drops old sidecar refs")

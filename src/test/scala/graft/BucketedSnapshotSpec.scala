@@ -142,11 +142,11 @@ class BucketedSnapshotSpec extends SparkTestBase {
         if (t == null) "" else t.getMessage + " | " + msgs(t.getCause)
       assert(msgs(e1).contains("key") || msgs(e1).contains("bucket"))
       val e2 = intercept[Exception](
-        SnapshotLog.compactZ(spark, dir, "id", "x", 4))
+        SnapshotLog.optimize(spark, dir, _ => 4, zorder = Seq("id", "x")))
       assert(e2.getMessage.contains("bucket"))
 
       // OPTIMIZE keeps the tree; point reads still prune afterwards
-      SnapshotLog.compact(spark, dir, numFiles = 4)
+      SnapshotLog.optimize(spark, dir, _ => 4)
       val v = SnapshotLog.latestVersion(spark, dir)
       val names = SnapshotLog.manifest(spark, dir, v)
       assert(names.forall(_.startsWith("pt_graftbucket=")),
@@ -169,15 +169,13 @@ class BucketedSnapshotSpec extends SparkTestBase {
     // parsed predicate: the literal parses as INT, the column is LONG —
     // the probe retypes losslessly and still prunes
     val pred = spark.sessionState.sqlParser.parseExpression("id = 7")
-    val c = SnapshotLog.compactWhere(spark, dir, pred,
-      targetBytes = Long.MaxValue)
+    val c = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(pred))
     assert(c.report.nRewritten < nFiles && c.report.nRewritten >= 1,
       s"bucket scope must bound OPTIMIZE WHERE: ${c.report} of $nFiles")
     assert(SnapshotLog.readLatest(spark, dir).count() == 400)
     // a predicate the layout cannot scope (range) stays conservative
-    val c2 = SnapshotLog.compactWhere(spark, dir,
-      spark.sessionState.sqlParser.parseExpression("id < 1000000"),
-      targetBytes = Long.MaxValue)
+    val c2 = SnapshotLog.optimize(spark, dir, _ => 1,
+      where = Some(spark.sessionState.sqlParser.parseExpression("id < 1000000")))
     assert(c2.report.nRewritten >= 1)
     assert(SnapshotLog.readLatest(spark, dir).count() == 400)
   }

@@ -72,8 +72,7 @@ class CompactionSpec extends SparkTestBase {
     val (idx, idxPath) = SimilarityQueries.dupEmbIndexWithPath(spark, sfDir)
     val inputBytes = new java.io.File(idxPath).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum
-    val target = SimilarityQueries.CompactTargetBytes
-    val planned = math.max(1L, (inputBytes + target - 1) / target)
+    val planned = SnapshotDml.fileCount(inputBytes)
     val compacted = spark.read.parquet(compactedDir)
     val actual = compacted.inputFiles.length
     assert(actual >= 1 && actual <= planned,
@@ -101,7 +100,7 @@ class CompactionSpec extends SparkTestBase {
     }
     val pre = avgFrac
     assert(pre > 0.9, s"fixture not fragmented: avg per-file key span $pre")
-    SnapshotLog.compact(spark, dir, numFiles = 4)
+    SnapshotLog.optimize(spark, dir, _ => 4)
     val post = avgFrac
     assert(post < 0.5,
       s"OPTIMIZE left wide per-file ranges (avg frac $pre -> $post)")

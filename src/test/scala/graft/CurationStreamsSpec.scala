@@ -184,4 +184,22 @@ class CurationStreamsSpec extends SparkTestBase {
     assert(SnapshotLog.latestVersion(spark, dir) == vLatest)
     spark.sql("DROP TABLE IF EXISTS graft.abnidx")
   }
+
+  test("catalog-staging queries (m18, d31) leave the session's catalog " +
+    "location as they found it") {
+    import graft.sql.GraftTableCatalog.{LocationKey, withLocation}
+    val w = java.nio.file.Files.createTempDirectory("catloc").toString
+    spark.conf.set(LocationKey, w)
+    spark.sql("CREATE TABLE graft.mine TBLPROPERTIES ('key'='id') AS " +
+      "SELECT id, id * 2 AS x FROM range(5)")
+    assert(SparkEntry.queries("m18_catalog_table")(spark, sfDir).count() > 0)
+    assert(SparkEntry.queries("d31_stream_admission")(spark, sfDir).count() > 0)
+    assert(spark.conf.get(LocationKey) == w)
+    assert(spark.sql("SELECT count(*) FROM graft.mine").head().getLong(0) == 5L)
+    spark.sql("DROP TABLE IF EXISTS graft.mine")
+    // a session with no location gets none back
+    spark.conf.unset(LocationKey)
+    withLocation(spark, w)(())
+    assert(spark.conf.getOption(LocationKey).isEmpty)
+  }
 }

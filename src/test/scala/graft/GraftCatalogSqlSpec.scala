@@ -150,9 +150,10 @@ class GraftCatalogSqlSpec extends SparkTestBase {
     // a second session has its own SQL conf: point its catalog at the
     // same warehouse, and its SELECT and DELETE address the same table
     val other = spark.newSession()
-    graft.sql.GraftTableCatalog.use(other, base)
-    assert(count(other) == 11L)
-    assert(other.sql("DELETE FROM graft.fr WHERE id = 1").head().getLong(0) == 2L)
+    graft.sql.GraftTableCatalog.withLocation(other, base) {
+      assert(count(other) == 11L)
+      assert(other.sql("DELETE FROM graft.fr WHERE id = 1").head().getLong(0) == 2L)
+    }
     assert(spark.sql("SELECT id FROM graft.fr").as[Long].collect().toSet ==
       (2L to 11L).toSet)
   }

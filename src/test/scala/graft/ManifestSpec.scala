@@ -159,7 +159,7 @@ class ManifestSpec extends SparkTestBase {
     assertCarried(m0, m1)
     assert(m1.physMap.isEmpty && m1.dropped.isEmpty)
     assert(m1.blooms == m0.blooms)
-    val c2 = SnapshotLog.compact(spark, dir, 2)
+    val c2 = SnapshotLog.optimize(spark, dir, _ => 2)
     val m2 = at(dir, c2.version)
     assertCarried(m1, m2)
     assert(m2.blooms.isEmpty && m2.deletes.isEmpty)
@@ -167,20 +167,24 @@ class ManifestSpec extends SparkTestBase {
 
   test("carry: compactWhere keeps evolution while files carry and retires it when none does") {
     val dir = evolvedTable("cw", bloom = true)
+    SnapshotLog.deleteKeys(spark, dir, spark.range(150, 151).toDF(), "id")
     val m0 = at(dir, SnapshotLog.latestVersion(spark, dir))
     val parse = spark.sessionState.sqlParser.parseExpression _
-    val c1 = SnapshotLog.compactWhere(spark, dir, parse("id < 100"), 1L << 30)
+    val c1 = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(parse("id < 100")))
     val m1 = at(dir, c1.version)
     assert(c1.report.nRewritten == 1 && m1.files.count(m0.files.contains) == 3)
     assertCarried(m0, m1)
     assert(m1.physMap == m0.physMap && m1.dropped == m0.dropped)
     assert(m1.blooms == m0.blooms)
-    val c2 = SnapshotLog.compactWhere(spark, dir, parse("id >= 0"), 1L << 30)
+    val c2 = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(parse("id >= 0")))
     val m2 = at(dir, c2.version)
     assert(m2.files.forall(f => !m1.files.contains(f)), "fixture: not a full rewrite")
     assertCarried(m1, m2)
     assert(m2.physMap.isEmpty && m2.dropped.isEmpty)
     assert(m2.blooms == m1.blooms)
+    // a WHERE rewrite keeps the delete vector even when its footprint is
+    // every file: only an OPTIMIZE without WHERE drops it
+    assert(m2.deletes == m1.deletes && m2.deletes.nonEmpty)
   }
 
   test("carry: restore takes the target version's files and records, and keeps the live constraints") {

@@ -20,7 +20,7 @@ class MaterializedViewSpec extends SparkTestBase {
     */
   private def fresh(): (String, String) = {
     val root = Files.createTempDirectory("graft_mv").toString
-    graft.sql.GraftTableCatalog.use(spark, root)
+    spark.conf.set(graft.sql.GraftTableCatalog.LocationKey, root)
     val base = s"$root/base"
     val df = (1L to 20L).map(i => (i, if (i <= 10) "g1" else "g2", i))
       .toDF("id", "g", "x")

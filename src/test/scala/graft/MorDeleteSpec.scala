@@ -87,7 +87,7 @@ class MorDeleteSpec extends SparkTestBase {
     val dir = freshTable()
     SnapshotLog.deleteKeys(spark, dir, Seq(2L, 30L).toDF("id"), "id")
     val pre = rows(SnapshotLog.readLatest(spark, dir))
-    val c = SnapshotLog.compact(spark, dir, numFiles = 2)
+    val c = SnapshotLog.optimize(spark, dir, _ => 2)
     assert(SnapshotLog.deletes(spark, dir, c.version).isEmpty)
     assert(SnapshotLog.manifest(spark, dir, c.version).size == 2)
     assert(rows(SnapshotLog.readLatest(spark, dir)) == pre)

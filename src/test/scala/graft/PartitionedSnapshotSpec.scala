@@ -141,7 +141,7 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     val names0 = SnapshotLog.manifest(spark, dir, 0L)
     val day3 = names0.count(_.startsWith("pt_day=3/"))
     val pred = spark.sessionState.sqlParser.parseExpression("day = 3")
-    val c = SnapshotLog.compactWhere(spark, dir, pred, targetBytes = 1L << 30)
+    val c = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(pred))
     assert(c.report.nRewritten == day3,
       s"must rewrite exactly the day=3 files: ${c.report} vs $day3")
     assert(c.report.nUntouched == names0.size - day3)
@@ -203,7 +203,7 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     assert(SnapshotLog.partitionCols(spark, dir,
       SnapshotLog.latestVersion(spark, dir)) == Seq("day"))
     // compact keeps the layout; vacuum reclaims replaced partitioned files
-    SnapshotLog.compact(spark, dir, numFiles = 2)
+    SnapshotLog.optimize(spark, dir, _ => 2)
     val (ms, fs) = SnapshotLog.vacuum(spark, dir,
       retainFrom = SnapshotLog.latestVersion(spark, dir), graceMs = 0L)
     assert(ms > 0 && fs > 0)
@@ -218,7 +218,7 @@ class PartitionedSnapshotSpec extends SparkTestBase {
     SnapshotLog.init(spark, dir, fixture(100), "id", numFiles = 2,
       partitionBy = Seq("day"))
     val e = intercept[IllegalArgumentException](
-      SnapshotLog.compactZ(spark, dir, "id", "x", numFiles = 2))
+      SnapshotLog.optimize(spark, dir, _ => 2, zorder = Seq("id", "x")))
     assert(e.getMessage.contains("partitioned"), e.getMessage)
   }
 }

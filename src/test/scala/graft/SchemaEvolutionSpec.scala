@@ -79,7 +79,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
       Seq("id", "v", "quota"))
     val pre = SnapshotLog.readLatest(spark, dir).collect()
       .map(_.toSeq).toSet
-    val c = SnapshotLog.compact(spark, dir, numFiles = 2)
+    val c = SnapshotLog.optimize(spark, dir, _ => 2)
     assert(SnapshotLog.readLatest(spark, dir).collect().map(_.toSeq).toSet == pre)
     // after compaction every data file physically carries the column
     val table = new org.apache.hadoop.fs.Path(dir)

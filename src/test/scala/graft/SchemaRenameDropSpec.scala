@@ -121,7 +121,7 @@ class SchemaRenameDropSpec extends SparkTestBase {
 
     // a full rewrite physically removes the old column; the tombstone
     // retires with it and a fresh ADD of the same name reads all-null
-    SnapshotLog.compact(spark, dir, numFiles = 2)
+    SnapshotLog.optimize(spark, dir, _ => 2)
     assert(SnapshotLog.droppedNames(spark, dir,
       SnapshotLog.latestVersion(spark, dir)).isEmpty,
       "a full rewrite must retire tombstones")
@@ -249,8 +249,7 @@ class SchemaRenameDropSpec extends SparkTestBase {
     spark.conf.set("spark.graft.catalog.location", w)
     spark.sql("ALTER TABLE graft.rc6 RENAME COLUMN a TO b")
     val pred = spark.sessionState.sqlParser.parseExpression("b < 10")
-    val c = SnapshotLog.compactWhere(spark, dir, pred,
-      targetBytes = Long.MaxValue)
+    val c = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(pred))
     assert(c.report.nRewritten == 1,
       s"remapped stamps must scope the footprint to 1 of 4 files: ${c.report}")
     val content = spark.sql("SELECT id, b FROM graft.rc6 ORDER BY id")

@@ -73,9 +73,11 @@ class SnapshotLogModelSpec extends SparkTestBase {
           SnapshotLog.deleteKeys(spark, dir, del.toDF("id"), "id")
           del.foreach(model.remove)
         case 3 => // OPTIMIZE
-          SnapshotLog.compact(spark, dir, numFiles = 1 + rnd.nextInt(3))
+          val n = 1 + rnd.nextInt(3)
+          SnapshotLog.optimize(spark, dir, _ => n)
         case 4 => // OPTIMIZE ZORDER
-          SnapshotLog.compactZ(spark, dir, "id", "x", 1 + rnd.nextInt(3))
+          val n = 1 + rnd.nextInt(3)
+          SnapshotLog.optimize(spark, dir, _ => n, zorder = Seq("id", "x"))
       }
       assert(liveRows == modelRows(model.toMap), s"op $i: live diverged from model")
       snapshots += model.toMap

@@ -388,7 +388,7 @@ class SnapshotLogSpec extends SparkTestBase {
     val preTs = avgSpan(0, "ts")
     assert(preTs > 4096 * 0.6, s"fixture degenerate: pre-z ts span $preTs")
 
-    val c = SnapshotLog.compactZ(spark, dir, "id", "ts", numFiles = 16)
+    val c = SnapshotLog.optimize(spark, dir, _ => 16, zorder = Seq("id", "ts"))
     // logical table unchanged, CDC-invisible like any compaction
     assert(SnapshotLog.read(spark, dir, c.version).count() == 4096L)
     assert(SnapshotLog.cdc(spark, dir, 0, c.version, "id").isEmpty)
@@ -696,10 +696,10 @@ class SnapshotLogSpec extends SparkTestBase {
     expected = expected.where(!col("id").isin(dels: _*))
     check("deleteKeys", SnapshotLog.deleteKeys(spark, dir, dels.toDF("id"), "id"))
     val vDel = SnapshotLog.latestVersion(spark, dir)
-    check("compact", SnapshotLog.compact(spark, dir, numFiles = 3))
-    check("compactWhere", SnapshotLog.compactWhere(spark, dir,
-      spark.sessionState.sqlParser.parseExpression("id < 200"), targetBytes = 1L << 30))
-    check("compactZ", SnapshotLog.compactZ(spark, dir, "id", "y", numFiles = 4))
+    check("compact", SnapshotLog.optimize(spark, dir, _ => 3))
+    check("compactWhere", SnapshotLog.optimize(spark, dir, _ => 1,
+      where = Some(spark.sessionState.sqlParser.parseExpression("id < 200"))))
+    check("compactZ", SnapshotLog.optimize(spark, dir, _ => 4, zorder = Seq("id", "y")))
     expected = expectedAt(vDel)
     check("restore", SnapshotLog.restore(spark, dir, vDel))
     // re-inserting a masked key purges it from the restored vector

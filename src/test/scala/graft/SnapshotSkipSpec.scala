@@ -263,7 +263,7 @@ class SnapshotSkipSpec extends SparkTestBase {
     val rows = (0L until 1024L).map(i => (i, (i * 37L) % 1024L, s"r$i"))
       .toDF("id", "d2", "x")
     SnapshotLog.init(spark, dir, rows, "id", numFiles = 4)
-    SnapshotLog.compactZ(spark, dir, "id", "d2", numFiles = 16)
+    SnapshotLog.optimize(spark, dir, _ => 16, zorder = Seq("id", "d2"))
     val v = SnapshotLog.latestVersion(spark, dir)
 
     // point filter on the second dimension: a key-sorted layout reads all
@@ -298,7 +298,7 @@ class SnapshotSkipSpec extends SparkTestBase {
     assert(out.head.getLong(2) >= 1L)
     // CTAS-sized OPTIMIZE may produce few files on tiny data; re-cluster
     // with a fixed fan-out for a meaningful skip metric
-    SnapshotLog.compactZ(spark, dir, Seq("id", "d2", "d3"), numFiles = 16)
+    SnapshotLog.optimize(spark, dir, _ => 16, zorder = Seq("id", "d2", "d3"))
     val v = SnapshotLog.latestVersion(spark, dir)
     // a point filter on EACH dimension must skip files (a key-sorted
     // layout reads all 16 for d2/d3 — their per-file span would be the
@@ -415,7 +415,7 @@ class SnapshotSkipSpec extends SparkTestBase {
     }.toDF("id", "cat")
     SnapshotLog.init(spark, dir, rows, "id", numFiles = 3)
     val pred = spark.sessionState.sqlParser.parseExpression("cat = 'news'")
-    val c = SnapshotLog.compactWhere(spark, dir, pred, targetBytes = 1L << 30)
+    val c = SnapshotLog.optimize(spark, dir, _ => 1, where = Some(pred))
     assert(c.report.nRewritten == 1 && c.report.nUntouched == 2,
       s"string predicate must bound the footprint, got ${c.report}")
     assert(SnapshotLog.readLatest(spark, dir).count() == 300)

@@ -48,7 +48,7 @@ trait SparkTestBase extends AnyFunSuite {
     */
   def catalogTableDir(name: String): String = {
     val warehouse = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
-    graft.sql.GraftTableCatalog.use(spark, warehouse)
+    spark.conf.set(graft.sql.GraftTableCatalog.LocationKey, warehouse)
     s"$warehouse/$name"
   }
 

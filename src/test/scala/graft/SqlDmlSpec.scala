@@ -368,7 +368,7 @@ class SqlDmlSpec extends SparkTestBase {
     SnapshotLog.dropColumn(spark, eDir, "z")
     val re = spark.sql("DESCRIBE DETAIL graft.det_evo").head()
     assert(re.getString(12) == "renamed:b<-a;dropped:z", re.getString(12))
-    SnapshotLog.compact(spark, eDir, numFiles = 1) // full rewrite retires
+    SnapshotLog.optimize(spark, eDir, _ => 1) // full rewrite retires
     assert(spark.sql("DESCRIBE DETAIL graft.det_evo").head().isNullAt(12))
   }
 
@@ -548,7 +548,7 @@ class SqlDmlSpec extends SparkTestBase {
     SnapshotLog.restore(spark, dir, 1L) // v3: old rows, live contract
     val v = SnapshotLog.latestVersion(spark, dir)
     assert(SnapshotLog.constraintsOf(spark, dir, v).toMap.contains("x_pos"))
-    SnapshotLog.compact(spark, dir, numFiles = 1)
+    SnapshotLog.optimize(spark, dir, _ => 1)
     assert(SnapshotLog.constraintsOf(spark, dir,
       SnapshotLog.latestVersion(spark, dir)).toMap.contains("x_pos"))
     val e = intercept[IllegalStateException] {

@@ -82,7 +82,7 @@ class TableChangesSpec extends SparkTestBase {
 
   test("a graft-catalog identifier resolves without registration") {
     val loc = Files.createTempDirectory("tvf_cat").toString
-    GraftTableCatalog.use(spark, loc)
+    spark.conf.set(GraftTableCatalog.LocationKey, loc)
     (1L to 10L).map(i => (i, i * 2)).toDF("id", "v")
       .createOrReplaceTempView("tvf_cat_src")
     spark.sql("CREATE TABLE graft.tvf_ct TBLPROPERTIES ('key'='id') AS " +

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.ZOrder
+import graft.operators.{SnapshotLog, ZOrder}
 
 /** Z-order layout: per-file min/max must be narrow in BOTH clustered
   * dimensions (that is the whole point — a file-skipping index for two
@@ -54,7 +54,8 @@ class ZOrderSpec extends SparkTestBase {
     val rows = (0L until 4096L).map(i =>
       (i, (i * 37L) % 4096L, (i * 101L) % 4096L)).toDF("a", "b", "c")
     val zDir = Files.createTempDirectory("graft_z3").toString + "/z"
-    ZOrder.writeClusteredN(rows, Seq("a", "b", "c"), 16, zDir)
+    SnapshotLog.writeClustered(ZOrder.withZ(rows, Seq("a", "b", "c")),
+      Seq(ZOrder.ZCol), 16, zDir, drop = Seq(ZOrder.ZCol))
     val spans = spark.read.parquet(zDir)
       .groupBy(input_file_name())
       .agg(min("a"), max("a"), min("b"), max("b"), min("c"), max("c"))
@@ -75,7 +76,8 @@ class ZOrderSpec extends SparkTestBase {
     val li = Tables.lineitem(spark, sfDir).select("l_partkey", "l_suppkey")
     val zDir = Files.createTempDirectory("graft_zorder").toString + "/z"
     val sDir = Files.createTempDirectory("graft_zorder").toString + "/s"
-    ZOrder.writeClustered(li, "l_partkey", "l_suppkey", NumFiles, zDir)
+    SnapshotLog.writeClustered(ZOrder.withZ(li, Seq("l_partkey", "l_suppkey")),
+      Seq(ZOrder.ZCol), NumFiles, zDir, drop = Seq(ZOrder.ZCol))
     li.repartitionByRange(NumFiles, col("l_partkey"))
       .sortWithinPartitions("l_partkey")
       .write.mode("overwrite").parquet(sDir)
